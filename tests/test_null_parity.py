@@ -15,6 +15,11 @@ same seeded tool and hash-comparing one query per class:
 - profiler null_keys metrics  -> join_profile_orders_lineitem
 - encode/sketch NULL-key drop -> label_encode_codes, bloom_filter_custkeys
 - dedup keep-lowest-id        -> semantic_dedup_verdicts
+- contingency NULL clusters/values/weights and the business metrics
+  over deliver rows -> adjusted_residuals, chi2_stat_by_variable,
+  cramers_v_by_variable, deliver_stats_planted, deliver_stats_weighted,
+  discover_stats_planted, uniqueness_planted, communicability_planted,
+  magnitude_planted, sig_spread_planted
 """
 
 from __future__ import annotations
@@ -37,6 +42,16 @@ QUERIES = [
     "label_encode_codes",
     "bloom_filter_custkeys",
     "semantic_dedup_verdicts",
+    "adjusted_residuals",
+    "chi2_stat_by_variable",
+    "cramers_v_by_variable",
+    "deliver_stats_planted",
+    "deliver_stats_weighted",
+    "discover_stats_planted",
+    "uniqueness_planted",
+    "communicability_planted",
+    "magnitude_planted",
+    "sig_spread_planted",
 ]
 
 
