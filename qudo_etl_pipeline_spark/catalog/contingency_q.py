@@ -17,11 +17,11 @@ from pyspark.sql import functions as F
 from qudo_etl_pipeline_spark.catalog import load_table, register
 from qudo_etl_pipeline_spark.functions.rounding import ref_round, ref_round_sql
 from qudo_etl_pipeline_spark.operators.contingency import (
-    _dense_grid,
     chi2_by_variable,
     cluster_mode_list,
     contingency_tables,
     deliver_stats,
+    dense_cells,
 )
 
 # Shared CTE prefix: the melted customer table and its crosstab cells.
@@ -91,7 +91,7 @@ def _survey_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def contingency_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = contingency_tables(_survey_wide(spark, sf_dir), "cluster", id_vars=["id"])
-    return _dense_grid(t.cells, "cluster").select(
+    return dense_cells(t).select(
         "variable", "cluster", "value", F.col("observed").cast("bigint").alias("observed")
     )
 
@@ -156,18 +156,9 @@ def chi2_stat_by_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Expected frequencies + adjusted residuals + direction per cell",
 )
 def adjusted_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     t = contingency_tables(_survey_wide(spark, sf_dir), "cluster", id_vars=["id"])
-    dense = _dense_grid(t.cells, "cluster")
-    w_row = Window.partitionBy("variable", "value")
-    w_col = Window.partitionBy("variable", "cluster")
-    w_var = Window.partitionBy("variable")
-    dense = (
-        dense.withColumn("row_tot", F.sum("observed").over(w_row))
-        .withColumn("col_tot", F.sum("observed").over(w_col))
-        .withColumn("n", F.sum("observed").over(w_var))
-        .withColumn("expected", F.col("row_tot") * F.col("col_tot") * 1.0 / F.col("n"))
+    dense = dense_cells(t).withColumn(
+        "expected", F.col("row_tot") * F.col("col_tot") * 1.0 / F.col("n")
     )
     return dense.select(
         "variable",

@@ -16,64 +16,71 @@ Re-implements (reference: src/kraken/app/metrics.py):
   proportions.
 - M37 get_all_metrics (:814-911): the composition layer.
 
-All inputs are DataFrames: `deliver` is the deliver-stats output of
-operators/contingency.py (columns q_code, targeting_seg,
-sig_more_category array, chi_2_result, pop_mode...), `labeled` is the
-respondent table with a `prediction` column. Everything aggregates to
-segment-cardinality results before collecting (tiny) — the deliver
-table itself is already aggregate-sized (variables x segments).
+`deliver` is the deliver-stats output of operators/contingency.py
+(columns q_code, targeting_seg, sig_more_category array, chi_2_result,
+pop_mode...): a table sized by the survey's schema (significant
+variables x segments), so the metrics over it run in Python over its
+rows. They take the rows, or a DataFrame, which they collect once.
+`labeled` is the respondent table with a `prediction` column; metrics
+over it aggregate to segment-cardinality results before collecting.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+from collections import Counter
+
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 
-def _pair_key() -> "F.Column":
-    """(q_code, sig_more_category) identity: the reference tuples the
-    category list (metrics.py:330-332); arrays compare element-wise."""
-    return F.concat_ws(
-        "", F.col("q_code"), F.concat_ws("", F.col("sig_more_category"))
-    )
+def _rows(deliver: DataFrame | list[Row]) -> list[Row]:
+    """The deliver rows: a DataFrame argument is collected once."""
+    return deliver.collect() if isinstance(deliver, DataFrame) else deliver
 
 
-def uniqueness(deliver: DataFrame, seg_col: str = "targeting_seg") -> dict:
-    """M28: per cluster, 1 - duplicated-pair share (metrics.py:311-337)."""
-    pairs = deliver.select(
-        F.col(seg_col).alias("seg"), _pair_key().alias("pair")
-    )
-    dup = (
-        pairs.groupBy("pair")
-        .agg(F.countDistinct("seg").alias("n_segs"))
-        .withColumn("dup", (F.col("n_segs") > 1).cast("int"))
-    )
-    rows = (
-        pairs.join(dup.select("pair", "dup"), "pair")
-        .groupBy("seg")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dup").alias("n_dup"),
-        )
-        .collect()
-    )
-    return {r["seg"]: 1 - r["n_dup"] / r["n"] for r in rows}
+def uniqueness(
+    deliver: DataFrame | list[Row], seg_col: str = "targeting_seg"
+) -> dict:
+    """M28: per cluster, 1 - duplicated-pair share (metrics.py:311-337).
+
+    A pair is (q_code, sig_more_category): the reference tuples the
+    category list (metrics.py:330-332); it is a duplicate when more than
+    one non-NULL segment has it."""
+    rows = _rows(deliver)
+
+    def pair(r) -> str:
+        # NULL parts (and NULL categories) drop out of the key
+        parts = [r["q_code"], *(r["sig_more_category"] or [])]
+        return "".join(p for p in parts if p is not None)
+
+    pairs = [(r[seg_col], pair(r)) for r in rows]
+    segs_of: dict[str, set] = {}
+    for seg, p in pairs:
+        if seg is not None:
+            segs_of.setdefault(p, set()).add(seg)
+    n = Counter(seg for seg, _ in pairs)
+    n_dup = Counter(seg for seg, p in pairs if len(segs_of.get(p, ())) > 1)
+    return {seg: 1 - n_dup[seg] / n[seg] for seg in n}
 
 
 def communicability(
-    deliver: DataFrame, seg_col: str = "targeting_seg", pattern: str = "psy|ae"
+    deliver: DataFrame | list[Row],
+    seg_col: str = "targeting_seg",
+    pattern: str = "psy|ae",
 ) -> dict:
     """M29 (metrics.py:340-361): distinct significant q_codes matching
     the creative/psychometric regex per segment; avg = total / number of
     segments in the WHOLE deliver table."""
-    comm = (
-        deliver.filter(F.col("q_code").rlike(pattern))
-        .groupBy(seg_col)
-        .agg(F.countDistinct("q_code").alias("communicability"))
-        .collect()
-    )
-    n_segs = deliver.select(seg_col).distinct().count()
-    data = {r[seg_col]: r["communicability"] for r in comm}
+    rows = _rows(deliver)
+    rx = re.compile(pattern)
+    codes: dict = {}
+    for r in rows:
+        q = r["q_code"]
+        if q is not None and rx.search(q):
+            codes.setdefault(r[seg_col], set()).add(q)
+    n_segs = len({r[seg_col] for r in rows})
+    data = {seg: len(qs) for seg, qs in codes.items()}
     avg = sum(data.values()) / n_segs if n_segs else float("nan")
     return {"data": data, "avg": avg}
 
@@ -129,7 +136,7 @@ def social_presence(
 
 
 def magnitude(
-    deliver: DataFrame,
+    deliver: DataFrame | list[Row],
     labeled: DataFrame,
     tgt_cols: list[str],
     pred: str = "prediction",
@@ -144,13 +151,11 @@ def magnitude(
     sizes = labeled.groupBy(pred).agg(F.count(F.lit(1)).alias("n")).collect()
     total = sum(r["n"] for r in sizes)
     pct = {r[pred]: round(r["n"] / total, 2) for r in sizes}
-    sig_counts = {
-        r[seg_col]: r["n"]
-        for r in deliver.filter(F.lower(F.col("q_code")).contains("tgt"))
-        .groupBy(seg_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    sig_counts = Counter(
+        r[seg_col]
+        for r in _rows(deliver)
+        if r["q_code"] is not None and "tgt" in r["q_code"].lower()
+    )
     out = {}
     for seg, share in pct.items():
         ratio = sig_counts.get(str(seg), sig_counts.get(seg, 0)) / num_tgt
@@ -179,71 +184,59 @@ def message_reach(social: dict, signal: dict) -> dict | float:
     return out
 
 
-def question_prefix_col(col: str = "q_code") -> "F.Column":
+def _question_prefix(q_code: str | None) -> str | None:
     """Prefix before '_' when present, else the whole code
     (metrics.py:192-197)."""
-    return F.when(
-        F.col(col).contains("_"), F.split(F.col(col), "_")[0]
-    ).otherwise(F.col(col))
+    return q_code.split("_")[0] if q_code is not None else None
 
 
 def significant_variables_and_spread(
-    deliver: DataFrame,
+    deliver: DataFrame | list[Row],
     alpha: float = 0.05,
     seg_col: str = "targeting_seg",
 ) -> tuple[dict, dict, dict, dict]:
     """M36 (metrics.py:208-231): counts of significant variables per
     segment (all / `_tgt`), and per-question-prefix proportions of
     significant variables vs all variables (all / `_tgt` universes)."""
-    sig = deliver.filter(F.col("chi_2_result") <= alpha)
-    num_sig = {
-        r[seg_col]: r["n"]
-        for r in sig.groupBy(seg_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sig_tgt = sig.filter(F.col("q_code").contains("_tgt"))
-    num_sig_tgt = {
-        r[seg_col]: r["n"]
-        for r in sig_tgt.groupBy(seg_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    rows = _rows(deliver)
 
-    def spread(filtered: DataFrame, universe: DataFrame) -> dict:
-        # the denominator is the prefix count over the UNFILTERED frame
+    def is_tgt(r) -> bool:
+        return r["q_code"] is not None and "_tgt" in r["q_code"]
+
+    sig = [
+        r
+        for r in rows
+        if r["chi_2_result"] is not None and r["chi_2_result"] <= alpha
+    ]
+    sig_tgt = [r for r in sig if is_tgt(r)]
+
+    def spread(filtered: list, universe: list) -> dict:
+        # the denominator is the prefix count over the UNFILTERED rows
         # across ALL segments — the reference's overall_counts
         # (metrics.py:198-204) divides exactly so; per-segment universes
         # would read more naturally but would break parity
-        overall = {
-            r["p"]: r["n"]
-            for r in universe.select(question_prefix_col().alias("p"))
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        rows = (
-            filtered.select(F.col(seg_col).alias("seg"), question_prefix_col().alias("p"))
-            .groupBy("seg", "p")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+        overall = Counter(_question_prefix(r["q_code"]) for r in universe)
+        counts = Counter(
+            (r[seg_col], _question_prefix(r["q_code"])) for r in filtered
         )
         out: dict = {}
-        for r in rows:
-            out.setdefault(r["seg"], {})[r["p"]] = (
-                r["n"] / overall[r["p"]] if overall.get(r["p"]) else float("nan")
+        for (seg, p), n in counts.items():
+            out.setdefault(seg, {})[p] = (
+                n / overall[p] if overall.get(p) else float("nan")
             )
         return out
 
     return (
-        num_sig,
-        num_sig_tgt,
-        spread(sig, deliver),
-        spread(sig_tgt, deliver.filter(F.col("q_code").contains("_tgt"))),
+        dict(Counter(r[seg_col] for r in sig)),
+        dict(Counter(r[seg_col] for r in sig_tgt)),
+        spread(sig, rows),
+        spread(sig_tgt, [r for r in rows if is_tgt(r)]),
     )
 
 
 def get_all_metrics(
     labeled: DataFrame,
-    deliver: DataFrame | None = None,
+    deliver: DataFrame | list[Row] | None = None,
     features_col: str = "features",
     pred: str = "prediction",
     tgt_cols: list[str] | None = None,
@@ -280,6 +273,7 @@ def get_all_metrics(
         metrics["model_consistency"] = float("nan")
         metrics["label_consistency"] = float("nan")
     if deliver is not None:
+        deliver = _rows(deliver)
         metrics["uniqueness"] = uniqueness(deliver)
         comm = communicability(deliver)
         metrics["communicability_clusters"] = comm["data"]

@@ -27,6 +27,7 @@ MLlib jobs from driver threads — no data movement between stages.
 from __future__ import annotations
 
 import itertools
+import logging
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FutureTimeoutError
@@ -48,6 +49,9 @@ from qudo_etl_pipeline_spark.operators.contingency import (
     deliver_stats,
     discover_stats,
 )
+
+
+_LOG = logging.getLogger(__name__)
 
 
 @dataclass
@@ -232,6 +236,12 @@ def _abandon_pool_threads(pool: ThreadPoolExecutor) -> None:
         _cft._threads_queues.pop(t, None)
 
 
+def _failed(algo: str, error: str) -> dict:
+    """The result of a family that failed: no labels, the reason in its
+    metrics. The scheme's other families still finish."""
+    return {"labels": None, "metrics": {"algorithm": algo, "error": error}}
+
+
 def run_scheme(
     spark: SparkSession,
     cleaned: DataFrame,
@@ -277,47 +287,42 @@ def run_scheme(
         initializer=_daemonize_current_thread,
     )
     futures = {a: pool.submit(run_family, a) for a in algos}
-    fits = []
+    results = {}
+    pending = []
+    timed_out = False
     for algo in algos:
         try:
-            fits.append(
-                futures[algo].result(
-                    timeout=max(0.0, deadline - _time.monotonic())
-                )
+            name, fit = futures[algo].result(
+                timeout=max(0.0, deadline - _time.monotonic())
             )
         # concurrent.futures.TimeoutError explicitly: it only aliases
         # builtin TimeoutError on Python >= 3.11, and this module does
         # not pin the interpreter
         except FutureTimeoutError:
             sc.cancelJobGroup(f"scheme{run_id}:family:{algo}")
-            fits.append((algo, {"timed_out": True}))
+            timed_out = True
+            results[algo] = _failed(
+                algo, f"fit timed out after {cfg.fit_timeout_secs:g}s"
+            )
+            continue
+        except Exception as exc:  # contained like a timeout
+            _LOG.exception("family %s: fit failed", algo)
+            results[algo] = _failed(algo, f"{type(exc).__name__}: {exc}")
+            continue
+        if fit is None:
+            results[name] = {
+                "labels": None,
+                "metrics": {"algorithm": name, "n_clusters": "no balanced clustering"},
+            }
+        else:
+            pending.append((name, fit))
     # don't block on a timed-out family's thread: cancelled Spark jobs
     # unwind it promptly, and a (hypothetical) pure-driver loop must not
     # stall the scheme — the reference's timeout likewise abandons the
     # R process (clustering.py:884-891)
     pool.shutdown(wait=False, cancel_futures=True)
-    if any(f[1] is not None and f[1].get("timed_out") for f in fits):
+    if timed_out:
         _abandon_pool_threads(pool)
-    results = {}
-    pending = []
-    for algo, fit in fits:
-        if fit is not None and fit.get("timed_out"):
-            results[algo] = {
-                "labels": None,
-                "metrics": {
-                    "algorithm": algo,
-                    "error": "fit timed out after "
-                    f"{cfg.fit_timeout_secs:g}s",
-                },
-            }
-            continue
-        if fit is None:
-            results[algo] = {
-                "labels": None,
-                "metrics": {"algorithm": algo, "n_clusters": "no balanced clustering"},
-            }
-            continue
-        pending.append((algo, fit))
 
     def finalize_family(algo: str, fit: dict) -> dict:
         sc.setJobGroup(
@@ -343,11 +348,7 @@ def run_scheme(
             id_vars=[cfg.id_col],
             salt_cells=cfg.salt_cells,
         )
-        # deliver is tiny (significant variables x segments) but feeds
-        # discover, four business metrics and the parquet sink — cache it
-        # so each consumer reads the materialized frame instead of
-        # re-executing the inference arithmetic.
-        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval).cache()
+        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
         discover = discover_stats(deliver)
         # third element of the reference's return_API_data triple
         # (chisquared_tester.py:1788-1792): per-cluster modal answer
@@ -363,7 +364,8 @@ def run_scheme(
         tgt_cols = [c for c in scheme_cols if "tgt" in c.lower()]
         metrics = get_all_metrics(
             feats,
-            deliver=deliver,
+            # a local frame: collecting its rows runs no Spark job
+            deliver=deliver.collect(),
             tgt_cols=tgt_cols,
             n_seed=fit.get("seed"),
             with_random_baseline=False,
@@ -372,7 +374,6 @@ def run_scheme(
             social_df=with_pred,
         )
         metrics["algorithm"] = algo
-        tables.unpersist()  # cell cache is per-(scheme, algo); release it
         return {
             "labels": labeled,
             "deliver": deliver,
@@ -382,21 +383,23 @@ def run_scheme(
             **({"join_plan": join_plan} if cfg.capture_plans else {}),
         }
 
+    def finalize_contained(algo: str, fit: dict) -> dict:
+        try:
+            return finalize_family(algo, fit)
+        except Exception as exc:  # one family failing leaves the others
+            _LOG.exception("family %s: inference or metrics failed", algo)
+            return _failed(algo, f"{type(exc).__name__}: {exc}")
+
     # Inference + metrics for the surviving families run CONCURRENTLY,
     # mirroring the fit phase above: each family's post-fit work is a
-    # long chain of small independent Spark actions (contingency cells,
-    # deliver stats, ~10 quality/business metrics), so sequential
-    # per-family processing serializes ~50 sub-second jobs per family
-    # while the cluster idles — concurrent submission lets the
-    # scheduler overlap them (fixture-scale composition measured
-    # ~87 s -> ~45 s; at production scale each action is larger and the
-    # overlap still hides per-job latency). Families share only
-    # read-only parent frames (cleaned/encoded caches); every
-    # per-family cache (contingency cells, deliver) is created and
-    # released inside its own thread.
+    # chain of small independent Spark actions (the contingency cells,
+    # mode list, quality metrics), so sequential per-family processing
+    # would serialize them while the cluster idles — concurrent
+    # submission lets the scheduler overlap them. Families share only
+    # read-only parent frames (the cleaned/encoded caches).
     if len(pending) == 1:
         algo, fit = pending[0]
-        results[algo] = finalize_family(algo, fit)
+        results[algo] = finalize_contained(algo, fit)
     elif pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),
@@ -404,7 +407,7 @@ def run_scheme(
         )
         try:
             futs = {
-                algo: finalize_pool.submit(finalize_family, algo, fit)
+                algo: finalize_pool.submit(finalize_contained, algo, fit)
                 for algo, fit in pending
             }
             for algo, fut in futs.items():
@@ -475,9 +478,6 @@ def run_all_segmentations(
                         res["discover"],
                         f"{output_dir}/{scheme}/{algo}/discover",
                     )
-                    # sinks were the last cached readers; later accesses
-                    # (if any) lazily recompute
-                    res["deliver"].unpersist()
         metrics_df = spark.createDataFrame(
             metrics_rows,
             "survey: string, scheme: string, algorithm: string, "

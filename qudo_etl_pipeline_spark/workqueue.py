@@ -38,15 +38,26 @@ def next_survey(surveys: list[dict], tag: str = ENGINE_TAG) -> dict | None:
 def mark_processed(
     queue_path: str, survey_name: str, tag: str = ENGINE_TAG
 ) -> list[dict]:
-    """aws_init.py:68-78: append the tag and rewrite the document."""
+    """aws_init.py:68-78: append the tag and rewrite the document.
+
+    The rewrite is atomic: the new document is written to a temporary
+    file in the queue's directory, which then replaces the queue
+    (``os.replace``). A write that fails part-way leaves the previous
+    document in place, and the survey unprocessed."""
     surveys = collected_surveys(queue_path)
     for s in surveys:
         if s.get("survey_name") == survey_name:
             s.setdefault("processed_by", [])
             if tag not in s["processed_by"]:
                 s["processed_by"].append(tag)
-    with open(queue_path, "w") as fh:
-        json.dump(surveys, fh, indent=2)
+    tmp = f"{queue_path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(surveys, fh, indent=2)
+    except BaseException:
+        os.remove(tmp)
+        raise
+    os.replace(tmp, queue_path)
     return surveys
 
 

@@ -238,9 +238,9 @@ def test_cramers_v_known_table(spark):
 
 
 def test_posthoc_bonferroni_fallback_wide_table(spark):
-    """Tables wider than the precomputed z-threshold range (m =
-    n_values * n_clusters > 1024) take the in-plan survival-function
-    fallback (``_z_thr`` NULL inside _dense_sig_sql). Pin that branch
+    """Tables wider than the bisected z-threshold range (m =
+    n_values * n_clusters > 1024) take the survival-function fallback
+    (``_Variable.post_hoc``). Pin that branch
     against the Python chi2_sf on every emitted cell: the labels must
     be exactly the |z| >= 1.96 AND chi2_sf(z^2, 1) <= alpha/m rule."""
     from qudo_etl_pipeline_spark.functions.stats import chi2_sf

@@ -183,3 +183,98 @@ def test_fit_timeout_watchdog(spark, responses, monkeypatch):
     # the non-timed-out family still reported (no rules_col -> the
     # documented no-clustering result)
     assert out["rules_based"]["metrics"]["n_clusters"] == "no balanced clustering"
+
+
+def test_mark_processed_survives_a_torn_write(tmp_path, monkeypatch):
+    """A queue rewrite that fails part-way leaves the previous document
+    parseable, with the survey still unprocessed, and no temp file."""
+    qp = tmp_path / "queue.json"
+    qp.write_text(json.dumps([{"survey_name": "s1", "processed_by": []}]))
+
+    def torn_dump(obj, fh, **kwargs):
+        fh.write('[{"survey_name": "s1", "processed_by": ["qudo')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(WQ.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        WQ.mark_processed(str(qp), "s1")
+    monkeypatch.undo()
+    assert WQ.next_survey(WQ.collected_surveys(str(qp)))["survey_name"] == "s1"
+    assert [p.name for p in tmp_path.iterdir()] == ["queue.json"]
+
+
+def test_family_failures_are_contained(spark, responses, monkeypatch):
+    """A family whose fit raises, and one whose metrics raise, each get
+    an error result; the scheme and its other family still finish."""
+    import threading
+
+    from qudo_etl_pipeline_spark import pipeline as P
+
+    def broken_fit(encoded, cols, cfg, num_cols):
+        raise ValueError("planted fit failure")
+
+    def rules_copy(encoded, cols, cfg, num_cols):
+        return ("rules_copy", P._family_rules(encoded, cols, cfg, num_cols)[1])
+
+    real_metrics = P.get_all_metrics
+    lock, calls = threading.Lock(), []
+
+    def metrics_failing_once(*args, **kwargs):
+        with lock:
+            calls.append(1)
+            first = len(calls) == 1
+        if first:
+            raise RuntimeError("planted metrics failure")
+        return real_metrics(*args, **kwargs)
+
+    monkeypatch.setitem(P._FAMILIES, "broken", broken_fit)
+    monkeypatch.setitem(P._FAMILIES, "rules_copy", rules_copy)
+    monkeypatch.setattr(P, "get_all_metrics", metrics_failing_once)
+    cfg = SegmentationConfig(
+        survey_name="faults",
+        rules_col="fin_uk_goal_fb",
+        algorithms=("broken", "rules_based", "rules_copy"),
+    )
+    cols = ["fin_uk_risk_rb", "psy_ww_openness_sc", "fin_uk_goal_fb"]
+    out = P.run_scheme(spark, responses, cols, cfg)
+    assert out["broken"] == {
+        "labels": None,
+        "metrics": {
+            "algorithm": "broken",
+            "error": "ValueError: planted fit failure",
+        },
+    }
+    finalized = [out["rules_based"], out["rules_copy"]]
+    failed = [r for r in finalized if r["labels"] is None]
+    done = [r for r in finalized if r["labels"] is not None]
+    assert len(failed) == 1 and len(done) == 1
+    assert failed[0]["metrics"]["error"] == "RuntimeError: planted metrics failure"
+    assert done[0]["deliver"].count() > 0
+    assert "error" not in done[0]["metrics"]
+
+
+def test_drain_leaves_no_caches_behind(spark, tmp_path):
+    """Two surveys drained in one session leave the operator-cache
+    registry and Spark's persisted RDDs at their pre-run sizes: a long
+    queue drain does not grow the driver."""
+    from qudo_etl_pipeline_spark.operators import prefix as P
+
+    responses = spark.createDataFrame(make_responses(n=200))
+    cfg = SegmentationConfig(
+        survey_name="drain",
+        schemes={"behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"]},
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("rules_based",),
+    )
+
+    def sizes():
+        registry = sum(len(v) for v in P._REGISTRY.values())
+        return registry, spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = sizes()
+    for i in range(2):
+        out = run_all_segmentations(
+            spark, responses, cfg, output_dir=str(tmp_path / f"out{i}")
+        )
+        assert out["behavioral"]["rules_based"]["labels"] is not None
+    assert sizes() == before

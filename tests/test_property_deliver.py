@@ -5,7 +5,8 @@ Spark single-shuffle inference plan AND a direct re-implementation of
 the reference's deliver semantics (chisquared_tester.py:1434-1589):
 crosstab with "Not shown" exclusion, Yates-gated chi-squared, rounded
 adjusted residuals, Bonferroni cell test, value_counts denominators,
-modes with pandas tie order, and Python-``round`` percentages. This is
+modes with pandas tie order, Python-``round`` percentages, and the
+weighted mode and shares (NULL weights, an all-zero-weight cluster). This is
 the differential check that catches rounding-semantics drift in every
 reference-visible deliver column (the popmodes property test's big
 sibling).
@@ -32,13 +33,19 @@ from qudo_etl_pipeline_spark.operators.contingency import (
 
 CLUSTERS = ["c0", "c1", "c2"]
 VALUES = ["va", "vb", "vc", "not selected", "Not shown"]
+# dyadic weights: every weighted sum is exact in any order, so the
+# weighted columns compare exactly too. NULL weights count as 0, and
+# ZERO_W's weights are all zero (its weighted shares are NULL).
+WEIGHTS = [None, 0.25, 1.0, 2.5]
+ZERO_W = "c2"
 
 rows_strategy = st.lists(
     st.tuples(
         st.sampled_from(CLUSTERS),
         st.sampled_from(VALUES),
         st.sampled_from(VALUES),
-    ),
+        st.sampled_from(WEIGHTS),
+    ).map(lambda r: r[:3] + ((0.0,) if r[0] == ZERO_W else r[3:])),
     min_size=15,
     max_size=45,
 )
@@ -49,10 +56,16 @@ ALPHA = 1.0  # keep every variable so percentages/modes always surface
 def _mirror(rows):
     n_rows = len(rows)
     out = []
+    cluster_w = {}
+    for r in rows:
+        cluster_w[r[0]] = cluster_w.get(r[0], 0.0) + (r[3] or 0.0)
     for vi, var in enumerate(["q_x", "q_y"]):
         cells = {}  # (cluster, value) -> n
+        w_cells = {}  # (cluster, value) -> total weight
         for r in rows:
-            cells[(r[0], r[1 + vi])] = cells.get((r[0], r[1 + vi]), 0) + 1
+            key = (r[0], r[1 + vi])
+            cells[key] = cells.get(key, 0) + 1
+            w_cells[key] = w_cells.get(key, 0.0) + (r[3] or 0.0)
         # observed grid: "Not shown" excluded from EITHER axis
         obs_vals = sorted(
             {v for (_, v) in cells if v != "Not shown"}
@@ -119,6 +132,11 @@ def _mirror(rows):
             pop_mode, mode_n = min(
                 mode_items, key=lambda kv: (-kv[1], kv[0])
             )
+            answered_w = sum(w_cells[(c, v2)] for v2 in answered)
+            w_mode, w_mode_n = min(
+                ((v2, w_cells[(c, v2)]) for v2, _ in mode_items),
+                key=lambda kv: (-kv[1], kv[0]),
+            )
             var_answered = sum(
                 n2 for (c2, v2), n2 in cells.items()
             )
@@ -134,6 +152,18 @@ def _mirror(rows):
                     "sig_more_category": sorted(pos),
                     "category_percentages": cat_perc,
                     "response_rate": var_answered / n_rows * 100,
+                    "weighted_pop_mode": w_mode,
+                    "weighted_pop_mode_perc": (
+                        round(w_mode_n / cluster_w[c] * 100, 0)
+                        if cluster_w[c]
+                        else None
+                    ),
+                    "weighted_category_percentages": [
+                        round(w_cells[(c, v)] / answered_w * 100, 2)
+                        if answered_w
+                        else None
+                        for v in sorted(pos)
+                    ],
                 }
             )
     return out
@@ -146,8 +176,10 @@ def _mirror(rows):
 )
 @given(rows=rows_strategy)
 def test_deliver_stats_matches_python_mirror(spark, rows):
-    df = spark.createDataFrame(rows, "cluster string, q_x string, q_y string")
-    t = contingency_tables(df, "cluster")
+    df = spark.createDataFrame(
+        rows, "cluster string, q_x string, q_y string, w double"
+    )
+    t = contingency_tables(df, "cluster", weight_col="w")
     got = deliver_stats(t, alpha=ALPHA).collect()
     t.unpersist()
     want = {(w["q_code"], w["targeting_seg"]): w for w in _mirror(rows)}
@@ -160,6 +192,12 @@ def test_deliver_stats_matches_python_mirror(spark, rows):
         assert list(r["sig_more_category"]) == w["sig_more_category"]
         assert list(r["category_percentages"]) == w["category_percentages"]
         assert r["response_rate"] == w["response_rate"]
+        assert r["weighted_pop_mode"] == w["weighted_pop_mode"]
+        assert r["weighted_pop_mode_perc"] == w["weighted_pop_mode_perc"]
+        assert (
+            list(r["weighted_category_percentages"])
+            == w["weighted_category_percentages"]
+        )
         # chi-squared fields: summation-order drift tolerance
         assert abs(r["chi_2_result"] - w["chi_2_result"]) <= 1e-7
         assert abs(r["chi2_stat"] - w["chi2_stat"]) <= 1e-6
