@@ -264,6 +264,7 @@ class ContingencyTables:
         return sum(n for _, n, _ in self.sizes())
 
     def unpersist(self) -> None:
+        """Drop the memoized rows (nothing is cached on the cluster)."""
         self._memo.clear()
 
 
@@ -504,7 +505,9 @@ def deliver_stats(
 
     One cell shuffle and one collect (:class:`ContingencyTables`); the
     rest is the driver-side finalizer, returned as a local frame whose
-    readers run no Spark job.
+    readers run no Spark job. The collected table has
+    |variables| x |values| x |clusters| rows whatever the respondent
+    count, which is what keeps this driver-side at any scale.
 
     Reference: chisquared_tester.py:1434-1589 (lazy path) and :1671-1731.
     - answer denominators per (variable, cluster) include sentinel
