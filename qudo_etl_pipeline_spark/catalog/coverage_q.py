@@ -993,7 +993,7 @@ def pipeline_e2e_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the composition — cleaning, scheme selection, the clustering
     fan-out, inference, metrics — now show up in the driver's
     rows-only gate and the round hash manifest, not just SCALING.md.
-    No bucketed materialization (cache path) so the catalog query has
+    The cleaned table is cached, not written, so the catalog query has
     zero warehouse side effects. Cost is job-COUNT-bound, not
     data-bound (600 rows, ~150 sub-second actions): measured ~60 s
     solo at fixture scale with the concurrent per-family finalize
@@ -1024,7 +1024,6 @@ def pipeline_e2e_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         algorithms=("kmeans", "kmodes", "rules_based"),
         ks=[3],
         seeds=[1, 42],
-        bucket_table=None,
     )
     results = run_all_segmentations(spark, responses, cfg)
     rows = []

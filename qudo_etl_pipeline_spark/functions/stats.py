@@ -106,8 +106,7 @@ def chi2_sf_udf():
     """Arrow-batched pandas UDF: (stat, dof) -> p-value.
 
     Created lazily so importing this module never requires an active
-    SparkSession. Kept for non-plan (driver/test) use; in-plan callers
-    use :func:`chi2_sf_col` — pure JVM, no Python worker crossing.
+    SparkSession.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -124,8 +123,8 @@ def z_threshold(target: float, lo: float = 0.0, hi: float = 50.0) -> float:
 
     The dof=1 cell-significance test ``chi2_sf(z^2, 1) <= alpha/m`` is
     monotone in |z|, so it is equivalent to ``|z| >= z_threshold(alpha/m)``
-    — the device that keeps BOTH the Spark plan and the DuckDB oracle
-    free of an erfc implementation. 200 iterations give a ~1e-13-wide
+    — one threshold shared by the driver-side finalizer and the DuckDB
+    oracles, which have no erfc. 200 iterations give a ~1e-13-wide
     bracket, far below the 3-decimal rounding of the residuals compared
     against it.
     """
@@ -136,174 +135,3 @@ def z_threshold(target: float, lo: float = 0.0, hi: float = 50.0) -> float:
         else:
             hi = mid
     return hi
-
-
-_ZT_CACHE: dict[tuple[float, int], dict[int, float]] = {}
-
-
-def z_threshold_table(alpha: float, max_m: int = 1024) -> dict[int, float]:
-    """``{m: z_threshold(alpha / m)}`` for m in 2..max_m, vectorized.
-
-    The same bisection as :func:`z_threshold` run over all m at once
-    (identical brackets, iteration count and arithmetic, so the floats
-    are bit-identical to the scalar helper the oracle generator uses).
-    Computed once per (alpha, max_m) per process and cached — this is
-    what lets the post-hoc cell test skip its per-query driver collect.
-    """
-    key = (alpha, max_m)
-    if key not in _ZT_CACHE:
-        ms = np.arange(2, max_m + 1, dtype=np.float64)
-        targets = alpha / ms
-        lo = np.zeros_like(ms)
-        hi = np.full_like(ms, 50.0)
-        for _ in range(200):
-            mid = (lo + hi) / 2.0
-            above = chi2_sf(mid * mid, 1.0) > targets
-            lo = np.where(above, mid, lo)
-            hi = np.where(above, hi, mid)
-        _ZT_CACHE[key] = {
-            int(m): float(h) for m, h in zip(ms, hi)
-        }
-    return _ZT_CACHE[key]
-
-
-# fold lengths for the odd-dof branches: both algorithms converge in
-# < 100 steps over the pipeline's domain (p meaningful only above ~1e-30);
-# extra post-convergence steps drift the result < 1e-13 relative
-_N_SERIES = 200
-_N_CF = 200
-
-
-def _d(v: float) -> str:
-    """Exact double literal as Spark SQL text (string cast round-trips)."""
-    return f"CAST('{v!r}' AS DOUBLE)"
-
-
-def chi2_sf_sql(stat: str, dof: str) -> str:
-    """Spark-SQL text of the chi-squared survival function.
-
-    Same mathematics as the Python :func:`chi2_sf` (regularized upper
-    incomplete gamma, A&S §6.5), expressed as ONE SQL string so callers
-    pay a single parser round-trip instead of hundreds of py4j calls
-    building the equivalent Column tree (the fold bodies are SQL
-    lambdas, not unrolled — the string stays a few KB):
-
-    - even dof (2m): the EXACT finite sum
-      ``SF = exp(-x/2) * sum_{j<m} (x/2)^j / j!`` via one fold whose
-      running term avoids pow/factorial overflow;
-    - odd dof (2m+1): a = dof/2 is half-integer — ``lgamma(a)`` has the
-      closed product form ``ln sqrt(pi) + sum ln(j - 1/2)`` and Q(a, x/2)
-      uses the same series (x < a+1) / modified-Lentz continued fraction
-      (x >= a+1) recurrences as :func:`gammainc_upper`, run as
-      fixed-length folds (agreement with the Python implementation
-      < 1e-10 relative, property-tested);
-    - dof <= 0 or stat <= 0 -> p = 1.0 (reference fallback semantics).
-
-    ``stat``/``dof`` are SQL expression fragments (dof integer-valued).
-    Cost: O(dof) fold steps for even dof, ~200 fold steps for odd — on
-    frames that are already variable-level aggregates.
-    """
-    S = f"CAST(({stat}) AS DOUBLE)"
-    X = f"({S} / {_d(2.0)})"
-    DOFI = f"CAST(({dof}) AS BIGINT)"
-    A = f"(CAST({DOFI} AS DOUBLE) / {_d(2.0)})"
-    ONE, HALF, TWO = _d(1.0), _d(0.5), _d(2.0)
-    TINY = _d(1.0e-300)
-
-    # ---- even dof: exp(-x) * sum_{j=0}^{m-1} x^j / j!
-    m_even = f"CAST(({DOFI} / 2) AS INT)"
-    seq_even = (
-        f"CASE WHEN {m_even} > 1 THEN sequence(1, {m_even} - 1)"
-        f" ELSE CAST(array() AS ARRAY<INT>) END"
-    )
-    # the running term is PREMULTIPLIED by exp(-x): t_j = exp(-x) x^j/j!
-    # stays <= 1 for all x, where the raw-power fold overflows to
-    # inf (and 0 * inf = NaN -> p clamped to 1.0, silently marking the
-    # MOST significant variables as insignificant) once x^j exceeds
-    # double range — e.g. stat 1e6 at dof 160. Underflow of exp(-x)
-    # zeroes p only where the true value is below double resolution
-    # anyway (a non-negligible p needs dof >~ x, i.e. dof > ~1490
-    # before x/2 > 745 underflows — far beyond any crosstab's
-    # (r-1)(c-1)).
-    EXPNX = f"exp(-{X})"
-    even_sum = (
-        f"aggregate({seq_even}, named_struct('s', {EXPNX}, 't', {EXPNX}),"
-        f" (acc, j) -> named_struct("
-        f"'s', acc.s + acc.t * {X} / CAST(j AS DOUBLE),"
-        f" 't', acc.t * {X} / CAST(j AS DOUBLE)),"
-        f" acc -> acc.s)"
-    )
-    p_even = f"({even_sum})"
-
-    # ---- odd dof: lgamma(a) for a = m + 1/2 (m = (dof-1)/2 >= 0)
-    m_half = f"CAST((({DOFI} - 1) / 2) AS INT)"
-    seq_lg = (
-        f"CASE WHEN {m_half} >= 1 THEN sequence(1, {m_half})"
-        f" ELSE CAST(array() AS ARRAY<INT>) END"
-    )
-    lgamma_a = (
-        f"({_d(math.log(math.sqrt(math.pi)))} + aggregate({seq_lg}, {_d(0.0)},"
-        f" (acc, j) -> acc + ln(CAST(j AS DOUBLE) - {HALF})))"
-    )
-    log_prefix = f"(-{X} + {A} * ln({X}) - {lgamma_a})"
-
-    # series for P(a, x), x < a+1: t_0 = 1/a; t_k = t_{k-1} * x/(a+k)
-    series_sum = (
-        f"aggregate(sequence(1, {_N_SERIES}),"
-        f" named_struct('s', {ONE} / {A}, 't', {ONE} / {A}),"
-        f" (acc, k) -> named_struct("
-        f"'s', acc.s + acc.t * {X} / ({A} + CAST(k AS DOUBLE)),"
-        f" 't', acc.t * {X} / ({A} + CAST(k AS DOUBLE))),"
-        f" acc -> acc.s)"
-    )
-    p_series = f"({ONE} - {series_sum} * exp({log_prefix}))"
-
-    # modified-Lentz continued fraction for Q(a, x), x >= a+1
-    an = "(-CAST(i AS DOUBLE) * (CAST(i AS DOUBLE) - " + A + "))"
-    b = f"(acc.b + {TWO})"
-    d_raw = f"({an} * acc.d + {b})"
-    d1 = f"(CASE WHEN abs({d_raw}) < {TINY} THEN {TINY} ELSE {d_raw} END)"
-    c_raw = f"({b} + {an} / acc.c)"
-    c1 = f"(CASE WHEN abs({c_raw}) < {TINY} THEN {TINY} ELSE {c_raw} END)"
-    d2 = f"({ONE} / {d1})"
-    b0 = f"({X} + {ONE} - {A})"
-    cf_h = (
-        f"aggregate(sequence(1, {_N_CF}),"
-        f" named_struct('b', {b0}, 'c', {ONE} / {TINY},"
-        f" 'd', {ONE} / {b0}, 'h', {ONE} / {b0}),"
-        f" (acc, i) -> named_struct('b', {b}, 'c', {c1}, 'd', {d2},"
-        f" 'h', acc.h * {d2} * {c1}),"
-        f" acc -> acc.h)"
-    )
-    p_cf = f"({cf_h} * exp({log_prefix}))"
-
-    p_odd = f"(CASE WHEN {X} < {A} + {ONE} THEN {p_series} ELSE {p_cf} END)"
-    p = f"(CASE WHEN ({DOFI} % 2) = 0 THEN {p_even} ELSE {p_odd} END)"
-    p = f"least({ONE}, greatest({_d(0.0)}, {p}))"
-    return (
-        f"(CASE WHEN {DOFI} <= 0 THEN {ONE}"
-        f" WHEN ({stat}) IS NULL OR isnan({S}) OR {S} <= {_d(0.0)} THEN {ONE}"
-        f" ELSE {p} END)"
-    )
-
-
-def chi2_sf_col(stat, dof):
-    """Chi-squared survival function as a PURE column expression.
-
-    Thin wrapper over :func:`chi2_sf_sql`: the whole fold machinery is
-    emitted as one SQL string and parsed in a single ``F.expr`` call —
-    the JVM parser is ~100x cheaper than building the same tree through
-    py4j, which matters on the deliver-stats build path (two of these
-    per inference plan).
-
-    ``stat``/``dof`` accept SQL fragments (preferred) or simple Columns
-    (column refs / arithmetic / literals — anything whose JVM
-    ``toString`` is valid SQL).
-    """
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    def _sql(v):
-        return v._jc.toString() if isinstance(v, Column) else str(v)
-
-    return F.expr(chi2_sf_sql(_sql(stat), _sql(dof)))

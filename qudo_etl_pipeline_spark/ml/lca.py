@@ -133,8 +133,7 @@ def _estep_sql(
     """The per-class log-joint as SQL text — the driver emits ONE string
     per EM iteration instead of thousands of py4j Column calls (the
     profiled cost of the literal-expression E-step was ~6.5k JVM
-    round-trips per iteration; same single-parse device as
-    functions.stats.chi2_sf_sql). All parameter literals are emitted in
+    round-trips per iteration). All parameter literals are emitted in
     codegen-stable form (folded map literals for theta, _sql_dw-wrapped
     scalars) so every iteration reuses one compiled loop body."""
     out = []

@@ -47,22 +47,34 @@ from pyspark.sql import functions as F
 from qudo_etl_pipeline_spark.ml.quality import adjusted_rand_index
 
 
-def classification_metrics(
+def _confusion_matrix(
     scored: DataFrame, label_col: str, pred_col: str
 ) -> dict:
-    """accuracy / weighted precision / recall / f1 / Cohen's kappa from
-    the confusion matrix (sklearn 'weighted' average semantics,
-    metrics.py:761-766). Rounded 3 as the reference."""
-    conf = {
+    """{(truth, prediction): count} in one groupBy collect."""
+    return {
         (r[label_col], r[pred_col]): r["n"]
         for r in scored.groupBy(label_col, pred_col)
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
         # a pair with a NULL truth or NULL prediction is unscoreable —
         # it belongs to no confusion-matrix cell (and None labels would
-        # crash the sorted() below); NULL-free inputs are unaffected
+        # crash the sorted() in _metrics_from_confusion); NULL-free
+        # inputs are unaffected
         if r[label_col] is not None and r[pred_col] is not None
     }
+
+
+def classification_metrics(
+    scored: DataFrame, label_col: str, pred_col: str
+) -> dict:
+    """accuracy / weighted precision / recall / f1 / Cohen's kappa from
+    the confusion matrix (sklearn 'weighted' average semantics,
+    metrics.py:761-766). Rounded 3 as the reference."""
+    return _metrics_from_confusion(_confusion_matrix(scored, label_col, pred_col))
+
+
+def _metrics_from_confusion(conf: dict) -> dict:
+    """:func:`classification_metrics` of a collected confusion matrix."""
     labels = sorted({k[0] for k in conf} | {k[1] for k in conf})
     n = sum(conf.values())
     if n == 0:
@@ -253,18 +265,15 @@ def signal_loss(
     )
     rf = RandomForestClassifier(seed=seed, labelCol="label").fit(train)
     result = {"all": classification_metrics(rf.transform(test), "label", "prediction")}
-    full = assembler.transform(base).cache()
-    try:
-        scored = rf.transform(full)
-        segments = sorted(
-            r["label"] for r in base.select("label").distinct().collect()
+    # a segment's confusion matrix is the label == seg slice of the
+    # full one: one collect serves every segment
+    conf = _confusion_matrix(
+        rf.transform(assembler.transform(base)), "label", "prediction"
+    )
+    for seg in sorted({label for label, _ in conf}):
+        result[str(int(seg))] = _metrics_from_confusion(
+            {k: n for k, n in conf.items() if k[0] == seg}
         )
-        for seg in segments:
-            result[str(int(seg))] = classification_metrics(
-                scored.filter(F.col("label") == seg), "label", "prediction"
-            )
-    finally:
-        full.unpersist()
     return result
 
 

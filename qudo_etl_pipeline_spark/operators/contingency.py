@@ -105,10 +105,8 @@ class _Variable:
         does (chisquared_tester.py:473); a constant variable has a zero
         denominator and gets no residual ('neu'). The ``m = r * c``
         Bonferroni tests share one ``alpha/m`` threshold: the bisected
-        |z| threshold for m <= 1024 (the oracles' helper; one bisection,
-        not the whole ``z_threshold_table``, which costs seconds of
-        driver time per alpha and holds the same floats), the survival
-        function itself for wider tables.
+        |z| threshold for m <= 1024 (the oracles' helper, one bisection
+        per variable), the survival function itself for wider tables.
         """
         m = len(self.grid)
         z_thr = z_threshold(alpha / m) if m <= 1024 else None
@@ -268,52 +266,20 @@ class ContingencyTables:
         self._memo.clear()
 
 
-def detect_cell_skew(
-    long: DataFrame,
-    keys: list[str],
-    sample_frac: float = 0.05,
-    hot_share: float = 0.3,
-    seed: int = 7,
-) -> bool:
-    """Sampled probe: does one cell key hold >= ``hot_share`` of rows?
-
-    One cheap job over a ``sample_frac`` sample of the melted frame —
-    the decision input for salting the cell aggregation. A single
-    dominant (variable, cluster, value) key (e.g. a sentinel answer in
-    one big cluster) concentrates on one reducer; everything else is
-    absorbed by map-side partial aggregation and AQE.
-    """
-    top = (
-        long.sample(fraction=sample_frac, seed=seed)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"), F.sum("n").alias("tot"))
-        .collect()[0]
-    )
-    if not top["tot"]:
-        return False
-    return top["mx"] / top["tot"] >= hot_share
-
-
 def contingency_tables(
     wide: DataFrame,
     cluster_col: str,
     variables: list[str] | None = None,
     weight_col: str | None = None,
     id_vars: list[str] | None = None,
-    salt_cells: bool | str = False,
-    n_salts: int = 8,
 ) -> ContingencyTables:
     """Melt ``wide`` and aggregate every crosstab cell in one shuffle.
 
-    ``salt_cells``: False (default) uses the plain one-shuffle hash
-    aggregation — map-side partial aggregation already bounds per-key
-    reduce input by the task count, which covers ordinary hot keys.
-    True forces the two-phase salted aggregation (plans/skew.py) for
-    inputs known to concentrate on single cells; ``"auto"`` runs
-    :func:`detect_cell_skew` (ONE sampled job at build time — only this
-    mode gives up the construction-launches-no-job property) and salts
-    iff the probe fires.
+    The aggregation is a plain hash ``groupBy`` with map-side partial
+    aggregation, so a hot cell (a sentinel answer in one big cluster)
+    sends at most one partial row per map task to its reducer — skew in
+    a single cell costs no extra reduce work. Building the tables
+    launches no Spark job.
     """
     if variables is None:
         excluded = {cluster_col, weight_col, *(id_vars or [])}
@@ -343,27 +309,15 @@ def contingency_tables(
     # THE one big-data shuffle (and the only pass over the input). Its
     # result is tiny (|vars| x |values| x |clusters|) and is collected
     # once by the first statistic that needs it.
-    keys = ["variable", cluster_col, "value"]
-    nn = long.filter(F.col("value").isNotNull()).withColumn("_w", w)
-    if salt_cells == "auto":
-        salt_cells = detect_cell_skew(nn, keys)
-    if salt_cells:
-        from qudo_etl_pipeline_spark.plans.skew import salted_aggregate
-
-        # two-phase (keys, salt) aggregation: the hot cell fans out over
-        # n_salts reducers; _w is never NULL (coalesced above), so
-        # count(_w) == count(*)
-        all_cells = salted_aggregate(
-            nn,
-            keys,
-            {"observed": ("_w", "count"), "w_observed": ("_w", "sum")},
-            n_salts=n_salts,
-        )
-    else:
-        all_cells = nn.groupBy(*keys).agg(
+    all_cells = (
+        long.filter(F.col("value").isNotNull())
+        .withColumn("_w", w)
+        .groupBy("variable", cluster_col, "value")
+        .agg(
             F.count(F.lit(1)).alias("observed"),
             F.sum("_w").alias("w_observed"),
         )
+    )
     cells = all_cells.filter(F.col("variable") != row_marker)
 
     cluster_sizes = all_cells.filter(F.col("variable") == row_marker).select(
@@ -404,14 +358,11 @@ def _frame(tables: ContingencyTables, fields: str, rows: list[tuple]) -> DataFra
     return tables.cells.sparkSession.createDataFrame(table, schema)
 
 
-def chi2_by_variable(
-    tables: ContingencyTables, dense: DataFrame | None = None
-) -> DataFrame:
+def chi2_by_variable(tables: ContingencyTables) -> DataFrame:
     """Per-variable chi-squared test over all crosstabs at once.
 
     Returns: variable, chi2_stat, dof, yates, n_values, n_clusters,
-    p_value. Statistical semantics live in :func:`_finalize`; ``dense``
-    is accepted for backwards compatibility and ignored.
+    p_value. Statistical semantics live in :func:`_finalize`.
     """
     return _frame(
         tables,
@@ -687,17 +638,14 @@ def discover_stats(deliver: DataFrame, n_feats: int = 10) -> DataFrame:
     )
 
 
-def cramers_v(
-    tables: "ContingencyTables", dense: DataFrame | None = None
-) -> DataFrame:
+def cramers_v(tables: "ContingencyTables") -> DataFrame:
     """Cramér's V effect size per variable — the magnitude companion to
     the chi-squared p-value (p says "dependent"; V says "how much"):
     V = sqrt(chi2 / (n * (min(r, c) - 1))), in [0, 1].
 
     Reads the finalized variables: the statistic and the observation
     total (the dense grid's grand total) per variable, in one local
-    frame the projection below folds on the driver. ``dense`` is
-    accepted for backwards compatibility and ignored.
+    frame the projection below folds on the driver.
     """
     per_var = _frame(
         tables,

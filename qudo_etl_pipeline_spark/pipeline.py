@@ -56,18 +56,9 @@ _LOG = logging.getLogger(__name__)
 
 @dataclass
 class SegmentationConfig:
-    """SegmentationConfig.py:4-18 equivalent.
-
-    ``bucket_table``: when set, the cleaned respondent table is
-    bucketed-WRITTEN on ``id_col`` (saveAsTable under this name) before
-    the algorithm fan-out, so every label join in :func:`run_scheme`
-    reads both sides pre-hashed on the join key — exchange-free
-    (evidence: tests/test_pipeline.py). The one-time write replaces the
-    in-memory cache; at 100 TB this is the difference between one
-    bucketed materialization and 2 shuffles per (scheme x algorithm)
-    label join. ``capture_plans`` stores each algorithm's label-join
-    executed plan in the result dict for plan-evidence assertions.
-    """
+    """SegmentationConfig.py:4-18 equivalent: which schemes and
+    families to run and how to test them. Every field chooses WHAT is
+    computed; each survey step has one physical plan."""
 
     survey_name: str
     schemes: dict[str, list[str]] = field(default_factory=dict)
@@ -79,16 +70,6 @@ class SegmentationConfig:
     include_lca: bool = False
     ks: list[int] | None = None
     seeds: list[int] | None = None
-    bucket_table: str | None = None
-    n_buckets: int = 32
-    capture_plans: bool = False
-    # Cell-skew handling for the inference aggregation: "auto" (default)
-    # runs the sampled skew probe once per (scheme, algorithm) and salts
-    # the one-shuffle cell aggregation iff a single (variable, cluster,
-    # value) cell dominates — real survey data's sentinel answers ("not
-    # selected" in one big cluster) are exactly that hot cell. False
-    # forces the plain plan, True forces salting.
-    salt_cells: bool | str = "auto"
     # Wall-clock guard per family fit, reference parity with the hard
     # 3000 s LCA timeout (reference: src/kraken/app/clustering.py:
     # 884-891, lca.R:15). A family that exceeds it is marked timed-out
@@ -331,22 +312,16 @@ def run_scheme(
             interruptOnCancel=True,
         )
         labeled = fit["labels"]
-        # inference runs on the ORIGINAL (string) answers + prediction.
-        # With cfg.bucket_table both sides derive from the bucketed scan
-        # (the label lineage is narrow: encode -> assemble -> transform),
-        # so this join needs no exchange.
+        # inference runs on the ORIGINAL (string) answers + prediction
         with_pred = cleaned.join(
             labeled.select(cfg.id_col, "prediction"), cfg.id_col
         )
-        if cfg.capture_plans:
-            join_plan = with_pred._jdf.queryExecution().executedPlan().toString()
         tables = contingency_tables(
             with_pred,
             cluster_col="prediction",
             variables=scheme_cols,
             weight_col=cfg.weight_col,
             id_vars=[cfg.id_col],
-            salt_cells=cfg.salt_cells,
         )
         deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
         discover = discover_stats(deliver)
@@ -380,7 +355,6 @@ def run_scheme(
             "discover": discover,
             "mode_list": modes,
             "metrics": metrics,
-            **({"join_plan": join_plan} if cfg.capture_plans else {}),
         }
 
     def finalize_contained(algo: str, fit: dict) -> dict:
@@ -428,19 +402,7 @@ def run_all_segmentations(
     """The full main.py:45-183 flow. Returns
     {scheme: {algorithm: {labels, deliver, discover, metrics}}} and
     (optionally) writes metrics CSV + deliver/discover Parquet."""
-    cleaned = CL.clean_responses(responses, questions=questions)
-    if cfg.bucket_table:
-        # bucketed materialization on the join key: one write, then every
-        # label join across schemes x algorithms reads co-located buckets
-        (
-            cleaned.write.bucketBy(cfg.n_buckets, cfg.id_col)
-            .sortBy(cfg.id_col)
-            .mode("overwrite")
-            .saveAsTable(cfg.bucket_table)
-        )
-        cleaned = spark.table(cfg.bucket_table)
-    else:
-        cleaned = cleaned.cache()
+    cleaned = CL.clean_responses(responses, questions=questions).cache()
     all_results: dict = {}
     for scheme, fragments in (cfg.schemes or {"all": ["all"]}).items():
         cols = select_scheme_columns(cleaned, fragments, cfg.id_col)

@@ -2,19 +2,17 @@
 
 AQE (enabled in session.py) already splits skewed sort-merge-join
 partitions at runtime, and hash aggregation does map-side partial
-aggregation — those cover most hot-key cases for free. Explicit salting
-remains the right tool when
-
-- a broadcast is impossible (both sides large) AND the hot keys are so
-  dominant that even a split partition is one task's worth of a single
-  key (AQE splits by partition, not by key);
-- the skewed operation is a stateful streaming aggregation, where AQE
-  does not apply.
+aggregation: a hot key of a sum/count/min/max aggregate sends at most
+one partial row per map task to its reducer, so aggregates need no
+salting (the contingency cell aggregation relies on exactly this).
+Explicit salting remains the right tool for joins where a broadcast is
+impossible (both sides large) AND the hot keys are so dominant that
+even a split partition is one task's worth of a single key (AQE splits
+by partition, not by key).
 
 ``salted_join`` replicates the small(er) side once per salt so the big
-side's hot key fans out over ``n_salts`` tasks; ``salted_aggregate``
-does a two-phase aggregation through an intermediate (key, salt) group.
-Both are result-identical to their unsalted forms (tests/test_plans.py).
+side's hot key fans out over ``n_salts`` tasks. It is result-identical
+to the unsalted join (tests/test_plans.py).
 
 Scale note (100 TB): salting multiplies the replicated side by
 ``n_salts`` — use it per-hot-key-table, not as a default; the salt
@@ -26,21 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_AGGS = {
-    "sum": F.sum,
-    "count": F.count,
-    "min": F.min,
-    "max": F.max,
-}
-
-# second-phase re-aggregation of the per-salt partials
-_MERGE = {
-    "sum": F.sum,
-    "count": F.sum,
-    "min": F.min,
-    "max": F.max,
-}
 
 
 def _salt_col(df: DataFrame, n_salts: int) -> Column:
@@ -55,13 +38,10 @@ def _salt_col(df: DataFrame, n_salts: int) -> Column:
     hits executor loss. A content hash assigns every row the same salt
     on every regeneration.
 
-    Byte-identical duplicate rows necessarily share a salt. For the
-    aggregate path that is harmless: phase 1's map-side combine folds
-    identical rows within each task, so the reducer for their (key,
-    salt) sees at most one partial per map task — bounded by task
-    count, not row count. For the join path a flood of fully identical
-    big-side rows stays on one reducer; spreading those would require
-    nondeterminism, which the correctness argument forbids.
+    Byte-identical duplicate rows necessarily share a salt, so a flood
+    of fully identical big-side rows stays on one reducer; spreading
+    those would require nondeterminism, which the correctness argument
+    forbids.
     """
     return F.pmod(
         F.xxhash64(*[F.col(c) for c in df.columns]),
@@ -92,32 +72,6 @@ def salted_join(
     ).withColumn("_salt", F.col("_salt").cast("bigint"))
     joined = salted_big.join(salted_small, [*on, "_salt"], how)
     return joined.drop("_salt")
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    n_salts: int = 8,
-) -> DataFrame:
-    """Two-phase aggregation through (keys, salt) for decomposable aggs.
-
-    ``aggs`` maps output column -> (input column, fn) with fn in
-    sum/count/min/max. Phase 1 aggregates per (keys, salt) — the hot key
-    spreads over n_salts reducers; phase 2 merges the tiny per-salt
-    partials per key. Result-identical to ``df.groupBy(keys).agg(...)``.
-    """
-    bad = [fn for _, fn in aggs.values() if fn not in _AGGS]
-    if bad:
-        raise ValueError(f"unsupported agg fns: {bad} (need {sorted(_AGGS)})")
-    salted = df.withColumn("_salt", _salt_col(df, n_salts))
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *[_AGGS[fn](col).alias(out) for out, (col, fn) in aggs.items()]
-    )
-    phase2 = phase1.groupBy(*keys).agg(
-        *[_MERGE[fn](out).alias(out) for out, (_, fn) in aggs.items()]
-    )
-    return phase2
 
 
 def choose_join_strategy(

@@ -160,15 +160,37 @@ def test_cluster_mode_list_matches_pandas_mode(spark):
     }
 
 
-def test_salt_cells_auto_activates_and_is_hash_identical(spark):
-    """Planted hot cell (a sentinel answer concentrated in one big
-    cluster): salt_cells="auto" must detect it, route the cell
-    aggregation through the two-phase (keys, salt) plan, and produce
-    cells identical to the unsalted plan."""
-    from qudo_etl_pipeline_spark.operators.contingency import (
-        contingency_tables,
-        detect_cell_skew,
+def _skewed_survey(spark, hot_rows=3000, cold_rows=60):
+    """One (variable, cluster, value) cell holds ~98% of melt rows."""
+    rows = [("c0", "same", "x%d" % (i % 5)) for i in range(hot_rows)]
+    rows += [("c%d" % (i % 3), "v%d" % (i % 7), "y%d" % (i % 4)) for i in range(cold_rows)]
+    return rows, spark.createDataFrame(
+        rows, "cluster string, q_hot string, q_cold string"
     )
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of ``df`` after an action: the final
+    plan of AQE (on in session.py), without its initial-plan copy."""
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def _assert_one_combined_shuffle(plan: str) -> None:
+    """One hash exchange for the cells, with the partial aggregates
+    (the map-side combine) below it and none above it."""
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    above, below = plan.split("Exchange hashpartitioning")
+    assert "partial_count(1)" in below and "partial_sum" in below, plan
+    assert "partial_" not in above, plan
+
+
+def test_hot_cell_aggregates_map_side_in_one_shuffle(spark):
+    """A hot cell (a sentinel answer concentrated in one big cluster)
+    needs no special plan: the cell aggregation combines map-side
+    before its single shuffle, so the hot cell sends at most one
+    partial row per map task to its reducer. The cells equal the
+    fixtures' hand counts."""
+    from collections import Counter
 
     rows = []
     for i in range(1700):  # 85% of rows: one dominant cell
@@ -178,39 +200,31 @@ def test_salt_cells_auto_activates_and_is_hash_identical(spark):
     wide = spark.createDataFrame(
         rows, "alchemer_id: long, cluster: int, q1_tgt: string"
     ).repartition(8)
+    t = contingency_tables(wide, "cluster", ["q1_tgt"], id_vars=["alchemer_id"])
+    cells = {tuple(r) for r in t.cells.collect()}
+    _assert_one_combined_shuffle(_final_plan(t.cells))
+    # i in 1700..1999 runs through every (i % 2, i % 3) pair 50 times
+    assert cells == {("q1_tgt", 0, "not selected", 1700, 1700.0)} | {
+        ("q1_tgt", c, v, 50, 50.0) for c in (1, 2) for v in "abc"
+    }
+    assert {tuple(r) for r in t.cluster_sizes.collect()} == {
+        (0, 1700, 1700.0), (1, 150, 150.0), (2, 150, 150.0)
+    }
 
-    t_auto = contingency_tables(
-        wide, "cluster", ["q1_tgt"], id_vars=["alchemer_id"],
-        salt_cells="auto",
+    survey, skewed = _skewed_survey(spark)
+    t2 = contingency_tables(skewed, "cluster")
+    got = {
+        (r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
+        for r in t2.cells.collect()
+    }
+    _assert_one_combined_shuffle(_final_plan(t2.cells))
+    hand = Counter(
+        (var, c, v)
+        for c, hot, cold in survey
+        for var, v in (("q_hot", hot), ("q_cold", cold))
     )
-    t_plain = contingency_tables(
-        wide, "cluster", ["q1_tgt"], id_vars=["alchemer_id"],
-        salt_cells=False,
-    )
-    try:
-        # plan evidence: the auto path went through the salted two-phase
-        # aggregation (a _salt grouping appears in the cells lineage)
-        auto_plan = t_auto.cells._jdf.queryExecution().toString()
-        plain_plan = t_plain.cells._jdf.queryExecution().toString()
-        assert "_salt" in auto_plan
-        assert "_salt" not in plain_plan
-        # and the probe itself fires on the planted fixture
-        long = melt(
-            wide.select("cluster", "q1_tgt"),
-            id_vars=["cluster"],
-            value_vars=["q1_tgt"],
-        )
-        assert detect_cell_skew(long, ["variable", "cluster", "value"])
-        # results hash-identical: same cells, same counts, same weights
-        a = {tuple(r) for r in t_auto.cells.collect()}
-        p = {tuple(r) for r in t_plain.cells.collect()}
-        assert a == p and len(a) == 7
-        sa = {tuple(r) for r in t_auto.cluster_sizes.collect()}
-        sp = {tuple(r) for r in t_plain.cluster_sizes.collect()}
-        assert sa == sp
-    finally:
-        t_auto.unpersist()
-        t_plain.unpersist()
+    assert hand[("q_hot", "c0", "same")] == 3000
+    assert got == {k: (n, float(n)) for k, n in hand.items()}
 
 
 def test_cramers_v_known_table(spark):

@@ -44,33 +44,11 @@ def test_end_to_end_segmentation(spark, responses, tmp_path):
         algorithms=("kmeans", "kmodes", "rules_based"),
         ks=[3],
         seeds=[1, 42],
-        bucket_table="e2e_resp_bucketed",
-        n_buckets=4,
-        capture_plans=True,
     )
-    # disable auto-broadcast so the label joins must resolve as
-    # sort-merge joins — the shape whose exchange-freedom the bucketed
-    # write is meant to buy (tiny fixture labels would broadcast
-    # otherwise; explicit F.broadcast hints elsewhere still apply)
-    spark.sql("DROP TABLE IF EXISTS e2e_resp_bucketed")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = run_all_segmentations(
-            spark, responses, cfg, output_dir=str(tmp_path / "out")
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        # NOTE: the bucketed table is dropped at the END of the test —
-        # the returned frames' lineage still reads its files
+    out = run_all_segmentations(
+        spark, responses, cfg, output_dir=str(tmp_path / "out")
+    )
     by_algo = out["behavioral"]
-    # bucketed-write evidence: the label joins whose lineage is narrow
-    # (encode -> assemble -> transform) read both sides pre-hashed on the
-    # id buckets — no shuffle exchange above the join
-    for algo in ("kmeans_and_pca", "rules_based"):
-        plan = by_algo[algo]["join_plan"]
-        assert "SortMergeJoin" in plan, (algo, plan[:800])
-        assert "Exchange hashpartitioning" not in plan, (algo, plan[:2000])
     # the fixture's scheme has numeric columns, so the kmodes family
     # dispatches to kprototypes (clustering.py:220-234 parity)
     assert set(by_algo) == {"kmeans_and_pca", "kprototypes", "rules_based"}
@@ -110,7 +88,6 @@ def test_end_to_end_segmentation(spark, responses, tmp_path):
         str(tmp_path / "out" / "behavioral" / "kmeans_and_pca" / "deliver")
     )
     assert deliver_rt.count() == by_algo["kmeans_and_pca"]["deliver"].count()
-    spark.sql("DROP TABLE IF EXISTS e2e_resp_bucketed")
 
 
 def test_workqueue_protocol(tmp_path):

@@ -1,11 +1,12 @@
-"""Plan-layer tests: melt escaping, skew salting equivalence."""
+"""Plan-layer tests: melt escaping, salted-join equivalence, join
+strategy choice."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.plans.melt import melt
-from qudo_etl_pipeline_spark.plans.skew import salted_aggregate, salted_join
+from qudo_etl_pipeline_spark.plans.skew import salted_join
 
 
 def test_melt_escapes_hostile_column_names(spark):
@@ -44,77 +45,6 @@ def test_salted_join_matches_plain_join(spark):
         for r in salted_join(big, small, ["key"], n_salts=4, how="left").collect()
     }
     assert salted_left == plain_left
-
-
-def test_salted_aggregate_matches_plain(spark):
-    df = _skewed(spark)
-    plain = {
-        r["key"]: (r["total"], r["n"], r["lo"], r["hi"])
-        for r in df.groupBy("key")
-        .agg(
-            F.sum("w").alias("total"),
-            F.count("v").alias("n"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-        .collect()
-    }
-    salted = {
-        r["key"]: (r["total"], r["n"], r["lo"], r["hi"])
-        for r in salted_aggregate(
-            df,
-            ["key"],
-            {
-                "total": ("w", "sum"),
-                "n": ("v", "count"),
-                "lo": ("v", "min"),
-                "hi": ("v", "max"),
-            },
-            n_salts=4,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def _skewed_survey(spark, hot_rows=3000, cold_rows=60):
-    """One (variable, cluster, value) cell holds ~98% of melt rows."""
-    rows = [("c0", "same", "x%d" % (i % 5)) for i in range(hot_rows)]
-    rows += [("c%d" % (i % 3), "v%d" % (i % 7), "y%d" % (i % 4)) for i in range(cold_rows)]
-    return spark.createDataFrame(rows, "cluster string, q_hot string, q_cold string")
-
-
-def test_contingency_auto_salting_engages_only_on_skew(spark):
-    """salt_cells='auto' must produce the two-phase (_salt) aggregation
-    shape on the skewed fixture, the plain one-shuffle shape on a
-    uniform fixture — and identical cell values either way."""
-    from qudo_etl_pipeline_spark.operators.contingency import contingency_tables
-
-    skewed = _skewed_survey(spark)
-    t_auto = contingency_tables(skewed, "cluster", salt_cells="auto")
-    plan = t_auto.cells._jdf.queryExecution().analyzed().toString()
-    assert "_salt" in plan  # two-phase shape engaged
-
-    t_plain = contingency_tables(skewed, "cluster", salt_cells=False)
-    plain_plan = t_plain.cells._jdf.queryExecution().analyzed().toString()
-    assert "_salt" not in plain_plan
-
-    # result identity: salted == plain, cell for cell
-    a = {(r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
-         for r in t_auto.cells.collect()}
-    b = {(r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
-         for r in t_plain.cells.collect()}
-    assert a == b
-    t_auto.unpersist()
-    t_plain.unpersist()
-
-    uniform = spark.createDataFrame(
-        [("c%d" % (i % 4), "u%d" % (i % 11), "w%d" % (i % 6)) for i in range(2000)],
-        "cluster string, q_a string, q_b string",
-    )
-    t_uni = contingency_tables(uniform, "cluster", salt_cells="auto")
-    uni_plan = t_uni.cells._jdf.queryExecution().analyzed().toString()
-    assert "_salt" not in uni_plan  # probe must NOT fire on uniform data
-    t_uni.unpersist()
 
 
 def test_choose_join_strategy_decisions():

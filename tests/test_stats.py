@@ -58,34 +58,6 @@ def test_chi2_sf_exponential_identity():
         assert chi2_sf(x, 2) == pytest.approx(math.exp(-x / 2), rel=1e-11)
 
 
-def test_chi2_sf_col_matches_python(spark):
-    """The pure-JVM column SF must agree with the numpy implementation
-    over even and odd dofs, both gamma branches, and edge cases."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from qudo_etl_pipeline_spark.functions.stats import chi2_sf, chi2_sf_col
-
-    rows = []
-    rng = np.random.default_rng(5)
-    for dof in [1, 2, 3, 4, 5, 7, 8, 11, 20, 21, 40, 41]:
-        for x in [0.001, 0.5, 1.0, 2.0, 3.84, 5.99, 10.0, 25.0, 60.0, 150.0]:
-            rows.append((float(x), int(dof)))
-        for _ in range(5):
-            rows.append((float(rng.uniform(0.01, 80)), int(dof)))
-    rows += [(0.0, 2), (-1.0, 3), (5.0, 0), (float("nan"), 4)]
-    df = spark.createDataFrame(rows, "x double, dof int")
-    got = df.select(
-        "x", "dof", chi2_sf_col(F.col("x"), F.col("dof")).alias("p")
-    ).collect()
-    assert len(got) == len(rows)
-    for r in got:
-        expected = chi2_sf(r["x"], float(r["dof"]))
-        assert r["p"] == pytest.approx(expected, rel=1e-9, abs=1e-12), (
-            r["x"], r["dof"], r["p"], expected,
-        )
-
-
 def test_inference_plans_have_no_python_nodes(spark):
     """The planted inference queries must stay entirely JVM-side: no
     BatchEvalPython / ArrowEvalPython node anywhere in the plan."""
@@ -95,16 +67,3 @@ def test_inference_plans_have_no_python_nodes(spark):
         df = registry()[q].spark(spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, (q, plan[:2000])
-
-
-def test_z_threshold_table_matches_scalar():
-    """The vectorized bisection must be bit-identical to the scalar
-    helper the DuckDB oracle generator uses."""
-    from qudo_etl_pipeline_spark.functions.stats import (
-        z_threshold,
-        z_threshold_table,
-    )
-
-    tbl = z_threshold_table(0.05, max_m=64)
-    for m in [2, 3, 7, 15, 33, 64]:
-        assert tbl[m] == z_threshold(0.05 / m), m

@@ -1,0 +1,67 @@
+"""The survey path's static import closure stays inside the survey system.
+
+The closure is every package module reachable from the survey entry
+points (``pipeline``, ``workqueue``, ``sources.io``, ``session``) through
+package-internal imports, function-level (lazy) imports included, plus
+the ``__init__`` of every package on the way, which importing a
+submodule runs. No catalog, streaming or skew-salting module may be in
+it: they do not run on the survey path.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = "qudo_etl_pipeline_spark"
+ROOT = Path(__file__).resolve().parent.parent
+ENTRY_POINTS = ("pipeline", "workqueue", "sources.io", "session")
+FORBIDDEN_PREFIXES = (f"{PKG}.catalog", f"{PKG}.streaming")
+FORBIDDEN = {f"{PKG}.plans.skew", f"{PKG}.operators.checks"}
+
+
+def _path(mod: str) -> Path | None:
+    base = ROOT.joinpath(*mod.split("."))
+    if base.is_dir():
+        return base / "__init__.py"
+    return base.with_suffix(".py") if base.with_suffix(".py").exists() else None
+
+
+def _imports(mod: str) -> set[str]:
+    """Package modules ``mod`` imports anywhere in its body."""
+    out = set()
+    for node in ast.walk(ast.parse(_path(mod).read_text())):
+        if isinstance(node, ast.Import):
+            out |= {a.name for a in node.names if a.name.split(".")[0] == PKG}
+        elif (
+            isinstance(node, ast.ImportFrom)
+            and node.level == 0
+            and (node.module or "").split(".")[0] == PKG
+        ):
+            out.add(node.module)
+            # `from pkg import submodule`
+            out |= {f"{node.module}.{a.name}" for a in node.names}
+    return {m for m in out if _path(m) is not None}
+
+
+def survey_closure() -> set[str]:
+    seen: set[str] = set()
+    todo = [f"{PKG}.{m}" for m in ENTRY_POINTS]
+    while todo:
+        mod = todo.pop()
+        if mod in seen:
+            continue
+        seen.add(mod)
+        parts = mod.split(".")
+        todo += [".".join(parts[:i]) for i in range(1, len(parts))]
+        todo += _imports(mod)
+    return seen
+
+
+def test_survey_closure_excludes_catalog_streaming_and_salting():
+    closure = survey_closure()
+    assert f"{PKG}.operators.contingency" in closure  # reaches inference
+    leaked = sorted(
+        m for m in closure if m in FORBIDDEN or m.startswith(FORBIDDEN_PREFIXES)
+    )
+    assert not leaked, leaked

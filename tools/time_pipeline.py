@@ -1,5 +1,5 @@
 """Time the WHOLE survey-segmentation pipeline end-to-end (M37):
-clean -> bucketed materialization -> clustering families -> per-segment
+clean -> cached respondent table -> clustering families -> per-segment
 inference -> metrics -> parquet/CSV sinks, in one wall-clock number plus
 total shuffle bytes — the reference's production unit
 (src/kraken/app/main.py:45-183), which SCALING.md previously only
@@ -85,19 +85,6 @@ def main() -> None:
         algorithms=("kmeans", "gmm", "kmodes", "rules_based"),
         ks=[3],
         seeds=[1, 42],
-        bucket_table="timed_resp_bucketed",
-        n_buckets=32,
-    )
-    spark.sql("DROP TABLE IF EXISTS timed_resp_bucketed")
-    # a previous session's managed-table files survive the (no-op) DROP
-    # in a fresh catalog — clear the location too
-    import shutil
-
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    shutil.rmtree(
-        os.path.join(warehouse, "timed_resp_bucketed"), ignore_errors=True
     )
     out_dir = tempfile.mkdtemp(prefix="pipe_e2e_")
 
