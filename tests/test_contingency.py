@@ -160,15 +160,6 @@ def test_cluster_mode_list_matches_pandas_mode(spark):
     }
 
 
-def _skewed_survey(spark, hot_rows=3000, cold_rows=60):
-    """One (variable, cluster, value) cell holds ~98% of melt rows."""
-    rows = [("c0", "same", "x%d" % (i % 5)) for i in range(hot_rows)]
-    rows += [("c%d" % (i % 3), "v%d" % (i % 7), "y%d" % (i % 4)) for i in range(cold_rows)]
-    return rows, spark.createDataFrame(
-        rows, "cluster string, q_hot string, q_cold string"
-    )
-
-
 def _final_plan(df) -> str:
     """The executed physical plan of ``df`` after an action: the final
     plan of AQE (on in session.py), without its initial-plan copy."""
@@ -184,14 +175,14 @@ def _assert_one_combined_shuffle(plan: str) -> None:
     assert "partial_" not in above, plan
 
 
-def test_hot_cell_aggregates_map_side_in_one_shuffle(spark):
+def test_salt_cells_auto_activates_and_is_hash_identical(spark):
     """A hot cell (a sentinel answer concentrated in one big cluster)
-    needs no special plan: the cell aggregation combines map-side
-    before its single shuffle, so the hot cell sends at most one
-    partial row per map task to its reducer. The cells equal the
-    fixtures' hand counts."""
-    from collections import Counter
-
+    needs no special plan: the skew handling that activates by itself is
+    the map-side combine below the cell aggregation's single shuffle, so
+    the hot cell sends at most one partial row per map task to its
+    reducer. (The name dates from the removed ``salt_cells="auto"``
+    switch, which routed this fixture through a salted two-phase plan.)
+    The cells are identical to the fixture's hand counts."""
     rows = []
     for i in range(1700):  # 85% of rows: one dominant cell
         rows.append((i, 0, "not selected"))
@@ -210,21 +201,6 @@ def test_hot_cell_aggregates_map_side_in_one_shuffle(spark):
     assert {tuple(r) for r in t.cluster_sizes.collect()} == {
         (0, 1700, 1700.0), (1, 150, 150.0), (2, 150, 150.0)
     }
-
-    survey, skewed = _skewed_survey(spark)
-    t2 = contingency_tables(skewed, "cluster")
-    got = {
-        (r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
-        for r in t2.cells.collect()
-    }
-    _assert_one_combined_shuffle(_final_plan(t2.cells))
-    hand = Counter(
-        (var, c, v)
-        for c, hot, cold in survey
-        for var, v in (("q_hot", hot), ("q_cold", cold))
-    )
-    assert hand[("q_hot", "c0", "same")] == 3000
-    assert got == {k: (n, float(n)) for k, n in hand.items()}
 
 
 def test_cramers_v_known_table(spark):

@@ -1,5 +1,5 @@
 """Plan-layer tests: melt escaping, salted-join equivalence, join
-strategy choice."""
+strategy choice, the contingency cell plan on skewed input."""
 
 from __future__ import annotations
 
@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.plans.melt import melt
 from qudo_etl_pipeline_spark.plans.skew import salted_join
+
+from tests.test_contingency import _assert_one_combined_shuffle, _final_plan
 
 
 def test_melt_escapes_hostile_column_names(spark):
@@ -45,6 +47,50 @@ def test_salted_join_matches_plain_join(spark):
         for r in salted_join(big, small, ["key"], n_salts=4, how="left").collect()
     }
     assert salted_left == plain_left
+
+
+def _skewed_survey(spark, hot_rows=3000, cold_rows=60):
+    """One (variable, cluster, value) cell holds ~98% of melt rows."""
+    rows = [("c0", "same", "x%d" % (i % 5)) for i in range(hot_rows)]
+    rows += [("c%d" % (i % 3), "v%d" % (i % 7), "y%d" % (i % 4)) for i in range(cold_rows)]
+    return rows, spark.createDataFrame(
+        rows, "cluster string, q_hot string, q_cold string"
+    )
+
+
+def test_contingency_auto_salting_engages_only_on_skew(spark):
+    """The contingency cell aggregation has one plan shape whatever the
+    skew: one hash shuffle with the partial (map-side) aggregates below
+    it, on the skewed fixture and on a uniform one alike, and cell values
+    equal to the hand counts. (The name dates from the removed
+    ``salt_cells="auto"`` probe, which switched the skewed fixture to a
+    salted two-phase plan; the map-side combine now bounds the hot
+    cell.)"""
+    from collections import Counter
+
+    from qudo_etl_pipeline_spark.operators.contingency import contingency_tables
+
+    uniform_rows = [
+        ("c%d" % (i % 4), "u%d" % (i % 11), "w%d" % (i % 6)) for i in range(2000)
+    ]
+    uniform = spark.createDataFrame(
+        uniform_rows, "cluster string, q_hot string, q_cold string"
+    )
+    skewed_rows, skewed = _skewed_survey(spark)
+    assert Counter(r[:2] for r in skewed_rows)[("c0", "same")] == 3000
+    for survey, df in ((skewed_rows, skewed), (uniform_rows, uniform)):
+        t = contingency_tables(df, "cluster")
+        got = {
+            (r["variable"], r["cluster"], r["value"]): (r["observed"], r["w_observed"])
+            for r in t.cells.collect()
+        }
+        _assert_one_combined_shuffle(_final_plan(t.cells))
+        hand = Counter(
+            (var, c, v)
+            for c, hot, cold in survey
+            for var, v in (("q_hot", hot), ("q_cold", cold))
+        )
+        assert got == {k: (n, float(n)) for k, n in hand.items()}
 
 
 def test_choose_join_strategy_decisions():
