@@ -64,19 +64,17 @@ def kmeans_fit(
     k: int,
     seed: int = 42,
     features_col: str = FEATURES,
-    _prevectorized: bool = False,
 ) -> dict:
     """One KMeans fit. Returns dict(labels=DataFrame+prediction,
     inertia=float, model). MLlib k-means|| init (delta vs sklearn
     k-means++ documented above).
 
-    ``_prevectorized``: internal — multi-fit callers (multi-seed,
-    optimal-k, elbow) pass a frame that already carries the cached
-    ``_v`` vector column so the array→vector conversion isn't
-    re-executed once per fit."""
+    Multi-fit callers (multi-seed, optimal-k) pass a frame that already
+    carries the cached ``_v`` vector column, so the array→vector
+    conversion isn't re-executed once per fit."""
     from pyspark.ml.clustering import KMeans
 
-    vdf = df if _prevectorized else _to_vec(df, features_col)
+    vdf = df if "_v" in df.columns else _to_vec(df, features_col)
     model = KMeans(
         k=k, seed=seed, featuresCol="_v", predictionCol=PREDICTION
     ).fit(vdf)
@@ -115,9 +113,14 @@ def remove_unbalanced(metrics: list[dict]) -> list[dict]:
     return kept
 
 
-def _rank_best(metrics: list[dict], information: bool = False) -> int:
+def _rank_best(
+    metrics: list[dict],
+    information: bool = False,
+    bonus: list[float] | None = None,
+) -> int:
     """Index (into `metrics`) of the max-rank_sum entry via quality.py's
-    pandas-parity ranking. Ties resolve to the first (pandas idxmax)."""
+    pandas-parity ranking, plus an optional per-entry ``bonus`` (the
+    elbow k's). Ties resolve to the first (pandas idxmax)."""
     import pandas as pd
 
     cols = ["silhouette", "davies_bouldin", "calinski_harabasz"]
@@ -133,6 +136,8 @@ def _rank_best(metrics: list[dict], information: bool = False) -> int:
         pdf["aic_rank"] = pdf["aic"].rank(ascending=False)
         rank_cols += ["bic_rank", "aic_rank"]
     pdf["rank_sum"] = pdf[rank_cols].sum(axis=1)
+    if bonus is not None:
+        pdf["rank_sum"] += bonus
     return int(pdf["rank_sum"].idxmax())
 
 
@@ -155,8 +160,7 @@ def kmeans_multi_seed(
             fits = list(
                 pool.map(
                     lambda s: kmeans_fit(
-                        vdf, k, seed=s, features_col=features_col,
-                        _prevectorized=True,
+                        vdf, k, seed=s, features_col=features_col
                     ),
                     seeds,
                 )
@@ -229,8 +233,6 @@ def optimal_k(
 ) -> int:
     """Optimal-k search (clustering.py:391-478): per-k cost + metrics,
     rank-sum with a +n_points bonus for the elbow k, argmax."""
-    import pandas as pd
-
     ks = ks or list(range(MIN_K, MAX_K))
     # cache the vectorized frame once for the whole k scan
     vdf = _to_vec(df, features_col).cache()
@@ -239,8 +241,7 @@ def optimal_k(
             fits = list(
                 pool.map(
                     lambda k: kmeans_fit(
-                        vdf, k, seed=seed, features_col=features_col,
-                        _prevectorized=True,
+                        vdf, k, seed=seed, features_col=features_col
                     ),
                     ks,
                 )
@@ -250,26 +251,11 @@ def optimal_k(
                 pool.map(lambda f: fit_quality(f, features_col), fits)
             )
         costs = [f["inertia"] for f in fits]
-        pdf = pd.DataFrame(
-            [
-                {
-                    "n_clusters": m["n_clusters"],
-                    "silhouette": m["silhouette"],
-                    "davies_bouldin": m["davies_bouldin"],
-                    "calinski_harabasz": m["calinski_harabasz"],
-                }
-                for m in metrics
-            ]
-        )
-        pdf["silhouette_rank"] = pdf["silhouette"].rank()
-        pdf["davies_bouldin_rank"] = pdf["davies_bouldin"].rank(ascending=False)
-        pdf["calinski_harabasz_rank"] = pdf["calinski_harabasz"].rank()
-        pdf["rank_sum"] = pdf[
-            ["silhouette_rank", "davies_bouldin_rank", "calinski_harabasz_rank"]
-        ].sum(axis=1)
         elbow_k = ks[elbow_index(costs)]
-        pdf.loc[pdf["n_clusters"] == elbow_k, "rank_sum"] += len(costs)
-        return int(pdf.set_index("n_clusters")["rank_sum"].idxmax())
+        bonus = [
+            len(costs) if m["n_clusters"] == elbow_k else 0 for m in metrics
+        ]
+        return int(metrics[_rank_best(metrics, bonus=bonus)]["n_clusters"])
     finally:
         vdf.unpersist()
 
@@ -279,7 +265,6 @@ def gmm_fit(
     k: int,
     seed: int = 42,
     features_col: str = FEATURES,
-    _prevectorized: bool = False,
 ) -> dict | None:
     """GaussianMixture fit with manual BIC/AIC (clustering.py:921-941).
 
@@ -294,10 +279,11 @@ def gmm_fit(
 
     from pyspark.ml.clustering import GaussianMixture
 
-    # multi-seed callers pass one shared cached vector frame
-    # (_prevectorized), the same device as kmeans_fit — a per-seed
-    # _to_vec + cache would hold n_seeds copies of the data at once
-    vdf = df if _prevectorized else _to_vec(df, features_col).cache()
+    # multi-seed callers pass one shared cached vector frame (it carries
+    # ``_v``), the same device as kmeans_fit — a per-seed _to_vec +
+    # cache would hold n_seeds copies of the data at once
+    prevectorized = "_v" in df.columns
+    vdf = df if prevectorized else _to_vec(df, features_col).cache()
     try:
         model = GaussianMixture(
             k=k, seed=seed, featuresCol="_v", predictionCol=PREDICTION
@@ -329,7 +315,7 @@ def gmm_fit(
             "aic": aic,
         }
     finally:
-        if not _prevectorized:
+        if not prevectorized:
             vdf.unpersist()
 
 
@@ -350,8 +336,7 @@ def gmm_multi_seed(
                 f
                 for f in pool.map(
                     lambda s: gmm_fit(
-                        vdf, k, seed=s, features_col=features_col,
-                        _prevectorized=True,
+                        vdf, k, seed=s, features_col=features_col
                     ),
                     seeds,
                 )

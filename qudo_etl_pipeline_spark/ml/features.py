@@ -28,6 +28,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -99,6 +101,43 @@ def build_code_maps(
             vals.sort(key=lambda t: str(t[0]))
         maps[c] = {v: i for i, (v, _) in enumerate(vals)}
     return maps
+
+
+# pattern tables larger than this are not collected (the caller's
+# distributed loop runs instead) — bounds driver memory at any input size
+PATTERN_THRESHOLD = 200_000
+
+
+def pattern_table(
+    df: DataFrame,
+    cols: list[str],
+    num_cols: Sequence[str] = (),
+    min_col: str | None = None,
+    threshold: int = PATTERN_THRESHOLD,
+) -> tuple[list | None, int | None]:
+    """The (pattern, count ``_w``[, min ``min_col`` as ``_mid``]) table
+    of ``cols + num_cols``: the sufficient statistic the categorical fit
+    families (kmodes, LCA) iterate over driver-side. One shuffle;
+    ``limit`` bounds what can reach the driver.
+
+    Probe rule: a categorical-only input always probes (its pattern
+    space is bounded by the answer-option product); numeric columns make
+    patterns ~ rows, so a mixed input probes only when ``df.count()``
+    fits under ``threshold``. Returns ``(rows, n)``: ``rows`` is None
+    when the table was not probed or overflowed (the caller runs its
+    distributed loop); ``n`` is the row count if the rule counted it."""
+    n = None
+    if num_cols:
+        n = df.count()
+        if n > threshold:
+            return None, n
+    aggs = [F.count(F.lit(1)).alias("_w")]
+    if min_col is not None:
+        aggs.append(F.min(min_col).alias("_mid"))
+    rows = (
+        df.groupBy(*cols, *num_cols).agg(*aggs).limit(threshold + 1).collect()
+    )
+    return (None if len(rows) > threshold else rows), n
 
 
 def label_encode(

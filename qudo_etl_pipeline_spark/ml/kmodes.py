@@ -2,8 +2,22 @@
 
 Spark has no categorical clustering; the reference uses the `kmodes`
 library (reference: src/kraken/app/clustering.py:348-363,480-539 —
-KModes(init='Cao'), KPrototypes(init='Cao', n_init=1)). Re-expressed
-as iterative DataFrame programs:
+KModes(init='Cao'), KPrototypes(init='Cao', n_init=1)). One entry point,
+``kmodes_fit``, fits both: KPrototypes is the ``num_cols`` case.
+
+Two execution strategies, with the pattern device ``ml.lca`` shares:
+
+- **Pattern path**: the whole Cao init + Lloyd loop is a function of the
+  (answer pattern, count, min id) table that
+  ``features.pattern_table`` collects in one shuffle (categorical-only
+  inputs always probe; mixed inputs only when the row count fits under
+  the threshold). The loop runs in numpy over weighted patterns with
+  the distributed operators' exact semantics (cross-path tests pin
+  modes, cost, iterations and labels equal); labels are one lazy
+  assignment pass.
+- **Distributed path** (too many patterns, a mixed input above the
+  threshold, or a table with fewer than k NULL-free patterns): the
+  iterative DataFrame program below.
 
 - **Cao init** (deterministic, no seed): density(x) = mean over
   attributes of freq(x_attr)/n; first mode = argmax density; mode j =
@@ -42,6 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from qudo_etl_pipeline_spark.ml.features import PATTERN_THRESHOLD, pattern_table
 
 
 # per-column distinct-count ceiling for the create_map density lookup;
@@ -266,29 +282,6 @@ def _update_modes(
     return new_modes
 
 
-# pattern tables larger than this are not collected (the distributed
-# Lloyd loop runs instead) — bounds driver memory at any input size
-_KM_PATTERN_THRESHOLD = 200_000
-
-
-def _pattern_rows(
-    df: DataFrame, cols: list[str], id_col: str, threshold: int
-) -> list | None:
-    """(pattern, count, min id) rows — the complete sufficient statistic
-    of the KModes loop AND of Cao init (min id carries the row-level
-    tie-break). One shuffle; ``limit`` bounds what can reach the driver;
-    overflow returns None (caller falls back to the distributed loop)."""
-    rows = (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_w"), F.min(id_col).alias("_mid"))
-        .limit(threshold + 1)
-        .collect()
-    )
-    if len(rows) > threshold:
-        return None
-    return rows
-
-
 def _kmodes_patterns(
     pat: list,
     cat_cols: list[str],
@@ -470,9 +463,11 @@ def kmodes_fit(
     gamma: float | None = None,
     max_iter: int = 20,
     id_col: str = "row_id",
-    pattern_threshold: int = _KM_PATTERN_THRESHOLD,
+    pattern_threshold: int = PATTERN_THRESHOLD,
 ) -> dict:
-    """Full KModes (num_cols empty) / KPrototypes (num_cols given) fit.
+    """Full KModes (num_cols empty) / KPrototypes (num_cols given: mixed
+    distance sq_euclid(num) + gamma * hamming(cat), clustering.py:328-346)
+    fit.
 
     Returns dict(labels=DataFrame with `prediction`, modes, cost, n_iter).
     Deterministic: Cao init, fixed tie-breaks, no randomness.
@@ -481,18 +476,11 @@ def kmodes_fit(
     if gamma is None:
         gamma = default_gamma(df, num_cols)
 
-    # Pattern fast path (same design as ml.lca pattern EM): the whole
-    # Cao init + Lloyd loop is a function of the (pattern, count,
-    # min-id) table. Categorical-only inputs always probe (pattern
-    # space bounded by the answer-option product); mixed inputs only
-    # when the row count already fits (no wasted probe at scale).
-    pat = None
-    if not num_cols:
-        pat = _pattern_rows(df, cat_cols, id_col, pattern_threshold)
-    elif df.count() <= pattern_threshold:
-        pat = _pattern_rows(
-            df, [*cat_cols, *num_cols], id_col, pattern_threshold
-        )
+    # Pattern fast path (the device ml.lca shares): the whole Cao init +
+    # Lloyd loop is a function of the (pattern, count, min-id) table
+    pat, _ = pattern_table(
+        df, cat_cols, num_cols, min_col=id_col, threshold=pattern_threshold
+    )
     if pat is not None:
         fitted = _kmodes_patterns(
             pat, cat_cols, num_cols, k, gamma, max_iter
@@ -553,26 +541,3 @@ def kmodes_fit(
     finally:
         df.unpersist()
 
-
-def kprototypes_fit(
-    df: DataFrame,
-    cat_cols: list[str],
-    num_cols: list[str],
-    k: int,
-    gamma: float | None = None,
-    max_iter: int = 20,
-    id_col: str = "row_id",
-    pattern_threshold: int = _KM_PATTERN_THRESHOLD,
-) -> dict:
-    """KPrototypes = KModes loop with mixed distance
-    sq_euclid(num) + gamma * hamming(cat) (clustering.py:328-346)."""
-    return kmodes_fit(
-        df,
-        cat_cols,
-        k,
-        num_cols=num_cols,
-        gamma=gamma,
-        max_iter=max_iter,
-        id_col=id_col,
-        pattern_threshold=pattern_threshold,
-    )

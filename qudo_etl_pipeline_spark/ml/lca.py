@@ -9,46 +9,43 @@ categoricals and gaussian mean/variance factors for numerics, k in
 set is the kprototypes kind). Both are invoked via rpy2 from
 clustering.py:834-904. There is no JVM/MLlib equivalent; this module
 implements both models — a finite mixture of independent per-column
-factors — as an EM loop where each step is a Spark plan:
+factors — as EM over one of two loops.
 
-Two execution strategies, picked by the data shape:
+One path fits and selects: ``lca_fit`` is the one-model case of
+``lca_select``. A private prepare step normalizes the input once
+(categorical answers as strings, rows with a NULL numeric dropped) and
+probes the (answer pattern, count) table through
+``features.pattern_table``, the device ``ml.kmodes`` shares. Every
+(k, seed) of the grid then runs one of two EM loops with the same seeded
+init and update formulas, and only the min-BIC model is labeled:
 
-- **Pattern EM** (all-categorical inputs — the poLCA case): the row
-  likelihood depends on the row only through its answer PATTERN, so the
-  sufficient statistics of every EM iteration are exact functions of
-  the (pattern, count) table. ONE distributed shuffle builds that table
-  (`groupBy(*cols).count()` — output cardinality is bounded by the
-  product of answer-option counts, independent of row count), then the
-  whole EM loop runs driver-side in vectorized numpy over weighted
-  patterns — mathematically identical to row-wise EM, zero per-
-  iteration Spark jobs. poLCA itself iterates over the pattern table
-  for the same reason. Restarts/k-scan (`lca_select`) reuse the ONE
-  collected table, so model selection adds no Spark jobs at all beyond
-  labeling the winning model. A cardinality guard
-  (``pattern_threshold``) falls back to the distributed loop when the
-  pattern space is too large to collect. MIXED inputs reuse the same
-  machinery when the ROW count fits under the threshold (continuous
-  columns join the pattern key, so patterns ~ rows there — the n-gate
-  means no wasted probe shuffle at scale); gaussian factors ride the
-  same weighted arrays.
-- **Distributed EM** (mixed numeric+categorical above the threshold,
-  or too many patterns): per iteration ONE map-only job — the whole
-  round (E-step log-likelihoods, log-sum-exp responsibilities, and
-  every M-step sufficient statistic: loglik, class masses,
-  per-(col,value) conditional masses, gaussian sum r*x / sum r*x^2)
-  is emitted as a single SQL string ending in a single-row map-side-
-  combined aggregate of conditional sums. One ``spark.sql`` call per
-  round (~10 py4j round-trips, vs ~6.5k for the Column-API build —
-  profiled), no melt shuffle, no per-iteration cache churn; parameter
-  literals are emitted codegen-stable (folded maps + _sql_dw) to reuse
-  compiled loop bodies. A width guard falls back to the melt + groupBy
-  M-step when k * total-answer-options would make the aggregate row
-  pathologically wide.
+- **Pattern EM** (the table was collected — categorical-only inputs
+  always probe; mixed inputs probe when their ROW count fits under the
+  threshold): the row likelihood depends on the row only through its
+  pattern, so every iteration's sufficient statistics are exact
+  functions of the weighted table. The loop runs driver-side in
+  vectorized numpy, zero Spark jobs (poLCA iterates over the pattern
+  table for the same reason); gaussian factors ride the same weighted
+  arrays. The whole k x restart grid costs one shuffle.
+- **Distributed EM** (too many patterns, or a mixed input above the
+  threshold): code maps and n are computed and the input cached once
+  per selection. Per iteration ONE map-only job: E-step, log-sum-exp
+  responsibilities and every M-step sufficient statistic (class masses,
+  per-(col, value) conditional masses, gaussian sum r*x / sum r*x^2)
+  are one SQL string ending in a single-row map-side-combined aggregate
+  (~10 py4j round-trips, vs ~6.5k for a Column-API build — profiled);
+  parameter literals are codegen-stable (folded maps + _sql_dw) so the
+  compiled loop body is reused. A width guard falls back to a melt +
+  groupBy M-step when k * total answer options would make the aggregate
+  row pathologically wide.
+- **One E-step**: ``_estep_sql`` is the per-class log-joint of the
+  distributed loop, of its final log-likelihood (the loop's SQL
+  log-sum-exp under the post-update parameters) and of the winner's
+  labels (``F.expr`` over the same text: a lazy, map-only argmax).
 - **Converge**: stop when the total log-likelihood improves < tol.
-- **Restarts/selection**: `lca_select` refits over k in 3..8 x nrep
-  seeded random initializations and keeps the min-BIC model
-  (poLCA semantics). BIC = -2 logL + p ln n with
-  p = (k-1) + k * sum_col(|values_col| - 1).
+- **Selection**: min BIC over k x seeded restarts (poLCA semantics),
+  first wins ties. BIC = -2 logL + p ln n with p = (k-1) +
+  k * sum_col(|values_col| - 1) + 2k * |num_cols|.
 
 Documented delta: poLCA's EM + Newton-Raphson hybrid and R's RNG are
 not reproducible bit-for-bit; tests assert model recovery on planted
@@ -67,35 +64,15 @@ import math
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.ml.features import build_code_maps
+from qudo_etl_pipeline_spark.ml import features as FE
 from qudo_etl_pipeline_spark.plans.melt import melt
-
-
-def _log_theta_col(col: str, table: dict[str, float], floor: float) -> Column:
-    entries = []
-    for v, p in table.items():
-        entries += [F.lit(v), F.lit(math.log(max(p, floor)))]
-    m = F.create_map(*entries)
-    return F.coalesce(
-        m[F.col(col).cast("string")], F.lit(math.log(floor))
-    )
 
 
 _VAR_FLOOR = 1e-6
 _LOG_2PI = math.log(2.0 * math.pi)
-
-
-def _gauss_logpdf(col: str, mu: float, var: float) -> Column:
-    """Per-row gaussian log-density as a column expression."""
-    v = max(var, _VAR_FLOOR)
-    x = F.col(col).cast("double")
-    return (
-        F.lit(-0.5 * (_LOG_2PI + math.log(v)))
-        - (x - F.lit(mu)) * (x - F.lit(mu)) / F.lit(2.0 * v)
-    )
 
 
 def _sql_d(v: float) -> str:
@@ -160,36 +137,13 @@ def _estep_sql(
     return out
 
 
-def _estep_exprs(
-    cols: list[str],
-    num_cols: list[str],
-    k: int,
-    pi: list[float],
-    theta: list[dict[str, dict[str, float]]],
-    mu: list[dict[str, float]],
-    var: list[dict[str, float]],
-    floor: float,
-) -> list[Column]:
-    """Per-class log-joint column expressions (the Spark-side E-step)."""
-    logp = []
-    for c_i in range(k):
-        expr = F.lit(math.log(max(pi[c_i], floor)))
-        for c in cols:
-            expr = expr + _log_theta_col(c, theta[c_i][c], floor)
-        for c in num_cols:
-            expr = expr + _gauss_logpdf(c, mu[c_i][c], var[c_i][c])
-        logp.append(expr.alias(f"_lp{c_i}"))
-    return logp
-
-
-def _lse_col(k: int) -> Column:
+def _lse_sql(k: int) -> str:
     """Numerically-stable log-sum-exp over the _lp0.._lp{k-1} columns."""
-    mx = F.greatest(*[F.col(f"_lp{i}") for i in range(k)])
-    return mx + F.log(
-        sum(
-            (F.exp(F.col(f"_lp{i}") - mx) for i in range(1, k)),
-            F.exp(F.col("_lp0") - mx),
-        )
+    mx = "greatest(" + ", ".join(f"_lp{i}" for i in range(k)) + ")"
+    return (
+        f"({mx} + ln("
+        + " + ".join(f"exp(_lp{i} - {mx})" for i in range(k))
+        + "))"
     )
 
 
@@ -208,25 +162,6 @@ def _init_theta(
             cls[c] = {v: float(p) for v, p in zip(values[c], raw)}
         theta.append(cls)
     return theta
-
-
-def _collect_patterns(
-    df: DataFrame, cols: list[str], threshold: int
-) -> list | None:
-    """The (answer-pattern, count) table — the complete sufficient
-    statistic of all-categorical LCA. One shuffle, output cardinality
-    bounded by the answer-option product (row-count independent); the
-    ``limit`` caps what can ever reach the driver, and an overflow
-    returns None (caller falls back to distributed EM)."""
-    rows = (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_w"))
-        .limit(threshold + 1)
-        .collect()
-    )
-    if len(rows) > threshold:
-        return None
-    return rows
 
 
 def _values_from_patterns(pat: list, cols: list[str]) -> dict[str, list]:
@@ -394,161 +329,33 @@ def _em_patterns(
         ],
         "loglik": loglik,
         "n_iter": n_iter,
-        "n": int(round(n)),
-    }
-
-
-def _n_params(
-    k: int, values: dict[str, list], cols: list[str], num_cols: list[str]
-) -> int:
-    """Free-parameter count of the (multinomial x gaussian) mixture —
-    ONE definition shared by _finalize and the model-selection loops so
-    the BIC used to pick a model always matches the BIC it reports."""
-    return (
-        (k - 1)
-        + k * sum(len(values[c]) - 1 for c in cols)
-        + k * 2 * len(num_cols)
-    )
-
-
-def _finalize(
-    df: DataFrame,
-    cols: list[str],
-    num_cols: list[str],
-    values: dict[str, list],
-    k: int,
-    seed: int,
-    pi: list[float],
-    theta: list[dict[str, dict[str, float]]],
-    mu: list[dict[str, float]],
-    var: list[dict[str, float]],
-    loglik: float,
-    n: int,
-    n_iter: int,
-    floor: float,
-) -> dict:
-    """Labels (lazy, map-only argmax over the final E-step) + BIC/AIC."""
-    logp = _estep_exprs(cols, num_cols, k, pi, theta, mu, var, floor)
-    scored = df.select("*", *logp)
-    pred = F.lit(0)
-    best = F.col("_lp0")
-    for i in range(1, k):
-        pred = F.when(F.col(f"_lp{i}") > best, i).otherwise(pred)
-        best = F.greatest(best, F.col(f"_lp{i}"))
-    labels = scored.withColumn("prediction", pred).drop(
-        *[f"_lp{i}" for i in range(k)]
-    )
-    n_params = _n_params(k, values, cols, num_cols)
-    return {
-        "labels": labels,
-        "pi": pi,
-        "theta": theta,
-        "mu": mu,
-        "var": var,
-        "loglik": loglik,
-        "bic": -2 * loglik + n_params * math.log(n),
-        "aic": -2 * loglik + 2 * n_params,
-        "n_params": n_params,
-        "n_iter": n_iter,
-        "k": k,
-        "seed": seed,
     }
 
 
 # above this many (class x answer-option) conditional-sum aggregates the
 # fused single-row M-step falls back to the melt + groupBy shape
 _FUSED_CELLS_MAX = 2000
-# pattern tables larger than this are not collected (distributed EM runs
-# instead) — bounds driver memory at any input cardinality
-_PATTERN_THRESHOLD = 200_000
 
 
-def lca_fit(
+def _em_distributed(
     df: DataFrame,
+    view: str,
     cols: list[str],
+    num_cols: list[str],
+    values: dict[str, list],
+    n: int,
     k: int,
-    seed: int = 42,
-    max_iter: int = 60,
-    tol: float = 1e-4,
-    smoothing: float = 1e-3,
-    num_cols: list[str] | None = None,
-    pattern_threshold: int = _PATTERN_THRESHOLD,
+    seed: int,
+    max_iter: int,
+    tol: float,
+    smoothing: float,
+    floor: float,
 ) -> dict:
-    """One EM run. Returns dict(labels, pi, theta, loglik, bic, aic,
-    n_params, n_iter[, mu, var]).
-
-    All-categorical inputs dispatch to pattern EM (module docstring):
-    one shuffle total, EM in numpy over the weighted pattern table.
-
-    With ``num_cols`` this is the reference's MIXED-type branch
-    (depmixS4 ``mix``, reference lca.R:54-101, dispatched when the
-    feature set has numeric columns — clustering.py:862-867): an
-    independent mixture whose per-class factors are multinomials for
-    ``cols`` and gaussians (per-class mean/variance) for ``num_cols``.
-    The gaussian sufficient statistics (sum r*x, sum r*x^2 per class)
-    ride the SAME single M-step aggregation as the class masses, so the
-    mixed model adds zero shuffles over the categorical one.
-    """
-    floor = 1e-12
-    num_cols = list(num_cols or [])
-    if not cols and not num_cols:
-        raise ValueError("lca_fit: no columns to model")
-    # categorical values are modeled AS STRINGS on both execution paths:
-    # the distributed path melts (string casts) while the raw pattern
-    # collect would keep native types, giving a different value sort
-    # order (int 10 < 2 lexicographically) and therefore different
-    # seeded inits across the path threshold
-    cat_set = set(cols)
-    df = df.select(
-        *[
-            F.col(c).cast("string").alias(c) if c in cat_set else F.col(c)
-            for c in df.columns
-        ]
-    )
-    # poLCA/depmixS4 drop incomplete rows (na.rm); a NULL numeric would
-    # otherwise NaN the whole pattern-path fit and silently bias pi on
-    # the distributed path (the row leaves the statistics but not n)
-    for c in num_cols:
-        df = df.filter(F.col(c).isNotNull())
-
-    n = None
-    pat = None
-    if cols and not num_cols:
-        # categorical-only: the pattern space is bounded by the
-        # answer-option product, so probing it is always safe
-        pat = _collect_patterns(df, cols, pattern_threshold)
-    elif num_cols:
-        # mixed model: continuous columns make the pattern count ~n, so
-        # only attempt the pattern path when the ROW count already fits
-        # the threshold — no wasted probe shuffle at scale
-        n = df.count()
-        if n <= pattern_threshold:
-            pat = _collect_patterns(
-                df, [*cols, *num_cols], pattern_threshold
-            )
-    if pat is not None:
-        if not pat:
-            raise ValueError("lca_fit: empty input")
-        values = _values_from_patterns(pat, cols) if cols else {}
-        em = _em_patterns(
-            pat, cols, values, k, seed, max_iter, tol, smoothing, floor,
-            num_cols=num_cols,
-        )
-        return _finalize(
-            df, cols, num_cols, values, k, seed,
-            em["pi"], em["theta"], em["mu"], em["var"],
-            em["loglik"], em["n"], em["n_iter"], floor,
-        )
-
-    values = (
-        {c: sorted(m) for c, m in build_code_maps(df, cols).items()}
-        if cols
-        else {}
-    )
-    if n is None:
-        n = df.count()
-    if n == 0:
-        raise ValueError("lca_fit: empty input")
+    """Row-wise EM over the cached input ``df`` (its loop layout
+    registered as ``view``): one Spark job per iteration (module
+    docstring). Same seeded init and update formulas as _em_patterns,
+    and the same returned parameter dict."""
+    spark = df.sparkSession
     rng = np.random.default_rng(seed)
     pi = [1.0 / k] * k
     theta = _init_theta(rng, cols, values, k)
@@ -583,36 +390,14 @@ def lca_fit(
 
     # Fused M-step is viable when the single aggregate row stays narrow;
     # pathologically wide answer spaces fall back to melt + groupBy.
-    n_cell_aggs = k * sum(len(values[c]) for c in cols)
-    fused = n_cell_aggs <= _FUSED_CELLS_MAX
-    col_list = list(cols)
-
-    df = df.cache()
-    spark = df.sparkSession
-    # The per-iteration aggregate is latency-bound, not throughput-bound,
-    # on small inputs: 32 near-empty tasks per job cost more than the
-    # arithmetic. Collapse tiny cached inputs to one partition for the
-    # loop (row-independent sums — semantics unchanged); large inputs
-    # keep their layout and scale across executors. (Measured dead end:
-    # running the small loop interpreted to skip per-iteration Janino
-    # compiles is 2.5x SLOWER than compiled eval here — interpreted
-    # element_at/exp per row costs more than the compile it saves.)
-    small = n <= 200_000
-    loop_df = df.coalesce(1) if small else df
-    view = f"_lca_in_{abs(hash((id(df), seed, k))) % 10**9}"
-    loop_df.createOrReplaceTempView(view)
+    fused = k * sum(len(values[c]) for c in cols) <= _FUSED_CELLS_MAX
 
     # Iteration-constant SQL fragments: E-step responsibilities + every
     # M-step sufficient statistic as conditional sums in a single-row,
     # map-side-combined aggregate — ONE Spark job and a handful of py4j
     # calls per EM round. No melt shuffle, no per-iteration cache churn.
-    base_cols = ", ".join(f"`{c}`" for c in [*col_list, *num_cols])
-    mx = "greatest(" + ", ".join(f"_lp{i}" for i in range(k)) + ")"
-    lse = (
-        f"({mx} + ln("
-        + " + ".join(f"exp(_lp{i} - {mx})" for i in range(k))
-        + "))"
-    )
+    base_cols = ", ".join(f"`{c}`" for c in [*cols, *num_cols])
+    lse = _lse_sql(k)
     rs = ", ".join(f"exp(_lp{i} - _ll) AS _r{i}" for i in range(k))
     aggs = ["sum(_ll) AS ll"]
     aggs += [f"sum(_r{i}) AS n{i}" for i in range(k)]
@@ -622,7 +407,7 @@ def lca_fit(
             aggs.append(f"sum(_r{i} * {x}) AS `sx_{i}_{c}`")
             aggs.append(f"sum(_r{i} * {x} * {x}) AS `sxx_{i}_{c}`")
     if fused:
-        for ci, c in enumerate(col_list):
+        for ci, c in enumerate(cols):
             cs = f"CAST(`{c}` AS STRING)"
             for vi, v in enumerate(values[c]):
                 cond = f"{cs} = {_sql_s(v)}"
@@ -635,92 +420,253 @@ def lca_fit(
 
     loglik = -math.inf
     n_iter = 0
-    try:
-        for it in range(max_iter):
-            n_iter = it + 1
-            lp = _estep_sql(cols, num_cols, k, pi, theta, mu, var, floor)
-            lp_sel = ", ".join(
-                f"({s}) AS _lp{i}" for i, s in enumerate(lp)
-            )
-            inner_sql = (
-                f"SELECT {base_cols}, _ll, {rs} FROM ("
-                f"  SELECT *, {lse} AS _ll FROM ("
-                f"    SELECT {base_cols + ', ' if base_cols else ''}"
-                f"           {lp_sel} FROM {view}))"
-            )
-            agg_row = spark.sql(
-                f"SELECT {agg_list} FROM ({inner_sql})"
-            ).collect()[0]
-            new_ll = agg_row["ll"]
-            class_mass = [agg_row[f"n{i}"] for i in range(k)]
-            for c_i in range(k):
-                m = max(class_mass[c_i], floor)
-                for c in num_cols:
-                    new_mu = agg_row[f"sx_{c_i}_{c}"] / m
-                    mu[c_i][c] = new_mu
-                    var[c_i][c] = max(
-                        agg_row[f"sxx_{c_i}_{c}"] / m - new_mu * new_mu,
-                        _VAR_FLOOR,
-                    )
-            mass: dict[tuple[int, str, str], float] = {}
-            if fused:
-                for ci, c in enumerate(col_list):
-                    for vi, v in enumerate(values[c]):
-                        for i in range(k):
-                            got = agg_row[f"m_{i}_{ci}_{vi}"]
-                            if got is not None:
-                                mass[(i, c, v)] = got
-            elif cols:
-                # fallback M-step for very wide answer spaces: melt +
-                # one groupBy shuffle (cell-table output cardinality) —
-                # a second job per iteration, but only on inputs whose
-                # answer space exceeds _FUSED_CELLS_MAX
-                long = melt(
-                    spark.sql(inner_sql).select(
-                        *[f"_r{i}" for i in range(k)], *cols
-                    ),
-                    id_vars=[f"_r{i}" for i in range(k)],
-                    value_vars=cols,
-                )
-                cell_rows = (
-                    long.groupBy("variable", "value")
-                    .agg(
-                        *[F.sum(f"_r{i}").alias(f"m{i}") for i in range(k)]
-                    )
-                    .collect()
-                )
-                for r in cell_rows:
-                    for c_i in range(k):
-                        mass[(c_i, r["variable"], str(r["value"]))] = r[
-                            f"m{c_i}"
-                        ]
-            pi = [m / n for m in class_mass]
-            for c_i in range(k):
-                for c in cols:
-                    denom = class_mass[c_i] + smoothing * len(values[c])
-                    theta[c_i][c] = {
-                        v: (mass.get((c_i, c, v), 0.0) + smoothing) / denom
-                        for v in values[c]
-                    }
-            if new_ll - loglik < tol and it > 0:
-                loglik = new_ll
-                break
-            loglik = new_ll
-
-        # Final E-step under the post-M-step parameters: labels AND the
-        # reported log-likelihood come from the SAME parameter set, so the
-        # BIC/AIC used by lca_select matches the returned model (the loop's
-        # running loglik is measured under the pre-update parameters).
-        logp = _estep_exprs(cols, num_cols, k, pi, theta, mu, var, floor)
-        scored = df.select("*", *logp)
-        loglik = scored.agg(F.sum(_lse_col(k)).alias("ll")).collect()[0]["ll"]
-        return _finalize(
-            df, cols, num_cols, values, k, seed, pi, theta, mu, var,
-            loglik, n, n_iter, floor,
+    for it in range(max_iter):
+        n_iter = it + 1
+        lp = _estep_sql(cols, num_cols, k, pi, theta, mu, var, floor)
+        lp_sel = ", ".join(f"({s}) AS _lp{i}" for i, s in enumerate(lp))
+        inner_sql = (
+            f"SELECT {base_cols}, _ll, {rs} FROM ("
+            f"  SELECT *, {lse} AS _ll FROM ("
+            f"    SELECT {base_cols + ', ' if base_cols else ''}"
+            f"           {lp_sel} FROM {view}))"
         )
+        agg_row = spark.sql(
+            f"SELECT {agg_list} FROM ({inner_sql})"
+        ).collect()[0]
+        new_ll = agg_row["ll"]
+        class_mass = [agg_row[f"n{i}"] for i in range(k)]
+        for c_i in range(k):
+            m = max(class_mass[c_i], floor)
+            for c in num_cols:
+                new_mu = agg_row[f"sx_{c_i}_{c}"] / m
+                mu[c_i][c] = new_mu
+                var[c_i][c] = max(
+                    agg_row[f"sxx_{c_i}_{c}"] / m - new_mu * new_mu,
+                    _VAR_FLOOR,
+                )
+        mass: dict[tuple[int, str, str], float] = {}
+        if fused:
+            for ci, c in enumerate(cols):
+                for vi, v in enumerate(values[c]):
+                    for i in range(k):
+                        got = agg_row[f"m_{i}_{ci}_{vi}"]
+                        if got is not None:
+                            mass[(i, c, v)] = got
+        elif cols:
+            # fallback M-step for very wide answer spaces: melt + one
+            # groupBy shuffle (cell-table output cardinality) — a second
+            # job per iteration, but only on inputs whose answer space
+            # exceeds _FUSED_CELLS_MAX
+            long = melt(
+                spark.sql(inner_sql).select(
+                    *[f"_r{i}" for i in range(k)], *cols
+                ),
+                id_vars=[f"_r{i}" for i in range(k)],
+                value_vars=cols,
+            )
+            cell_rows = (
+                long.groupBy("variable", "value")
+                .agg(*[F.sum(f"_r{i}").alias(f"m{i}") for i in range(k)])
+                .collect()
+            )
+            for r in cell_rows:
+                for c_i in range(k):
+                    mass[(c_i, r["variable"], str(r["value"]))] = r[f"m{c_i}"]
+        pi = [m / n for m in class_mass]
+        for c_i in range(k):
+            for c in cols:
+                denom = class_mass[c_i] + smoothing * len(values[c])
+                theta[c_i][c] = {
+                    v: (mass.get((c_i, c, v), 0.0) + smoothing) / denom
+                    for v in values[c]
+                }
+        if new_ll - loglik < tol and it > 0:
+            break
+        loglik = new_ll
+
+    # final log-likelihood under the POST-update parameters (the loop's
+    # running loglik is measured under the pre-update ones), so the BIC
+    # that selects a model matches the returned model
+    lp = _estep_sql(cols, num_cols, k, pi, theta, mu, var, floor)
+    loglik = (
+        df.selectExpr(*[f"({s}) AS _lp{i}" for i, s in enumerate(lp)])
+        .selectExpr(f"sum({lse}) AS ll")
+        .collect()[0]["ll"]
+    )
+    return {
+        "pi": pi,
+        "theta": theta,
+        "mu": mu,
+        "var": var,
+        "loglik": loglik,
+        "n_iter": n_iter,
+    }
+
+
+def _prepare(
+    df: DataFrame, cols: list[str], num_cols: list[str], threshold: int
+) -> tuple[DataFrame, list | None, dict[str, list], int]:
+    """Entry normalization and the pattern probe, once per selection.
+
+    Categorical values are modeled AS STRINGS on both execution paths
+    (a raw pattern collect would keep native types, giving a different
+    value sort order — int 10 < 2 lexicographically — and therefore
+    different seeded inits across the path threshold). poLCA/depmixS4
+    drop incomplete rows (na.rm); a NULL numeric would otherwise NaN the
+    pattern fit and bias pi on the distributed path. Returns (df, pat,
+    values, n): ``pat`` is None on the distributed path, where the
+    values come from one code-map pass and ``n`` from one count."""
+    if not cols and not num_cols:
+        raise ValueError("lca_fit: no columns to model")
+    cat_set = set(cols)
+    df = df.select(
+        *[
+            F.col(c).cast("string").alias(c) if c in cat_set else F.col(c)
+            for c in df.columns
+        ]
+    )
+    for c in num_cols:
+        df = df.filter(F.col(c).isNotNull())
+    pat, n = FE.pattern_table(df, cols, num_cols, threshold=threshold)
+    if pat is not None:
+        values = _values_from_patterns(pat, cols)
+        n = sum(r["_w"] for r in pat)
+    else:
+        values = (
+            {c: sorted(m) for c, m in FE.build_code_maps(df, cols).items()}
+            if cols
+            else {}
+        )
+        if n is None:
+            n = df.count()
+    if n == 0:
+        raise ValueError("lca_fit: empty input")
+    return df, pat, values, n
+
+
+def _select(
+    df: DataFrame,
+    cols: list[str],
+    num_cols: list[str],
+    ks: list[int],
+    seeds: list[int],
+    max_iter: int,
+    tol: float,
+    smoothing: float,
+    threshold: int,
+) -> dict:
+    """Fit every (k, seed) over ONE prepared input and finalize the
+    min-BIC model (first wins ties) — ``lca_fit`` is the one-model case."""
+    floor = 1e-12
+    df, pat, values, n = _prepare(df, cols, num_cols, threshold)
+    view = None
+    if pat is None:
+        df = df.cache()
+        # The per-iteration aggregate is latency-bound, not throughput-
+        # bound, on small inputs: near-empty tasks per job cost more than
+        # the arithmetic. Tiny cached inputs collapse to one partition for
+        # the loop (row-independent sums — semantics unchanged); large
+        # inputs keep their layout and scale across executors. (Measured
+        # dead end: running the small loop interpreted to skip per-
+        # iteration Janino compiles is 2.5x SLOWER than compiled eval.)
+        view = f"_lca_in_{id(df)}"
+        (df.coalesce(1) if n <= 200_000 else df).createOrReplaceTempView(view)
+    try:
+        best = None
+        for k in ks:
+            # free parameters of the (multinomial x gaussian) mixture
+            n_params = (
+                (k - 1)
+                + k * sum(len(values[c]) - 1 for c in cols)
+                + k * 2 * len(num_cols)
+            )
+            for seed in seeds:
+                if pat is not None:
+                    em = _em_patterns(
+                        pat, cols, values, k, seed, max_iter, tol,
+                        smoothing, floor, num_cols=num_cols,
+                    )
+                else:
+                    em = _em_distributed(
+                        df, view, cols, num_cols, values, n, k, seed,
+                        max_iter, tol, smoothing, floor,
+                    )
+                bic = -2 * em["loglik"] + n_params * math.log(n)
+                if best is None or bic < best["bic"]:
+                    best = em | {
+                        "bic": bic, "n_params": n_params, "k": k, "seed": seed
+                    }
     finally:
-        spark.catalog.dropTempView(view)
-        df.unpersist()
+        if view is not None:
+            df.sparkSession.catalog.dropTempView(view)
+            df.unpersist()
+    return _finalize(df, cols, num_cols, best, floor)
+
+
+def _finalize(
+    df: DataFrame, cols: list[str], num_cols: list[str], fit: dict, floor: float
+) -> dict:
+    """The winning model's labels — a lazy, map-only argmax over the
+    SAME SQL E-step the distributed loop runs — plus AIC."""
+    k = fit["k"]
+    lp = _estep_sql(
+        cols, num_cols, k, fit["pi"], fit["theta"], fit["mu"], fit["var"],
+        floor,
+    )
+    scored = df.select(
+        "*", *[F.expr(s).alias(f"_lp{i}") for i, s in enumerate(lp)]
+    )
+    pred = F.lit(0)
+    best = F.col("_lp0")
+    for i in range(1, k):
+        pred = F.when(F.col(f"_lp{i}") > best, i).otherwise(pred)
+        best = F.greatest(best, F.col(f"_lp{i}"))
+    labels = scored.withColumn("prediction", pred).drop(
+        *[f"_lp{i}" for i in range(k)]
+    )
+    return {
+        "labels": labels,
+        "pi": fit["pi"],
+        "theta": fit["theta"],
+        "mu": fit["mu"],
+        "var": fit["var"],
+        "loglik": fit["loglik"],
+        "bic": fit["bic"],
+        "aic": -2 * fit["loglik"] + 2 * fit["n_params"],
+        "n_params": fit["n_params"],
+        "n_iter": fit["n_iter"],
+        "k": k,
+        "seed": fit["seed"],
+    }
+
+
+def lca_fit(
+    df: DataFrame,
+    cols: list[str],
+    k: int,
+    seed: int = 42,
+    max_iter: int = 60,
+    tol: float = 1e-4,
+    smoothing: float = 1e-3,
+    num_cols: list[str] | None = None,
+    pattern_threshold: int = FE.PATTERN_THRESHOLD,
+) -> dict:
+    """One EM run. Returns dict(labels, pi, theta, loglik, bic, aic,
+    n_params, n_iter, mu, var, k, seed).
+
+    With ``num_cols`` this is the reference's MIXED-type branch
+    (depmixS4 ``mix``, reference lca.R:54-101, dispatched when the
+    feature set has numeric columns — clustering.py:862-867): an
+    independent mixture whose per-class factors are multinomials for
+    ``cols`` and gaussians (per-class mean/variance) for ``num_cols``.
+    The gaussian sufficient statistics (sum r*x, sum r*x^2 per class)
+    ride the SAME weighted arrays / single M-step aggregation as the
+    class masses, so the mixed model adds no Spark work per iteration.
+    """
+    return _select(
+        df, cols, list(num_cols or []), [k], [seed], max_iter, tol,
+        smoothing, pattern_threshold,
+    )
 
 
 def lca_select(
@@ -732,74 +678,19 @@ def lca_select(
     max_iter: int = 60,
     num_cols: list[str] | None = None,
 ) -> dict:
-    """poLCA-style selection (lca.R:13-52): refit over k x restarts,
-    keep the minimum-BIC model. n_rep is a scaled-down nrep=100.
+    """poLCA-style selection (lca.R:13-52): refit over k x restarts
+    (seeds ``seed .. seed + n_rep - 1``), keep the minimum-BIC model.
+    n_rep is a scaled-down nrep=100.
 
     With ``num_cols`` this is the mixed-type dispatch: the reference's
     depmixS4 branch scans k in 2..8 and keeps the min-BIC mixture
     (lca.R:90-99); pass ``ks=list(range(2, 9))`` for exact parity.
 
-    All-categorical inputs collect the pattern table ONCE and fit the
-    whole k x restart grid driver-side (pattern EM): the full model
-    selection costs one Spark shuffle plus the winning model's lazy
-    labeling pass, regardless of |ks| x n_rep."""
-    ks = ks or list(range(3, 9))
-    num_cols = list(num_cols or [])
-    floor = 1e-12
-
-    # the same entry normalization lca_fit applies (string cats, NULL
-    # numerics dropped) so the pattern collected here feeds identical EM
-    cat_set = set(cols)
-    df = df.select(
-        *[
-            F.col(c).cast("string").alias(c) if c in cat_set else F.col(c)
-            for c in df.columns
-        ]
+    The input is prepared once for the whole grid: on the pattern path
+    the full selection costs one Spark shuffle plus the winning model's
+    lazy labeling pass, regardless of |ks| x n_rep."""
+    return _select(
+        df, cols, list(num_cols or []), ks or list(range(3, 9)),
+        [seed + rep for rep in range(n_rep)], max_iter, 1e-4, 1e-3,
+        FE.PATTERN_THRESHOLD,
     )
-    for c in num_cols:
-        df = df.filter(F.col(c).isNotNull())
-
-    # pattern path for BOTH model families: collect the sufficient
-    # statistic ONCE and fit the whole k x restart grid driver-side —
-    # per-(k, rep) lca_fit calls would redo the identical count +
-    # pattern collect |ks| x n_rep times
-    pat = None
-    if cols and not num_cols:
-        pat = _collect_patterns(df, cols, _PATTERN_THRESHOLD)
-    elif num_cols and df.count() <= _PATTERN_THRESHOLD:
-        pat = _collect_patterns(df, [*cols, *num_cols], _PATTERN_THRESHOLD)
-    if pat:
-        values = _values_from_patterns(pat, cols) if cols else {}
-        best_em = None
-        best_key = None
-        for k in ks:
-            for rep in range(n_rep):
-                em = _em_patterns(
-                    pat, cols, values, k, seed + rep, max_iter,
-                    1e-4, 1e-3, floor, num_cols=num_cols,
-                )
-                bic = -2 * em["loglik"] + _n_params(
-                    k, values, cols, num_cols
-                ) * math.log(em["n"])
-                if best_em is None or bic < best_em_bic:
-                    best_em, best_em_bic = em, bic
-                    best_key = (k, seed + rep)
-        k, s = best_key
-        return _finalize(
-            df, cols, num_cols, values, k, s,
-            best_em["pi"], best_em["theta"],
-            best_em.get("mu") or [{} for _ in range(k)],
-            best_em.get("var") or [{} for _ in range(k)],
-            best_em["loglik"], best_em["n"], best_em["n_iter"], floor,
-        )
-
-    best = None
-    for k in ks:
-        for rep in range(n_rep):
-            fit = lca_fit(
-                df, cols, k, seed=seed + rep, max_iter=max_iter,
-                num_cols=num_cols,
-            )
-            if best is None or fit["bic"] < best["bic"]:
-                best = fit
-    return best

@@ -477,8 +477,6 @@ def cluster_quality(
     features: str = FEATURES,
     pred: str = PREDICTION,
     n_seed=None,
-    exact_silhouette: bool = False,
-    id_col: str = "row_id",
 ) -> dict:
     """get_cluster_metrics equivalent (metrics.py:42-124): silhouette /
     davies_bouldin / calinski_harabasz / proportions with the reference's
@@ -502,10 +500,7 @@ def cluster_quality(
         )
         n_total = sum(r["n"] for r in sizes)
         k = len(sizes)
-        if exact_silhouette:
-            sil = silhouette_exact(df, features, pred, id_col)
-        else:
-            sil = silhouette_squared(df, features, pred)
+        sil = silhouette_squared(df, features, pred)
         try:
             db = davies_bouldin(df, features, pred, stats_rows=stats)
             ch = _calinski_harabasz_from(stats)

@@ -130,16 +130,12 @@ def _family_kmodes(
     # kmodes-vs-kprototypes by presence of numeric columns
     # (clustering.py:220-234): numeric features switch the family to the
     # mixed-distance variant, like the reference's dispatch
-    if num_cols:
-        cat = [c for c in cols if c not in num_cols]
-        fit = KM.kprototypes_fit(
-            encoded, cat, num_cols, k=(cfg.ks or [3])[0], id_col=cfg.id_col
-        )
-        fit["seed"] = None
-        return ("kprototypes", fit)
-    fit = KM.kmodes_fit(encoded, cols, k=(cfg.ks or [3])[0], id_col=cfg.id_col)
+    cat = [c for c in cols if c not in num_cols]
+    fit = KM.kmodes_fit(
+        encoded, cat, k=(cfg.ks or [3])[0], num_cols=num_cols, id_col=cfg.id_col
+    )
     fit["seed"] = None
-    return ("kmodes", fit)
+    return ("kprototypes" if num_cols else "kmodes", fit)
 
 
 def _family_rules(
@@ -371,10 +367,7 @@ def run_scheme(
     # would serialize them while the cluster idles — concurrent
     # submission lets the scheduler overlap them. Families share only
     # read-only parent frames (the cleaned/encoded caches).
-    if len(pending) == 1:
-        algo, fit = pending[0]
-        results[algo] = finalize_contained(algo, fit)
-    elif pending:
+    if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),
             thread_name_prefix=f"scheme{run_id}-finalize",

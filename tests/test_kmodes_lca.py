@@ -83,8 +83,8 @@ def test_kprototypes_mixed_distance(spark, cat_df):
         F.col("truth").cast("double") * 10.0
         + (F.rand(5) - 0.5),
     )
-    fit = KM.kprototypes_fit(
-        with_num, ["q0", "q1", "q2", "q3"], ["x"], k=3
+    fit = KM.kmodes_fit(
+        with_num, ["q0", "q1", "q2", "q3"], k=3, num_cols=["x"]
     )
     ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.95
@@ -242,9 +242,10 @@ def test_kprototypes_pattern_path_matches_distributed(spark, cat_df):
     with_num = cat_df.withColumn(
         "x", F.col("truth").cast("double") * 10.0 + (F.rand(5) - 0.5)
     )
-    fp = KM.kprototypes_fit(with_num, ["q0", "q1", "q2", "q3"], ["x"], k=3)
-    fd = KM.kprototypes_fit(
-        with_num, ["q0", "q1", "q2", "q3"], ["x"], k=3, pattern_threshold=0
+    cols = ["q0", "q1", "q2", "q3"]
+    fp = KM.kmodes_fit(with_num, cols, k=3, num_cols=["x"])
+    fd = KM.kmodes_fit(
+        with_num, cols, k=3, num_cols=["x"], pattern_threshold=0
     )
     assert fp["n_iter"] == fd["n_iter"]
     for mp, md in zip(fp["modes"], fd["modes"]):
@@ -275,3 +276,42 @@ def test_lca_select_deterministic_at_pipeline_default(spark, cat_df):
     la = {r["row_id"]: r["prediction"] for r in a["labels"].collect()}
     lb = {r["row_id"]: r["prediction"] for r in b["labels"].collect()}
     assert la == lb
+
+
+def _labels(fit) -> dict:
+    return {r["row_id"]: r["prediction"] for r in fit["labels"].collect()}
+
+
+def test_lca_fit_is_the_one_model_selection(spark, cat_df):
+    """lca_fit(k, seed) and lca_select(ks=[k], n_rep=1, seed) are the same
+    path: identical parameters, log-likelihood, BIC and labels."""
+    cols = ["q0", "q1", "q2", "q3"]
+    fit = LCA.lca_fit(cat_df, cols, k=3, seed=42)
+    sel = LCA.lca_select(cat_df, cols, ks=[3], n_rep=1, seed=42)
+    assert (sel["k"], sel["seed"]) == (fit["k"], fit["seed"]) == (3, 42)
+    assert sel["pi"] == fit["pi"]
+    assert sel["theta"] == fit["theta"]
+    assert sel["loglik"] == fit["loglik"]
+    assert sel["bic"] == fit["bic"]
+    assert _labels(sel) == _labels(fit)
+
+
+def test_lca_select_distributed_path_matches_pattern_path(
+    spark, cat_df, monkeypatch
+):
+    """A pattern threshold of 0 sends the whole selection grid through
+    the distributed EM loop (code maps, n and the cached input shared by
+    every fit); it must select the same (k, seed) as pattern EM with the
+    same BIC up to float association order."""
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    cols = ["q0", "q1", "q2", "q3"]
+    grid = dict(ks=[2, 3, 4], n_rep=2, seed=42, max_iter=30)
+    fp = LCA.lca_select(cat_df, cols, **grid)
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 0)
+    fd = LCA.lca_select(cat_df, cols, **grid)
+    assert (fd["k"], fd["seed"]) == (fp["k"], fp["seed"])
+    assert fd["bic"] == pytest.approx(fp["bic"], rel=1e-6)
+    assert fd["n_params"] == fp["n_params"]
+    ari = Q.adjusted_rand_index(fd["labels"], "truth", "prediction")
+    assert ari > 0.9

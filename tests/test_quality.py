@@ -126,6 +126,75 @@ def test_cochrans_q_and_i2(spark):
         Q.cochrans_q(const, ["c0", "c1", "c2", "c3"])
 
 
+def _variability_np(groups: dict, labels: np.ndarray) -> dict:
+    """numpy copy of metrics.py:578-633: per question group Cochran's Q
+    (R.cochrans_q_np) and I^2 = (Q - df)/Q * 100 rounded 3; degenerate
+    groups (zero denominator, Q == 0) are skipped, only positive I^2
+    enter the mean, rounded 3 — overall and per cluster."""
+
+    def mean_i2(mask):
+        scores = []
+        for X in groups.values():
+            Xm = X[mask]
+            r = Xm.sum(axis=1)
+            if Xm.shape[1] * Xm.sum() - (r**2).sum() == 0:
+                continue
+            q, dof = R.cochrans_q_np(Xm)
+            if q == 0:
+                continue
+            i2 = round((q - dof) / q * 100, 3)
+            if i2 > 0:
+                scores.append(i2)
+        return round(sum(scores) / len(scores), 3) if scores else math.nan
+
+    out = {"all_clusters": mean_i2(np.ones(len(labels), dtype=bool))}
+    for cl in sorted(set(labels.tolist())):
+        out[cl] = mean_i2(labels == cl)
+    return out
+
+
+def test_variability_matches_numpy(spark):
+    """M32: mean positive I^2 across question groups, overall and per
+    cluster; the all-ones group is degenerate and must be skipped."""
+    rng = np.random.default_rng(5)
+    n = 300
+    labels = rng.integers(0, 3, n)
+    rates = {
+        "qa": np.array([[0.2, 0.5, 0.7, 0.9], [0.6, 0.5, 0.4, 0.3],
+                        [0.1, 0.1, 0.8, 0.5]]),
+        "qb": np.array([[0.3, 0.6, 0.5], [0.9, 0.2, 0.4],
+                        [0.5, 0.5, 0.6]]),
+    }
+    groups = {
+        q: (rng.random((n, p.shape[1])) < p[labels]).astype(int)
+        for q, p in rates.items()
+    }
+    groups["qc"] = np.ones((n, 3), dtype=int)  # degenerate: every row all-1
+    cols = {
+        q: [f"{q}_{j}_tgt" for j in range(X.shape[1])]
+        for q, X in groups.items()
+    }
+    names = [c for q in groups for c in cols[q]]
+    rows = [
+        (int(labels[i]), *[int(groups[q][i, j]) for q in groups
+                           for j in range(groups[q].shape[1])])
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows, "prediction: int, " + ", ".join(f"{c}: int" for c in names)
+    )
+    with pytest.raises(ZeroDivisionError):
+        Q.cochrans_q(df, cols["qc"])
+    got = Q.variability(df, cols)
+    expected = _variability_np(groups, labels)
+    assert set(got) == set(expected) == {"all_clusters", 0, 1, 2}
+    for key, value in expected.items():
+        assert got[key] == pytest.approx(value, abs=1e-9), key
+    # skipping the degenerate group leaves every mean as without it
+    without = {q: c for q, c in cols.items() if q != "qc"}
+    assert Q.variability(df, without) == got
+
+
 def test_rank_cluster_metrics_pandas_semantics(spark):
     """Replicates metrics.py:127-146 incl. average-tie ranks and the
     1.3x bic weight; winner by max rank_sum."""
