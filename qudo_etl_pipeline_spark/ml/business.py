@@ -5,8 +5,9 @@ Re-implements (reference: src/kraken/app/metrics.py):
   (q_code, sig_more_category) pairs that any other cluster also has.
 - M29 communicability (:340-361): distinct significant 'psy|ae'
   q_codes per segment + the average over all segments.
-- M30 social presence (:364-404): detect the `mc_` column carrying the
-  platform, then per-cluster share answering exactly that platform.
+- M30 social presence (:364-404): the `mc_` column carrying the
+  platform and the per-cluster share answering exactly that platform,
+  both from one per-cluster aggregate over every `mc_` candidate.
 - M31 magnitude (:636-687): cluster share (rounded 2) x share of
   significant `_tgt` variables (per segment), rounded 3, + total;
   NaN when the total is 0 or exceeds 1.
@@ -85,28 +86,6 @@ def communicability(
     return {"data": data, "avg": avg}
 
 
-def find_social_column(
-    df: DataFrame, sm_platform: str, marker: str = "mc_"
-) -> str | None:
-    """Detect the multiple-choice column whose values mention the
-    platform (metrics.py:374-390). One aggregation over candidates."""
-    cands = [c for c in df.columns if marker in c]
-    if not cands:
-        return None
-    row = df.agg(
-        *[
-            F.max(
-                F.lower(F.col(c).cast("string")).contains(sm_platform.lower()).cast("int")
-            ).alias(c)
-            for c in cands
-        ]
-    ).collect()[0]
-    for c in cands:
-        if row[c] == 1:
-            return c
-    return None
-
-
 def social_presence(
     labeled: DataFrame,
     sm_platform: str,
@@ -114,25 +93,38 @@ def social_presence(
     marker: str = "mc_",
 ) -> dict | float:
     """M30 (metrics.py:364-404): per-cluster share answering exactly
-    `sm_platform` on the detected column, rounded 3. NaN if no column."""
-    col = find_social_column(labeled, sm_platform, marker)
-    if col is None:
-        return float("nan")
+    `sm_platform` on the social column, rounded 3. The social column is
+    the first `marker` column, in frame order, whose values mention the
+    platform (metrics.py:374-390); NaN if there is none.
+
+    One ``groupBy(pred)`` aggregate gives every candidate's mention flag
+    and share; the column is chosen from its collected rows."""
     from qudo_etl_pipeline_spark.functions.rounding import ref_round
 
-    # ref_round: the reference rounds with Python round (metrics.py:402)
-    rows = (
-        labeled.groupBy(pred)
-        .agg(
-            ref_round(
-                F.sum((F.col(col) == sm_platform).cast("int"))
-                / F.count(F.lit(1)),
-                3,
-            ).alias("share")
+    cands = [c for c in labeled.columns if marker in c]
+    if not cands:
+        return float("nan")
+    aggs = []
+    for i, c in enumerate(cands):
+        aggs.append(
+            F.max(
+                F.lower(F.col(c).cast("string"))
+                .contains(sm_platform.lower())
+                .cast("int")
+            ).alias(f"_m{i}")
         )
-        .collect()
-    )
-    return {r[pred]: r["share"] for r in rows}
+        # ref_round: the reference rounds with Python round (metrics.py:402)
+        aggs.append(
+            ref_round(
+                F.sum((F.col(c) == sm_platform).cast("int")) / F.count(F.lit(1)),
+                3,
+            ).alias(f"_s{i}")
+        )
+    rows = labeled.groupBy(pred).agg(*aggs).collect()
+    for i in range(len(cands)):
+        if any(r[f"_m{i}"] == 1 for r in rows):
+            return {r[pred]: r[f"_s{i}"] for r in rows}
+    return float("nan")
 
 
 def magnitude(
@@ -242,13 +234,11 @@ def get_all_metrics(
     tgt_cols: list[str] | None = None,
     n_seed=None,
     sm_platform: str = "Facebook",
-    refit=None,
-    with_random_baseline: bool = True,
     social_df: DataFrame | None = None,
 ) -> dict:
-    """M37 (metrics.py:814-911): compose quality + consistency +
-    business metrics into one dict. `refit` (optional) is the
-    train->scorer callable used by the consistency checks.
+    """M37 (metrics.py:814-911): compose quality + business metrics into
+    one dict. The consistency checks need a train->scorer refit the
+    survey has no handle on; their keys stay, NaN.
 
     ``social_df``: frame with the ORIGINAL (unencoded) answers plus the
     prediction column, for social presence — the reference passes
@@ -259,19 +249,11 @@ def get_all_metrics(
     from qudo_etl_pipeline_spark.ml import signal as S
 
     metrics = Q.cluster_quality(labeled, features=features_col, pred=pred, n_seed=n_seed)
-    if with_random_baseline:
-        metrics = Q.random_checker(
-            labeled, features=features_col, pred=pred, cluster_metrics=metrics
-        )
     metrics["fb_presence"] = social_presence(
         social_df if social_df is not None else labeled, sm_platform, pred=pred
     )
-    if refit is not None:
-        metrics["model_consistency"] = S.model_consistency(labeled, refit, label_col=pred)
-        metrics["label_consistency"] = S.label_consistency(labeled, refit, label_col=pred)
-    else:
-        metrics["model_consistency"] = float("nan")
-        metrics["label_consistency"] = float("nan")
+    metrics["model_consistency"] = float("nan")
+    metrics["label_consistency"] = float("nan")
     if deliver is not None:
         deliver = _rows(deliver)
         metrics["uniqueness"] = uniqueness(deliver)

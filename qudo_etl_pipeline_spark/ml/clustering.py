@@ -362,7 +362,8 @@ def rules_based(
     df: DataFrame, rules_col: str, pred: str = PREDICTION
 ) -> DataFrame:
     """Rules-based segmentation: labels = sorted-value codes of one
-    answer column (clustering.py:1037-1077, M9)."""
+    answer column (clustering.py:1037-1077, M9). The pipeline reads the
+    same codes from its scheme's label encode instead."""
     out = label_encode(df, [rules_col], suffix="__code")
     return out.withColumn(pred, F.col(rules_col + "__code")).drop(
         rules_col + "__code"

@@ -4,23 +4,25 @@ Re-implements the reference's feature prep (reference:
 src/kraken/app/clustering.py:101-109,207-291) Spark-first:
 
 - dynamic typing: ``data.apply(pd.to_numeric, errors='ignore')``
-  (clustering.py:101) -> one try-cast null-rate pass over every string
-  column (SURVEY §1.3).
+  (clustering.py:101) -> read from the column profile
+  (:func:`build_code_maps`): a string column is numeric iff every
+  distinct value try-casts to double (SURVEY §1.3).
 - whole-table label encode: ``data.apply(LabelEncoder().fit_transform)``
-  (clustering.py:103-109) -> sorted-distinct-value codes per column.
-  sklearn sorts values (numerics numerically, strings lexicographically),
-  so codes are computed per column in sorted order — NOT Spark
-  StringIndexer's frequency order.
+  (clustering.py:103-109) -> sorted-distinct-value codes per column,
+  from the same profile. sklearn sorts values (numerics numerically,
+  strings lexicographically), so codes are computed per column in
+  sorted order — NOT Spark StringIndexer's frequency order.
 - StandardScaler (clustering.py:236-257) -> population-std z-score
   (sklearn ddof=0; MLlib StandardScaler would use ddof=1).
 - PCA component selection (clustering.py:259-291): smallest n with
   cumulative explained variance >= 0.5.
 
 Scale notes (100 TB design):
-- Code maps are built in ONE melt + groupBy pass over the table; the
-  per-column dictionaries (answer options — tiny) are collected and
-  re-applied as broadcast `F.create_map` literals, so ENCODING ADDS NO
-  SHUFFLE to the downstream plan and survives Catalyst pushdown.
+- The column profile (code maps + numeric columns) is ONE melt +
+  groupBy pass over the table; the per-column dictionaries (answer
+  options — tiny) are collected once and re-applied as broadcast
+  `F.create_map` literals, so ENCODING ADDS NO SHUFFLE to the
+  downstream plan and survives Catalyst pushdown.
 - Scaling statistics are a single agg; the transform is pure column
   arithmetic (whole-stage codegen).
 - PCA runs on MLlib vectors (distributed covariance/SVD), k<=#features.
@@ -37,47 +39,20 @@ from pyspark.sql import types as T
 from qudo_etl_pipeline_spark.plans.melt import melt
 
 
-def sniff_numeric_columns(df: DataFrame, candidates: list[str] | None = None) -> list[str]:
-    """Columns that are numeric or fully castable to double (P10).
-
-    A string column counts as numeric iff casting adds no nulls
-    (pd.to_numeric errors='ignore' semantics: all-or-nothing per column).
-    One aggregation pass for all candidates.
-    """
-    numeric = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.NumericType)
-        and (candidates is None or f.name in candidates)
-    ]
-    strings = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.StringType)
-        and (candidates is None or f.name in candidates)
-    ]
-    if not strings:
-        return numeric
-    aggs = [
-        F.sum(
-            F.when(
-                F.col(c).isNotNull() & F.col(c).try_cast("double").isNull(), 1
-            ).otherwise(0)
-        ).alias(c)
-        for c in strings
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return numeric + [c for c in strings if row[c] == 0]
-
-
 def build_code_maps(
     df: DataFrame, cols: list[str]
-) -> dict[str, dict[str, int]]:
-    """Sorted-distinct-value integer codes per column, in ONE pass.
+) -> tuple[dict[str, dict[str, int]], list[str]]:
+    """The column profile of ``cols``, in ONE pass: sorted-distinct-value
+    integer codes per column, and the numeric columns.
 
-    Mirrors per-column ``LabelEncoder().fit_transform``
-    (clustering.py:103): codes follow sorted value order. Columns whose
+    Codes mirror per-column ``LabelEncoder().fit_transform``
+    (clustering.py:103): they follow sorted value order. Columns whose
     every value casts to double sort numerically; others sort as strings.
+
+    Numeric columns (P10): numeric-typed columns, then string columns
+    in which casting adds no NULLs (pd.to_numeric errors='ignore'
+    semantics: all-or-nothing per column), each group in schema order.
+    A string column of an empty frame is not numeric.
     """
     long = melt(df.select(cols), id_vars=[], value_vars=cols)
     dist = (
@@ -100,7 +75,17 @@ def build_code_maps(
         else:
             vals.sort(key=lambda t: str(t[0]))
         maps[c] = {v: i for i, (v, _) in enumerate(vals)}
-    return maps
+    fields = [f for f in df.schema.fields if f.name in cols]
+    numeric = [f.name for f in fields if isinstance(f.dataType, T.NumericType)]
+    numeric += [
+        f.name
+        for f in fields
+        if isinstance(f.dataType, T.StringType)
+        # a non-empty frame gives every column at least one group
+        and by_col[f.name]
+        and all_numeric[f.name]
+    ]
+    return maps, numeric
 
 
 # pattern tables larger than this are not collected (the caller's
@@ -153,7 +138,7 @@ def label_encode(
     if cols is None:
         cols = [c for c in df.columns]
     if code_maps is None:
-        code_maps = build_code_maps(df, cols)
+        code_maps, _ = build_code_maps(df, cols)
     out = df
     for c in cols:
         entries = []

@@ -166,8 +166,8 @@ def _init_theta(
 
 def _values_from_patterns(pat: list, cols: list[str]) -> dict[str, list]:
     """Distinct non-null values per column from the pattern table —
-    same key set and sort order as ``sorted(build_code_maps(df, cols))``
-    (one fewer Spark job)."""
+    same key set and sort order as the sorted code maps of
+    ``build_code_maps(df, cols)`` (one fewer Spark job)."""
     vals: dict[str, set] = {c: set() for c in cols}
     for r in pat:
         for c in cols:
@@ -533,7 +533,7 @@ def _prepare(
         n = sum(r["_w"] for r in pat)
     else:
         values = (
-            {c: sorted(m) for c, m in FE.build_code_maps(df, cols).items()}
+            {c: sorted(m) for c, m in FE.build_code_maps(df, cols)[0].items()}
             if cols
             else {}
         )

@@ -45,7 +45,7 @@ import math
 from dataclasses import dataclass, field
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -335,10 +335,9 @@ def contingency_tables(
     )
 
 
-def _frame(tables: ContingencyTables, fields: str, rows: list[tuple]) -> DataFrame:
+def local_frame(spark: SparkSession, ddl: str, rows: list[tuple]) -> DataFrame:
     """``rows`` as a local (``LocalRelation``) frame with the DDL schema
-    ``fields``, in which ``{cluster}`` stands for the cluster column,
-    typed as in the cells.
+    ``ddl``: how every schema-sized result is built.
 
     Built through Arrow: a plain list would be parallelized into an RDD,
     so every action on the frame would run a Spark job through a Python
@@ -347,15 +346,24 @@ def _frame(tables: ContingencyTables, fields: str, rows: list[tuple]) -> DataFra
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    cc = tables.cluster_col
-    ctype = tables.cells.schema[cc].dataType.simpleString()
-    cluster = f"`{cc.replace('`', '``')}`: {ctype}"
-    schema = T.StructType.fromDDL(fields.format(cluster=cluster))
+    schema = T.StructType.fromDDL(ddl)
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows],
         schema=to_arrow_schema(schema),
     )
-    return tables.cells.sparkSession.createDataFrame(table, schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _frame(tables: ContingencyTables, fields: str, rows: list[tuple]) -> DataFrame:
+    """:func:`local_frame` of ``rows`` with the DDL schema ``fields``, in
+    which ``{cluster}`` stands for the cluster column, typed as in the
+    cells."""
+    cc = tables.cluster_col
+    ctype = tables.cells.schema[cc].dataType.simpleString()
+    cluster = f"`{cc.replace('`', '``')}`: {ctype}"
+    return local_frame(
+        tables.cells.sparkSession, fields.format(cluster=cluster), rows
+    )
 
 
 def chi2_by_variable(tables: ContingencyTables) -> DataFrame:

@@ -110,15 +110,17 @@ def _acquire_ranged(ranged: DataFrame) -> DataFrame:
                 # still holds the frame — returning it uncached would
                 # silently lose the materialize-once contract (for
                 # ranged frames, a CORRECTNESS contract: both branches
-                # must observe one physical partitioning)
+                # must observe one physical partitioning). The frame is
+                # NOT registered with the current scope: a registry hit
+                # means its owning scope is still open and releases it
+                # (or it was acquired unscoped and clear_prefix_caches
+                # covers it) — an inner or other-thread scope's exit
+                # must not unpersist a cache its owner still uses.
                 if not (
                     cand.storageLevel.useMemory
                     or cand.storageLevel.useDisk
                 ):
                     cand.cache()
-                    stack = _scope_stack()
-                    if stack:
-                        stack[-1].append(cand)
                 return cand
         # storageLevel check: the plan may already sit in Spark's
         # CacheManager (cached outside the registry, or re-acquired

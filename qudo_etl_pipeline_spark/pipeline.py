@@ -48,6 +48,7 @@ from qudo_etl_pipeline_spark.operators.contingency import (
     contingency_tables,
     deliver_stats,
     discover_stats,
+    local_frame,
 )
 
 
@@ -146,7 +147,9 @@ def _family_rules(
 ):
     if not cfg.rules_col:
         return ("rules_based", None)
-    labeled = C.rules_based(encoded, cfg.rules_col)
+    # labels = the rules column's sorted-value codes (M9), which the
+    # scheme's label encode already holds
+    labeled = encoded.withColumn(C.PREDICTION, F.col(cfg.rules_col))
     return ("rules_based", {"labels": labeled, "k": None, "seed": None})
 
 
@@ -227,12 +230,17 @@ def run_scheme(
 ) -> dict:
     """One segmentation scheme: families -> inference -> metrics
     (clustering.py:1079-1138)."""
-    code_maps = FE.build_code_maps(cleaned, scheme_cols)
-    encoded = FE.label_encode(cleaned, scheme_cols, code_maps=code_maps).cache()
-    # numeric-vs-categorical sniff on the PRE-encoded data (the reference
-    # detects dtypes on self.data, clustering.py:207-234) drives the
-    # kmodes/kprototypes and pure/mixed-LCA family dispatch
-    num_cols = FE.sniff_numeric_columns(cleaned, scheme_cols)
+    # one column profile of the scheme columns and the rules column:
+    # the code maps, and the numeric-vs-categorical sniff on the
+    # PRE-encoded data (the reference detects dtypes on self.data,
+    # clustering.py:207-234) that drives the kmodes/kprototypes and
+    # pure/mixed-LCA family dispatch
+    enc_cols = list(scheme_cols)
+    if cfg.rules_col in cleaned.columns and cfg.rules_col not in enc_cols:
+        enc_cols.append(cfg.rules_col)
+    code_maps, numeric = FE.build_code_maps(cleaned, enc_cols)
+    encoded = FE.label_encode(cleaned, enc_cols, code_maps=code_maps).cache()
+    num_cols = [c for c in numeric if c in scheme_cols]
     algos = list(cfg.algorithms) + (["lca"] if cfg.include_lca else [])
     sc = spark.sparkContext
     # scheme-unique token: job groups are context-global, so two
@@ -339,7 +347,6 @@ def run_scheme(
             deliver=deliver.collect(),
             tgt_cols=tgt_cols,
             n_seed=fit.get("seed"),
-            with_random_baseline=False,
             # original string answers for social presence — label codes
             # can never contain 'facebook' (metrics.py:840 full_data)
             social_df=with_pred,
@@ -433,11 +440,12 @@ def run_all_segmentations(
                         res["discover"],
                         f"{output_dir}/{scheme}/{algo}/discover",
                     )
-        metrics_df = spark.createDataFrame(
-            metrics_rows,
+        metrics_df = local_frame(
+            spark,
             "survey: string, scheme: string, algorithm: string, "
             "silhouette: double, davies_bouldin: double, "
             "calinski_harabasz: double, n_clusters: string",
+            metrics_rows,
         )
         IO.write_csv_single(metrics_df, f"{output_dir}/metrics_csv")
     return all_results

@@ -39,8 +39,23 @@ def test_sniff_numeric_columns(spark):
         [("1", "a", 1.5, "2x"), ("2", "b", 2.5, "3")],
         "num_str: string, cat: string, dbl: double, mixed: string",
     )
-    got = set(FE.sniff_numeric_columns(df))
+    _, numeric = FE.build_code_maps(df, df.columns)
+    got = set(numeric)
     assert got == {"num_str", "dbl"}
+
+
+def test_profile_numeric_column_order(spark):
+    """The profile lists numeric-typed columns first, then castable
+    string columns, each in schema order (not in ``cols`` order); the
+    string columns of an empty frame are not numeric."""
+    df = spark.createDataFrame(
+        [("3", 1, "x", "4.5", 2.0, None)],
+        "s1: string, i: int, cat: string, s2: string, d: double, nul: string",
+    )
+    _, numeric = FE.build_code_maps(df, ["nul", "d", "s2", "cat", "i", "s1"])
+    assert numeric == ["i", "d", "s1", "s2", "nul"]
+    _, numeric = FE.build_code_maps(df.limit(0), ["s1", "i", "d"])
+    assert numeric == ["i", "d"]
 
 
 def test_label_encode_sorted_order(spark):
@@ -50,7 +65,7 @@ def test_label_encode_sorted_order(spark):
         [("banana", "10"), ("apple", "9"), ("cherry", "10"), ("apple", "100")],
         "fruit: string, n: string",
     )
-    maps = FE.build_code_maps(df, ["fruit", "n"])
+    maps, _ = FE.build_code_maps(df, ["fruit", "n"])
     assert maps["fruit"] == {"apple": 0, "banana": 1, "cherry": 2}
     assert maps["n"] == {"9": 0, "10": 1, "100": 2}  # numeric sort
     enc = FE.label_encode(df, ["fruit", "n"], code_maps=maps)

@@ -255,3 +255,63 @@ def test_drain_leaves_no_caches_behind(spark, tmp_path):
         )
         assert out["behavioral"]["rules_based"]["labels"] is not None
     assert sizes() == before
+
+
+def test_crash_between_sinks_and_queue_write_reruns_the_survey(
+    spark, tmp_path, monkeypatch
+):
+    """A process that dies after the sinks are written but before the
+    queue write leaves the survey unprocessed: the next drain runs it
+    again, overwrites its sinks in the same output dir, and marks it
+    processed once."""
+    from qudo_etl_pipeline_spark.sources import io as IO
+
+    src = str(tmp_path / "s1.parquet")
+    spark.createDataFrame(make_responses(n=200)).write.parquet(src)
+    qp = str(tmp_path / "queue.json")
+    with open(qp, "w") as fh:
+        json.dump([{"survey_name": "s1", "path": src, "processed_by": []}], fh)
+    out_dir = str(tmp_path / "out")
+    cfg = SegmentationConfig(
+        survey_name="s1",
+        schemes={"behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"]},
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("kmodes", "rules_based"),
+        ks=[3],
+    )
+    real_mark = WQ.mark_processed
+    marks = []
+
+    def crash_once(queue_path, survey_name, *args, **kwargs):
+        marks.append(survey_name)
+        if len(marks) == 1:
+            raise RuntimeError("process died before the queue write")
+        return real_mark(queue_path, survey_name, *args, **kwargs)
+
+    monkeypatch.setattr(WQ, "mark_processed", crash_once)
+
+    def drain() -> list[dict]:
+        runs = []
+        while (s := WQ.next_survey(WQ.collected_surveys(qp))) is not None:
+            responses = IO.read_parquet(spark, s["path"])
+            runs.append(
+                run_all_segmentations(spark, responses, cfg, output_dir=out_dir)
+            )
+            WQ.mark_processed(qp, s["survey_name"])
+        return runs
+
+    with pytest.raises(RuntimeError, match="before the queue write"):
+        drain()
+    assert WQ.next_survey(WQ.collected_surveys(qp))["survey_name"] == "s1"
+    [results] = drain()
+    assert marks == ["s1", "s1"]
+    assert WQ.collected_surveys(qp)[0]["processed_by"] == [WQ.ENGINE_TAG]
+    metrics = spark.read.option("header", True).csv(f"{out_dir}/metrics_csv")
+    # one row per family (kmodes runs as kprototypes on numeric answers)
+    assert sorted(r["algorithm"] for r in metrics.collect()) == sorted(
+        results["behavioral"]
+    )
+    assert len(results["behavioral"]) == 2
+    for algo, res in results["behavioral"].items():
+        deliver = spark.read.parquet(f"{out_dir}/behavioral/{algo}/deliver")
+        assert deliver.count() == res["deliver"].count() > 0

@@ -193,6 +193,27 @@ def test_scope_stack_is_thread_local(spark):
     assert P.clear_prefix_caches() == 1
 
 
+def test_rearmed_frame_stays_with_its_owning_scope(spark):
+    # An inner scope that re-arms a frame an outer scope owns (after an
+    # external unpersist) must not release it on exit: the outer owner
+    # still uses it, and only the outer scope's exit releases it.
+    from qudo_etl_pipeline_spark.operators import prefix as P
+
+    P.clear_prefix_caches()
+    df = spark.createDataFrame([(i, 1) for i in range(20)], "k bigint, x bigint")
+    with P.prefix_cache_scope():
+        frame = P.acquire_operator_cache(df.groupBy("k").count())
+        frame.unpersist()  # e.g. ContextCleaner or a direct release
+        assert not frame.storageLevel.useMemory
+        with P.prefix_cache_scope():
+            again = P.acquire_operator_cache(df.groupBy("k").count())
+            assert again is frame and frame.storageLevel.useMemory
+        assert frame.storageLevel.useMemory
+        assert sum(len(v) for v in P._REGISTRY.values()) == 1
+    assert not frame.storageLevel.useMemory
+    assert not P._REGISTRY
+
+
 def test_device_offsets_join_is_broadcast_hash(spark):
     """The null-safe (eqNullSafe) offsets join must stay a
     BroadcastHashJoin — EqualNullSafe is a valid hash-join key, and a

@@ -72,6 +72,41 @@ def test_social_presence(spark, labeled):
     )
 
 
+def _two_candidates(spark, a, b):
+    return spark.createDataFrame(
+        [(0, a[0], b[0]), (0, a[1], b[1]), (1, a[2], b[2]), (1, a[3], b[3])],
+        "prediction: int, mc_a: string, mc_b: string",
+    )
+
+
+def test_social_presence_uses_the_candidate_that_mentions_the_platform(spark):
+    df = _two_candidates(
+        spark,
+        ["Twitter", "TikTok", "Twitter", None],
+        ["Facebook", "Twitter", "facebook groups", "Facebook"],
+    )
+    # only mc_b mentions the platform: exact "Facebook" answers per cluster
+    assert B.social_presence(df, "Facebook") == {0: 0.5, 1: 0.5}
+
+
+def test_social_presence_first_candidate_in_column_order_wins(spark):
+    df = _two_candidates(
+        spark,
+        ["Facebook", "Facebook", "Twitter", "Facebook"],
+        ["Facebook", "Twitter", "Twitter", "Twitter"],
+    )
+    assert B.social_presence(df, "Facebook") == {0: 1.0, 1: 0.5}
+    swapped = df.select("prediction", "mc_b", "mc_a")
+    assert B.social_presence(swapped, "Facebook") == {0: 0.5, 1: 0.0}
+
+
+def test_social_presence_of_an_empty_frame_is_nan(spark):
+    df = _two_candidates(
+        spark, ["Facebook"] * 4, ["Facebook"] * 4
+    ).limit(0)
+    assert math.isnan(B.social_presence(df, "Facebook"))
+
+
 def test_magnitude(spark, deliver, labeled):
     m = B.magnitude(deliver, labeled, ["q1_tgt", "q2_tgt"])
     # seg 0: 2 sig tgt rows / 2 tgt vars = 1.0 ratio * 0.5 share = 0.5
@@ -197,7 +232,6 @@ def test_get_all_metrics_composition(spark, labeled, deliver):
         feats,
         deliver=deliver,
         tgt_cols=["q1_tgt", "q2_tgt"],
-        with_random_baseline=False,
     )
     for key in [
         "silhouette", "davies_bouldin", "calinski_harabasz",
