@@ -21,7 +21,8 @@ Re-implements (reference: src/kraken/app/metrics.py):
 (columns q_code, targeting_seg, sig_more_category array, chi_2_result,
 pop_mode...): a table sized by the survey's schema (significant
 variables x segments), so the metrics over it run in Python over its
-rows. They take the rows, or a DataFrame, which they collect once.
+rows. They take the rows, a DataFrame, which they collect once, or a
+``Future`` of either, which they wait for.
 `labeled` is the respondent table with a `prediction` column; metrics
 over it aggregate to segment-cardinality results before collecting.
 """
@@ -30,18 +31,25 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+Deliver = DataFrame | list[Row] | Future
 
-def _rows(deliver: DataFrame | list[Row]) -> list[Row]:
-    """The deliver rows: a DataFrame argument is collected once."""
+
+def _rows(deliver: Deliver) -> list[Row]:
+    """The deliver rows: a Future is waited for, and a DataFrame is
+    collected once."""
+    if isinstance(deliver, Future):
+        deliver = deliver.result()
     return deliver.collect() if isinstance(deliver, DataFrame) else deliver
 
 
 def uniqueness(
-    deliver: DataFrame | list[Row], seg_col: str = "targeting_seg"
+    deliver: Deliver, seg_col: str = "targeting_seg"
 ) -> dict:
     """M28: per cluster, 1 - duplicated-pair share (metrics.py:311-337).
 
@@ -66,7 +74,7 @@ def uniqueness(
 
 
 def communicability(
-    deliver: DataFrame | list[Row],
+    deliver: Deliver,
     seg_col: str = "targeting_seg",
     pattern: str = "psy|ae",
 ) -> dict:
@@ -128,7 +136,7 @@ def social_presence(
 
 
 def magnitude(
-    deliver: DataFrame | list[Row],
+    deliver: Deliver,
     labeled: DataFrame,
     tgt_cols: list[str],
     pred: str = "prediction",
@@ -183,7 +191,7 @@ def _question_prefix(q_code: str | None) -> str | None:
 
 
 def significant_variables_and_spread(
-    deliver: DataFrame | list[Row],
+    deliver: Deliver,
     alpha: float = 0.05,
     seg_col: str = "targeting_seg",
 ) -> tuple[dict, dict, dict, dict]:
@@ -228,7 +236,7 @@ def significant_variables_and_spread(
 
 def get_all_metrics(
     labeled: DataFrame,
-    deliver: DataFrame | list[Row] | None = None,
+    deliver: Deliver | None = None,
     features_col: str = "features",
     pred: str = "prediction",
     tgt_cols: list[str] | None = None,
@@ -244,33 +252,58 @@ def get_all_metrics(
     prediction column, for social presence — the reference passes
     full_data separately from data_encoded (metrics.py:840) because
     'facebook' matching cannot work on label codes. Defaults to
-    ``labeled`` for callers that kept string answers."""
+    ``labeled`` for callers that kept string answers.
+
+    The Spark reads (quality, social presence, magnitude's cluster
+    sizes, the signal-loss forest) are independent, so they are
+    submitted together, each on its own thread under the caller's job
+    group; the deliver-derived metrics run on the driver once the
+    deliver rows arrive. ``deliver`` may be a ``Future`` still being
+    computed. Every read is joined before this returns or raises."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
-    metrics = Q.cluster_quality(labeled, features=features_col, pred=pred, n_seed=n_seed)
-    metrics["fb_presence"] = social_presence(
-        social_df if social_df is not None else labeled, sm_platform, pred=pred
-    )
-    metrics["model_consistency"] = float("nan")
-    metrics["label_consistency"] = float("nan")
-    if deliver is not None:
-        deliver = _rows(deliver)
-        metrics["uniqueness"] = uniqueness(deliver)
-        comm = communicability(deliver)
-        metrics["communicability_clusters"] = comm["data"]
-        metrics["communicability_avg"] = comm["avg"]
-        if tgt_cols:
-            metrics["magnitude"] = magnitude(deliver, labeled, tgt_cols, pred=pred)
-            sig = S.signal_loss(labeled, tgt_cols, target_col=pred)
-            metrics["signal_loss"] = sig
-            metrics["message_reach"] = message_reach(
-                metrics["fb_presence"], sig
-            )
-        (
-            metrics["num_sig_vars"],
-            metrics["num_sig_tgt_vars"],
-            metrics["sig_question_groups"],
-            metrics["sig_tgt_question_groups"],
-        ) = significant_variables_and_spread(deliver)
+    reads = {
+        "quality": (Q.cluster_quality, labeled, features_col, pred, n_seed),
+        "fb_presence": (
+            social_presence,
+            social_df if social_df is not None else labeled,
+            sm_platform,
+            pred,
+        ),
+    }
+    if deliver is not None and tgt_cols:
+        reads["magnitude"] = (magnitude, deliver, labeled, tgt_cols, pred)
+        reads["signal_loss"] = (S.signal_loss, labeled, tgt_cols, pred)
+    inherit = inheritable_thread_target(labeled.sparkSession)
+    with ThreadPoolExecutor(
+        max_workers=len(reads), thread_name_prefix="metrics"
+    ) as pool:
+        futs = {
+            key: pool.submit(inherit(fn), *args)
+            for key, (fn, *args) in reads.items()
+        }
+        metrics = futs.pop("quality").result()
+        metrics["fb_presence"] = futs.pop("fb_presence").result()
+        metrics["model_consistency"] = float("nan")
+        metrics["label_consistency"] = float("nan")
+        if deliver is not None:
+            deliver = _rows(deliver)
+            metrics["uniqueness"] = uniqueness(deliver)
+            comm = communicability(deliver)
+            metrics["communicability_clusters"] = comm["data"]
+            metrics["communicability_avg"] = comm["avg"]
+            if tgt_cols:
+                metrics["magnitude"] = futs["magnitude"].result()
+                sig = futs["signal_loss"].result()
+                metrics["signal_loss"] = sig
+                metrics["message_reach"] = message_reach(
+                    metrics["fb_presence"], sig
+                )
+            (
+                metrics["num_sig_vars"],
+                metrics["num_sig_tgt_vars"],
+                metrics["sig_question_groups"],
+                metrics["sig_tgt_question_groups"],
+            ) = significant_variables_and_spread(deliver)
     return metrics

@@ -486,8 +486,12 @@ def cluster_quality(
     sizes + proportions + CH and DB's centroid side — without the
     sharing, each metric re-executed the upstream model.transform +
     scan plus its own stats pass (the dominant cost when callers like
-    optimal_k / kmeans_multi_seed evaluate many fits). Three actions
-    total: stats, the silhouette pass, DB's scatter pass."""
+    optimal_k / kmeans_multi_seed evaluate many fits). Four reads: the
+    feature-dimension probe (a limit-1 scan), the stats aggregate,
+    MLlib's ClusteringEvaluator for the silhouette, and DB's scatter
+    aggregate. They are more Spark jobs than reads: AQE runs each
+    aggregate's shuffle stage as a job of its own, and the evaluator
+    runs several, so a traced survey counts 11 jobs for one call."""
     # a NULL prediction is "unassigned" — it is a member of no cluster,
     # so it contributes to no quality metric (same contract as
     # davies_bouldin's NULL-centroid exclusion; None cluster keys would

@@ -15,13 +15,16 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
    best (clustering.py:391-478,627-713)
 5. chi-squared inference -> deliver/discover stats (§3.3 single-shuffle
    plan) and get_all_metrics                  (main.py:158; metrics.py:814-911)
+   — a family's inference chain and its metric reads are submitted
+   together, over one cached feature join per family
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
 
 The reference forks joblib child processes per family and re-pickles
 the table into each (clustering.py:1085-1088); here the cleaned encoded
 table is cached ONCE on the executors and families run as concurrent
-MLlib jobs from driver threads — no data movement between stages.
+MLlib jobs from driver threads — no data movement between stages. After
+the fit the families finalize concurrently as well.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FutureTimeoutError
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -320,43 +324,61 @@ def run_scheme(
         with_pred = cleaned.join(
             labeled.select(cfg.id_col, "prediction"), cfg.id_col
         )
-        tables = contingency_tables(
-            with_pred,
-            cluster_col="prediction",
-            variables=scheme_cols,
-            weight_col=cfg.weight_col,
-            id_vars=[cfg.id_col],
-        )
-        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
-        discover = discover_stats(deliver)
-        # third element of the reference's return_API_data triple
-        # (chisquared_tester.py:1788-1792): per-cluster modal answer
-        modes = cluster_mode_list(
-            with_pred,
-            cluster_col="prediction",
-            variables=scheme_cols,
-            id_vars=[cfg.id_col],
-        )
-        feats = FE.assemble_array(encoded, scheme_cols).join(
-            labeled.select(cfg.id_col, "prediction"), cfg.id_col
+
+        def infer() -> DataFrame:
+            tables = contingency_tables(
+                with_pred,
+                cluster_col="prediction",
+                variables=scheme_cols,
+                weight_col=cfg.weight_col,
+                id_vars=[cfg.id_col],
+            )
+            return deliver_stats(tables, alpha=1 - cfg.conf_interval)
+
+        # quality, magnitude and the signal-loss forest all read this
+        # join: cached once, so none of them recomputes it
+        feats = (
+            FE.assemble_array(encoded, scheme_cols)
+            .join(labeled.select(cfg.id_col, "prediction"), cfg.id_col)
+            .cache()
         )
         tgt_cols = [c for c in scheme_cols if "tgt" in c.lower()]
-        metrics = get_all_metrics(
-            feats,
-            # a local frame: collecting its rows runs no Spark job
-            deliver=deliver.collect(),
-            tgt_cols=tgt_cols,
-            n_seed=fit.get("seed"),
-            # original string answers for social presence — label codes
-            # can never contain 'facebook' (metrics.py:840 full_data)
-            social_df=with_pred,
-        )
+        try:
+            # the inference chain runs beside get_all_metrics' reads;
+            # leaving the block joins it, so when a metric raises no
+            # Spark job of this family outlives it
+            with ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix=f"scheme{run_id}-infer"
+            ) as pool:
+                deliver = pool.submit(inheritable_thread_target(spark)(infer))
+                metrics = get_all_metrics(
+                    feats,
+                    # resolves to a local frame: collecting its rows
+                    # runs no Spark job
+                    deliver=deliver,
+                    tgt_cols=tgt_cols,
+                    n_seed=fit.get("seed"),
+                    # original string answers for social presence — label
+                    # codes can never contain 'facebook' (metrics.py:840
+                    # full_data)
+                    social_df=with_pred,
+                )
+        finally:
+            feats.unpersist()
+        deliver = deliver.result()
         metrics["algorithm"] = algo
         return {
             "labels": labeled,
             "deliver": deliver,
-            "discover": discover,
-            "mode_list": modes,
+            "discover": discover_stats(deliver),
+            # third element of the reference's return_API_data triple
+            # (chisquared_tester.py:1788-1792): per-cluster modal answer
+            "mode_list": cluster_mode_list(
+                with_pred,
+                cluster_col="prediction",
+                variables=scheme_cols,
+                id_vars=[cfg.id_col],
+            ),
             "metrics": metrics,
         }
 
@@ -368,12 +390,14 @@ def run_scheme(
             return _failed(algo, f"{type(exc).__name__}: {exc}")
 
     # Inference + metrics for the surviving families run CONCURRENTLY,
-    # mirroring the fit phase above: each family's post-fit work is a
-    # chain of small independent Spark actions (the contingency cells,
-    # mode list, quality metrics), so sequential per-family processing
-    # would serialize them while the cluster idles — concurrent
-    # submission lets the scheduler overlap them. Families share only
-    # read-only parent frames (the cleaned/encoded caches).
+    # mirroring the fit phase above, and within a family its independent
+    # Spark reads overlap too: the inference chain (cells -> deliver) on
+    # one worker, and quality, social presence, magnitude's cluster
+    # sizes and the signal-loss forest each on one of get_all_metrics'
+    # workers, all under the family's job group. Each read is a few
+    # small Spark jobs, so one after another they would leave the
+    # executors idle. Families share only read-only parent frames (the
+    # cleaned/encoded caches); each caches its own feature join.
     if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),

@@ -315,3 +315,160 @@ def test_crash_between_sinks_and_queue_write_reruns_the_survey(
     for algo, res in results["behavioral"].items():
         deliver = spark.read.parquet(f"{out_dir}/behavioral/{algo}/deliver")
         assert deliver.count() == res["deliver"].count() > 0
+
+
+def _tagged_scheme(responses):
+    """The cleaned fixture and a scheme whose `_fb`/`_gg` columns are
+    `_tgt`-tagged, so every metric of get_all_metrics runs."""
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.operators import cleaning as CL
+
+    cleaned = CL.clean_responses(responses)
+    fragments = ["weightgain_", "fin_uk_risk", "tech_", "psy_", "fin_uk_goal", "mc_"]
+    excluded = CL.inference_excluded_cols(cleaned.columns)
+    cols = [
+        c
+        for c in P.select_scheme_columns(cleaned, fragments, "alchemer_id")
+        if c not in excluded
+    ]
+    cfg = SegmentationConfig(
+        survey_name="tagged",
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("kmodes", "rules_based"),
+        ks=[3],
+    )
+    return cleaned, cols, cfg
+
+
+def _canonical(obj) -> str:
+    """repr with dict keys sorted: full float reprs, NaN included."""
+    if isinstance(obj, dict):
+        items = sorted(obj.items(), key=lambda kv: repr(kv[0]))
+        return "{" + ", ".join(f"{k!r}: {_canonical(v)}" for k, v in items) + "}"
+    return repr(obj)
+
+
+# md5 of each family's _canonical metrics dict on the tagged scheme; the
+# kmodes family runs as kprototypes on the fixture's numeric answers
+METRICS_MD5 = {
+    "kprototypes": "7dd8122c1ef8effafae2e2a853288a57",
+    "rules_based": "119208e933a13145d7bc863661f4c064",
+}
+
+
+def test_metrics_dicts_are_pinned(spark, responses):
+    """Every key and full float of each family's metrics dict (quality,
+    fb_presence, magnitude, signal_loss, uniqueness, spread...) stays
+    fixed: a change to a metric's input, such as the partitioning the
+    random forest trains on, fails here."""
+    import hashlib
+
+    from qudo_etl_pipeline_spark import pipeline as P
+
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    out = P.run_scheme(spark, cleaned, cols, cfg)
+    assert set(out) == set(METRICS_MD5)
+    # the pin covers a real magnitude, not only its NaN fallback
+    assert isinstance(out["rules_based"]["metrics"]["magnitude"], dict)
+    for algo, res in out.items():
+        m = res["metrics"]
+        got = hashlib.md5(_canonical(m).encode()).hexdigest()
+        assert got == METRICS_MD5[algo], (algo, _canonical(m))
+
+
+def _group_id(spark):
+    return spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+
+def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
+    """Each family's post-fit reads run on worker threads; every one of
+    them runs under that family's finalize job group, so cancelling the
+    group reaches them and their jobs are attributed to the family."""
+    import re
+    import threading
+
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import business as B
+    from qudo_etl_pipeline_spark.ml import quality as Q
+    from qudo_etl_pipeline_spark.ml import signal as S
+
+    lock, seen = threading.Lock(), {}
+
+    def recording(name, fn):
+        def wrapper(*args, **kwargs):
+            with lock:
+                seen.setdefault(name, []).append(_group_id(spark))
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for mod, name in [
+        (Q, "cluster_quality"),
+        (B, "social_presence"),
+        (S, "signal_loss"),
+        (P, "deliver_stats"),
+    ]:
+        monkeypatch.setattr(mod, name, recording(name, getattr(mod, name)))
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    out = P.run_scheme(spark, cleaned, cols, cfg)
+    assert all(r["labels"] is not None for r in out.values())
+    assert set(seen) == {
+        "cluster_quality", "social_presence", "signal_loss", "deliver_stats"
+    }
+    groups = {g for ids in seen.values() for g in ids}
+    assert all(re.fullmatch(r"scheme\d+:finalize:.+", g or "") for g in groups)
+    [scheme] = {g.split(":")[0] for g in groups}
+    want = sorted(f"{scheme}:finalize:{algo}" for algo in out)
+    for name, ids in seen.items():
+        assert sorted(ids) == want, name
+
+
+def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypatch):
+    """A metric read that raises after the family's feature frame is
+    cached fails that family only: the other family finishes, and the
+    failed family's cache and reads are released with it."""
+    import threading
+
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import quality as Q
+    from qudo_etl_pipeline_spark.ml import signal as S
+
+    jsc = spark.sparkContext._jsc
+    real_quality = Q.cluster_quality
+    quality_done = threading.Event()
+    persisted_mid_flight = []
+
+    def quality(*args, **kwargs):
+        try:
+            return real_quality(*args, **kwargs)
+        finally:
+            if _group_id(spark).endswith(":finalize:rules_based"):
+                quality_done.set()
+
+    real_signal = S.signal_loss
+
+    def signal(*args, **kwargs):
+        if _group_id(spark).endswith(":finalize:rules_based"):
+            assert quality_done.wait(timeout=120)
+            persisted_mid_flight.append(jsc.getPersistentRDDs().size())
+            raise RuntimeError("planted read failure")
+        return real_signal(*args, **kwargs)
+
+    monkeypatch.setattr(Q, "cluster_quality", quality)
+    monkeypatch.setattr(S, "signal_loss", signal)
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    before = jsc.getPersistentRDDs().size()
+    out = P.run_scheme(spark, cleaned, cols, cfg)
+    # the feature frame (and the scheme's encoded table) were cached
+    # when the read failed
+    assert persisted_mid_flight and persisted_mid_flight[0] > before
+    assert out["rules_based"] == {
+        "labels": None,
+        "metrics": {
+            "algorithm": "rules_based",
+            "error": "RuntimeError: planted read failure",
+        },
+    }
+    done = out["kprototypes"]
+    assert done["labels"] is not None and "error" not in done["metrics"]
+    assert jsc.getPersistentRDDs().size() == before

@@ -1,9 +1,9 @@
 """Parquet-scan census: the r12 duplicate-subtree sweep, pinned.
 
-The r12 sweep (OPTIMIZATION_r12.md §16) materialized branch-shared
-collapsed frames through the operator-cache registry so that plan
-branches stop re-running the source scan; the evidence lived only in
-the committed ``plans/r12/*_after.txt`` dumps. This pins each swept
+The r12 sweep materialized branch-shared collapsed frames through the
+operator-cache registry so that plan branches stop re-running the
+source scan; its evidence was a set of after-plan dumps, since retired
+with the legacy catalog harness. This pins each swept
 query's DISTINCT parquet-scan count (numbered ``(N) Scan parquet``
 operators in ``explain("formatted")`` — a cached subtree repeats in
 the TREE under every InMemoryTableScan reference but keeps ONE
@@ -24,8 +24,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 _SCAN_RE = re.compile(r"^\(\d+\) Scan parquet", re.M)
 
-# query -> max distinct parquet scans, the committed r12 after-plan
-# census (plans/r12/<q>_after.txt). A LOWER count later is fine (a
+# query -> max distinct parquet scans, the r12 after-plan census
+# (``tools/dump_plans.py`` reproduces a dump). A LOWER count later is fine (a
 # further optimization); higher is a sweep regression.
 CENSUS = {
     # §16 duplicate-subtree sweep

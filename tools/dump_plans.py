@@ -1,14 +1,13 @@
 """Dump ``.explain("formatted")`` plans for catalog queries to files.
 
-Judge-facing evidence for optimization rounds: for every query an
-optimization touched, commit the physical plan before and after —
+Evidence for a plan change: for every query a change touches, dump the
+physical plan before and after —
 
-    python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
+    python tools/dump_plans.py <out_dir> <suffix> <sf_dir> <query> [query ...]
 
 writes ``<out_dir>/<query>_<suffix>.txt`` per query (suffix is
-``before`` at the pre-round ref, ``after`` at HEAD). Run it inside a
-git worktree of the old ref to produce the ``before`` side. Without
-explicit names, dumps the bench headline set.
+``before`` at the old commit, ``after`` at HEAD). Run it inside a
+checkout of the old commit to produce the ``before`` side.
 """
 
 from __future__ import annotations
@@ -20,14 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    out_dir = sys.argv[1]
-    suffix = sys.argv[2]
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.001"
-    from bench import HEADLINE
+    if len(sys.argv) < 5:
+        sys.exit("usage: dump_plans.py <out_dir> <suffix> <sf_dir> <query> [query ...]")
+    out_dir, suffix, sf_dir, names = *sys.argv[1:4], sys.argv[4:]
     from qudo_etl_pipeline_spark.catalog import registry
     from qudo_etl_pipeline_spark.session import get_spark
 
-    names = sys.argv[4:] or HEADLINE
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="dump_plans")
     specs = registry()

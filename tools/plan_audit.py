@@ -1,11 +1,11 @@
-"""Physical-plan audit: operator counts per headline query.
+"""Physical-plan audit: operator counts per catalog query.
 
-Prints, for each bench headline query, the executed-plan operator
+Prints, for each named catalog query, the executed-plan operator
 census — shuffle exchanges, broadcasts, join strategies, window ops,
 aggregates, Python eval nodes — so SCALING.md's shuffle-inventory
 claims are reproducible:
 
-    python tools/plan_audit.py [sf_dir] [query ...]
+    python tools/plan_audit.py <sf_dir> <query> [query ...]
 
 Counts are plan properties (scale-invariant); run at any sf.
 
@@ -35,12 +35,12 @@ OPS = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from bench import HEADLINE
+    if len(sys.argv) < 3:
+        sys.exit("usage: plan_audit.py <sf_dir> <query> [query ...]")
+    sf_dir, names = sys.argv[1], sys.argv[2:]
     from qudo_etl_pipeline_spark.catalog import registry
     from qudo_etl_pipeline_spark.session import get_spark
 
-    names = sys.argv[2:] or HEADLINE
     spark = get_spark(app_name="plan_audit")
     specs = registry()
     header = f"{'query':34s}" + "".join(f"{k:>10s}" for k, _ in OPS)

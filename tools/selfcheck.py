@@ -9,12 +9,10 @@ catalog:
 
 ``--hashes-out PATH`` additionally writes a result-hash manifest
 {query: {rows, cols, hash}} over the CANONICAL Spark result (sorted
-columns, order-insensitive rows, full float repr). Committed once per
-round as HASHES_r{N}.json, a one-line diff against the previous
-round's manifest proves "no query's answer changed" without
-re-running the full oracle comparison — the correctness analog of the
-bench's paired A/B record (covers rows-only queries too, which the
-oracle gate cannot).
+columns, order-insensitive rows, full float repr). A one-line diff
+against a committed manifest (HASHES_r12.json) proves "no query's
+answer changed" without re-running the full oracle comparison (covers
+rows-only queries too, which the oracle gate cannot).
 """
 
 from __future__ import annotations
@@ -88,7 +86,7 @@ def driver_gap() -> int:
         f"Catalog queries: {len(specs)}. Driver-verified at least once "
         f"(any CORRECTNESS_r*.json): {len(covered)}. Never "
         f"driver-verified: {len(gap)} (all of these pass the full-catalog "
-        "selfcheck replica — see SELFCHECK_r*.md — but lack a canonical "
+        "selfcheck replica — see `tools/selfcheck.py` — but lack a canonical "
         "driver record).",
         "",
         "## Never driver-checked",
