@@ -7,7 +7,8 @@ full float repr) must equal the entry recorded in ``HASHES_r12.json``.
 A change to kmodes/kprototypes or LCA that moves a label, a mode or a
 cluster size fails here, not only in a manual selfcheck run; so does a
 change to the column profile (label codes, rules codes), the social
-presence or the whole pipeline's summary.
+presence, the inference outputs (deliver, discover, mode list) or the
+whole pipeline's summary.
 """
 
 from __future__ import annotations
@@ -32,6 +33,9 @@ PINNED = [
     "message_reach_planted",
     "rules_based_codes",
     "label_encode_codes",
+    "deliver_stats_planted",
+    "discover_stats_planted",
+    "mode_list_planted",
 ]
 # The HASHES_r12.json entry of the whole-pipeline query is older than a
 # change of its summary; this hash has held since, so it is pinned here.

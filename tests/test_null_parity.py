@@ -20,6 +20,7 @@ same seeded tool and hash-comparing one query per class:
   cramers_v_by_variable, deliver_stats_planted, deliver_stats_weighted,
   discover_stats_planted, uniqueness_planted, communicability_planted,
   magnitude_planted, sig_spread_planted
+- mode list NULL values counted as a value -> mode_list_planted
 """
 
 from __future__ import annotations
@@ -48,6 +49,7 @@ QUERIES = [
     "deliver_stats_planted",
     "deliver_stats_weighted",
     "discover_stats_planted",
+    "mode_list_planted",
     "uniqueness_planted",
     "communicability_planted",
     "magnitude_planted",
