@@ -565,10 +565,12 @@ def mode_list_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("q_status"),
     )
     return cluster_mode_list(
-        wide,
-        cluster_col="cluster",
-        variables=["q_band", "q_priority", "q_status"],
-        id_vars=["id"],
+        contingency_tables(
+            wide,
+            cluster_col="cluster",
+            variables=["q_band", "q_priority", "q_status"],
+            id_vars=["id"],
+        )
     )
 
 

@@ -5,9 +5,8 @@ The reference computes chi-squared p-values with
 scipy is not available here, so the survival function is implemented from
 the regularized incomplete gamma function (series + continued-fraction
 evaluation, the classic public-domain approach from Abramowitz & Stegun
-§6.5 / Numerical Recipes). Vectorized with numpy; exposed both as a plain
-callable (driver-side, small aggregated tables) and as an Arrow-batched
-pandas UDF for in-plan use.
+§6.5 / Numerical Recipes). Vectorized with numpy; a plain driver-side
+callable over small aggregated tables.
 
 Accuracy: relative error < 1e-10 vs scipy on the tested grid
 (tests/test_stats.py) — far below the 0.05/Bonferroni decision
@@ -19,7 +18,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 _MAX_ITER = 500
 _EPS = 3.0e-12
@@ -100,22 +98,6 @@ def chi2_sf(x, df):
     if np.isscalar(x) and np.isscalar(df):
         return float(out[0])
     return out.reshape(out_shape)
-
-
-def chi2_sf_udf():
-    """Arrow-batched pandas UDF: (stat, dof) -> p-value.
-
-    Created lazily so importing this module never requires an active
-    SparkSession.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.DoubleType())
-    def _chi2_sf(stat: pd.Series, dof: pd.Series) -> pd.Series:
-        return pd.Series(chi2_sf(stat.to_numpy(np.float64), dof.to_numpy(np.float64)))
-
-    return _chi2_sf
 
 
 def z_threshold(target: float, lo: float = 0.0, hi: float = 50.0) -> float:

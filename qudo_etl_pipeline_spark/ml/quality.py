@@ -49,10 +49,6 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-def _sq_norm(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-
-
 def cluster_sizes(df: DataFrame, pred: str = PREDICTION) -> DataFrame:
     """Per-cluster row count and share of total (metrics.py:24-38)."""
     total = Window.partitionBy()

@@ -19,10 +19,13 @@ Scale notes (100 TB design):
   the same argument ``ml/lca.py`` makes for its pattern table.
 - Cluster sizes ride the SAME aggregation as a constant pseudo-variable,
   so the one collect carries everything the finalizer reads.
-- Results come back as small local frames (a ``LocalRelation``): their
-  consumers read them without a Spark job, and the finalizer costs no
-  plan building. (The previous per-variable SQL array program spent
-  seconds of cold-JVM planning per survey on a table of a few KB.)
+- Every inference output — the statistics, deliver, discover and the
+  per-cluster mode list — comes back as a small local frame (a
+  ``LocalRelation``) built from that one collect: its consumers read it
+  without a Spark job, also after the input's caches are released, and
+  building it costs no plan work. (The previous per-variable SQL array
+  program spent seconds of cold-JVM planning per survey on a table of a
+  few KB.)
 
 Semantics replicated from the reference (file:line cites):
 - "Not shown" rows excluded from crosstabs        (chisquared_tester.py:229-236)
@@ -42,10 +45,11 @@ Every rounding is Python ``round``, the reference's own function
 from __future__ import annotations
 
 import math
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -206,16 +210,19 @@ class ContingencyTables:
                  sentinel values (callers filter as needed).
     ``cluster_sizes`` — one row per cluster: ``cluster_n`` rows,
                  ``cluster_w`` total weight.
-    Both are lazy filters of one cell aggregation; construction launches
-    no job. The statistics read neither: the first of them runs ONE
-    collect of that aggregation and memoizes the finalized variables
-    (:meth:`variables`); :meth:`unpersist` drops the memo.
+    ``names`` — the melted variables, in the caller's order.
+    Both frames are lazy filters of one cell aggregation; construction
+    launches no job. The statistics read neither: the first of them runs
+    ONE collect of that aggregation and memoizes its cells (:meth:`raw`,
+    :meth:`sizes`) and the finalized variables (:meth:`variables`);
+    :meth:`unpersist` drops the memo.
     """
 
     cells: DataFrame
     cluster_sizes: DataFrame
     cluster_col: str
     weighted: bool
+    names: list[str]
     _all_cells: DataFrame  # the aggregation cells/cluster_sizes filter
     _row_marker: str
     _memo: dict = field(default_factory=dict)
@@ -225,8 +232,15 @@ class ContingencyTables:
         self._collect()
         return self._memo["variables"]
 
-    def sizes(self) -> list[tuple[Any, int, float]]:
-        """(cluster, cluster_n, cluster_w) per cluster, NULL included."""
+    def raw(self) -> dict[str, list[_Cell]]:
+        """Every variable's collected cells in value order, sentinels
+        and NULL clusters included; a variable with no answer has none."""
+        self._collect()
+        return self._memo["raw"]
+
+    def sizes(self) -> list[_Cell]:
+        """One cell per cluster, NULL included: ``observed`` is the
+        cluster's row count, ``w_observed`` its total weight."""
         self._collect()
         return self._memo["sizes"]
 
@@ -242,24 +256,22 @@ class ContingencyTables:
             "observed",
             "w_observed",
         ).collect()
-        by_var: dict[str, list[_Cell]] = {}
+        raw: dict[str, list[_Cell]] = {v: [] for v in self.names}
         sizes = []
         for var, value, cluster, seg, n, w in rows:
-            if var == self._row_marker:
-                sizes.append((cluster, n, w))
-            else:
-                by_var.setdefault(var, []).append(_Cell(value, cluster, seg, n, w))
-        finalized = (
-            _finalize(var, sorted(cells, key=lambda c: c.value))
-            for var, cells in sorted(by_var.items())
-        )
+            cell = _Cell(value, cluster, seg, n, w)
+            (sizes if var == self._row_marker else raw[var]).append(cell)
+        for cells in raw.values():
+            cells.sort(key=lambda c: c.value)
+        finalized = (_finalize(var, cells) for var, cells in sorted(raw.items()))
         self._memo["variables"] = [v for v in finalized if v is not None]
+        self._memo["raw"] = raw
         self._memo["sizes"] = sizes
 
     @property
     def n_rows(self) -> int:
         """Total row count of the input table."""
-        return sum(n for _, n, _ in self.sizes())
+        return sum(c.observed for c in self.sizes())
 
     def unpersist(self) -> None:
         """Drop the memoized rows (nothing is cached on the cluster)."""
@@ -330,6 +342,7 @@ def contingency_tables(
         cluster_sizes=cluster_sizes,
         cluster_col=cluster_col,
         weighted=weight_col is not None,
+        names=variables,
         _all_cells=all_cells,
         _row_marker=row_marker,
     )
@@ -486,8 +499,8 @@ def deliver_stats(
     of the weighted count (the documented intent: "the category with the
     highest weighted sum").
     """
-    sizes = {k: (n, w) for k, n, w in tables.sizes() if k is not None}
-    total_rows = float(sum(n for _, n, _ in tables.sizes()))
+    sizes = {c.cluster: c for c in tables.sizes() if c.cluster is not None}
+    total_rows = float(tables.n_rows)
     rows = []
     for var in tables.variables():
         if not var.p_value <= alpha:
@@ -509,7 +522,7 @@ def deliver_stats(
                 answered_w += c.w_observed
             shown = [c for c in answered if c.value != NOT_SHOWN]
             mode = min(shown, key=lambda c: (-c.observed, c.value))
-            size_n, size_w = sizes[k]
+            size_n, size_w = sizes[k].observed, sizes[k].w_observed
             row = (
                 var.name,
                 mode.value,
@@ -553,66 +566,44 @@ def deliver_stats(
     )
 
 
-def cluster_mode_list(
-    wide: DataFrame,
-    cluster_col: str,
-    variables: list[str] | None = None,
-    id_vars: list[str] | None = None,
-) -> DataFrame:
+def cluster_mode_list(tables: ContingencyTables) -> DataFrame:
     """Per-cluster modal answer for every column — the third element of
     the reference's ``return_API_data`` triple (M26).
 
     Reference: chisquared_tester.py:1788-1792 — for each cluster group,
     ``sub_frame.mode(dropna=False).head(1)``: per column the most
     frequent value, with nulls counted as a value, ties broken by the
-    ascending sort pandas.mode applies (nulls last). The group sub-frame
+    ascending sort pandas.mode applies (nulls last). pandas groupby drops
+    NaN group keys, so NULL clusters get no rows. The group sub-frame
     includes the cluster column itself, so its (trivial) mode row is kept
     for output-shape parity.
 
-    One melt + ONE full-data shuffle; output cardinality is
-    |columns| x |clusters| — independent of row count, same scale story
-    as the deliver-stats cell table. Output: cluster (string), variable,
-    mode_value.
+    Read from the tables' one collect: a value's count is its cell, the
+    NULL count is the cluster's row count less its answered cells. Output
+    (a local frame, |columns| x |clusters| rows): cluster (string),
+    variable, mode_value.
     """
-    if variables is None:
-        variables = [c for c in wide.columns if c not in set(id_vars or [])]
-    elif cluster_col not in variables:
-        variables = [*variables, cluster_col]
-    # pandas groupby drops NaN GROUP KEYS (while mode(dropna=False) keeps
-    # null VALUES) — filter null clusters up front so a caller passing
-    # unlabeled rows matches the reference's self.data.groupby(cluster_col)
-    # (chisquared_tester.py:1789; round-3 ADVICE).
-    wide = wide.filter(F.col(cluster_col).isNotNull())
-    long = melt(
-        wide.select(cluster_col, *[c for c in variables if c != cluster_col]),
-        id_vars=[cluster_col],
-        value_vars=None,
-    ).unionByName(
-        # the cluster column's own melt row (cluster, 'cluster_col', cluster)
-        wide.select(
-            F.col(cluster_col),
-            F.lit(cluster_col).alias("variable"),
-            F.col(cluster_col).cast("string").alias("value"),
-        )
+    rows = []
+    sizes = sorted(
+        (c for c in tables.sizes() if c.cluster is not None),
+        key=lambda c: c.cluster,
     )
-    counts = long.groupBy(cluster_col, "variable", "value").agg(
-        F.count(F.lit(1)).alias("n")  # count(lit(1)) keeps null-value rows
-    )
-    # argmax as min-over-struct: (-count, nulls-last, value) reproduces
-    # pandas mode(dropna=False) tie order without a window
-    pick = counts.groupBy(cluster_col, "variable").agg(
-        F.min(
-            F.struct(
-                (-F.col("n")).alias("neg_n"),
-                F.col("value").isNull().cast("int").alias("null_last"),
-                F.col("value").alias("v"),
-            )
-        ).alias("_m")
-    )
-    return pick.select(
-        F.col(cluster_col).cast("string").alias("cluster"),
-        "variable",
-        F.col("_m.v").alias("mode_value"),
+    for size in sizes:
+        for name, cells in tables.raw().items():
+            if name == tables.cluster_col:
+                continue
+            counts = [(c.observed, c.value) for c in cells if c.cluster == size.cluster]
+            nulls = size.observed - sum(n for n, _ in counts)
+            if nulls:
+                counts.append((nulls, None))
+            # higher count, then non-NULL, then the lower value
+            _, mode = min(counts, key=lambda nv: (-nv[0], nv[1] is None, nv[1] or ""))
+            rows.append((size.seg, name, mode))
+        rows.append((size.seg, tables.cluster_col, size.seg))
+    return local_frame(
+        tables.cells.sparkSession,
+        "cluster: string, variable: string, mode_value: string",
+        rows,
     )
 
 
@@ -621,28 +612,41 @@ def discover_stats(deliver: DataFrame, n_feats: int = 10) -> DataFrame:
 
     Reference: seg_discover_stats_df (chisquared_tester.py:1671-1731) —
     renames pop_mode->mode / mode_pop_perc->mode_perc, drops rows whose
-    mode is a sentinel, keeps the first n_feats per segment.
+    mode is NULL or a sentinel, keeps the first n_feats per segment in
+    (chi_2_result, q_code) order, NULLs first as Spark's ``asc`` sorts.
+
+    ``deliver`` is schema-sized (:func:`deliver_stats`' local frame), so
+    its rows are ranked on the driver; the result is a local frame whose
+    column types are the input's.
     """
-    ranked = deliver.filter(
-        ~F.col("pop_mode").isin(NOT_SELECTED, NOT_SHOWN)
-    ).withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("targeting_seg").orderBy(
-                F.asc("chi_2_result"), F.asc("q_code")
-            )
+    cols = [
+        "targeting_seg", "q_code", "pop_mode", "mode_pop_perc",
+        "sig_more_category", "category_percentages",
+    ]
+    renamed = {"pop_mode": "mode", "mode_pop_perc": "mode_perc"}
+
+    def asc(v):  # Spark's ascending order: NULLs first
+        return (v is not None, v)
+
+    ranked = sorted(
+        (
+            r
+            for r in deliver.collect()
+            if r["pop_mode"] not in (None, NOT_SELECTED, NOT_SHOWN)
         ),
+        key=lambda r: (asc(r["chi_2_result"]), asc(r["q_code"])),
     )
-    return (
-        ranked.filter(F.col("rn") <= n_feats)
-        .select(
-            "targeting_seg",
-            F.col("q_code"),
-            F.col("pop_mode").alias("mode"),
-            F.col("mode_pop_perc").alias("mode_perc"),
-            "sig_more_category",
-            "category_percentages",
-        )
+    kept = Counter()
+    rows = []
+    for r in ranked:
+        kept[r["targeting_seg"]] += 1
+        if kept[r["targeting_seg"]] <= n_feats:
+            rows.append(tuple(r[c] for c in cols))
+    types = {f.name: f.dataType.simpleString() for f in deliver.schema.fields}
+    return local_frame(
+        deliver.sparkSession,
+        ", ".join(f"{renamed.get(c, c)}: {types[c]}" for c in cols),
+        rows,
     )
 
 

@@ -13,8 +13,9 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
    (clustering.py:220-234)
 4. per family: optimal-k, multi-seed fit, balance filter, rank-sum
    best (clustering.py:391-478,627-713)
-5. chi-squared inference -> deliver/discover stats (§3.3 single-shuffle
-   plan) and get_all_metrics                  (main.py:158; metrics.py:814-911)
+5. chi-squared inference -> deliver, discover and the mode list, all
+   from one collect of the family's cell table (§3.3 single-shuffle
+   plan), and get_all_metrics                 (main.py:158; metrics.py:814-911)
    — a family's inference chain and its metric reads are submitted
    together, over one cached feature join per family
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
@@ -244,6 +245,22 @@ def run_scheme(
         enc_cols.append(cfg.rules_col)
     code_maps, numeric = FE.build_code_maps(cleaned, enc_cols)
     encoded = FE.label_encode(cleaned, enc_cols, code_maps=code_maps).cache()
+    try:
+        return _run_families(spark, cleaned, encoded, scheme_cols, numeric, cfg)
+    finally:
+        encoded.unpersist()
+
+
+def _run_families(
+    spark: SparkSession,
+    cleaned: DataFrame,
+    encoded: DataFrame,
+    scheme_cols: list[str],
+    numeric: list[str],
+    cfg: SegmentationConfig,
+) -> dict:
+    """:func:`run_scheme`'s fit and finalize phases over the scheme's
+    cached encoded table."""
     num_cols = [c for c in numeric if c in scheme_cols]
     algos = list(cfg.algorithms) + (["lca"] if cfg.include_lca else [])
     sc = spark.sparkContext
@@ -325,7 +342,10 @@ def run_scheme(
             labeled.select(cfg.id_col, "prediction"), cfg.id_col
         )
 
+        tables = None
+
         def infer() -> DataFrame:
+            nonlocal tables
             tables = contingency_tables(
                 with_pred,
                 cluster_col="prediction",
@@ -367,18 +387,13 @@ def run_scheme(
             feats.unpersist()
         deliver = deliver.result()
         metrics["algorithm"] = algo
+        # the reference's return_API_data triple (chisquared_tester.py:
+        # 1762-1793), all local frames from the tables' one collect
         return {
             "labels": labeled,
             "deliver": deliver,
             "discover": discover_stats(deliver),
-            # third element of the reference's return_API_data triple
-            # (chisquared_tester.py:1788-1792): per-cluster modal answer
-            "mode_list": cluster_mode_list(
-                with_pred,
-                cluster_col="prediction",
-                variables=scheme_cols,
-                id_vars=[cfg.id_col],
-            ),
+            "mode_list": cluster_mode_list(tables),
             "metrics": metrics,
         }
 
@@ -412,7 +427,6 @@ def run_scheme(
                 results[algo] = fut.result()
         finally:
             finalize_pool.shutdown(wait=True)
-    encoded.unpersist()
     return results
 
 
@@ -424,21 +438,20 @@ def run_all_segmentations(
     output_dir: str | None = None,
 ) -> dict:
     """The full main.py:45-183 flow. Returns
-    {scheme: {algorithm: {labels, deliver, discover, metrics}}} and
-    (optionally) writes metrics CSV + deliver/discover Parquet."""
+    {scheme: {algorithm: {labels, deliver, discover, mode_list, metrics}}};
+    optionally writes metrics CSV + deliver/discover Parquet."""
     cleaned = CL.clean_responses(responses, questions=questions).cache()
     all_results: dict = {}
-    for scheme, fragments in (cfg.schemes or {"all": ["all"]}).items():
-        cols = select_scheme_columns(cleaned, fragments, cfg.id_col)
-        cols = [
-            c
-            for c in cols
-            if c not in CL.inference_excluded_cols(
-                cleaned.columns, weight_col=cfg.weight_col
-            )
-        ]
-        all_results[scheme] = run_scheme(spark, cleaned, cols, cfg)
-    cleaned.unpersist()
+    try:
+        excluded = CL.inference_excluded_cols(
+            cleaned.columns, weight_col=cfg.weight_col
+        )
+        for scheme, fragments in (cfg.schemes or {"all": ["all"]}).items():
+            cols = select_scheme_columns(cleaned, fragments, cfg.id_col)
+            cols = [c for c in cols if c not in excluded]
+            all_results[scheme] = run_scheme(spark, cleaned, cols, cfg)
+    finally:
+        cleaned.unpersist()
 
     if output_dir:
         metrics_rows = []

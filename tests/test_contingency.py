@@ -148,7 +148,9 @@ def test_cluster_mode_list_matches_pandas_mode(spark):
     df = spark.createDataFrame(rows, "cluster string, q1 string, q2 string")
     got = {
         (r["cluster"], r["variable"]): r["mode_value"]
-        for r in cluster_mode_list(df, "cluster", variables=["q1", "q2"]).collect()
+        for r in cluster_mode_list(
+            contingency_tables(df, "cluster", variables=["q1", "q2"])
+        ).collect()
     }
     assert got == {
         ("c0", "q1"): "a",

@@ -472,3 +472,63 @@ def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypat
     done = out["kprototypes"]
     assert done["labels"] is not None and "error" not in done["metrics"]
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_failing_scheme_releases_the_caches(spark):
+    """A scheme whose fragments match no column raises out of the
+    survey; the cleaned table cached for the survey is released with
+    it, so a drain that goes on to the next survey does not grow."""
+    responses = spark.createDataFrame(make_responses(n=200))
+    cfg = SegmentationConfig(
+        survey_name="bad_scheme",
+        schemes={
+            "behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"],
+            "nothing": ["no_such_fragment"],
+        },
+        algorithms=("kmodes",),
+        ks=[3],
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="no value_vars"):
+        run_all_segmentations(spark, responses, cfg)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def _jobs_started_by(spark, action) -> int:
+    """How many Spark jobs ``action()`` starts, counted by job group
+    once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one action")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_returned_frames_start_no_spark_job(spark, responses):
+    """Each family's deliver, discover and mode list are local frames:
+    reading them after the pipeline returns (its caches released)
+    starts no Spark job."""
+    cfg = SegmentationConfig(
+        survey_name="cheap_frames",
+        schemes={"behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"]},
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("kmodes", "rules_based"),
+        ks=[3],
+    )
+    out = run_all_segmentations(spark, responses, cfg)
+    # the probe sees a job when one runs
+    assert _jobs_started_by(spark, spark.range(3).collect) > 0
+    jobs = {
+        (algo, key): _jobs_started_by(spark, res[key].collect)
+        for algo, res in out["behavioral"].items()
+        for key in ("deliver", "discover", "mode_list")
+    }
+    assert len(jobs) == 6
+    assert jobs == dict.fromkeys(jobs, 0)
