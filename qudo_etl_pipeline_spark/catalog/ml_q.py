@@ -11,7 +11,7 @@ contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.catalog import load_table, none_last_key, register
@@ -484,6 +484,50 @@ def gmm_pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# one distributed KModes/KPrototypes mode update: the step math the two
+# step queries below pin against their DuckDB oracles
+def _update_modes(
+    assigned: DataFrame,
+    modes: list[dict],
+    cat_cols: list[str],
+    num_cols: list[str],
+) -> list[dict]:
+    """New modes: per-(cluster, attr) most-frequent value (count desc,
+    value asc tie-break) + numeric means. One shuffle."""
+    from qudo_etl_pipeline_spark.plans.melt import melt
+
+    counts = (
+        melt(
+            assigned.select("prediction", *cat_cols),
+            id_vars=["prediction"],
+            value_vars=cat_cols,
+        )
+        .groupBy("prediction", "variable", "value")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    w = Window.partitionBy("prediction", "variable").orderBy(
+        F.col("n").desc(), F.col("value").asc()
+    )
+    top = (
+        counts.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .collect()
+    )
+    new_modes = [dict(m) for m in modes]  # emptied cluster keeps its mode
+    for r in top:
+        new_modes[r["prediction"]][r["variable"]] = r["value"]
+    if num_cols:
+        means = (
+            assigned.groupBy("prediction")
+            .agg(*[F.avg(F.col(c).cast("double")).alias(c) for c in num_cols])
+            .collect()
+        )
+        for r in means:
+            for c in num_cols:
+                new_modes[r["prediction"]][c] = float(r[c])
+    return new_modes
+
+
 @register(
     "kmodes_step_planted",
     oracle="""
@@ -534,7 +578,7 @@ def kmodes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     modes = [{"a0": "BUILDING", "a1": "0"}, {"a0": "MACHINERY", "a1": "3"}]
     assigned = KM._assign(pts, modes, ["a0", "a1"], [], 0.0)
-    new_modes = KM._update_modes(assigned, modes, ["a0", "a1"], [])
+    new_modes = _update_modes(assigned, modes, ["a0", "a1"], [])
     sizes = assigned.groupBy(F.col("prediction").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -594,7 +638,7 @@ def kprototypes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     protos = [{"a0": "BUILDING", "f1": 0.0}, {"a0": "MACHINERY", "f1": 5.0}]
     assigned = KM._assign(pts, protos, ["a0"], ["f1"], gamma=0.5)
-    new_protos = KM._update_modes(assigned, protos, ["a0"], ["f1"])
+    new_protos = _update_modes(assigned, protos, ["a0"], ["f1"])
     sizes = assigned.groupBy(F.col("prediction").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n")
     )

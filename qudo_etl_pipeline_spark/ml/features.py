@@ -30,13 +30,17 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from qudo_etl_pipeline_spark.functions.hashing import token_hash64
 from qudo_etl_pipeline_spark.plans.melt import melt
+
+_LOG = logging.getLogger(__name__)
 
 
 def build_code_maps(
@@ -88,8 +92,9 @@ def build_code_maps(
     return maps, numeric
 
 
-# pattern tables larger than this are not collected (the caller's
-# distributed loop runs instead) — bounds driver memory at any input size
+# the most patterns a fit collects: a larger table is fitted on a
+# priority sample of this many patterns — bounds driver memory at any
+# input size
 PATTERN_THRESHOLD = 200_000
 
 
@@ -98,31 +103,55 @@ def pattern_table(
     cols: list[str],
     num_cols: Sequence[str] = (),
     min_col: str | None = None,
-    threshold: int = PATTERN_THRESHOLD,
-) -> tuple[list | None, int | None]:
+) -> list[Row]:
     """The (pattern, count ``_w``[, min ``min_col`` as ``_mid``]) table
     of ``cols + num_cols``: the sufficient statistic the categorical fit
-    families (kmodes, LCA) iterate over driver-side. One shuffle;
-    ``limit`` bounds what can reach the driver.
+    families (kmodes, LCA) iterate over driver-side. At most
+    ``PATTERN_THRESHOLD`` rows reach the driver.
 
     Probe rule: a categorical-only input always probes (its pattern
     space is bounded by the answer-option product); numeric columns make
     patterns ~ rows, so a mixed input probes only when ``df.count()``
-    fits under ``threshold``. Returns ``(rows, n)``: ``rows`` is None
-    when the table was not probed or overflowed (the caller runs its
-    distributed loop); ``n`` is the row count if the rule counted it."""
-    n = None
-    if num_cols:
-        n = df.count()
-        if n > threshold:
-            return None, n
+    fits under the threshold. The probe is one shuffle; ``limit`` bounds
+    what it collects. When it overflows, or is skipped, the table is a
+    priority sample (Duffield, Lund & Thorup, JACM 2007) of the threshold
+    many patterns with the largest ``_w / u``, ``u`` in (0, 1] a hash of
+    the pattern (deterministic, independent of partitioning; ties break
+    on the pattern). With tau the next-largest priority, each kept
+    ``_w`` becomes the Horvitz-Thompson weight ``max(_w, tau)``, so
+    weighted sums over the sample estimate the full table's."""
+    threshold = PATTERN_THRESHOLD
+    keys = [*cols, *num_cols]
     aggs = [F.count(F.lit(1)).alias("_w")]
     if min_col is not None:
         aggs.append(F.min(min_col).alias("_mid"))
+    table = df.groupBy(*keys).agg(*aggs)
+    if not num_cols or df.count() <= threshold:
+        rows = table.limit(threshold + 1).collect()
+        if len(rows) <= threshold:
+            return rows
+    # u in (0, 1] from the pattern's 60-bit hash
+    h = token_hash64(F.to_json(F.struct(*keys)), 0)
+    u = (h + 1).cast("double") / 2.0**60
     rows = (
-        df.groupBy(*cols, *num_cols).agg(*aggs).limit(threshold + 1).collect()
+        table.withColumn("_pri", F.col("_w") / u)
+        .orderBy(F.col("_pri").desc(), *keys)
+        .limit(threshold + 1)
+        .collect()
     )
-    return (None if len(rows) > threshold else rows), n
+    tau = 0.0
+    if len(rows) > threshold:
+        tau = rows[threshold]["_pri"]
+        _LOG.info(
+            "pattern table sampled: %d patterns kept, tau %r", threshold, tau
+        )
+    out = []
+    for r in rows[:threshold]:
+        d = r.asDict()
+        del d["_pri"]
+        d["_w"] = max(float(d["_w"]), tau)
+        out.append(Row(**d))
+    return out
 
 
 def label_encode(

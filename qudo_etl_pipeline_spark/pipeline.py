@@ -221,6 +221,11 @@ def _abandon_pool_threads(pool: ThreadPoolExecutor) -> None:
         _cft._threads_queues.pop(t, None)
 
 
+def _algorithms(cfg: SegmentationConfig) -> list[str]:
+    """The families each scheme runs, in order."""
+    return list(cfg.algorithms) + (["lca"] if cfg.include_lca else [])
+
+
 def _failed(algo: str, error: str) -> dict:
     """The result of a family that failed: no labels, the reason in its
     metrics. The scheme's other families still finish."""
@@ -262,7 +267,7 @@ def _run_families(
     """:func:`run_scheme`'s fit and finalize phases over the scheme's
     cached encoded table."""
     num_cols = [c for c in numeric if c in scheme_cols]
-    algos = list(cfg.algorithms) + (["lca"] if cfg.include_lca else [])
+    algos = _algorithms(cfg)
     sc = spark.sparkContext
     # scheme-unique token: job groups are context-global, so two
     # concurrent run_scheme calls must not share group names (one
@@ -449,6 +454,15 @@ def run_all_segmentations(
         for scheme, fragments in (cfg.schemes or {"all": ["all"]}).items():
             cols = select_scheme_columns(cleaned, fragments, cfg.id_col)
             cols = [c for c in cols if c not in excluded]
+            if not cols:
+                # nothing to profile or fit: each family fails, and the
+                # survey's other schemes still run
+                _LOG.warning("scheme %s matches no column", scheme)
+                all_results[scheme] = {
+                    algo: _failed(algo, f"scheme '{scheme}' matches no column")
+                    for algo in _algorithms(cfg)
+                }
+                continue
             all_results[scheme] = run_scheme(spark, cleaned, cols, cfg)
     finally:
         cleaned.unpersist()

@@ -11,9 +11,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.ml import features as FE
 from qudo_etl_pipeline_spark.ml import kmodes as KM
 from qudo_etl_pipeline_spark.ml import lca as LCA
 from qudo_etl_pipeline_spark.ml import quality as Q
+from tests.test_pipeline import _jobs_started_by
 
 
 def _planted_categorical(spark, n_per=80, noise=0.15, seed=3):
@@ -94,9 +96,9 @@ def test_kprototypes_mixed_distance(spark, cat_df):
     assert xs == pytest.approx([0.0, 10.0, 20.0], abs=1.0)
 
 
-def test_cao_init_deterministic_and_distinct(spark, cat_df):
-    m1 = KM.cao_init(cat_df, ["q0", "q1", "q2", "q3"], 3)
-    m2 = KM.cao_init(cat_df, ["q0", "q1", "q2", "q3"], 3)
+def test_kmodes_modes_deterministic_and_distinct(spark, cat_df):
+    m1 = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
+    m2 = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
     assert m1 == m2
     assert len({tuple(sorted(m.items())) for m in m1}) == 3
 
@@ -153,109 +155,6 @@ def test_lca_mixed_pure_gaussian(spark, cat_df):
     assert fit["n_params"] == 2 + 3 * 2
 
 
-def test_lca_distributed_path_matches_pattern_path(spark, cat_df):
-    """pattern_threshold=0 forces the distributed EM loop (the 100 TB
-    path); same seed + same sufficient statistics must land on the same
-    model as pattern EM up to float association order."""
-    cols = ["q0", "q1", "q2", "q3"]
-    fp = LCA.lca_fit(cat_df, cols, k=3, seed=42)
-    fd = LCA.lca_fit(cat_df, cols, k=3, seed=42, pattern_threshold=0)
-    assert fd["loglik"] == pytest.approx(fp["loglik"], rel=1e-6)
-    assert sorted(fd["pi"]) == pytest.approx(sorted(fp["pi"]), abs=1e-6)
-    ari = Q.adjusted_rand_index(fd["labels"], "truth", "prediction")
-    assert ari > 0.9
-
-
-def test_lca_mixed_distributed_path(spark, cat_df):
-    """Distributed mixed EM (gaussian factors in the fused single-row
-    aggregate) must recover the planted classes like the pattern path.
-    Init quantiles differ slightly (percentile_approx vs weighted
-    numpy), so the assertion is recovery, not bit equality."""
-    with_num = cat_df.withColumn(
-        "x", F.col("truth").cast("double") * 10.0 + (F.rand(7) - 0.5)
-    ).withColumn(
-        "y", F.col("truth").cast("double") * -3.0 + (F.rand(8) - 0.5)
-    )
-    fit = LCA.lca_fit(
-        with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x", "y"],
-        pattern_threshold=0,
-    )
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
-    assert ari > 0.9
-    xs = sorted(m["x"] for m in fit["mu"])
-    assert xs == pytest.approx([0.0, 10.0, 20.0], abs=1.5)
-
-
-def test_cao_init_high_cardinality_join_path(spark, cat_df):
-    """A column wider than _CAO_MAP_MAX distincts must take the
-    broadcast-join density path (no 50k-literal create_map in the plan)
-    and still produce the same modes as the literal-map path computes
-    for the low-cardinality columns."""
-    import qudo_etl_pipeline_spark.ml.kmodes as KMmod
-
-    n = 50_000
-    wide = spark.range(n).selectExpr(
-        "id AS row_id",
-        "CAST(id AS STRING) AS hi",          # 50k distinct values
-        "CAST(id % 3 AS STRING) AS lo",
-    )
-    modes = KM.cao_init(wide, ["hi", "lo"], 2)
-    assert len(modes) == 2
-    assert all(set(m) == {"hi", "lo"} for m in modes)
-    # determinism on the join path too
-    assert modes == KM.cao_init(wide, ["hi", "lo"], 2)
-    # the literal-map budget was respected: the density plan for `hi`
-    # cannot have been a create_map (50k entries > _CAO_MAP_MAX)
-    assert n > KMmod._CAO_MAP_MAX
-    dens, release = KMmod._density_frame(wide, ["hi", "lo"], n)
-    try:
-        plan = dens._jdf.queryExecution().optimizedPlan().toString()
-        assert "keys: [" not in plan or plan.count("keys: [") < 100
-        assert "Join" in plan  # hi resolves via a join
-    finally:
-        release()
-
-
-def test_kmodes_pattern_path_matches_distributed(spark, cat_df):
-    """pattern_threshold=0 forces the distributed Lloyd loop; the
-    pattern fast path must reproduce its modes, cost, iteration count
-    and labels exactly (same Cao init, same tie-breaks)."""
-    cols = ["q0", "q1", "q2", "q3"]
-    fp = KM.kmodes_fit(cat_df, cols, k=3)
-    fd = KM.kmodes_fit(cat_df, cols, k=3, pattern_threshold=0)
-    assert fp["modes"] == fd["modes"]
-    assert fp["cost"] == fd["cost"]
-    assert fp["n_iter"] == fd["n_iter"]
-    joined = (
-        fp["labels"].select("row_id", F.col("prediction").alias("pa"))
-        .join(
-            fd["labels"].select("row_id", F.col("prediction").alias("pb")),
-            "row_id",
-        )
-    )
-    assert joined.filter(F.col("pa") != F.col("pb")).count() == 0
-
-
-def test_kprototypes_pattern_path_matches_distributed(spark, cat_df):
-    """Mixed-type (gaussian) pattern path vs distributed loop: same
-    modes up to float tolerance, same sizes."""
-    with_num = cat_df.withColumn(
-        "x", F.col("truth").cast("double") * 10.0 + (F.rand(5) - 0.5)
-    )
-    cols = ["q0", "q1", "q2", "q3"]
-    fp = KM.kmodes_fit(with_num, cols, k=3, num_cols=["x"])
-    fd = KM.kmodes_fit(
-        with_num, cols, k=3, num_cols=["x"], pattern_threshold=0
-    )
-    assert fp["n_iter"] == fd["n_iter"]
-    for mp, md in zip(fp["modes"], fd["modes"]):
-        assert {c: mp[c] for c in ["q0", "q1", "q2", "q3"]} == {
-            c: md[c] for c in ["q0", "q1", "q2", "q3"]
-        }
-        assert mp["x"] == pytest.approx(md["x"], rel=1e-9)
-    assert fp["cost"] == pytest.approx(fd["cost"], rel=1e-9)
-
-
 def test_lca_select_deterministic_at_pipeline_default(spark, cat_df):
     """Determinism at the pipeline's restart depth (n_rep=3): two runs
     of the full selection grid pick the same model bit-for-bit.
@@ -296,22 +195,106 @@ def test_lca_fit_is_the_one_model_selection(spark, cat_df):
     assert _labels(sel) == _labels(fit)
 
 
-def test_lca_select_distributed_path_matches_pattern_path(
-    spark, cat_df, monkeypatch
-):
-    """A pattern threshold of 0 sends the whole selection grid through
-    the distributed EM loop (code maps, n and the cached input shared by
-    every fit); it must select the same (k, seed) as pattern EM with the
-    same BIC up to float association order."""
-    from qudo_etl_pipeline_spark.ml import features as FE
+# Above the pattern threshold both families fit on a priority sample of
+# the pattern table. The n_per=400 fixture has 63-64 patterns over 1,200
+# rows; a threshold of 40 samples it.
+COLS = ["q0", "q1", "q2", "q3"]
+SAMPLE = 40
 
-    cols = ["q0", "q1", "q2", "q3"]
-    grid = dict(ks=[2, 3, 4], n_rep=2, seed=42, max_iter=30)
-    fp = LCA.lca_select(cat_df, cols, **grid)
-    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 0)
-    fd = LCA.lca_select(cat_df, cols, **grid)
-    assert (fd["k"], fd["seed"]) == (fp["k"], fp["seed"])
-    assert fd["bic"] == pytest.approx(fp["bic"], rel=1e-6)
-    assert fd["n_params"] == fp["n_params"]
-    ari = Q.adjusted_rand_index(fd["labels"], "truth", "prediction")
-    assert ari > 0.9
+
+@pytest.fixture(scope="module")
+def big_df(spark):
+    return _planted_categorical(spark, n_per=400).cache()
+
+
+@pytest.fixture
+def sampled(monkeypatch):
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", SAMPLE)
+
+
+def _with_x(df):
+    return df.withColumn(
+        "x", F.col("truth").cast("double") * 10.0 + (F.rand(5) - 0.5)
+    )
+
+
+def test_pattern_table_is_a_weighted_sample_above_the_threshold(
+    spark, big_df, sampled
+):
+    exact = {
+        tuple(r[c] for c in COLS): r["count"]
+        for r in big_df.groupBy(*COLS).count().collect()
+    }
+    assert len(exact) > SAMPLE
+    pat = FE.pattern_table(big_df, COLS)
+    assert len(pat) == SAMPLE
+    assert all(r["_w"] >= exact[tuple(r[c] for c in COLS)] for r in pat)
+    # Horvitz-Thompson weights estimate the row count
+    assert sum(r["_w"] for r in pat) == pytest.approx(1200, rel=0.05)
+
+
+def test_sampled_fits_recover_planted_classes(
+    spark, big_df, monkeypatch
+):
+    """LCA recovers the classes from the sample. KModes recovers them as
+    well as from the exact table: on this fixture every answer value has
+    frequency ~1/3, so Cao's density is flat and the exact fit itself
+    lands in a local optimum (ARI ~0.5) on about half the data seeds,
+    seed 3 among them."""
+
+    def ari(fit):
+        return Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+
+    exact = ari(KM.kmodes_fit(big_df, COLS, k=3))
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", SAMPLE)
+    assert ari(KM.kmodes_fit(big_df, COLS, k=3)) >= exact - 0.05
+    lca = LCA.lca_select(big_df, COLS, ks=[2, 3, 4], n_rep=3, seed=42)
+    assert lca["k"] == 3
+    assert ari(lca) > 0.9
+
+
+def test_sampled_fits_are_deterministic(spark, big_df, sampled):
+    a, b = (KM.kmodes_fit(big_df, COLS, k=3) for _ in range(2))
+    assert (a["modes"], a["cost"], a["n_iter"]) == (
+        b["modes"], b["cost"], b["n_iter"]
+    )
+    assert _labels(a) == _labels(b)
+    a, b = (
+        LCA.lca_select(big_df, COLS, ks=[2, 3], n_rep=2, seed=42)
+        for _ in range(2)
+    )
+    assert (a["k"], a["seed"], a["bic"], a["pi"], a["theta"]) == (
+        b["k"], b["seed"], b["bic"], b["pi"], b["theta"]
+    )
+    assert _labels(a) == _labels(b)
+
+
+def test_sampled_mixed_fits_recover_planted_means(spark, big_df, sampled):
+    """A mixed input with more rows than the threshold skips the probe
+    and fits on the sample; the planted gaussian means come back."""
+    with_num = _with_x(big_df)
+    assert with_num.count() > SAMPLE
+    km = KM.kmodes_fit(with_num, COLS, k=3, num_cols=["x"])
+    assert sorted(m["x"] for m in km["modes"]) == pytest.approx(
+        [0.0, 10.0, 20.0], abs=1.0
+    )
+    assert Q.adjusted_rand_index(km["labels"], "truth", "prediction") > 0.9
+    lca = LCA.lca_fit(with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x"])
+    assert sorted(m["x"] for m in lca["mu"]) == pytest.approx(
+        [0.0, 10.0, 20.0], abs=1.5
+    )
+
+
+def test_sampled_fit_jobs_do_not_grow_with_iterations(
+    spark, big_df, sampled
+):
+    """The Lloyd and EM loops run on the driver: a sampled fit starts
+    as many Spark jobs at one iteration as at thirty."""
+
+    def jobs(fit):
+        return [_jobs_started_by(spark, lambda: fit(m)) for m in (1, 30)]
+
+    km = jobs(lambda m: KM.kmodes_fit(big_df, COLS, k=3, max_iter=m))
+    lca = jobs(lambda m: LCA.lca_fit(big_df, COLS, k=3, max_iter=m))
+    assert km[0] == km[1] > 0
+    assert lca[0] == lca[1] > 0

@@ -16,14 +16,14 @@ eqs. 6-8):
 
 This file implements those equations LITERALLY — per-observation,
 probability-domain, no vectorization, no code shared with ml/lca.py —
-and asserts that ``_em_patterns`` (the sufficient-statistic EM every
-other LCA path is already differentially tied to:
-test_lca_distributed_path_matches_pattern_path) follows the same EM
-map from the same start point: identical mixing weights, conditional
-probabilities, and log-likelihood trajectory at float tolerance.
+and asserts that ``_em_patterns`` (the sufficient-statistic EM that
+every ``lca_fit`` / ``lca_select`` runs, on the exact pattern table or
+on its weighted priority sample) follows the same EM map from the same
+start point: identical mixing weights, conditional probabilities, and
+log-likelihood trajectory at float tolerance.
 
-Transitively: Spark distributed EM == pattern EM == the poLCA paper's
-update map. Known, documented deltas vs poLCA remain: NULL answers
+So pattern EM == the poLCA paper's update map. Known, documented
+deltas vs poLCA remain: NULL answers
 (poLCA drops the missing FACTOR contribution per row; lca_fit maps
 null to a floored log-probability, discarding that row's mass from
 the affected factor) — this differential therefore runs on complete

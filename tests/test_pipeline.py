@@ -474,25 +474,68 @@ def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypat
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_failing_scheme_releases_the_caches(spark):
-    """A scheme whose fragments match no column raises out of the
-    survey; the cleaned table cached for the survey is released with
-    it, so a drain that goes on to the next survey does not grow."""
+def test_failing_scheme_releases_the_caches(spark, monkeypatch):
+    """A scheme whose column profile raises fails the survey; the
+    cleaned table cached for the survey is released with it, so a drain
+    that goes on to the next survey does not grow."""
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    real, calls = FE.build_code_maps, []
+
+    def second_profile_fails(df, cols):
+        calls.append(cols)
+        if len(calls) == 2:
+            raise ValueError("planted profile failure")
+        return real(df, cols)
+
+    monkeypatch.setattr(FE, "build_code_maps", second_profile_fails)
     responses = spark.createDataFrame(make_responses(n=200))
     cfg = SegmentationConfig(
         survey_name="bad_scheme",
         schemes={
             "behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"],
-            "nothing": ["no_such_fragment"],
+            "psychographic": ["psy_"],
         },
         algorithms=("kmodes",),
         ks=[3],
     )
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    with pytest.raises(ValueError, match="no value_vars"):
+    with pytest.raises(ValueError, match="planted profile failure"):
         run_all_segmentations(spark, responses, cfg)
+    assert len(calls) == 2
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_scheme_matching_no_column_fails_its_families(spark, responses):
+    """A scheme whose fragments match no column is not profiled: with or
+    without a rules column, each of its families fails with the same
+    error, and the survey's other scheme still finishes."""
+    for rules_col in (None, "fin_uk_goal_fb_tgt"):
+        cfg = SegmentationConfig(
+            survey_name="empty_scheme",
+            schemes={
+                "behavioral": ["fin_uk_risk", "psy_", "fin_uk_goal"],
+                "nothing": ["no_such_fragment"],
+            },
+            rules_col=rules_col,
+            algorithms=("kmodes", "rules_based"),
+            ks=[3],
+        )
+        out = run_all_segmentations(spark, responses, cfg)
+        assert out["nothing"] == {
+            algo: {
+                "labels": None,
+                "metrics": {
+                    "algorithm": algo,
+                    "error": "scheme 'nothing' matches no column",
+                },
+            }
+            for algo in ("kmodes", "rules_based")
+        }
+        good = out["behavioral"].values()
+        assert all("error" not in r["metrics"] for r in good)
+        assert any(r["labels"] is not None for r in good)
 
 
 def _jobs_started_by(spark, action) -> int:
