@@ -648,6 +648,65 @@ def hierarchical_segmentation_pinned(
     )
 
 
+def random_checker(
+    df: DataFrame,
+    features: str = "features",
+    pred: str = "prediction",
+    cluster_metrics: dict | None = None,
+    n_runs: int = 10,
+    seed: int = 42,
+) -> dict:
+    """Random-baseline ratios (metrics.py:149-174): mean metric over
+    `n_runs` random labelings; note the reference's randint(0, k) is
+    INCLUSIVE — k+1 possible random labels — replicated here."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from qudo_etl_pipeline_spark.ml import quality as Q
+
+    cluster_metrics = dict(cluster_metrics or {})
+    k = df.select(pred).distinct().count()
+
+    # Each run is one cluster_quality call, whose degenerate-input
+    # fallbacks (silhouette 0, DB 999, CH 0) are the reference's
+    # (metrics.py:75-90). Runs are independent jobs — a thread pool lets
+    # the scheduler interleave their stages; summation stays in run
+    # order (pool.map preserves order) so the result is bit-identical to
+    # the serial loop.
+    def one_run(i: int) -> tuple[float, float, float]:
+        rnd = df.withColumn(
+            "_rand_label",
+            F.floor(F.rand(seed + i) * (k + 1)).cast("int"),
+        )
+        m = Q.cluster_quality(rnd, features, "_rand_label")
+        return m["silhouette"], m["davies_bouldin"], m["calinski_harabasz"]
+
+    with ThreadPoolExecutor(max_workers=min(8, n_runs)) as pool:
+        runs = list(pool.map(one_run, range(n_runs)))
+    accum = {"silhouette": 0.0, "davies_bouldin": 0.0, "calinski_harabasz": 0.0}
+    for sil, db, ch in runs:
+        accum["silhouette"] += sil
+        accum["davies_bouldin"] += db
+        accum["calinski_harabasz"] += ch
+    mean = {m: v / n_runs for m, v in accum.items()}
+    cluster_metrics["calinski_harabasz_random_ratio"] = (
+        cluster_metrics.get("calinski_harabasz", 0.0)
+        / mean["calinski_harabasz"]
+        if mean["calinski_harabasz"]
+        else float("nan")
+    )
+    cluster_metrics["davies_bouldin_random_ratio"] = (
+        mean["davies_bouldin"] / cluster_metrics.get("davies_bouldin", 999.0)
+        if cluster_metrics.get("davies_bouldin")
+        else float("nan")
+    )
+    cluster_metrics["silhouette_random_ratio"] = (
+        abs(cluster_metrics.get("silhouette", 0.0) / mean["silhouette"])
+        if mean["silhouette"]
+        else float("nan")
+    )
+    return cluster_metrics
+
+
 @register(
     "random_baseline_rows",
     oracle=None,
@@ -665,7 +724,7 @@ def random_baseline_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 4).alias("prediction"),
     )
     base = Q.cluster_quality(emb)
-    out = Q.random_checker(emb, cluster_metrics=base, n_runs=2)
+    out = random_checker(emb, cluster_metrics=base, n_runs=2)
 
     def refit(train):
         def predict(frame):

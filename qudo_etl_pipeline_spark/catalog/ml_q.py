@@ -11,7 +11,9 @@ contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.catalog import load_table, none_last_key, register
@@ -19,6 +21,495 @@ from qudo_etl_pipeline_spark.functions.rounding import ref_round_sql
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
 from qudo_etl_pipeline_spark.ml import quality as Q
+from qudo_etl_pipeline_spark.ml.quality import FEATURES, PREDICTION
+
+# --- Spark quality metrics and feature encoders ------------------------
+# The survey computes its cluster metrics on the driver from a pattern
+# table (ml.quality); these DataFrame versions serve the oracle queries
+# below and the tests as references.
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance between two array<double> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _feature_dim(df: DataFrame, features: str) -> int:
+    """Probe the feature-array length from one row (limit-1 scan)."""
+    row = df.select(F.size(F.col(features)).alias("d")).first()
+    if row is None or row["d"] is None or row["d"] <= 0:
+        raise ValueError("cluster_stats: empty input or empty feature array")
+    return int(row["d"])
+
+
+def cluster_stats(
+    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
+) -> DataFrame:
+    """One-pass per-cluster sufficient statistics.
+
+    Returns (cluster, n, centroid: array<double>, ssn: sum of squared
+    norms). Within-cluster squared dispersion follows as
+    ``ssn - n * ||centroid||^2`` — no second scan needed.
+
+    The dimension is probed once (limit-1 scan) so the aggregation is
+    plain per-dimension column arithmetic: ``avg(features[d])`` stays
+    inside whole-stage codegen, where the previous Summarizer-on-vector +
+    interpreted higher-order ``aggregate`` lambdas did not (~2x on a
+    600k-row pass).
+
+    Contract: feature arrays must be FIXED-LENGTH (every producer in
+    this engine — assemble_array, the catalog projections — emits them
+    so). A ragged row indexes out of bounds, which ANSI mode turns into
+    a loud error rather than a silently skewed centroid.
+    """
+    dim = _feature_dim(df, features)
+    f = F.col(features).cast("array<double>")
+    sq_norm = sum((f[d] * f[d] for d in range(1, dim)), f[0] * f[0])
+    return (
+        df.groupBy(F.col(pred).alias("cluster"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.avg(f[d]).alias(f"_c{d}") for d in range(dim)],
+            F.sum(sq_norm).alias("ssn"),
+        )
+        .select(
+            "cluster",
+            "n",
+            F.array(*[F.col(f"_c{d}") for d in range(dim)]).alias("centroid"),
+            "ssn",
+        )
+    )
+
+
+def calinski_harabasz(
+    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
+) -> float:
+    """CH = (B/(k-1)) / (W/(n-k)); 0 on degenerate input (metrics.py:85-90)."""
+    return _calinski_harabasz_from(_stats_or_none(df, features, pred))
+
+
+def _stats_or_none(df: DataFrame, features: str, pred: str) -> list | None:
+    try:
+        return cluster_stats(df, features, pred).collect()
+    except ValueError:  # empty input / empty feature arrays
+        return None
+
+
+def _calinski_harabasz_from(stats: list | None) -> float:
+    if stats is None:
+        return 0.0
+    k = len(stats)
+    n = sum(r["n"] for r in stats)
+    if k < 2 or n <= k:
+        return 0.0
+    dim = len(stats[0]["centroid"])
+    gmean = [
+        sum(r["n"] * r["centroid"][d] for r in stats) / n for d in range(dim)
+    ]
+    b = sum(
+        r["n"] * sum((r["centroid"][d] - gmean[d]) ** 2 for d in range(dim))
+        for r in stats
+    )
+    w = sum(
+        r["ssn"] - r["n"] * sum(c * c for c in r["centroid"]) for r in stats
+    )
+    if w <= 0:
+        return 0.0
+    return (b / (k - 1)) / (w / (n - k))
+
+
+def davies_bouldin(
+    df: DataFrame,
+    features: str = FEATURES,
+    pred: str = PREDICTION,
+    stats_rows: list | None = None,
+) -> float:
+    """DB = mean_i max_{j != i} (S_i+S_j)/d(c_i,c_j); 999 on degenerate
+    input (metrics.py:85-90). S_i = mean Euclidean distance to centroid.
+
+    ``stats_rows`` lets callers that already collected cluster_stats
+    skip pass 1.
+    """
+    # Exact DB needs two data passes (scatter = mean distance to centroid,
+    # which is not a moment): pass 1 collects the k centroids, pass 2
+    # re-scans with the centroids inlined as per-dimension map LITERALS —
+    # sqrt((f[d] - cent_d[cluster])^2 ...) is pure codegen arithmetic, no
+    # join, no broadcast job (k and dim are both small).
+    if stats_rows is None:
+        stats_rows = _stats_or_none(df, features, pred)
+    if stats_rows is None:
+        return 999.0
+    # A NULL cluster label is "unassigned": it is no cluster, so it
+    # contributes neither a centroid (a NULL key would crash
+    # create_map) nor scatter rows. NULL-free inputs are unaffected.
+    if any(r["cluster"] is None for r in stats_rows):
+        stats_rows = [r for r in stats_rows if r["cluster"] is not None]
+        df = df.filter(F.col(pred).isNotNull())
+    k = len(stats_rows)
+    if k < 2:
+        return 999.0
+    dim = len(stats_rows[0]["centroid"])
+    f = F.col(features).cast("array<double>")
+    cent_maps = [
+        F.create_map(
+            *[
+                lit
+                for r in stats_rows
+                for lit in (F.lit(r["cluster"]), F.lit(r["centroid"][d]))
+            ]
+        )
+        for d in range(dim)
+    ]
+    diffs = [f[d] - cent_maps[d][F.col(pred)] for d in range(dim)]
+    dist_sq = sum((dd * dd for dd in diffs[1:]), diffs[0] * diffs[0])
+    scatter_rows = (
+        df.groupBy(F.col(pred).alias("cluster"))
+        .agg(F.avg(F.sqrt(dist_sq)).alias("scatter"))
+        .collect()
+    )
+    s = {r["cluster"]: r["scatter"] for r in scatter_rows}
+    c = {r["cluster"]: r["centroid"] for r in stats_rows}
+    keys = sorted(s)
+    worst = []
+    for i in keys:
+        best = 0.0
+        for j in keys:
+            if i == j:
+                continue
+            d = math.sqrt(sum((a - b) ** 2 for a, b in zip(c[i], c[j])))
+            if d == 0:
+                return 999.0
+            best = max(best, (s[i] + s[j]) / d)
+        worst.append(best)
+    return sum(worst) / k
+
+
+def silhouette_pointwise(
+    df: DataFrame,
+    features: str = FEATURES,
+    pred: str = PREDICTION,
+    id_col: str = "row_id",
+) -> DataFrame:
+    """Per-point exact Euclidean silhouette s(i) (sklearn semantics).
+
+    O(n^2) self-join — parity/test path only; the survey's silhouette
+    is `ml.quality`'s squared-Euclidean one. Singleton clusters get
+    s(i) = 0 (sklearn convention).
+    """
+    a = df.select(
+        F.col(id_col).alias("ia"),
+        F.col(features).cast("array<double>").alias("fa"),
+        F.col(pred).alias("pa"),
+    )
+    b = df.select(
+        F.col(id_col).alias("ib"),
+        F.col(features).cast("array<double>").alias("fb"),
+        F.col(pred).alias("pb"),
+    )
+    pair_means = (
+        a.join(b, F.col("ia") != F.col("ib"))
+        .groupBy("ia", "pa", "pb")
+        .agg(F.avg(F.sqrt(_sq_dist(F.col("fa"), F.col("fb")))).alias("mdist"))
+    )
+    per_point = pair_means.groupBy("ia", "pa").agg(
+        F.max(F.when(F.col("pb") == F.col("pa"), F.col("mdist"))).alias("a_i"),
+        F.min(F.when(F.col("pb") != F.col("pa"), F.col("mdist"))).alias("b_i"),
+    )
+    return per_point.select(
+        F.col("ia").alias(id_col),
+        F.col("pa").alias(pred),
+        F.when(F.col("a_i").isNull() | F.col("b_i").isNull(), F.lit(0.0))
+        .otherwise(
+            (F.col("b_i") - F.col("a_i"))
+            / F.greatest(F.col("a_i"), F.col("b_i"))
+        )
+        .alias("silhouette"),
+    )
+
+
+def silhouette_exact(
+    df: DataFrame,
+    features: str = FEATURES,
+    pred: str = PREDICTION,
+    id_col: str = "row_id",
+) -> float:
+    """Mean exact silhouette; 0 on degenerate input (metrics.py:75-84)."""
+    kn = df.agg(
+        F.countDistinct(pred).alias("k"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    k, n = kn["k"], kn["n"]
+    if k < 2 or k >= n:
+        return 0.0
+    row = (
+        silhouette_pointwise(df, features, pred, id_col)
+        .agg(F.avg("silhouette").alias("s"))
+        .collect()[0]
+    )
+    return float(row["s"])
+
+
+def cochrans_q(df: DataFrame, cols: list[str]) -> tuple[float, int]:
+    """Cochran's Q over k binary columns (statsmodels formula;
+    metrics.py:613-617).
+
+    Q = (k-1) * (k * Sum_j T_j^2 - N^2) / (k*N - Sum_i R_i^2),
+    T_j column totals, R_i row totals, N grand total. df = k-1.
+    Single aggregation pass. Raises ZeroDivisionError on a degenerate
+    matrix (every row all-0/all-1) — callers skip, matching the
+    reference's try/continue (metrics.py:610-612,625-627).
+    """
+    k = len(cols)
+    rowsum = sum((F.col(c).cast("long") for c in cols), F.lit(0))
+    # coalesce: an empty/all-null slice yields NULL sums, which must
+    # reach the degenerate-denominator guard as zeros (a None would
+    # TypeError before it and bypass callers' skip logic)
+    aggs = [
+        F.coalesce(F.sum(F.col(c).cast("long")), F.lit(0)).alias(f"t_{i}")
+        for i, c in enumerate(cols)
+    ]
+    aggs += [
+        F.coalesce(F.sum(rowsum), F.lit(0)).alias("n_total"),
+        F.coalesce(F.sum(rowsum * rowsum), F.lit(0)).alias("sum_r2"),
+    ]
+    r = df.agg(*aggs).collect()[0]
+    n_total = r["n_total"]
+    sum_t2 = sum(r[f"t_{i}"] ** 2 for i in range(k))
+    denom = k * n_total - r["sum_r2"]
+    if denom == 0:
+        raise ZeroDivisionError("degenerate binary matrix for Cochran's Q")
+    q = (k - 1) * (k * sum_t2 - n_total * n_total) / denom
+    return float(q), k - 1
+
+
+def i2_score(q: float, dof: int) -> float:
+    """I^2 = (Q - df)/Q * 100, rounded 3 (metrics.py:614-617)."""
+    return round((q - dof) / q * 100, 3)
+
+
+def variability(
+    df: DataFrame,
+    q_code_cols: dict[str, list[str]],
+    pred: str = PREDICTION,
+) -> dict:
+    """Mean positive I^2 across question groups, overall and per cluster
+    (metrics.py:578-633). `q_code_cols` maps question code -> its binary
+    `_tgt` columns (name-registry driven, as the reference's regex)."""
+
+    def mean_i2(frame: DataFrame) -> float:
+        scores = []
+        for cols in q_code_cols.values():
+            try:
+                q, dof = cochrans_q(frame, cols)
+                # Q == 0 (equal column totals) divides by zero in I^2 —
+                # same skip as the degenerate matrix, mirroring the
+                # reference's try/continue around BOTH steps
+                # (metrics.py:610-627)
+                i2 = i2_score(q, dof)
+            except ZeroDivisionError:
+                continue
+            if i2 > 0:
+                scores.append(i2)
+        return round(sum(scores) / len(scores), 3) if scores else float("nan")
+
+    results: dict = {"all_clusters": mean_i2(df)}
+    clusters = sorted(
+        r[pred] for r in df.select(pred).distinct().collect()
+    )
+    for cl in clusters:
+        results[cl] = mean_i2(df.filter(F.col(pred) == cl))
+    return results
+
+
+def avg_rank(col: str, ascending: bool = True) -> Column:
+    """pandas ``Series.rank()`` average-tie semantics as a window expr:
+    rank(v) = |{x < v}| + (|{x == v}| + 1)/2."""
+    order = F.col(col).asc() if ascending else F.col(col).desc()
+    rnk = F.rank().over(Window.orderBy(order))
+    ties = F.count(F.lit(1)).over(Window.partitionBy(col))
+    return rnk + (ties - F.lit(1)) / F.lit(2.0)
+
+
+def rank_cluster_metrics(
+    metrics_df: DataFrame, information_criterions: bool = False
+) -> DataFrame:
+    """Rank-sum model selection (metrics.py:127-146): silhouette asc,
+    davies_bouldin desc, calinski asc; with ICs, bic/aic desc and the
+    bic rank weighted x1.3 AFTER ranking. Winner = max rank_sum."""
+    out = (
+        metrics_df.withColumn("silhouette_rank", avg_rank("silhouette"))
+        .withColumn("davies_bouldin_rank", avg_rank("davies_bouldin", False))
+        .withColumn("calinski_harabasz_rank", avg_rank("calinski_harabasz"))
+    )
+    rank_cols = ["silhouette_rank", "davies_bouldin_rank", "calinski_harabasz_rank"]
+    if information_criterions:
+        out = (
+            out.withColumn("bic_rank", avg_rank("bic", False) * F.lit(1.3))
+            .withColumn("aic_rank", avg_rank("aic", False))
+        )
+        rank_cols += ["bic_rank", "aic_rank"]
+    total = sum((F.col(c) for c in rank_cols), F.lit(0.0))
+    return out.withColumn("rank_sum", total)
+
+
+def target_encode_oof(
+    df: DataFrame,
+    id_col: str,
+    cat_col: str,
+    target_col: str,
+    n_folds: int = 5,
+    smoothing: int = 20,
+    seed: int = 0,
+) -> DataFrame:
+    """K-fold out-of-fold target (mean) encoding of a categorical
+    column — the leakage-safe form of the classic high-cardinality
+    encoder: each row's encoding uses ONLY target statistics from the
+    OTHER folds, so the feature never memorizes its own row's label,
+    plus additive smoothing toward the global mean for rare categories
+    (encoding = (sum_other_folds + smoothing * global_mean) /
+    (cnt_other_folds + smoothing)).
+
+    Fold assignment is ``hash64(seed || id) % n_folds`` — a pure row
+    function: deterministic across engines/reruns, no shuffle. The
+    statistics are ONE groupBy(category, fold) over exact integer/
+    DECIMAL sums; per-category totals derive from that cell frame
+    (never a second scan) and out-of-fold = total - own fold, exact.
+    The only IEEE steps are the final two divisions (global mean,
+    encoding), each one fixed expression — engine-identical.
+
+    Output: (id, category, fold, target, te6). NULL categories encode
+    to the smoothed global mean (their statistics pool is empty).
+    """
+    from qudo_etl_pipeline_spark.functions.hashing import hash64
+    from qudo_etl_pipeline_spark.functions.rounding import ref_round
+
+    t = F.col(target_col).cast("bigint")
+    fold = (
+        hash64(
+            F.concat(F.lit(f"fold:{seed}:"), F.col(id_col).cast("string"))
+        )
+        % n_folds
+    )
+    src = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(cat_col).alias("_c"),
+        t.alias("_t"),
+        fold.alias("_f"),
+    ).filter(F.col("_t").isNotNull())
+    from qudo_etl_pipeline_spark.operators.prefix import (
+        acquire_operator_cache,
+    )
+
+    # cached once ((category, fold)-bounded) so "per-category totals
+    # derive from that cell frame (never a second scan)" holds
+    # physically: the per-category, global and stats branches would
+    # otherwise each re-run the scan + groupBy (measured: 5 scans per
+    # execution; 2 remain — the cell build and the encode join-back)
+    cells = acquire_operator_cache(
+        src.groupBy("_c", "_f").agg(
+            F.count(F.lit(1)).alias("_n"), F.sum("_t").alias("_s")
+        )
+    )
+    per_cat = cells.groupBy("_c").agg(
+        F.sum("_n").alias("_cn"), F.sum("_s").alias("_cs")
+    )
+    glob = cells.agg(
+        F.sum("_n").alias("_gn"), F.sum("_s").alias("_gs")
+    )
+    stats = (
+        cells.join(per_cat, "_c")
+        .crossJoin(F.broadcast(glob))
+        .select(
+            "_c",
+            "_f",
+            (F.col("_cn") - F.col("_n")).alias("_on"),
+            (F.col("_cs") - F.col("_s")).alias("_os"),
+            "_gn",
+            "_gs",
+        )
+    )
+    gmean = F.col("_gs").cast("double") / F.col("_gn").cast("double")
+    te = (
+        F.col("_os").cast("double") + F.lit(float(smoothing)) * gmean
+    ) / (F.col("_on").cast("double") + F.lit(float(smoothing)))
+    enc = stats.select(
+        "_c", "_f", ref_round(te, 6).alias("te6")
+    )
+    out = src.join(enc, ["_c", "_f"], "left")
+    # categories absent from the stats pool (NULL category) take the
+    # smoothed-empty encoding = global mean
+    fallback = glob.select(
+        ref_round(gmean, 6).alias("_te_fallback")
+    )
+    return (
+        out.crossJoin(F.broadcast(fallback))
+        .select(
+            F.col("_id").alias(id_col),
+            F.col("_c").alias(cat_col),
+            F.col("_f").alias("fold"),
+            F.col("_t").alias(target_col),
+            F.coalesce(F.col("te6"), F.col("_te_fallback")).alias("te6"),
+        )
+    )
+
+
+def hashed_features(
+    df: DataFrame,
+    id_col: str,
+    cols: list[str],
+    n_features: int = 1024,
+) -> DataFrame:
+    """The hashing trick (Weinberger et al., ICML'09): map arbitrary
+    categorical columns onto a FIXED feature space with a signed hash,
+    index = hash64(col || value) % n_features and sign from the hash's
+    next bit — no vocabulary pass, no fit state, new categories at
+    serving time land deterministically. The standard featurizer when
+    label encoding's sorted-vocabulary contract can't hold (unbounded
+    or drifting domains).
+
+    Map-only (one projection + explode; no shuffle, no driver state).
+    Output long form — (id, col_name, feature_index, sign) one row per
+    non-NULL input cell — the shape both a sparse-vector assembler and
+    the DuckDB oracle consume directly.
+    """
+    from qudo_etl_pipeline_spark.functions.hashing import hash64
+
+    structs = []
+    for c in cols:
+        h = hash64(F.concat(F.lit(f"feat:{c}:"), F.col(c).cast("string")))
+        structs.append(
+            F.when(
+                F.col(c).isNotNull(),
+                F.struct(
+                    F.lit(c).alias("col_name"),
+                    (h % n_features).alias("feature_index"),
+                    # sign bit = (h // n) % 2, written as the pure-
+                    # modulo identity h mod 2n < n: exact BIGINT
+                    # arithmetic (h / n would be a DOUBLE division in
+                    # Spark — lossy past 2^53 and engine-divergent)
+                    F.when(h % (2 * n_features) < n_features, F.lit(1))
+                    .otherwise(F.lit(-1))
+                    .cast("bigint")
+                    .alias("sign"),
+                ),
+            )
+        )
+    return (
+        df.select(
+            F.col(id_col).alias(id_col),
+            F.explode(
+                F.filter(
+                    F.array(*structs), lambda s: s.isNotNull()
+                )
+            ).alias("_f"),
+        )
+        .select(id_col, "_f.col_name", "_f.feature_index", "_f.sign")
+    )
+
+
 
 # shared planted features: 3-d lineitem projection, cluster = l_returnflag
 _LI_FEATS = """
@@ -58,7 +549,7 @@ def _lineitem_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Per-cluster sufficient stats: n, centroid, mean within-SS",
 )
 def cluster_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stats = Q.cluster_stats(_lineitem_features(spark, sf_dir), pred="cl")
+    stats = cluster_stats(_lineitem_features(spark, sf_dir), pred="cl")
     return stats.select(
         F.col("cluster"),
         F.col("n"),
@@ -104,7 +595,7 @@ def cluster_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Calinski-Harabasz index over the planted lineitem clustering",
 )
 def calinski_harabasz_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ch = Q.calinski_harabasz(_lineitem_features(spark, sf_dir), pred="cl")
+    ch = calinski_harabasz(_lineitem_features(spark, sf_dir), pred="cl")
     return spark.createDataFrame(
         [(round(ch, 4),)], "calinski_harabasz: double"
     )
@@ -138,7 +629,7 @@ def calinski_harabasz_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Davies-Bouldin index over the planted lineitem clustering",
 )
 def davies_bouldin_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    db = Q.davies_bouldin(_lineitem_features(spark, sf_dir), pred="cl")
+    db = davies_bouldin(_lineitem_features(spark, sf_dir), pred="cl")
     return spark.createDataFrame([(round(db, 6),)], "davies_bouldin: double")
 
 
@@ -180,7 +671,7 @@ def silhouette_exact_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").cast("double"),
         ).alias("features"),
     )
-    pts = Q.silhouette_pointwise(df, pred="cl", id_col="row_id")
+    pts = silhouette_pointwise(df, pred="cl", id_col="row_id")
     return pts.select(
         "row_id", F.round("silhouette", 6).alias("silhouette")
     )
@@ -262,8 +753,8 @@ def cochrans_q_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         b(F.col("l_discount") > 0.05).alias("b2"),
         b(F.col("l_quantity") > 25).alias("b3"),
     )
-    q, dof = Q.cochrans_q(li, ["b0", "b1", "b2", "b3"])
-    i2 = Q.i2_score(q, dof)
+    q, dof = cochrans_q(li, ["b0", "b1", "b2", "b3"])
+    i2 = i2_score(q, dof)
     return spark.createDataFrame(
         [(round(q, 6), dof, i2)], "q: double, dof: bigint, i2: double"
     )
@@ -306,7 +797,7 @@ def rank_sum_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("davies_bouldin"),
         F.max("s_acctbal").cast("double").alias("calinski_harabasz"),
     )
-    return Q.rank_cluster_metrics(m).select(
+    return rank_cluster_metrics(m).select(
         "nation",
         "silhouette_rank",
         "davies_bouldin_rank",
@@ -392,7 +883,7 @@ def kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [[10.0, 20.0, 0.2], [25.0, 50.0, 0.5], [40.0, 80.0, 0.8]]
     dists = [
         F.sqrt(
-            Q._sq_dist(
+            _sq_dist(
                 F.col("features"),
                 F.array(*[F.lit(v) for v in c]),
             )
@@ -1096,7 +1587,7 @@ def target_encoding_oof_orders(
         "o_orderpriority",
         (F.col("o_totalprice") > 150000).cast("bigint").alias("converted"),
     )
-    return FE.target_encode_oof(
+    return target_encode_oof(
         orders,
         "o_orderkey",
         "o_orderpriority",
@@ -1137,7 +1628,7 @@ def hashed_features_orders(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    return FE.hashed_features(
+    return hashed_features(
         orders,
         "o_orderkey",
         ["o_orderstatus", "o_orderpriority"],

@@ -2,5 +2,6 @@
 
 Spark-first re-expression of the reference's clustering.py / metrics.py
 (sklearn/kmodes/R) compute core. MLlib estimators where one exists;
-DataFrame aggregations for every quality metric (no sklearn at runtime).
+quality metrics on the driver over a pattern table (no sklearn at
+runtime).
 """

@@ -7,7 +7,7 @@ Re-implements (reference: src/kraken/app/metrics.py):
   q_codes per segment + the average over all segments.
 - M30 social presence (:364-404): the `mc_` column carrying the
   platform and the per-cluster share answering exactly that platform,
-  both from one per-cluster aggregate over every `mc_` candidate.
+  both from the pattern table of every `mc_` candidate.
 - M31 magnitude (:636-687): cluster share (rounded 2) x share of
   significant `_tgt` variables (per segment), rounded 3, + total;
   NaN when the total is 0 or exceeds 1.
@@ -23,8 +23,11 @@ pop_mode...): a table sized by the survey's schema (significant
 variables x segments), so the metrics over it run in Python over its
 rows. They take the rows, a DataFrame, which they collect once, or a
 ``Future`` of either, which they wait for.
-`labeled` is the respondent table with a `prediction` column; metrics
-over it aggregate to segment-cardinality results before collecting.
+`labeled` is the respondent table with a `prediction` column. The
+metrics over it read one pattern table (``features.pattern_table``):
+the distinct (columns, prediction) combinations and their row counts,
+sized by the answer options rather than the respondents, so they are
+computed on the driver from its rows.
 """
 
 from __future__ import annotations
@@ -35,7 +38,8 @@ from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
+
+from qudo_etl_pipeline_spark.ml import features as FE
 
 Deliver = DataFrame | list[Row] | Future
 
@@ -94,6 +98,48 @@ def communicability(
     return {"data": data, "avg": avg}
 
 
+def _sizes(table: list[Row], pred: str) -> dict:
+    """Rows per label (NULL included) of a pattern table."""
+    n: dict = {}
+    for r in table:
+        n[r[pred]] = n.get(r[pred], 0) + r["_w"]
+    return n
+
+
+def _presence(
+    table: list[Row],
+    cands: list[str],
+    sm_platform: str,
+    pred: str,
+    code_maps: dict[str, dict[str, int]],
+) -> dict | float:
+    """:func:`social_presence` over a pattern table of ``pred`` and the
+    candidate columns. A candidate in ``code_maps`` holds label codes,
+    which are decoded back to the answers first."""
+    want = sm_platform.lower()
+    for c in cands:
+        vals = [(r[pred], r["_w"], r[c]) for r in table]
+        if c in code_maps:
+            answer = {i: v for v, i in code_maps[c].items()}
+            vals = [(seg, w, answer.get(v)) for seg, w, v in vals]
+        if not any(
+            v is not None and want in str(v).lower() for _, _, v in vals
+        ):
+            continue
+        n = _sizes(table, pred)
+        hits: dict = {}
+        for seg, w, v in vals:
+            # a segment whose answers are all NULL has no share
+            if v is not None:
+                hits[seg] = hits.get(seg, 0) + (w if v == sm_platform else 0)
+        # Python round, as the reference (metrics.py:402)
+        return {
+            seg: round(hits[seg] / n[seg], 3) if seg in hits else None
+            for seg in n
+        }
+    return float("nan")
+
+
 def social_presence(
     labeled: DataFrame,
     sm_platform: str,
@@ -105,55 +151,24 @@ def social_presence(
     the first `marker` column, in frame order, whose values mention the
     platform (metrics.py:374-390); NaN if there is none.
 
-    One ``groupBy(pred)`` aggregate gives every candidate's mention flag
-    and share; the column is chosen from its collected rows."""
-    from qudo_etl_pipeline_spark.functions.rounding import ref_round
-
+    One collect of the (prediction, candidates, count) pattern table;
+    the column is chosen from its rows."""
     cands = [c for c in labeled.columns if marker in c]
     if not cands:
         return float("nan")
-    aggs = []
-    for i, c in enumerate(cands):
-        aggs.append(
-            F.max(
-                F.lower(F.col(c).cast("string"))
-                .contains(sm_platform.lower())
-                .cast("int")
-            ).alias(f"_m{i}")
-        )
-        # ref_round: the reference rounds with Python round (metrics.py:402)
-        aggs.append(
-            ref_round(
-                F.sum((F.col(c) == sm_platform).cast("int")) / F.count(F.lit(1)),
-                3,
-            ).alias(f"_s{i}")
-        )
-    rows = labeled.groupBy(pred).agg(*aggs).collect()
-    for i in range(len(cands)):
-        if any(r[f"_m{i}"] == 1 for r in rows):
-            return {r[pred]: r[f"_s{i}"] for r in rows}
-    return float("nan")
+    table = FE.pattern_table(labeled, [pred, *cands])
+    return _presence(table, cands, sm_platform, pred, {})
 
 
-def magnitude(
-    deliver: Deliver,
-    labeled: DataFrame,
-    tgt_cols: list[str],
-    pred: str = "prediction",
-    seg_col: str = "targeting_seg",
+def _magnitude(
+    deliver: list[Row], sizes: dict, num_tgt: int, seg_col: str
 ) -> dict | float:
-    """M31 (metrics.py:636-687): magnitude = cluster share (round 2) x
-    (significant `_tgt` rows per segment / #tgt variables), round 3;
-    plus 'all_clusters' total; NaN if total is 0 or > 1."""
-    num_tgt = len(tgt_cols)
-    if num_tgt == 0:
-        return float("nan")
-    sizes = labeled.groupBy(pred).agg(F.count(F.lit(1)).alias("n")).collect()
-    total = sum(r["n"] for r in sizes)
-    pct = {r[pred]: round(r["n"] / total, 2) for r in sizes}
+    """:func:`magnitude` from the deliver rows and the rows per label."""
+    total = sum(sizes.values())
+    pct = {seg: round(n / total, 2) for seg, n in sizes.items()}
     sig_counts = Counter(
         r[seg_col]
-        for r in _rows(deliver)
+        for r in deliver
         if r["q_code"] is not None and "tgt" in r["q_code"].lower()
     )
     out = {}
@@ -165,6 +180,23 @@ def magnitude(
         return float("nan")
     out["all_clusters"] = s
     return out
+
+
+def magnitude(
+    deliver: Deliver,
+    labeled: DataFrame,
+    tgt_cols: list[str],
+    pred: str = "prediction",
+    seg_col: str = "targeting_seg",
+) -> dict | float:
+    """M31 (metrics.py:636-687): magnitude = cluster share (round 2) x
+    (significant `_tgt` rows per segment / #tgt variables), round 3;
+    plus 'all_clusters' total; NaN if total is 0 or > 1. The cluster
+    sizes are one collect of the (prediction, count) table."""
+    if not tgt_cols:
+        return float("nan")
+    sizes = _sizes(FE.pattern_table(labeled, [pred]), pred)
+    return _magnitude(_rows(deliver), sizes, len(tgt_cols), seg_col)
 
 
 def message_reach(social: dict, signal: dict) -> dict | float:
@@ -242,49 +274,42 @@ def get_all_metrics(
     tgt_cols: list[str] | None = None,
     n_seed=None,
     sm_platform: str = "Facebook",
-    social_df: DataFrame | None = None,
+    code_maps: dict[str, dict[str, int]] | None = None,
 ) -> dict:
     """M37 (metrics.py:814-911): compose quality + business metrics into
     one dict. The consistency checks need a train->scorer refit the
     survey has no handle on; their keys stay, NaN.
 
-    ``social_df``: frame with the ORIGINAL (unencoded) answers plus the
-    prediction column, for social presence — the reference passes
-    full_data separately from data_encoded (metrics.py:840) because
-    'facebook' matching cannot work on label codes. Defaults to
-    ``labeled`` for callers that kept string answers.
+    Quality, social presence and magnitude's cluster sizes all come from
+    ONE collect of the (features, `mc_` columns, prediction, count)
+    pattern table of ``labeled``, computed on the driver. The social
+    presence needs the original answers, which label codes never match
+    ('facebook', metrics.py:840 full_data): an `mc_` column in
+    ``code_maps`` holds codes and is decoded with them.
 
-    The Spark reads (quality, social presence, magnitude's cluster
-    sizes, the signal-loss forest) are independent, so they are
-    submitted together, each on its own thread under the caller's job
-    group; the deliver-derived metrics run on the driver once the
-    deliver rows arrive. ``deliver`` may be a ``Future`` still being
-    computed. Every read is joined before this returns or raises."""
+    The signal-loss forest is the one other Spark read; it runs on a
+    worker thread under the caller's job group while the table is
+    collected. The deliver-derived metrics run on the driver once the
+    deliver rows arrive: ``deliver`` may be a ``Future`` still being
+    computed. The forest is joined before this returns or raises."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
-    reads = {
-        "quality": (Q.cluster_quality, labeled, features_col, pred, n_seed),
-        "fb_presence": (
-            social_presence,
-            social_df if social_df is not None else labeled,
-            sm_platform,
-            pred,
-        ),
-    }
-    if deliver is not None and tgt_cols:
-        reads["magnitude"] = (magnitude, deliver, labeled, tgt_cols, pred)
-        reads["signal_loss"] = (S.signal_loss, labeled, tgt_cols, pred)
+    cands = [c for c in labeled.columns if "mc_" in c]
     inherit = inheritable_thread_target(labeled.sparkSession)
     with ThreadPoolExecutor(
-        max_workers=len(reads), thread_name_prefix="metrics"
+        max_workers=1, thread_name_prefix="metrics"
     ) as pool:
-        futs = {
-            key: pool.submit(inherit(fn), *args)
-            for key, (fn, *args) in reads.items()
-        }
-        metrics = futs.pop("quality").result()
-        metrics["fb_presence"] = futs.pop("fb_presence").result()
+        signal = None
+        if deliver is not None and tgt_cols:
+            signal = pool.submit(
+                inherit(S.signal_loss), labeled, tgt_cols, pred
+            )
+        table = FE.pattern_table(labeled, [features_col, *cands, pred])
+        metrics = Q.pattern_quality(table, features_col, pred, n_seed)
+        metrics["fb_presence"] = _presence(
+            table, cands, sm_platform, pred, code_maps or {}
+        )
         metrics["model_consistency"] = float("nan")
         metrics["label_consistency"] = float("nan")
         if deliver is not None:
@@ -294,8 +319,11 @@ def get_all_metrics(
             metrics["communicability_clusters"] = comm["data"]
             metrics["communicability_avg"] = comm["avg"]
             if tgt_cols:
-                metrics["magnitude"] = futs["magnitude"].result()
-                sig = futs["signal_loss"].result()
+                sizes = _sizes(table, pred)
+                metrics["magnitude"] = _magnitude(
+                    deliver, sizes, len(tgt_cols), "targeting_seg"
+                )
+                sig = signal.result()
                 metrics["signal_loss"] = sig
                 metrics["message_reach"] = message_reach(
                     metrics["fb_presence"], sig

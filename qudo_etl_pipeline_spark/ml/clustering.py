@@ -28,7 +28,8 @@ Scale notes (100 TB design):
 - Every fit is an MLlib job over the cached feature DataFrame; the
   multi-seed/multi-k fan-out launches CONCURRENT Spark jobs from a
   driver thread pool (scheduler interleaves stages; data stays put).
-- Quality metrics reuse quality.py's single-pass aggregations.
+- Quality metrics are one collect of the fit's (features, prediction,
+  count) table each, computed on the driver (quality.py).
 - The hierarchical wrapper loops driver-side over FEW groups (pivot
   cardinality), each an independent MLlib fit — no nested parallelism,
   no data re-pickling (the reference forks joblib children per task).
@@ -118,9 +119,10 @@ def _rank_best(
     information: bool = False,
     bonus: list[float] | None = None,
 ) -> int:
-    """Index (into `metrics`) of the max-rank_sum entry via quality.py's
-    pandas-parity ranking, plus an optional per-entry ``bonus`` (the
-    elbow k's). Ties resolve to the first (pandas idxmax)."""
+    """Index (into `metrics`) of the max-rank_sum entry by the
+    reference's pandas ranking (metrics.py:127-146), plus an optional
+    per-entry ``bonus`` (the elbow k's). Ties resolve to the first
+    (pandas idxmax)."""
     import pandas as pd
 
     cols = ["silhouette", "davies_bouldin", "calinski_harabasz"]

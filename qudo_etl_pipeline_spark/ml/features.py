@@ -33,7 +33,7 @@ from __future__ import annotations
 import logging
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,8 +106,9 @@ def pattern_table(
 ) -> list[Row]:
     """The (pattern, count ``_w``[, min ``min_col`` as ``_mid``]) table
     of ``cols + num_cols``: the sufficient statistic the categorical fit
-    families (kmodes, LCA) iterate over driver-side. At most
-    ``PATTERN_THRESHOLD`` rows reach the driver.
+    families (kmodes, LCA) iterate over driver-side, and that the
+    post-fit cluster metrics (ml.quality, ml.business) are computed
+    from. At most ``PATTERN_THRESHOLD`` rows reach the driver.
 
     Probe rule: a categorical-only input always probes (its pattern
     space is bounded by the answer-option product); numeric columns make
@@ -285,158 +286,3 @@ def pca_transform(
         .drop("_v", "_pca")
     )
     return out, n_components
-
-
-def target_encode_oof(
-    df: DataFrame,
-    id_col: str,
-    cat_col: str,
-    target_col: str,
-    n_folds: int = 5,
-    smoothing: int = 20,
-    seed: int = 0,
-) -> DataFrame:
-    """K-fold out-of-fold target (mean) encoding of a categorical
-    column — the leakage-safe form of the classic high-cardinality
-    encoder: each row's encoding uses ONLY target statistics from the
-    OTHER folds, so the feature never memorizes its own row's label,
-    plus additive smoothing toward the global mean for rare categories
-    (encoding = (sum_other_folds + smoothing * global_mean) /
-    (cnt_other_folds + smoothing)).
-
-    Fold assignment is ``hash64(seed || id) % n_folds`` — a pure row
-    function: deterministic across engines/reruns, no shuffle. The
-    statistics are ONE groupBy(category, fold) over exact integer/
-    DECIMAL sums; per-category totals derive from that cell frame
-    (never a second scan) and out-of-fold = total - own fold, exact.
-    The only IEEE steps are the final two divisions (global mean,
-    encoding), each one fixed expression — engine-identical.
-
-    Output: (id, category, fold, target, te6). NULL categories encode
-    to the smoothed global mean (their statistics pool is empty).
-    """
-    from qudo_etl_pipeline_spark.functions.hashing import hash64
-    from qudo_etl_pipeline_spark.functions.rounding import ref_round
-
-    t = F.col(target_col).cast("bigint")
-    fold = (
-        hash64(
-            F.concat(F.lit(f"fold:{seed}:"), F.col(id_col).cast("string"))
-        )
-        % n_folds
-    )
-    src = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(cat_col).alias("_c"),
-        t.alias("_t"),
-        fold.alias("_f"),
-    ).filter(F.col("_t").isNotNull())
-    from qudo_etl_pipeline_spark.operators.prefix import (
-        acquire_operator_cache,
-    )
-
-    # cached once ((category, fold)-bounded) so "per-category totals
-    # derive from that cell frame (never a second scan)" holds
-    # physically: the per-category, global and stats branches would
-    # otherwise each re-run the scan + groupBy (measured: 5 scans per
-    # execution; 2 remain — the cell build and the encode join-back)
-    cells = acquire_operator_cache(
-        src.groupBy("_c", "_f").agg(
-            F.count(F.lit(1)).alias("_n"), F.sum("_t").alias("_s")
-        )
-    )
-    per_cat = cells.groupBy("_c").agg(
-        F.sum("_n").alias("_cn"), F.sum("_s").alias("_cs")
-    )
-    glob = cells.agg(
-        F.sum("_n").alias("_gn"), F.sum("_s").alias("_gs")
-    )
-    stats = (
-        cells.join(per_cat, "_c")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            "_c",
-            "_f",
-            (F.col("_cn") - F.col("_n")).alias("_on"),
-            (F.col("_cs") - F.col("_s")).alias("_os"),
-            "_gn",
-            "_gs",
-        )
-    )
-    gmean = F.col("_gs").cast("double") / F.col("_gn").cast("double")
-    te = (
-        F.col("_os").cast("double") + F.lit(float(smoothing)) * gmean
-    ) / (F.col("_on").cast("double") + F.lit(float(smoothing)))
-    enc = stats.select(
-        "_c", "_f", ref_round(te, 6).alias("te6")
-    )
-    out = src.join(enc, ["_c", "_f"], "left")
-    # categories absent from the stats pool (NULL category) take the
-    # smoothed-empty encoding = global mean
-    fallback = glob.select(
-        ref_round(gmean, 6).alias("_te_fallback")
-    )
-    return (
-        out.crossJoin(F.broadcast(fallback))
-        .select(
-            F.col("_id").alias(id_col),
-            F.col("_c").alias(cat_col),
-            F.col("_f").alias("fold"),
-            F.col("_t").alias(target_col),
-            F.coalesce(F.col("te6"), F.col("_te_fallback")).alias("te6"),
-        )
-    )
-
-
-def hashed_features(
-    df: DataFrame,
-    id_col: str,
-    cols: list[str],
-    n_features: int = 1024,
-) -> DataFrame:
-    """The hashing trick (Weinberger et al., ICML'09): map arbitrary
-    categorical columns onto a FIXED feature space with a signed hash,
-    index = hash64(col || value) % n_features and sign from the hash's
-    next bit — no vocabulary pass, no fit state, new categories at
-    serving time land deterministically. The standard featurizer when
-    label encoding's sorted-vocabulary contract can't hold (unbounded
-    or drifting domains).
-
-    Map-only (one projection + explode; no shuffle, no driver state).
-    Output long form — (id, col_name, feature_index, sign) one row per
-    non-NULL input cell — the shape both a sparse-vector assembler and
-    the DuckDB oracle consume directly.
-    """
-    from qudo_etl_pipeline_spark.functions.hashing import hash64
-
-    structs = []
-    for c in cols:
-        h = hash64(F.concat(F.lit(f"feat:{c}:"), F.col(c).cast("string")))
-        structs.append(
-            F.when(
-                F.col(c).isNotNull(),
-                F.struct(
-                    F.lit(c).alias("col_name"),
-                    (h % n_features).alias("feature_index"),
-                    # sign bit = (h // n) % 2, written as the pure-
-                    # modulo identity h mod 2n < n: exact BIGINT
-                    # arithmetic (h / n would be a DOUBLE division in
-                    # Spark — lossy past 2^53 and engine-divergent)
-                    F.when(h % (2 * n_features) < n_features, F.lit(1))
-                    .otherwise(F.lit(-1))
-                    .cast("bigint")
-                    .alias("sign"),
-                ),
-            )
-        )
-    return (
-        df.select(
-            F.col(id_col).alias(id_col),
-            F.explode(
-                F.filter(
-                    F.array(*structs), lambda s: s.isNotNull()
-                )
-            ).alias("_f"),
-        )
-        .select(id_col, "_f.col_name", "_f.feature_index", "_f.sign")
-    )

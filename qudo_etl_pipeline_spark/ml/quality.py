@@ -1,52 +1,43 @@
-"""Cluster-quality metrics as DataFrame aggregations.
+"""Cluster-quality metrics.
 
 Re-implements the reference's metric layer (reference:
-src/kraken/app/metrics.py:24-174,578-633) without sklearn/statsmodels:
+src/kraken/app/metrics.py:24-124,268,301) without sklearn:
 
 - cluster proportions + balance predicate      (metrics.py:24-38; clustering.py:792-809)
-- Davies-Bouldin / Calinski-Harabasz           (metrics.py:85-90; sklearn formulae)
-- exact Euclidean silhouette                   (metrics.py:73-84)
+- silhouette / Davies-Bouldin / Calinski-Harabasz (metrics.py:73-90)
 - adjusted Rand index (closed form)            (metrics.py:268,301)
-- Cochran's Q -> I^2 variability               (metrics.py:578-633)
-- rank-sum model selection (pandas .rank()
-  average-tie semantics, BIC x1.3 weight)      (metrics.py:127-146)
-- random-baseline ratios                       (metrics.py:149-174)
 
 Error-value semantics are replicated exactly because they feed the
 rank-sum selection: silhouette -> 0, Davies-Bouldin -> 999,
 Calinski-Harabasz -> 0 on degenerate inputs (metrics.py:75-90).
 
 Scale notes (100 TB design):
-- Centroids/within-dispersion come from ONE map-side-combined pass
-  (`Summarizer` on a vector column — JVM-side, no explode of rows x dims).
-- Davies-Bouldin needs mean *Euclidean* (not squared) distance to the
-  centroid, so one more pass joins the k-row broadcast centroid table.
-- Pairwise centroid arithmetic is driver-side numpy on k rows (k <= 10).
-- The exact silhouette is O(n^2) BY DEFINITION (sklearn's too) — it
-  exists for parity tests / small slices; the scale path is
-  `silhouette_squared` (MLlib ClusteringEvaluator, O(n)).
-- ARI / Cochran's Q are single aggregations (closed forms over group
-  counts), independent of row count after the shuffle.
+- Every quality metric is a function of the (features, prediction,
+  count) table, whose size is the number of distinct feature vectors,
+  not the row count. :func:`cluster_quality` collects that table once
+  through ``features.pattern_table`` and :func:`pattern_quality`
+  computes all the metrics from its rows in numpy: per-cluster count,
+  feature sum and squared-norm sum give the centroids, CH and the
+  silhouette; DB's scatter is one more pass over the same rows.
+- The silhouette is MLlib ClusteringEvaluator's squared-Euclidean one
+  (O(patterns x k)), not sklearn's O(n^2) Euclidean one: a documented
+  delta; the rank-sum comparator only needs a consistent ordering.
+- Above ``features.PATTERN_THRESHOLD`` patterns the table is a priority
+  sample whose weights are Horvitz-Thompson weights, and the metrics
+  are estimates over it.
+- ARI is one aggregation (closed form over the label-pair counts).
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
+
+from qudo_etl_pipeline_spark.ml.features import pattern_table
 
 FEATURES = "features"  # array<double>
 PREDICTION = "prediction"
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared Euclidean distance between two array<double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def cluster_sizes(df: DataFrame, pred: str = PREDICTION) -> DataFrame:
@@ -69,249 +60,6 @@ def balance_ok(
     (clustering.py:117-118,792-809)."""
     shares = [r["share"] for r in cluster_sizes(df, pred).collect()]
     return all(lo < s < hi for s in shares)
-
-
-def _feature_dim(df: DataFrame, features: str) -> int:
-    """Probe the feature-array length from one row (limit-1 scan)."""
-    row = df.select(F.size(F.col(features)).alias("d")).first()
-    if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError("cluster_stats: empty input or empty feature array")
-    return int(row["d"])
-
-
-def cluster_stats(
-    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
-) -> DataFrame:
-    """One-pass per-cluster sufficient statistics.
-
-    Returns (cluster, n, centroid: array<double>, ssn: sum of squared
-    norms). Within-cluster squared dispersion follows as
-    ``ssn - n * ||centroid||^2`` — no second scan needed.
-
-    The dimension is probed once (limit-1 scan) so the aggregation is
-    plain per-dimension column arithmetic: ``avg(features[d])`` stays
-    inside whole-stage codegen, where the previous Summarizer-on-vector +
-    interpreted higher-order ``aggregate`` lambdas did not (~2x on a
-    600k-row pass).
-
-    Contract: feature arrays must be FIXED-LENGTH (every producer in
-    this engine — assemble_array, the catalog projections — emits them
-    so). A ragged row indexes out of bounds, which ANSI mode turns into
-    a loud error rather than a silently skewed centroid.
-    """
-    dim = _feature_dim(df, features)
-    f = F.col(features).cast("array<double>")
-    sq_norm = sum((f[d] * f[d] for d in range(1, dim)), f[0] * f[0])
-    return (
-        df.groupBy(F.col(pred).alias("cluster"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.avg(f[d]).alias(f"_c{d}") for d in range(dim)],
-            F.sum(sq_norm).alias("ssn"),
-        )
-        .select(
-            "cluster",
-            "n",
-            F.array(*[F.col(f"_c{d}") for d in range(dim)]).alias("centroid"),
-            "ssn",
-        )
-    )
-
-
-def calinski_harabasz(
-    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
-) -> float:
-    """CH = (B/(k-1)) / (W/(n-k)); 0 on degenerate input (metrics.py:85-90)."""
-    return _calinski_harabasz_from(_stats_or_none(df, features, pred))
-
-
-def _stats_or_none(df: DataFrame, features: str, pred: str) -> list | None:
-    try:
-        return cluster_stats(df, features, pred).collect()
-    except ValueError:  # empty input / empty feature arrays
-        return None
-
-
-def _calinski_harabasz_from(stats: list | None) -> float:
-    if stats is None:
-        return 0.0
-    k = len(stats)
-    n = sum(r["n"] for r in stats)
-    if k < 2 or n <= k:
-        return 0.0
-    dim = len(stats[0]["centroid"])
-    gmean = [
-        sum(r["n"] * r["centroid"][d] for r in stats) / n for d in range(dim)
-    ]
-    b = sum(
-        r["n"] * sum((r["centroid"][d] - gmean[d]) ** 2 for d in range(dim))
-        for r in stats
-    )
-    w = sum(
-        r["ssn"] - r["n"] * sum(c * c for c in r["centroid"]) for r in stats
-    )
-    if w <= 0:
-        return 0.0
-    return (b / (k - 1)) / (w / (n - k))
-
-
-def davies_bouldin(
-    df: DataFrame,
-    features: str = FEATURES,
-    pred: str = PREDICTION,
-    stats_rows: list | None = None,
-) -> float:
-    """DB = mean_i max_{j != i} (S_i+S_j)/d(c_i,c_j); 999 on degenerate
-    input (metrics.py:85-90). S_i = mean Euclidean distance to centroid.
-
-    ``stats_rows`` lets callers that already collected cluster_stats
-    (cluster_quality shares one pass across all metrics) skip pass 1.
-    """
-    # Exact DB needs two data passes (scatter = mean distance to centroid,
-    # which is not a moment): pass 1 collects the k centroids, pass 2
-    # re-scans with the centroids inlined as per-dimension map LITERALS —
-    # sqrt((f[d] - cent_d[cluster])^2 ...) is pure codegen arithmetic, no
-    # join, no broadcast job (k and dim are both small).
-    if stats_rows is None:
-        stats_rows = _stats_or_none(df, features, pred)
-    if stats_rows is None:
-        return 999.0
-    # A NULL cluster label is "unassigned": it is no cluster, so it
-    # contributes neither a centroid (a NULL key would crash
-    # create_map) nor scatter rows. NULL-free inputs are unaffected.
-    if any(r["cluster"] is None for r in stats_rows):
-        stats_rows = [r for r in stats_rows if r["cluster"] is not None]
-        df = df.filter(F.col(pred).isNotNull())
-    k = len(stats_rows)
-    if k < 2:
-        return 999.0
-    dim = len(stats_rows[0]["centroid"])
-    f = F.col(features).cast("array<double>")
-    cent_maps = [
-        F.create_map(
-            *[
-                lit
-                for r in stats_rows
-                for lit in (F.lit(r["cluster"]), F.lit(r["centroid"][d]))
-            ]
-        )
-        for d in range(dim)
-    ]
-    diffs = [f[d] - cent_maps[d][F.col(pred)] for d in range(dim)]
-    dist_sq = sum((dd * dd for dd in diffs[1:]), diffs[0] * diffs[0])
-    scatter_rows = (
-        df.groupBy(F.col(pred).alias("cluster"))
-        .agg(F.avg(F.sqrt(dist_sq)).alias("scatter"))
-        .collect()
-    )
-    s = {r["cluster"]: r["scatter"] for r in scatter_rows}
-    c = {r["cluster"]: r["centroid"] for r in stats_rows}
-    keys = sorted(s)
-    worst = []
-    for i in keys:
-        best = 0.0
-        for j in keys:
-            if i == j:
-                continue
-            d = math.sqrt(sum((a - b) ** 2 for a, b in zip(c[i], c[j])))
-            if d == 0:
-                return 999.0
-            best = max(best, (s[i] + s[j]) / d)
-        worst.append(best)
-    return sum(worst) / k
-
-
-def silhouette_pointwise(
-    df: DataFrame,
-    features: str = FEATURES,
-    pred: str = PREDICTION,
-    id_col: str = "row_id",
-) -> DataFrame:
-    """Per-point exact Euclidean silhouette s(i) (sklearn semantics).
-
-    O(n^2) self-join — parity/test path only; use `silhouette_squared`
-    at scale. Singleton clusters get s(i) = 0 (sklearn convention).
-    """
-    a = df.select(
-        F.col(id_col).alias("ia"),
-        F.col(features).cast("array<double>").alias("fa"),
-        F.col(pred).alias("pa"),
-    )
-    b = df.select(
-        F.col(id_col).alias("ib"),
-        F.col(features).cast("array<double>").alias("fb"),
-        F.col(pred).alias("pb"),
-    )
-    pair_means = (
-        a.join(b, F.col("ia") != F.col("ib"))
-        .groupBy("ia", "pa", "pb")
-        .agg(F.avg(F.sqrt(_sq_dist(F.col("fa"), F.col("fb")))).alias("mdist"))
-    )
-    per_point = pair_means.groupBy("ia", "pa").agg(
-        F.max(F.when(F.col("pb") == F.col("pa"), F.col("mdist"))).alias("a_i"),
-        F.min(F.when(F.col("pb") != F.col("pa"), F.col("mdist"))).alias("b_i"),
-    )
-    return per_point.select(
-        F.col("ia").alias(id_col),
-        F.col("pa").alias(pred),
-        F.when(F.col("a_i").isNull() | F.col("b_i").isNull(), F.lit(0.0))
-        .otherwise(
-            (F.col("b_i") - F.col("a_i"))
-            / F.greatest(F.col("a_i"), F.col("b_i"))
-        )
-        .alias("silhouette"),
-    )
-
-
-def silhouette_exact(
-    df: DataFrame,
-    features: str = FEATURES,
-    pred: str = PREDICTION,
-    id_col: str = "row_id",
-) -> float:
-    """Mean exact silhouette; 0 on degenerate input (metrics.py:75-84)."""
-    kn = df.agg(
-        F.countDistinct(pred).alias("k"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    k, n = kn["k"], kn["n"]
-    if k < 2 or k >= n:
-        return 0.0
-    row = (
-        silhouette_pointwise(df, features, pred, id_col)
-        .agg(F.avg("silhouette").alias("s"))
-        .collect()[0]
-    )
-    return float(row["s"])
-
-
-def silhouette_squared(
-    df: DataFrame, features: str = FEATURES, pred: str = PREDICTION
-) -> float:
-    """O(n) squared-Euclidean silhouette via MLlib ClusteringEvaluator.
-
-    The scale path: mathematically the squared-distance variant, so NOT
-    bit-identical to sklearn's Euclidean silhouette — documented delta;
-    the rank-sum comparator only needs a consistent ordering.
-    Fallback 0 on failure (metrics.py:75-84).
-    """
-    from pyspark.ml.evaluation import ClusteringEvaluator
-    from pyspark.ml.functions import array_to_vector
-
-    try:
-        vdf = df.select(
-            F.col(pred).cast("double").alias(PREDICTION),
-            array_to_vector(F.col(features).cast("array<double>")).alias(
-                FEATURES
-            ),
-        )
-        ev = ClusteringEvaluator(
-            featuresCol=FEATURES,
-            predictionCol=PREDICTION,
-            metricName="silhouette",
-        )
-        return float(ev.evaluate(vdf))
-    except Exception:
-        return 0.0
 
 
 def pair_confusion_sums(df: DataFrame, col_a: str, col_b: str) -> dict:
@@ -365,107 +113,104 @@ def adjusted_rand_index(df: DataFrame, col_a: str, col_b: str) -> float:
     return (s["sum_nij2"] - expected) / (maximum - expected)
 
 
-def cochrans_q(df: DataFrame, cols: list[str]) -> tuple[float, int]:
-    """Cochran's Q over k binary columns (statsmodels formula;
-    metrics.py:613-617).
-
-    Q = (k-1) * (k * Sum_j T_j^2 - N^2) / (k*N - Sum_i R_i^2),
-    T_j column totals, R_i row totals, N grand total. df = k-1.
-    Single aggregation pass. Raises ZeroDivisionError on a degenerate
-    matrix (every row all-0/all-1) — callers skip, matching the
-    reference's try/continue (metrics.py:610-612,625-627).
-    """
-    k = len(cols)
-    rowsum = sum((F.col(c).cast("long") for c in cols), F.lit(0))
-    # coalesce: an empty/all-null slice yields NULL sums, which must
-    # reach the degenerate-denominator guard as zeros (a None would
-    # TypeError before it and bypass callers' skip logic)
-    aggs = [
-        F.coalesce(F.sum(F.col(c).cast("long")), F.lit(0)).alias(f"t_{i}")
-        for i, c in enumerate(cols)
-    ]
-    aggs += [
-        F.coalesce(F.sum(rowsum), F.lit(0)).alias("n_total"),
-        F.coalesce(F.sum(rowsum * rowsum), F.lit(0)).alias("sum_r2"),
-    ]
-    r = df.agg(*aggs).collect()[0]
-    n_total = r["n_total"]
-    sum_t2 = sum(r[f"t_{i}"] ** 2 for i in range(k))
-    denom = k * n_total - r["sum_r2"]
-    if denom == 0:
-        raise ZeroDivisionError("degenerate binary matrix for Cochran's Q")
-    q = (k - 1) * (k * sum_t2 - n_total * n_total) / denom
-    return float(q), k - 1
+def _silhouette(X, w, idx, sqn, n, S, Q) -> float:
+    """MLlib's squared-Euclidean silhouette, weighted by ``w``: a point x
+    has the mean squared distance d(x, C) = |x|^2 + Q_C/n_C - 2 x.S_C/n_C
+    to cluster C. Its own cluster's is rescaled by n_A/(n_A - 1) to
+    leave x out, and a point alone in its cluster scores 0."""
+    D = sqn[:, None] + Q / n - 2 * (X @ S.T) / n
+    pts = np.arange(len(idx))
+    own_n = n[idx]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        a = D[pts, idx] * own_n / (own_n - 1)
+        D[pts, idx] = np.inf
+        b = D.min(axis=1)
+        s = np.where(a < b, 1 - a / b, np.where(a > b, b / a - 1, 0.0))
+    s[own_n == 1] = 0.0
+    return float(w @ s / w.sum())
 
 
-def i2_score(q: float, dof: int) -> float:
-    """I^2 = (Q - df)/Q * 100, rounded 3 (metrics.py:614-617)."""
-    return round((q - dof) / q * 100, 3)
+def _davies_bouldin(X, w, idx, n, C) -> float:
+    """mean_i max_{j != i} (s_i + s_j) / |c_i - c_j|, with s_i the mean
+    Euclidean distance of cluster i's rows to its centroid; 999 when two
+    centroids coincide."""
+    k = len(n)
+    dist = np.sqrt(((X - C[idx]) ** 2).sum(axis=1))
+    s = np.bincount(idx, weights=w * dist, minlength=k) / n
+    gap = np.sqrt(((C[:, None, :] - C[None, :, :]) ** 2).sum(axis=2))
+    off = ~np.eye(k, dtype=bool)
+    if (gap[off] == 0).any():
+        return 999.0
+    pair = (s[:, None] + s[None, :]) / np.where(off, gap, 1.0)
+    return float(np.where(off, pair, 0.0).max(axis=1).mean())
 
 
-def variability(
-    df: DataFrame,
-    q_code_cols: dict[str, list[str]],
+def _calinski_harabasz(n, C, Q) -> float:
+    """(B/(k-1)) / (W/(n-k)) from the per-cluster counts, centroids and
+    squared-norm sums; 0 when n <= k or W <= 0."""
+    k, total = len(n), n.sum()
+    if total <= k:
+        return 0.0
+    gmean = (n[:, None] * C).sum(axis=0) / total
+    b = (n * ((C - gmean) ** 2).sum(axis=1)).sum()
+    w = (Q - n * (C * C).sum(axis=1)).sum()
+    if w <= 0:
+        return 0.0
+    return float((b / (k - 1)) / (w / (total - k)))
+
+
+def pattern_quality(
+    rows: list[Row],
+    features: str = FEATURES,
     pred: str = PREDICTION,
+    n_seed=None,
 ) -> dict:
-    """Mean positive I^2 across question groups, overall and per cluster
-    (metrics.py:578-633). `q_code_cols` maps question code -> its binary
-    `_tgt` columns (name-registry driven, as the reference's regex)."""
+    """get_cluster_metrics (metrics.py:42-124) over a pattern table: each
+    row holds a feature vector, its label and the number of rows ``_w``
+    it stands for (``features.pattern_table``). Returns silhouette,
+    davies_bouldin, calinski_harabasz and the proportions, with the
+    reference's fallbacks: 0 / 999 / 0 below two clusters.
 
-    def mean_i2(frame: DataFrame) -> float:
-        scores = []
-        for cols in q_code_cols.values():
-            try:
-                q, dof = cochrans_q(frame, cols)
-                # Q == 0 (equal column totals) divides by zero in I^2 —
-                # same skip as the degenerate matrix, mirroring the
-                # reference's try/continue around BOTH steps
-                # (metrics.py:610-627)
-                i2 = i2_score(q, dof)
-            except ZeroDivisionError:
-                continue
-            if i2 > 0:
-                scores.append(i2)
-        return round(sum(scores) / len(scores), 3) if scores else float("nan")
-
-    results: dict = {"all_clusters": mean_i2(df)}
-    clusters = sorted(
-        r[pred] for r in df.select(pred).distinct().collect()
-    )
-    for cl in clusters:
-        results[cl] = mean_i2(df.filter(F.col(pred) == cl))
-    return results
-
-
-def avg_rank(col: str, ascending: bool = True) -> Column:
-    """pandas ``Series.rank()`` average-tie semantics as a window expr:
-    rank(v) = |{x < v}| + (|{x == v}| + 1)/2."""
-    order = F.col(col).asc() if ascending else F.col(col).desc()
-    rnk = F.rank().over(Window.orderBy(order))
-    ties = F.count(F.lit(1)).over(Window.partitionBy(col))
-    return rnk + (ties - F.lit(1)) / F.lit(2.0)
-
-
-def rank_cluster_metrics(
-    metrics_df: DataFrame, information_criterions: bool = False
-) -> DataFrame:
-    """Rank-sum model selection (metrics.py:127-146): silhouette asc,
-    davies_bouldin desc, calinski asc; with ICs, bic/aic desc and the
-    bic rank weighted x1.3 AFTER ranking. Winner = max rank_sum."""
-    out = (
-        metrics_df.withColumn("silhouette_rank", avg_rank("silhouette"))
-        .withColumn("davies_bouldin_rank", avg_rank("davies_bouldin", False))
-        .withColumn("calinski_harabasz_rank", avg_rank("calinski_harabasz"))
-    )
-    rank_cols = ["silhouette_rank", "davies_bouldin_rank", "calinski_harabasz_rank"]
-    if information_criterions:
-        out = (
-            out.withColumn("bic_rank", avg_rank("bic", False) * F.lit(1.3))
-            .withColumn("aic_rank", avg_rank("aic", False))
-        )
-        rank_cols += ["bic_rank", "aic_rank"]
-    total = sum((F.col(c) for c in rank_cols), F.lit(0.0))
-    return out.withColumn("rank_sum", total)
+    A NULL label is "unassigned": its rows belong to no cluster and
+    count in no metric."""
+    rows = [r for r in rows if r[pred] is not None]
+    ids = sorted({r[pred] for r in rows})
+    k = len(ids)
+    out = {
+        "n_seed": n_seed if n_seed is not None else "No seed selected",
+        "n_clusters": k,
+        "silhouette": 0.0,
+        "davies_bouldin": 999.0,
+        "calinski_harabasz": 0.0,
+        "cluster_proportions": {},
+    }
+    if not rows:
+        return out
+    pos = {c: j for j, c in enumerate(ids)}
+    idx = np.array([pos[r[pred]] for r in rows])
+    X = np.array([r[features] for r in rows], dtype=np.float64)
+    w = np.array([r["_w"] for r in rows], dtype=np.float64)
+    # a fixed row order (label, then features) makes every sum below
+    # independent of the order the table was collected in
+    order = np.lexsort([*X.T[::-1], idx])
+    idx, X, w = idx[order], X[order], w[order]
+    # per cluster: row count n, feature sum S, squared-norm sum Q
+    n = np.bincount(idx, weights=w, minlength=k)
+    S = np.zeros((k, X.shape[1]))
+    np.add.at(S, idx, w[:, None] * X)
+    sqn = (X * X).sum(axis=1)
+    Q = np.bincount(idx, weights=w * sqn, minlength=k)
+    total = n.sum()
+    out["cluster_proportions"] = {
+        c: float(n[j] / total) for j, c in enumerate(ids)
+    }
+    if k < 2:
+        return out
+    C = S / n[:, None]
+    out["silhouette"] = _silhouette(X, w, idx, sqn, n, S, Q)
+    out["davies_bouldin"] = _davies_bouldin(X, w, idx, n, C)
+    out["calinski_harabasz"] = _calinski_harabasz(n, C, Q)
+    return out
 
 
 def cluster_quality(
@@ -475,111 +220,16 @@ def cluster_quality(
     n_seed=None,
 ) -> dict:
     """get_cluster_metrics equivalent (metrics.py:42-124): silhouette /
-    davies_bouldin / calinski_harabasz / proportions with the reference's
+    davies_bouldin / calinski_harabasz / proportions of ``df``'s
+    ``features`` array under its ``pred`` labels, with the reference's
     exact fallback values.
 
-    The labeled frame is cached and ONE cluster_stats pass feeds
-    sizes + proportions + CH and DB's centroid side — without the
-    sharing, each metric re-executed the upstream model.transform +
-    scan plus its own stats pass (the dominant cost when callers like
-    optimal_k / kmeans_multi_seed evaluate many fits). Four reads: the
-    feature-dimension probe (a limit-1 scan), the stats aggregate,
-    MLlib's ClusteringEvaluator for the silhouette, and DB's scatter
-    aggregate. They are more Spark jobs than reads: AQE runs each
-    aggregate's shuffle stage as a job of its own, and the evaluator
-    runs several, so a traced survey counts 11 jobs for one call."""
-    # a NULL prediction is "unassigned" — it is a member of no cluster,
-    # so it contributes to no quality metric (same contract as
-    # davies_bouldin's NULL-centroid exclusion; None cluster keys would
-    # crash the sorted() below). NULL-free inputs are untouched.
-    df = df.filter(F.col(pred).isNotNull()).cache()
-    try:
-        stats = _stats_or_none(df, features, pred)
-        sizes = (
-            [] if stats is None else sorted(stats, key=lambda r: r["cluster"])
-        )
-        n_total = sum(r["n"] for r in sizes)
-        k = len(sizes)
-        sil = silhouette_squared(df, features, pred)
-        try:
-            db = davies_bouldin(df, features, pred, stats_rows=stats)
-            ch = _calinski_harabasz_from(stats)
-        except Exception:
-            db, ch = 999.0, 0.0
-        return {
-            "n_seed": n_seed if n_seed is not None else "No seed selected",
-            "n_clusters": k,
-            "silhouette": sil,
-            "davies_bouldin": db,
-            "calinski_harabasz": ch,
-            "cluster_proportions": {
-                r["cluster"]: r["n"] / n_total for r in sizes
-            },
-        }
-    finally:
-        df.unpersist()
-
-
-def random_checker(
-    df: DataFrame,
-    features: str = FEATURES,
-    pred: str = PREDICTION,
-    cluster_metrics: dict | None = None,
-    n_runs: int = 10,
-    seed: int = 42,
-) -> dict:
-    """Random-baseline ratios (metrics.py:149-174): mean metric over
-    `n_runs` random labelings; note the reference's randint(0, k) is
-    INCLUSIVE — k+1 possible random labels — replicated here."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    cluster_metrics = dict(cluster_metrics or {})
-    k = df.select(pred).distinct().count()
-
-    # Per-metric fallbacks: each failed run contributes its reference
-    # fallback value (DB -> 999, CH -> 0.0, metrics.py:85-90), guarded
-    # independently so one metric's failure can't double-count the other.
-    # Runs are independent jobs — a thread pool lets the scheduler
-    # interleave their stages; summation stays in run order (pool.map
-    # preserves order) so the result is bit-identical to the serial loop.
-    def one_run(i: int) -> tuple[float, float, float]:
-        rnd = df.withColumn(
-            "_rand_label",
-            F.floor(F.rand(seed + i) * (k + 1)).cast("int"),
-        )
-        sil = silhouette_squared(rnd, features, "_rand_label")
-        try:
-            db = davies_bouldin(rnd, features, "_rand_label")
-        except Exception:
-            db = 999.0
-        try:
-            ch = calinski_harabasz(rnd, features, "_rand_label")
-        except Exception:
-            ch = 0.0
-        return sil, db, ch
-
-    with ThreadPoolExecutor(max_workers=min(8, n_runs)) as pool:
-        runs = list(pool.map(one_run, range(n_runs)))
-    accum = {"silhouette": 0.0, "davies_bouldin": 0.0, "calinski_harabasz": 0.0}
-    for sil, db, ch in runs:
-        accum["silhouette"] += sil
-        accum["davies_bouldin"] += db
-        accum["calinski_harabasz"] += ch
-    mean = {m: v / n_runs for m, v in accum.items()}
-    cluster_metrics["calinski_harabasz_random_ratio"] = (
-        cluster_metrics.get("calinski_harabasz", 0.0)
-        / mean["calinski_harabasz"]
-        if mean["calinski_harabasz"]
-        else float("nan")
-    )
-    cluster_metrics["davies_bouldin_random_ratio"] = (
-        mean["davies_bouldin"] / cluster_metrics.get("davies_bouldin", 999.0)
-        if cluster_metrics.get("davies_bouldin")
-        else float("nan")
-    )
-    cluster_metrics["silhouette_random_ratio"] = (
-        abs(cluster_metrics.get("silhouette", 0.0) / mean["silhouette"])
-        if mean["silhouette"]
-        else float("nan")
-    )
-    return cluster_metrics
+    One collect of the (features, pred, count) table feeds
+    :func:`pattern_quality`. The feature array is a pattern key, so the
+    table is probed directly: a continuous feature makes about one
+    pattern per row, and ``pattern_table`` keeps at most
+    ``PATTERN_THRESHOLD`` of them (a priority sample above it). Its
+    count-first rule for numeric columns would add two Spark jobs, since
+    AQE runs the count's shuffle as a job of its own."""
+    table = pattern_table(df, [features, pred])
+    return pattern_quality(table, features, pred, n_seed)

@@ -16,8 +16,10 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
 5. chi-squared inference -> deliver, discover and the mode list, all
    from one collect of the family's cell table (§3.3 single-shuffle
    plan), and get_all_metrics                 (main.py:158; metrics.py:814-911)
-   — a family's inference chain and its metric reads are submitted
-   together, over one cached feature join per family
+   — quality, social presence and magnitude from one collect of the
+   family's pattern table, computed on the driver; the inference chain
+   and the signal-loss forest run beside that collect, over one cached
+   feature join per family
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
 
@@ -251,7 +253,9 @@ def run_scheme(
     code_maps, numeric = FE.build_code_maps(cleaned, enc_cols)
     encoded = FE.label_encode(cleaned, enc_cols, code_maps=code_maps).cache()
     try:
-        return _run_families(spark, cleaned, encoded, scheme_cols, numeric, cfg)
+        return _run_families(
+            spark, cleaned, encoded, scheme_cols, code_maps, numeric, cfg
+        )
     finally:
         encoded.unpersist()
 
@@ -261,11 +265,12 @@ def _run_families(
     cleaned: DataFrame,
     encoded: DataFrame,
     scheme_cols: list[str],
+    code_maps: dict[str, dict[str, int]],
     numeric: list[str],
     cfg: SegmentationConfig,
 ) -> dict:
     """:func:`run_scheme`'s fit and finalize phases over the scheme's
-    cached encoded table."""
+    cached encoded table, whose ``code_maps`` columns hold codes."""
     num_cols = [c for c in numeric if c in scheme_cols]
     algos = _algorithms(cfg)
     sc = spark.sparkContext
@@ -360,8 +365,8 @@ def _run_families(
             )
             return deliver_stats(tables, alpha=1 - cfg.conf_interval)
 
-        # quality, magnitude and the signal-loss forest all read this
-        # join: cached once, so none of them recomputes it
+        # the metrics' pattern table and the signal-loss forest both
+        # read this join: cached once, so neither recomputes it
         feats = (
             FE.assemble_array(encoded, scheme_cols)
             .join(labeled.select(cfg.id_col, "prediction"), cfg.id_col)
@@ -369,9 +374,9 @@ def _run_families(
         )
         tgt_cols = [c for c in scheme_cols if "tgt" in c.lower()]
         try:
-            # the inference chain runs beside get_all_metrics' reads;
-            # leaving the block joins it, so when a metric raises no
-            # Spark job of this family outlives it
+            # the inference chain runs beside get_all_metrics' table
+            # collect and forest; leaving the block joins it, so when a
+            # metric raises no Spark job of this family outlives it
             with ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix=f"scheme{run_id}-infer"
             ) as pool:
@@ -383,10 +388,10 @@ def _run_families(
                     deliver=deliver,
                     tgt_cols=tgt_cols,
                     n_seed=fit.get("seed"),
-                    # original string answers for social presence — label
-                    # codes can never contain 'facebook' (metrics.py:840
-                    # full_data)
-                    social_df=with_pred,
+                    # social presence decodes the scheme's coded `mc_`
+                    # answers: label codes can never contain 'facebook'
+                    # (metrics.py:840 full_data)
+                    code_maps=code_maps,
                 )
         finally:
             feats.unpersist()
@@ -410,14 +415,15 @@ def _run_families(
             return _failed(algo, f"{type(exc).__name__}: {exc}")
 
     # Inference + metrics for the surviving families run CONCURRENTLY,
-    # mirroring the fit phase above, and within a family its independent
-    # Spark reads overlap too: the inference chain (cells -> deliver) on
-    # one worker, and quality, social presence, magnitude's cluster
-    # sizes and the signal-loss forest each on one of get_all_metrics'
-    # workers, all under the family's job group. Each read is a few
-    # small Spark jobs, so one after another they would leave the
-    # executors idle. Families share only read-only parent frames (the
-    # cleaned/encoded caches); each caches its own feature join.
+    # mirroring the fit phase above, and within a family its three Spark
+    # reads overlap too: the inference chain (cells -> deliver) on one
+    # worker, the signal-loss forest on get_all_metrics' worker, and the
+    # pattern-table collect that quality, social presence and
+    # magnitude's cluster sizes are computed from, all under the
+    # family's job group. Each read is a few small Spark jobs, so one
+    # after another they would leave the executors idle. Families share
+    # only read-only parent frames (the cleaned/encoded caches); each
+    # caches its own feature join.
     if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),

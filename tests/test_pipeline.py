@@ -351,7 +351,7 @@ def _canonical(obj) -> str:
 # md5 of each family's _canonical metrics dict on the tagged scheme; the
 # kmodes family runs as kprototypes on the fixture's numeric answers
 METRICS_MD5 = {
-    "kprototypes": "7dd8122c1ef8effafae2e2a853288a57",
+    "kprototypes": "07b6e5e8a4c058a7ba068e7d40343cf7",
     "rules_based": "119208e933a13145d7bc863661f4c064",
 }
 
@@ -388,8 +388,7 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
     import threading
 
     from qudo_etl_pipeline_spark import pipeline as P
-    from qudo_etl_pipeline_spark.ml import business as B
-    from qudo_etl_pipeline_spark.ml import quality as Q
+    from qudo_etl_pipeline_spark.ml import features as FE
     from qudo_etl_pipeline_spark.ml import signal as S
 
     lock, seen = threading.Lock(), {}
@@ -402,9 +401,10 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
         return wrapper
 
+    # the metrics' pattern-table collect; the kmodes fit binds its own
+    # name for pattern_table, so only the finalize phase calls this one
     for mod, name in [
-        (Q, "cluster_quality"),
-        (B, "social_presence"),
+        (FE, "pattern_table"),
         (S, "signal_loss"),
         (P, "deliver_stats"),
     ]:
@@ -412,9 +412,7 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
     cleaned, cols, cfg = _tagged_scheme(responses)
     out = P.run_scheme(spark, cleaned, cols, cfg)
     assert all(r["labels"] is not None for r in out.values())
-    assert set(seen) == {
-        "cluster_quality", "social_presence", "signal_loss", "deliver_stats"
-    }
+    assert set(seen) == {"pattern_table", "signal_loss", "deliver_stats"}
     groups = {g for ids in seen.values() for g in ids}
     assert all(re.fullmatch(r"scheme\d+:finalize:.+", g or "") for g in groups)
     [scheme] = {g.split(":")[0] for g in groups}
@@ -430,31 +428,31 @@ def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypat
     import threading
 
     from qudo_etl_pipeline_spark import pipeline as P
-    from qudo_etl_pipeline_spark.ml import quality as Q
+    from qudo_etl_pipeline_spark.ml import features as FE
     from qudo_etl_pipeline_spark.ml import signal as S
 
     jsc = spark.sparkContext._jsc
-    real_quality = Q.cluster_quality
-    quality_done = threading.Event()
+    real_table = FE.pattern_table
+    table_done = threading.Event()
     persisted_mid_flight = []
 
-    def quality(*args, **kwargs):
+    def table(*args, **kwargs):
         try:
-            return real_quality(*args, **kwargs)
+            return real_table(*args, **kwargs)
         finally:
             if _group_id(spark).endswith(":finalize:rules_based"):
-                quality_done.set()
+                table_done.set()
 
     real_signal = S.signal_loss
 
     def signal(*args, **kwargs):
         if _group_id(spark).endswith(":finalize:rules_based"):
-            assert quality_done.wait(timeout=120)
+            assert table_done.wait(timeout=120)
             persisted_mid_flight.append(jsc.getPersistentRDDs().size())
             raise RuntimeError("planted read failure")
         return real_signal(*args, **kwargs)
 
-    monkeypatch.setattr(Q, "cluster_quality", quality)
+    monkeypatch.setattr(FE, "pattern_table", table)
     monkeypatch.setattr(S, "signal_loss", signal)
     cleaned, cols, cfg = _tagged_scheme(responses)
     before = jsc.getPersistentRDDs().size()

@@ -13,9 +13,9 @@ sibling).
 
 Count-derived fields (percentages, modes) compare EXACTLY — integer
 counts make the double arithmetic and ref_round bit-deterministic.
-The chi-squared stat/p compare to 1e-9/1e-7: their cell summation
-ORDER differs between engines, so last-ulp drift is expected and the
-rounded values could in principle straddle a midpoint.
+The chi-squared p/stat compare to 1e-7/1e-6. The mirror sums the
+statistic in the finalizer's value-major order, because a rounded value
+on an exact midpoint flips with another order's last-ulp drift.
 """
 
 from __future__ import annotations
@@ -85,8 +85,11 @@ def _mirror(rows):
             # degenerate table yields no pos cells anyway (all residuals 0)
         yates = min(grid.values()) <= 5
         stat = 0.0
-        for c in obs_cls:
-            for v in obs_vals:
+        # value-major, the finalizer's order: the stat is compared after
+        # rounding, and at an exact midpoint (117/8) a cluster-major sum
+        # drifts by an ulp and rounds the other way
+        for v in obs_vals:
+            for c in obs_cls:
                 e = row_tot[v] * col_tot[c] / n
                 d = grid[(c, v)] - e
                 if yates and dof == 1:

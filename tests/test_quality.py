@@ -1,6 +1,6 @@
-"""Differential tests: ml/quality.py vs numpy mirrors of the
-sklearn/statsmodels calls the reference makes (reference:
-src/kraken/app/metrics.py:24-174,578-633)."""
+"""Differential tests: ml/quality.py and the catalog's Spark quality
+metrics vs numpy mirrors of the sklearn/statsmodels calls the reference
+makes (reference: src/kraken/app/metrics.py:24-174,578-633)."""
 
 from __future__ import annotations
 
@@ -9,10 +9,14 @@ import math
 import numpy as np
 import pytest
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.catalog import ml_q as MQ
+from qudo_etl_pipeline_spark.catalog.coverage_q import random_checker
 from qudo_etl_pipeline_spark.ml import quality as Q
 from tests import reference_stats as R
+from tests.test_pipeline import _jobs_started_by
 
 
 @pytest.fixture(scope="module")
@@ -50,14 +54,14 @@ def test_cluster_sizes_and_balance(spark, clustered):
 
 def test_davies_bouldin_matches_numpy(spark, clustered):
     df, X, labels = clustered
-    assert Q.davies_bouldin(df) == pytest.approx(
+    assert MQ.davies_bouldin(df) == pytest.approx(
         R.davies_bouldin_np(X, labels), rel=1e-9
     )
 
 
 def test_calinski_harabasz_matches_numpy(spark, clustered):
     df, X, labels = clustered
-    assert Q.calinski_harabasz(df) == pytest.approx(
+    assert MQ.calinski_harabasz(df) == pytest.approx(
         R.calinski_harabasz_np(X, labels), rel=1e-9
     )
 
@@ -65,28 +69,28 @@ def test_calinski_harabasz_matches_numpy(spark, clustered):
 def test_degenerate_fallbacks(spark, clustered):
     df, _, _ = clustered
     one = df.withColumn("prediction", F.lit(0))
-    assert Q.davies_bouldin(one) == 999.0
-    assert Q.calinski_harabasz(one) == 0.0
-    assert Q.silhouette_exact(one) == 0.0
+    assert MQ.davies_bouldin(one) == 999.0
+    assert MQ.calinski_harabasz(one) == 0.0
+    assert MQ.silhouette_exact(one) == 0.0
 
 
 def test_silhouette_exact_matches_numpy(spark, clustered):
     df, X, labels = clustered
     sub = df.filter(F.col("row_id") < 90)
-    assert Q.silhouette_exact(sub) == pytest.approx(
+    assert MQ.silhouette_exact(sub) == pytest.approx(
         R.silhouette_np(X[:90], labels[:90]), rel=1e-9
     )
 
 
 def test_silhouette_squared_orders_like_exact(spark, clustered):
-    """The MLlib squared-silhouette scale path must at least agree in
+    """The squared silhouette of cluster_quality must at least agree in
     sign/ordering with the exact metric on clean vs random labels."""
     df, _, _ = clustered
-    good = Q.silhouette_squared(df)
+    good = Q.cluster_quality(df)["silhouette"]
     rnd = df.withColumn(
         "prediction", F.floor(F.rand(7) * 3).cast("int")
     )
-    bad = Q.silhouette_squared(rnd)
+    bad = Q.cluster_quality(rnd)["silhouette"]
     assert good > 0.5 and good > bad
 
 
@@ -115,15 +119,15 @@ def test_cochrans_q_and_i2(spark):
     df = spark.createDataFrame(
         [tuple(int(v) for v in row) for row in X], "c0: int, c1: int, c2: int, c3: int"
     )
-    q, dof = Q.cochrans_q(df, ["c0", "c1", "c2", "c3"])
+    q, dof = MQ.cochrans_q(df, ["c0", "c1", "c2", "c3"])
     q_np, dof_np = R.cochrans_q_np(X)
     assert dof == dof_np == 3
     assert q == pytest.approx(q_np, rel=1e-12)
-    assert Q.i2_score(q, dof) == round((q - dof) / q * 100, 3)
+    assert MQ.i2_score(q, dof) == round((q - dof) / q * 100, 3)
     const = df.withColumn("c0", F.lit(1)).withColumn("c1", F.lit(1)) \
               .withColumn("c2", F.lit(1)).withColumn("c3", F.lit(1))
     with pytest.raises(ZeroDivisionError):
-        Q.cochrans_q(const, ["c0", "c1", "c2", "c3"])
+        MQ.cochrans_q(const, ["c0", "c1", "c2", "c3"])
 
 
 def _variability_np(groups: dict, labels: np.ndarray) -> dict:
@@ -184,15 +188,15 @@ def test_variability_matches_numpy(spark):
         rows, "prediction: int, " + ", ".join(f"{c}: int" for c in names)
     )
     with pytest.raises(ZeroDivisionError):
-        Q.cochrans_q(df, cols["qc"])
-    got = Q.variability(df, cols)
+        MQ.cochrans_q(df, cols["qc"])
+    got = MQ.variability(df, cols)
     expected = _variability_np(groups, labels)
     assert set(got) == set(expected) == {"all_clusters", 0, 1, 2}
     for key, value in expected.items():
         assert got[key] == pytest.approx(value, abs=1e-9), key
     # skipping the degenerate group leaves every mean as without it
     without = {q: c for q, c in cols.items() if q != "qc"}
-    assert Q.variability(df, without) == got
+    assert MQ.variability(df, without) == got
 
 
 def test_rank_cluster_metrics_pandas_semantics(spark):
@@ -222,7 +226,7 @@ def test_rank_cluster_metrics_pandas_semantics(spark):
     ].sum(axis=1)
 
     out = (
-        Q.rank_cluster_metrics(
+        MQ.rank_cluster_metrics(
             spark.createDataFrame(pdf), information_criterions=True
         )
         .toPandas()
@@ -251,7 +255,7 @@ def test_cluster_quality_dict(spark, clustered):
 def test_random_checker_ratios(spark, clustered):
     df, _, _ = clustered
     base = Q.cluster_quality(df)
-    out = Q.random_checker(df, cluster_metrics=base, n_runs=2)
+    out = random_checker(df, cluster_metrics=base, n_runs=2)
     # clean blobs must beat random labelings on every ratio
     assert out["calinski_harabasz_random_ratio"] > 1.0
     assert out["davies_bouldin_random_ratio"] > 1.0
@@ -266,7 +270,7 @@ def test_random_checker_exact_values(spark, clustered):
     >1.0 ordering."""
     df, X, _ = clustered
     base = Q.cluster_quality(df)
-    out = Q.random_checker(df, cluster_metrics=base, n_runs=2)
+    out = random_checker(df, cluster_metrics=base, n_runs=2)
     k = 3  # distinct planted predictions; checker draws from 0..k incl.
     sils, dbs, chs = [], [], []
     for i in range(2):
@@ -340,3 +344,104 @@ def test_cluster_quality_excludes_null_predictions(spark):
     assert abs(sum(m["cluster_proportions"].values()) - 1.0) < 1e-12
     base = Q.cluster_quality(df.filter("prediction IS NOT NULL"))
     assert m["davies_bouldin"] == base["davies_bouldin"]
+
+
+def _blobs(seed: int, extra: list | None = None) -> list:
+    """A weighted (features, prediction, count) pattern table: three
+    blobs on a small integer grid, counts 1-3, and one pattern listed
+    twice — plus ``extra`` patterns."""
+    rng = np.random.default_rng(seed)
+    table = []
+    for c, center in enumerate([(0, 0, 0), (6, 6, 0), (0, 9, 9)]):
+        pts = rng.integers(-2, 3, size=(12, 3)) + np.array(center)
+        table += [(p.tolist(), c, int(rng.integers(1, 4))) for p in pts]
+    return table + [table[0]] + (extra or [])
+
+
+# name -> (pattern table, the metrics that must take their fallback)
+PATTERN_TABLES = {
+    "weighted_duplicates": (_blobs(1), {}),
+    "singleton_cluster": (_blobs(2, [([20, 0, 0], 3, 1)]), {}),
+    "null_prediction": (
+        _blobs(3, [([9, 9, 9], None, 4), ([0, 0, 0], None, 1)]), {}
+    ),
+    "one_cluster": (
+        [(p, 0, w) for p, _, w in _blobs(4)],
+        {"silhouette": 0.0, "davies_bouldin": 999.0, "calinski_harabasz": 0.0},
+    ),
+    "coincident_centroids": (
+        [([0, 0], 0, 1), ([2, 2], 0, 1), ([0, 2], 1, 1), ([2, 0], 1, 1)],
+        {"davies_bouldin": 999.0},
+    ),
+    "zero_within_dispersion": (
+        [([0, 0], 0, 3), ([3, 4], 1, 2)], {"calinski_harabasz": 0.0}
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PATTERN_TABLES))
+def test_pattern_quality_matches_the_expanded_rows(spark, case):
+    """The driver metrics over a weighted pattern table equal the numpy
+    references and the catalog's Spark metrics over the rows the table
+    stands for (NULL-label rows dropped), to relative 1e-12; degenerate
+    tables take the reference's fallback values."""
+    table, fallback = PATTERN_TABLES[case]
+    m = Q.pattern_quality(
+        [Row(features=f, prediction=p, _w=w) for f, p, w in table]
+    )
+    rows = [(f, p) for f, p, w in table for _ in range(w) if p is not None]
+    X = np.array([f for f, _ in rows], dtype=np.float64)
+    labels = np.array([p for _, p in rows])
+    df = spark.createDataFrame(
+        [([float(v) for v in f], p) for f, p in rows],
+        "features: array<double>, prediction: int",
+    )
+    ks, counts = np.unique(labels, return_counts=True)
+    assert m["n_clusters"] == len(ks)
+    assert m["cluster_proportions"] == {
+        int(c): int(n) / len(rows) for c, n in zip(ks, counts)
+    }
+    refs = {
+        "silhouette": [],
+        "davies_bouldin": [MQ.davies_bouldin(df)],
+        "calinski_harabasz": [MQ.calinski_harabasz(df)],
+    }
+    if "silhouette" not in fallback:
+        refs["silhouette"].append(R.silhouette_squared_np(X, labels))
+    if "davies_bouldin" not in fallback:
+        refs["davies_bouldin"].append(R.davies_bouldin_np(X, labels))
+    if "calinski_harabasz" not in fallback:
+        refs["calinski_harabasz"].append(R.calinski_harabasz_np(X, labels))
+    for key, values in refs.items():
+        if key in fallback:
+            assert m[key] == fallback[key], key
+        for ref in values:
+            assert m[key] == pytest.approx(ref, rel=1e-12, abs=1e-300), key
+
+
+def test_cluster_quality_starts_at_most_two_jobs(spark, clustered):
+    """cluster_quality is one collect of the (features, prediction,
+    count) table: the aggregate's shuffle stage and its result."""
+    df, _, _ = clustered
+    assert _jobs_started_by(spark, lambda: Q.cluster_quality(df)) <= 2
+
+
+def test_cluster_quality_above_the_threshold_is_a_sample_estimate(
+    spark, clustered, monkeypatch
+):
+    """Every row of a continuous feature is its own pattern: above
+    PATTERN_THRESHOLD the table is the priority sample with
+    Horvitz-Thompson weights, and the metrics are estimates over it."""
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    df, X, labels = clustered
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
+    m = Q.cluster_quality(df)
+    assert m["n_clusters"] == 3
+    assert sum(m["cluster_proportions"].values()) == pytest.approx(1.0)
+    for key, exact in [
+        ("silhouette", R.silhouette_squared_np(X, labels)),
+        ("davies_bouldin", R.davies_bouldin_np(X, labels)),
+        ("calinski_harabasz", R.calinski_harabasz_np(X, labels)),
+    ]:
+        assert m[key] == pytest.approx(exact, rel=0.15), key

@@ -8,7 +8,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.ml.features import (
+from qudo_etl_pipeline_spark.catalog.ml_q import (
     hashed_features,
     target_encode_oof,
 )

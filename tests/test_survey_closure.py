@@ -21,7 +21,7 @@ ENTRY_POINTS = ("pipeline", "workqueue", "sources.io", "session")
 FORBIDDEN_PREFIXES = (f"{PKG}.catalog", f"{PKG}.streaming")
 FORBIDDEN = {f"{PKG}.plans.skew", f"{PKG}.operators.checks"}
 # lines of every closure module, summed; lower it when the closure shrinks
-CLOSURE_LINES_MAX = 5631
+CLOSURE_LINES_MAX = 4837
 
 
 def _path(mod: str) -> Path | None:
