@@ -449,7 +449,7 @@ def social_presence_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def message_reach_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qudo_etl_pipeline_spark.ml.business import message_reach, social_presence
-    from qudo_etl_pipeline_spark.ml.signal import chi_square_signal
+    from qudo_etl_pipeline_spark.catalog.ml_q import chi_square_signal
 
     lab = load_table(spark, sf_dir, "customer").select(
         (F.col("c_nationkey") % 3).cast("int").alias("prediction"),
@@ -716,7 +716,7 @@ def random_checker(
 )
 def random_baseline_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qudo_etl_pipeline_spark.ml import quality as Q
-    from qudo_etl_pipeline_spark.ml.signal import label_consistency
+    from qudo_etl_pipeline_spark.catalog.ml_q import label_consistency
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),
@@ -831,7 +831,7 @@ def random_baseline_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mirrored by a recursive-CTE oracle)",
 )
 def data_slicer_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.signal import chi_square_signal, data_slicer
+    from qudo_etl_pipeline_spark.catalog.ml_q import chi_square_signal, data_slicer
 
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_quantity") > 25).cast("int").alias("q1_tgt"),

@@ -20,7 +20,7 @@ from qudo_etl_pipeline_spark.catalog import load_table, none_last_key, register
 from qudo_etl_pipeline_spark.functions.rounding import ref_round_sql
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
-from qudo_etl_pipeline_spark.ml import quality as Q
+from qudo_etl_pipeline_spark.ml import signal as S
 from qudo_etl_pipeline_spark.ml.quality import FEATURES, PREDICTION
 
 # --- Spark quality metrics and feature encoders ------------------------
@@ -510,6 +510,380 @@ def hashed_features(
     )
 
 
+# --- Signal-loss samplers, slice signal and consistency checks ---------
+# The survey's signal loss is ml.signal's pattern-majority classifier over
+# the family's pattern table. These are the reference's other signal and
+# consistency metrics (metrics.py:234-308, 407-514, 742-811), which the
+# survey does not run.
+#
+# Samplers use `sampleBy` class fractions (RUS keeps each row with seeded
+# Bernoulli probability m/n per class: approximate class sizes, WITHOUT
+# replacement, a documented delta from the reference's
+# RandomUnderSampler(replacement=True) exact-size draw; ROS samples every
+# class up to the majority size). SMOTE is true k-NN SMOTE per class
+# partition: an Arrow-batched `applyInPandas` kernel per minority class
+# interpolates toward one of each sample's k nearest within-class
+# neighbors at a uniform step, imblearn's synthetic-sample formula with a
+# seeded RNG. The data_slicer loop is driver-controlled, but each step is
+# a lazy filter + count on the executors; confusion matrices, slicer
+# counts and ARIs aggregate before collecting.
+
+
+def pair_confusion_sums(df: DataFrame, col_a: str, col_b: str) -> dict:
+    """Sufficient statistics for ARI from the label contingency table."""
+    # ONE scan of the data: collect the (k_a x k_b) contingency table —
+    # label-pair cardinality, tiny by construction — and fold the three
+    # comb2 sums driver-side instead of re-running the groupBy per sum.
+    cont = (
+        df.groupBy(col_a, col_b).agg(F.count(F.lit(1)).alias("nij")).collect()
+    )
+
+    def comb2(c: float) -> float:
+        return c * (c - 1) / 2.0
+
+    ai: dict = {}
+    bj: dict = {}
+    sum_nij2 = 0.0
+    n = 0
+    for r in cont:
+        sum_nij2 += comb2(r["nij"])
+        ai[r[col_a]] = ai.get(r[col_a], 0) + r["nij"]
+        bj[r[col_b]] = bj.get(r[col_b], 0) + r["nij"]
+        n += r["nij"]
+    row = {"n": n, "sum_nij2": sum_nij2}
+    arow = {"sum_ai2": sum(comb2(v) for v in ai.values())}
+    brow = {"sum_bj2": sum(comb2(v) for v in bj.values())}
+    return {
+        "sum_nij2": float(row["sum_nij2"]),
+        "sum_ai2": float(arow["sum_ai2"]),
+        "sum_bj2": float(brow["sum_bj2"]),
+        "n": int(row["n"]),
+    }
+
+
+def adjusted_rand_index(df: DataFrame, col_a: str, col_b: str) -> float:
+    """Closed-form ARI from groupBy counts (metrics.py:268,301).
+
+    ARI = (Sum_ij C(n_ij,2) - E) / (M - E), with
+    E = Sum_i C(a_i,2) * Sum_j C(b_j,2) / C(n,2),
+    M = (Sum_i C(a_i,2) + Sum_j C(b_j,2)) / 2.
+    Perfect-agreement degenerate case -> 1.0 (sklearn convention).
+    """
+    s = pair_confusion_sums(df, col_a, col_b)
+    cn2 = s["n"] * (s["n"] - 1) / 2.0
+    if cn2 == 0:
+        return 1.0
+    expected = s["sum_ai2"] * s["sum_bj2"] / cn2
+    maximum = (s["sum_ai2"] + s["sum_bj2"]) / 2.0
+    if maximum == expected:
+        return 1.0
+    return (s["sum_nij2"] - expected) / (maximum - expected)
+
+
+def classification_metrics(
+    scored: DataFrame, label_col: str, pred_col: str
+) -> dict:
+    """accuracy / weighted precision / recall / f1 / Cohen's kappa from
+    the confusion matrix (sklearn 'weighted' average semantics,
+    metrics.py:761-766), one groupBy collect. Rounded 3 as the
+    reference."""
+    return S._metrics_from_confusion(
+        {
+            (r[label_col], r[pred_col]): r["n"]
+            for r in scored.groupBy(label_col, pred_col)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+            # a pair with a NULL truth or NULL prediction is
+            # unscoreable: it belongs to no confusion-matrix cell
+            if r[label_col] is not None and r[pred_col] is not None
+        }
+    )
+
+
+def _resample(
+    df: DataFrame,
+    target_col: str,
+    sampling: str | None,
+    seed: int,
+    max_class_rows: int = 20_000,
+) -> DataFrame:
+    """RUS/ROS/SMOTE-like resampling (metrics.py:742-750).
+    ``max_class_rows`` caps SMOTE's per-class quadratic donor pool."""
+    if sampling is None:
+        return df
+    counts = {
+        r[target_col]: r["n"]
+        for r in df.groupBy(target_col).agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    if sampling == "under":
+        m = min(counts.values())
+        fractions = {c: m / n for c, n in counts.items()}
+        return df.sampleBy(target_col, fractions, seed=seed)
+    if sampling == "over":
+        m = max(counts.values())
+        parts = [df]
+        for c, n in counts.items():
+            extra = m - n
+            if extra > 0:
+                parts.append(
+                    df.filter(F.col(target_col) == c).sample(
+                        withReplacement=True, fraction=extra / n, seed=seed
+                    )
+                )
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+    if sampling == "smote":
+        return _smote_like(
+            df, target_col, counts, seed, max_class_rows=max_class_rows
+        )
+    raise ValueError(f"unknown sampling {sampling!r}")
+
+
+def _smote_like(
+    df: DataFrame,
+    target_col: str,
+    counts: dict,
+    seed: int,
+    k: int = 5,
+    max_class_rows: int = 20_000,
+) -> DataFrame:
+    """k-NN SMOTE (reference metrics.py:749-750, imblearn semantics):
+    each synthetic minority row interpolates between a class sample and
+    one of its ``k`` nearest SAME-CLASS neighbors (Euclidean), never a
+    random far pair — synthetic mass stays inside the class manifold
+    instead of bridging separated sub-clusters.
+
+    Arrow-batched ``applyInPandas`` per class: the kernel sees one class
+    at a time, so the neighbor search is per-class. The O(n_c^2)
+    distance matrix is ENFORCED-bounded by ``max_class_rows``: a class
+    larger than the cap interpolates within a seeded uniform subsample
+    of the class (the donor pool), so kernel cost is O(cap^2) ≈ 3.2 GB
+    of float64 distances at the 20k default, regardless of class size.
+    All original rows always pass through; only the donor pool shrinks
+    — the standard subsample-before-interpolate trade (oversized
+    classes are the MAJORITY classes, which need few or no synthetic
+    rows anyway). Classes at or under the cap take the exact un-capped
+    path bit-for-bit (the subsample draw only happens above the cap,
+    so the RNG stream is unchanged). Values are re-rounded to the input
+    dtype because the pipeline's features are label-encoded ints.
+    """
+    import pandas as pd
+
+    feature_cols = [c for c in df.columns if c != target_col]
+    m = max(counts.values())
+    schema = df.schema
+
+    def interp(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
+
+        need = m - len(pdf)
+        if need <= 0 or len(pdf) < 2:
+            return pdf
+        # md5, not hash(): Python string hashing is salted per process,
+        # which would make the "seeded" kernel nondeterministic across
+        # runs and task retries
+        import hashlib
+
+        label_off = int(
+            hashlib.md5(str(pdf[target_col].iloc[0]).encode()).hexdigest()[:8],
+            16,
+        )
+        rng = np.random.default_rng(seed + label_off)
+        x = pdf[feature_cols].to_numpy(dtype=float)
+        if len(x) > max_class_rows:
+            # donor-pool subsample: caps the quadratic neighbor search
+            x = x[rng.choice(len(x), max_class_rows, replace=False)]
+        n = len(x)
+        kk = min(k, n - 1)
+        # pairwise squared distances within the (capped) donor pool;
+        # self excluded via +inf diagonal, then the kk nearest per row
+        d2 = ((x[:, None, :] - x[None, :, :]) ** 2).sum(axis=2)
+        np.fill_diagonal(d2, np.inf)
+        nn = np.argpartition(d2, kth=kk - 1, axis=1)[:, :kk]
+        i = rng.integers(0, n, need)
+        j = nn[i, rng.integers(0, kk, need)]
+        lam = rng.random(need)[:, None]
+        sx = x[i] + lam * (x[j] - x[i])
+        synth = {
+            c: np.rint(sx[:, ci]).astype(pdf[c].dtype)
+            for ci, c in enumerate(feature_cols)
+        }
+        synth[target_col] = pdf[target_col].iloc[0]
+        return pd.concat([pdf, pd.DataFrame(synth)], ignore_index=True)
+
+    return df.groupBy(target_col).applyInPandas(interp, schema=schema)
+
+
+def signal_loss(
+    df: DataFrame,
+    tgt_cols: list[str],
+    target_col: str = "prediction",
+    seed: int = 42,
+) -> dict:
+    """M33 of a labelled frame: one collect of its (`_tgt` codes,
+    ``target_col``, count) table feeds ``signal.pattern_signal``."""
+    if not tgt_cols:
+        return {}
+    table = FE.pattern_table(
+        FE.assemble_array(df, tgt_cols), ["features", target_col]
+    )
+    return S.pattern_signal(
+        table, "features", list(range(len(tgt_cols))), target_col, seed
+    )
+
+
+def best_signal_metric(
+    df: DataFrame,
+    tgt_cols: list[str],
+    target_col: str = "prediction",
+    seed: int = 42,
+) -> dict:
+    """The signal loss of the winning sampler: per-metric argmax vote
+    over the rus/ros/none 'all' dicts (metrics.py:782-811; pandas idxmax
+    ties -> first column 'rus'). Each variant resamples the complete
+    rows BEFORE the train/test split, as the reference does
+    (metrics.py:742-758: fit_resample then train_test_split), so
+    duplicated rows can land in the holdout."""
+    base = df.select(*tgt_cols, target_col).na.drop()
+    order = ["rus", "ros", "none"]
+    variants = {
+        name: signal_loss(
+            _resample(base, target_col, s, seed), tgt_cols, target_col, seed
+        )
+        for name, s in zip(order, ["under", "over", None])
+    }
+    votes: dict[str, int] = {k: 0 for k in order}
+    for metric in ["signal", "f1_score", "precision", "recall_score", "cohen_kappa_score"]:
+        best = max(order, key=lambda k: (variants[k]["all"][metric], -order.index(k)))
+        votes[best] += 1
+    winner = max(order, key=lambda k: (votes[k], -order.index(k)))
+    return variants[winner]
+
+
+def data_slicer(
+    df: DataFrame, tgt_cols: list[str], pop_modes: list
+) -> tuple[DataFrame, list[str], list[str], float]:
+    """M34 iterative mode-filter (metrics.py:407-437), replicated with
+    the reference's exact control flow (incl. min_count rebinding to the
+    CURRENT sliced size each sweep)."""
+    percent_retained = 0.25
+    min_count = percent_retained * df.count()
+    core_cols: list[str] = []
+    sub_cols: list[str] = []
+    # Each accepted filter is cached (and the previous cache released):
+    # the next candidate's count reads ONE cached frame + one filter
+    # instead of re-scanning the whole compounding filter chain from the
+    # base table — O(accepted) passes, not O(accepted^2).
+    data = df
+    prev_cache = None
+    while len(core_cols) < 6:
+        if percent_retained < 0.15:
+            break
+        core_cols = []
+        sub_cols = []
+        for col, mode in zip(tgt_cols, pop_modes):
+            # cache BEFORE counting so the count materializes the cache,
+            # and only then release the parent — evicting first would
+            # force the next candidate to recompute the whole filter
+            # chain from the base table
+            filtered = data.filter(F.col(col).eqNullSafe(F.lit(mode))).cache()
+            if filtered.count() < min_count:
+                filtered.unpersist()
+                sub_cols.append(col)
+            else:
+                if prev_cache is not None:
+                    prev_cache.unpersist()
+                data = prev_cache = filtered
+                core_cols.append(col)
+        percent_retained -= 0.01
+        min_count = percent_retained * data.count()
+    return data, core_cols, sub_cols, percent_retained
+
+
+def chi_square_signal(
+    sliced: DataFrame, original: DataFrame, seg, label_col: str = "prediction"
+) -> dict:
+    """TP/FP/FN/TN accuracy of a slice as a segment predictor
+    (metrics.py:440-460). Zeros on an empty slice."""
+    is_seg = (F.col(label_col) == seg).cast("long")
+    s = sliced.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(is_seg).alias("tp")
+    ).collect()[0]
+    n_slice = s["n"]
+    if n_slice == 0:
+        return {"signal": 0, "precision": 0, "recall_score": 0, "f1_score": 0}
+    # sum over an all-NULL slice (labels all NULL) is NULL, not 0
+    tp = s["tp"] or 0
+    # NULL labels belong to neither count (the filter forms exclude them)
+    o = original.agg(
+        F.sum(is_seg).alias("true"),
+        F.sum((F.col(label_col) != seg).cast("long")).alias("false"),
+    ).collect()[0]
+    true = o["true"] or 0
+    false = o["false"] or 0
+    fp = n_slice - tp
+    fn = true - tp
+    tn = false - fp
+    try:
+        accuracy = round((tp + tn) / (tp + tn + fp + fn), 3)
+        precision = round(tp / (tp + fp), 3)
+        recall = round(tp / (tp + fn), 3)
+        f1 = round(2 * (precision * recall) / (precision + recall), 3)
+        return {
+            "signal": accuracy,
+            "precision": precision,
+            "recall_score": recall,
+            "f1_score": f1,
+        }
+    except ZeroDivisionError:
+        return {"signal": 0, "precision": 0, "recall_score": 0, "f1_score": 0}
+
+
+def model_consistency(
+    df: DataFrame,
+    refit,
+    label_col: str = "prediction",
+    test_frac: float = 0.1,
+    seed: int = 42,
+) -> float:
+    """M18 (metrics.py:234-270): stratified 90/10 split, `refit(train)`
+    returns a scorer mapping the test frame to new labels; ARI between
+    refit predictions and original test labels."""
+    # stratification is undefined for an unlabeled row (and sampleBy
+    # refuses a None fraction key) — unassigned rows are excluded
+    df = df.filter(F.col(label_col).isNotNull())
+    labels = [r[label_col] for r in df.select(label_col).distinct().collect()]
+    fractions = {l: 1 - test_frac for l in labels}
+    train = df.sampleBy(label_col, fractions, seed=seed)
+    test = df.exceptAll(train)
+    predict = refit(train)
+    # the refit scorer writes `label_col`; keep the originals as _orig
+    test_renamed = test.withColumnRenamed(label_col, "_orig")
+    scored = predict(test_renamed)
+    return adjusted_rand_index(scored, "_orig", label_col)
+
+
+def label_consistency(
+    df: DataFrame,
+    refit,
+    label_col: str = "prediction",
+    train_frac: float = 0.9,
+    seed: int = 42,
+) -> float:
+    """M20 (metrics.py:273-308): refit on a stratified 90% sample; ARI
+    between refit labels and the original labels on that sample."""
+    # unassigned rows excluded — see model_consistency
+    df = df.filter(F.col(label_col).isNotNull())
+    labels = [r[label_col] for r in df.select(label_col).distinct().collect()]
+    fractions = {l: train_frac for l in labels}
+    train = df.sampleBy(label_col, fractions, seed=seed)
+    train_renamed = train.withColumnRenamed(label_col, "_orig")
+    predict = refit(train_renamed)
+    scored = predict(train_renamed)
+    return adjusted_rand_index(scored, "_orig", label_col)
+
 
 # shared planted features: 3-d lineitem projection, cluster = l_returnflag
 _LI_FEATS = """
@@ -707,7 +1081,7 @@ def ari_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("a"),
         F.floor(F.col("o_totalprice") / 60000.0).cast("long").alias("b"),
     )
-    ari = Q.adjusted_rand_index(lab, "a", "b")
+    ari = adjusted_rand_index(lab, "a", "b")
     return spark.createDataFrame([(round(ari, 6),)], "ari: double")
 
 
@@ -1244,8 +1618,6 @@ def _kmeans_refit(train):
     "slice (rows-only: iterative refit)",
 )
 def model_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.signal import model_consistency
-
     feats = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
@@ -1268,8 +1640,6 @@ def model_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(rows-only: iterative refit)",
 )
 def label_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.signal import label_consistency
-
     feats = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
@@ -1360,7 +1730,7 @@ def uniqueness_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem
     ),
     -- NULL truth or NULL prediction is unscoreable (mirrors
-    -- signal.classification_metrics' confusion-matrix exclusion)
+    -- classification_metrics' confusion-matrix exclusion)
     conf AS (SELECT label, pred, COUNT(*) AS n FROM scored
              WHERE label IS NOT NULL AND pred IS NOT NULL
              GROUP BY label, pred),
@@ -1406,13 +1776,11 @@ def uniqueness_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "planted confusion matrix",
 )
 def classification_metrics_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import signal as S
-
     scored = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("label"),
         F.when(F.col("l_quantity") > 25, "R").otherwise("A").alias("pred"),
     )
-    m = S.classification_metrics(scored, "label", "pred")
+    m = classification_metrics(scored, "label", "pred")
     return spark.createDataFrame(
         [(m["signal"], m["f1_score"], m["precision"], m["recall_score"],
           m["cohen_kappa_score"])],
@@ -1452,19 +1820,17 @@ def communicability_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "signal_loss_rf",
     oracle=None,
     survey_ids=["M33", "M18"],
-    description="RandomForest signal-loss on planted tgt features "
-    "(rows-only: MLlib RF is seed- but not SQL-reproducible)",
+    description="Pattern-majority signal loss on planted tgt features "
+    "(rows-only: the seeded binomial holdout split is not SQL-expressible)",
 )
 def signal_loss_rf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import signal as S
-
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_quantity") > 25).cast("int").alias("q1_tgt"),
         (F.col("l_discount") > 0.05).cast("int").alias("q2_tgt"),
         (F.col("l_tax") > 0.04).cast("int").alias("q3_tgt"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("prediction"),
     )
-    out = S.signal_loss(li, ["q1_tgt", "q2_tgt", "q3_tgt"])
+    out = signal_loss(li, ["q1_tgt", "q2_tgt", "q3_tgt"])
     rows = [
         (k, v["signal"], v["f1_score"], v["precision"], v["recall_score"],
          v["cohen_kappa_score"])

@@ -34,9 +34,8 @@ from __future__ import annotations
 
 import re
 from collections import Counter
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import Future
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Row
 
 from qudo_etl_pipeline_spark.ml import features as FE
@@ -271,7 +270,7 @@ def get_all_metrics(
     deliver: Deliver | None = None,
     features_col: str = "features",
     pred: str = "prediction",
-    tgt_cols: list[str] | None = None,
+    tgt_idx: list[int] | None = None,
     n_seed=None,
     sm_platform: str = "Facebook",
     code_maps: dict[str, dict[str, int]] | None = None,
@@ -280,58 +279,47 @@ def get_all_metrics(
     one dict. The consistency checks need a train->scorer refit the
     survey has no handle on; their keys stay, NaN.
 
-    Quality, social presence and magnitude's cluster sizes all come from
-    ONE collect of the (features, `mc_` columns, prediction, count)
-    pattern table of ``labeled``, computed on the driver. The social
-    presence needs the original answers, which label codes never match
-    ('facebook', metrics.py:840 full_data): an `mc_` column in
-    ``code_maps`` holds codes and is decoded with them.
+    Every metric of ``labeled`` comes from ONE collect of its (features,
+    `mc_` columns, prediction, count) pattern table, computed on the
+    driver: quality, social presence, magnitude's cluster sizes and the
+    signal loss, whose `_tgt` columns are the ``features`` positions
+    ``tgt_idx``. The social presence needs the original answers, which
+    label codes never match ('facebook', metrics.py:840 full_data): an
+    `mc_` column in ``code_maps`` holds codes and is decoded with them.
 
-    The signal-loss forest is the one other Spark read; it runs on a
-    worker thread under the caller's job group while the table is
-    collected. The deliver-derived metrics run on the driver once the
-    deliver rows arrive: ``deliver`` may be a ``Future`` still being
-    computed. The forest is joined before this returns or raises."""
+    The deliver-derived metrics run once the deliver rows arrive:
+    ``deliver`` may be a ``Future`` still being computed."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
     cands = [c for c in labeled.columns if "mc_" in c]
-    inherit = inheritable_thread_target(labeled.sparkSession)
-    with ThreadPoolExecutor(
-        max_workers=1, thread_name_prefix="metrics"
-    ) as pool:
-        signal = None
-        if deliver is not None and tgt_cols:
-            signal = pool.submit(
-                inherit(S.signal_loss), labeled, tgt_cols, pred
+    table = FE.pattern_table(labeled, [features_col, *cands, pred])
+    metrics = Q.pattern_quality(table, features_col, pred, n_seed)
+    metrics["fb_presence"] = _presence(
+        table, cands, sm_platform, pred, code_maps or {}
+    )
+    metrics["model_consistency"] = float("nan")
+    metrics["label_consistency"] = float("nan")
+    if deliver is not None:
+        deliver = _rows(deliver)
+        metrics["uniqueness"] = uniqueness(deliver)
+        comm = communicability(deliver)
+        metrics["communicability_clusters"] = comm["data"]
+        metrics["communicability_avg"] = comm["avg"]
+        if tgt_idx:
+            sizes = _sizes(table, pred)
+            metrics["magnitude"] = _magnitude(
+                deliver, sizes, len(tgt_idx), "targeting_seg"
             )
-        table = FE.pattern_table(labeled, [features_col, *cands, pred])
-        metrics = Q.pattern_quality(table, features_col, pred, n_seed)
-        metrics["fb_presence"] = _presence(
-            table, cands, sm_platform, pred, code_maps or {}
-        )
-        metrics["model_consistency"] = float("nan")
-        metrics["label_consistency"] = float("nan")
-        if deliver is not None:
-            deliver = _rows(deliver)
-            metrics["uniqueness"] = uniqueness(deliver)
-            comm = communicability(deliver)
-            metrics["communicability_clusters"] = comm["data"]
-            metrics["communicability_avg"] = comm["avg"]
-            if tgt_cols:
-                sizes = _sizes(table, pred)
-                metrics["magnitude"] = _magnitude(
-                    deliver, sizes, len(tgt_cols), "targeting_seg"
-                )
-                sig = signal.result()
-                metrics["signal_loss"] = sig
-                metrics["message_reach"] = message_reach(
-                    metrics["fb_presence"], sig
-                )
-            (
-                metrics["num_sig_vars"],
-                metrics["num_sig_tgt_vars"],
-                metrics["sig_question_groups"],
-                metrics["sig_tgt_question_groups"],
-            ) = significant_variables_and_spread(deliver)
+            sig = S.pattern_signal(table, features_col, tgt_idx, pred)
+            metrics["signal_loss"] = sig
+            metrics["message_reach"] = message_reach(
+                metrics["fb_presence"], sig
+            )
+        (
+            metrics["num_sig_vars"],
+            metrics["num_sig_tgt_vars"],
+            metrics["sig_question_groups"],
+            metrics["sig_tgt_question_groups"],
+        ) = significant_variables_and_spread(deliver)
     return metrics

@@ -1,11 +1,10 @@
 """Cluster-quality metrics.
 
 Re-implements the reference's metric layer (reference:
-src/kraken/app/metrics.py:24-124,268,301) without sklearn:
+src/kraken/app/metrics.py:24-124) without sklearn:
 
 - cluster proportions + balance predicate      (metrics.py:24-38; clustering.py:792-809)
 - silhouette / Davies-Bouldin / Calinski-Harabasz (metrics.py:73-90)
-- adjusted Rand index (closed form)            (metrics.py:268,301)
 
 Error-value semantics are replicated exactly because they feed the
 rank-sum selection: silhouette -> 0, Davies-Bouldin -> 999,
@@ -25,7 +24,9 @@ Scale notes (100 TB design):
 - Above ``features.PATTERN_THRESHOLD`` patterns the table is a priority
   sample whose weights are Horvitz-Thompson weights, and the metrics
   are estimates over it.
-- ARI is one aggregation (closed form over the label-pair counts).
+
+The adjusted Rand index (metrics.py:268,301), which only the consistency
+checks use, is catalog-side: ``catalog/ml_q.py``.
 """
 
 from __future__ import annotations
@@ -60,57 +61,6 @@ def balance_ok(
     (clustering.py:117-118,792-809)."""
     shares = [r["share"] for r in cluster_sizes(df, pred).collect()]
     return all(lo < s < hi for s in shares)
-
-
-def pair_confusion_sums(df: DataFrame, col_a: str, col_b: str) -> dict:
-    """Sufficient statistics for ARI from the label contingency table."""
-    # ONE scan of the data: collect the (k_a x k_b) contingency table —
-    # label-pair cardinality, tiny by construction — and fold the three
-    # comb2 sums driver-side instead of re-running the groupBy per sum.
-    cont = (
-        df.groupBy(col_a, col_b).agg(F.count(F.lit(1)).alias("nij")).collect()
-    )
-
-    def comb2(c: float) -> float:
-        return c * (c - 1) / 2.0
-
-    ai: dict = {}
-    bj: dict = {}
-    sum_nij2 = 0.0
-    n = 0
-    for r in cont:
-        sum_nij2 += comb2(r["nij"])
-        ai[r[col_a]] = ai.get(r[col_a], 0) + r["nij"]
-        bj[r[col_b]] = bj.get(r[col_b], 0) + r["nij"]
-        n += r["nij"]
-    row = {"n": n, "sum_nij2": sum_nij2}
-    arow = {"sum_ai2": sum(comb2(v) for v in ai.values())}
-    brow = {"sum_bj2": sum(comb2(v) for v in bj.values())}
-    return {
-        "sum_nij2": float(row["sum_nij2"]),
-        "sum_ai2": float(arow["sum_ai2"]),
-        "sum_bj2": float(brow["sum_bj2"]),
-        "n": int(row["n"]),
-    }
-
-
-def adjusted_rand_index(df: DataFrame, col_a: str, col_b: str) -> float:
-    """Closed-form ARI from groupBy counts (metrics.py:268,301).
-
-    ARI = (Sum_ij C(n_ij,2) - E) / (M - E), with
-    E = Sum_i C(a_i,2) * Sum_j C(b_j,2) / C(n,2),
-    M = (Sum_i C(a_i,2) + Sum_j C(b_j,2)) / 2.
-    Perfect-agreement degenerate case -> 1.0 (sklearn convention).
-    """
-    s = pair_confusion_sums(df, col_a, col_b)
-    cn2 = s["n"] * (s["n"] - 1) / 2.0
-    if cn2 == 0:
-        return 1.0
-    expected = s["sum_ai2"] * s["sum_bj2"] / cn2
-    maximum = (s["sum_ai2"] + s["sum_bj2"]) / 2.0
-    if maximum == expected:
-        return 1.0
-    return (s["sum_nij2"] - expected) / (maximum - expected)
 
 
 def _silhouette(X, w, idx, sqn, n, S, Q) -> float:

@@ -16,10 +16,9 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
 5. chi-squared inference -> deliver, discover and the mode list, all
    from one collect of the family's cell table (§3.3 single-shuffle
    plan), and get_all_metrics                 (main.py:158; metrics.py:814-911)
-   — quality, social presence and magnitude from one collect of the
-   family's pattern table, computed on the driver; the inference chain
-   and the signal-loss forest run beside that collect, over one cached
-   feature join per family
+   — quality, social presence, magnitude and signal loss from one
+   collect of the family's pattern table, computed on the driver; the
+   inference chain runs beside that collect
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
 
@@ -365,36 +364,29 @@ def _run_families(
             )
             return deliver_stats(tables, alpha=1 - cfg.conf_interval)
 
-        # the metrics' pattern table and the signal-loss forest both
-        # read this join: cached once, so neither recomputes it
-        feats = (
-            FE.assemble_array(encoded, scheme_cols)
-            .join(labeled.select(cfg.id_col, "prediction"), cfg.id_col)
-            .cache()
+        feats = FE.assemble_array(encoded, scheme_cols).join(
+            labeled.select(cfg.id_col, "prediction"), cfg.id_col
         )
-        tgt_cols = [c for c in scheme_cols if "tgt" in c.lower()]
-        try:
-            # the inference chain runs beside get_all_metrics' table
-            # collect and forest; leaving the block joins it, so when a
-            # metric raises no Spark job of this family outlives it
-            with ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix=f"scheme{run_id}-infer"
-            ) as pool:
-                deliver = pool.submit(inheritable_thread_target(spark)(infer))
-                metrics = get_all_metrics(
-                    feats,
-                    # resolves to a local frame: collecting its rows
-                    # runs no Spark job
-                    deliver=deliver,
-                    tgt_cols=tgt_cols,
-                    n_seed=fit.get("seed"),
-                    # social presence decodes the scheme's coded `mc_`
-                    # answers: label codes can never contain 'facebook'
-                    # (metrics.py:840 full_data)
-                    code_maps=code_maps,
-                )
-        finally:
-            feats.unpersist()
+        tgt_idx = [i for i, c in enumerate(scheme_cols) if "tgt" in c.lower()]
+        # the inference chain runs beside get_all_metrics' table collect;
+        # leaving the block joins it, so when a metric raises no Spark
+        # job of this family outlives it
+        with ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix=f"scheme{run_id}-infer"
+        ) as pool:
+            deliver = pool.submit(inheritable_thread_target(spark)(infer))
+            metrics = get_all_metrics(
+                feats,
+                # resolves to a local frame: collecting its rows runs no
+                # Spark job
+                deliver=deliver,
+                tgt_idx=tgt_idx,
+                n_seed=fit.get("seed"),
+                # social presence decodes the scheme's coded `mc_`
+                # answers: label codes can never contain 'facebook'
+                # (metrics.py:840 full_data)
+                code_maps=code_maps,
+            )
         deliver = deliver.result()
         metrics["algorithm"] = algo
         # the reference's return_API_data triple (chisquared_tester.py:
@@ -415,15 +407,13 @@ def _run_families(
             return _failed(algo, f"{type(exc).__name__}: {exc}")
 
     # Inference + metrics for the surviving families run CONCURRENTLY,
-    # mirroring the fit phase above, and within a family its three Spark
+    # mirroring the fit phase above, and within a family its two Spark
     # reads overlap too: the inference chain (cells -> deliver) on one
-    # worker, the signal-loss forest on get_all_metrics' worker, and the
-    # pattern-table collect that quality, social presence and
-    # magnitude's cluster sizes are computed from, all under the
-    # family's job group. Each read is a few small Spark jobs, so one
-    # after another they would leave the executors idle. Families share
-    # only read-only parent frames (the cleaned/encoded caches); each
-    # caches its own feature join.
+    # worker, and the pattern-table collect that every metric of the
+    # family is computed from, both under the family's job group. Each
+    # read is a few small Spark jobs, so one after another they would
+    # leave the executors idle. Families share only read-only parent
+    # frames (the cleaned/encoded caches).
     if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),

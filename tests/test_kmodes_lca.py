@@ -11,10 +11,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.catalog.ml_q import adjusted_rand_index
 from qudo_etl_pipeline_spark.ml import features as FE
 from qudo_etl_pipeline_spark.ml import kmodes as KM
 from qudo_etl_pipeline_spark.ml import lca as LCA
-from qudo_etl_pipeline_spark.ml import quality as Q
 from tests.test_pipeline import _jobs_started_by
 
 
@@ -54,7 +54,7 @@ def cat_df(spark):
 
 def test_kmodes_recovers_planted_classes(spark, cat_df):
     fit = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+    ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["cost"] > 0
     # modes must be the class-typical answer tuples
@@ -88,7 +88,7 @@ def test_kprototypes_mixed_distance(spark, cat_df):
     fit = KM.kmodes_fit(
         with_num, ["q0", "q1", "q2", "q3"], k=3, num_cols=["x"]
     )
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+    ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.95
     assert fit["gamma"] > 0  # default 0.5 * mean pop-std of numerics
     # numeric centroid of each cluster must sit near its class mean
@@ -105,7 +105,7 @@ def test_kmodes_modes_deterministic_and_distinct(spark, cat_df):
 
 def test_lca_recovers_planted_classes(spark, cat_df):
     fit = LCA.lca_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3, seed=42)
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+    ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["n_params"] == (3 - 1) + 3 * sum(
         (3 - 1) for _ in range(4)
@@ -134,7 +134,7 @@ def test_lca_mixed_recovers_planted_classes(spark, cat_df):
     fit = LCA.lca_fit(
         with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x", "y"]
     )
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+    ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     # (k-1) priors + k*(|v|-1) multinomial + k*2*|num| gaussian params
     assert fit["n_params"] == 2 + 3 * (2 + 2) + 3 * 2 * 2
@@ -150,7 +150,7 @@ def test_lca_mixed_pure_gaussian(spark, cat_df):
         "x", F.col("truth").cast("double") * 10.0 + (F.rand(9) - 0.5)
     )
     fit = LCA.lca_fit(with_num, [], k=3, seed=1, num_cols=["x"])
-    ari = Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+    ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["n_params"] == 2 + 3 * 2
 
@@ -243,7 +243,7 @@ def test_sampled_fits_recover_planted_classes(
     seed 3 among them."""
 
     def ari(fit):
-        return Q.adjusted_rand_index(fit["labels"], "truth", "prediction")
+        return adjusted_rand_index(fit["labels"], "truth", "prediction")
 
     exact = ari(KM.kmodes_fit(big_df, COLS, k=3))
     monkeypatch.setattr(FE, "PATTERN_THRESHOLD", SAMPLE)
@@ -278,7 +278,7 @@ def test_sampled_mixed_fits_recover_planted_means(spark, big_df, sampled):
     assert sorted(m["x"] for m in km["modes"]) == pytest.approx(
         [0.0, 10.0, 20.0], abs=1.0
     )
-    assert Q.adjusted_rand_index(km["labels"], "truth", "prediction") > 0.9
+    assert adjusted_rand_index(km["labels"], "truth", "prediction") > 0.9
     lca = LCA.lca_fit(with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x"])
     assert sorted(m["x"] for m in lca["mu"]) == pytest.approx(
         [0.0, 10.0, 20.0], abs=1.5

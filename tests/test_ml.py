@@ -10,9 +10,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.catalog.ml_q import adjusted_rand_index
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
-from qudo_etl_pipeline_spark.ml import quality as Q
 
 
 @pytest.fixture(scope="module")
@@ -118,7 +118,7 @@ def test_kmeans_multi_seed_recovers_blobs(spark, blobs):
     fit = C.kmeans_multi_seed(df, k=3, seeds=[1, 42], max_workers=2)
     assert fit is not None
     labeled = fit["labels"].withColumnRenamed("prediction", "pred")
-    ari = Q.adjusted_rand_index(labeled, "truth", "pred")
+    ari = adjusted_rand_index(labeled, "truth", "pred")
     assert ari > 0.95
     assert fit["metrics"]["n_clusters"] == 3
     shares = fit["metrics"]["cluster_proportions"].values()
@@ -137,7 +137,7 @@ def test_gmm_fit_bic_aic(spark, blobs):
     assert fit is not None
     assert fit["bic"] > fit["aic"]  # ln(240) > 2 per parameter
     labeled = fit["labels"].withColumnRenamed("prediction", "pred")
-    assert Q.adjusted_rand_index(labeled, "truth", "pred") > 0.9
+    assert adjusted_rand_index(labeled, "truth", "pred") > 0.9
 
 
 def test_rules_based_labels(spark):

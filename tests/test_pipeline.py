@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -340,6 +341,43 @@ def _tagged_scheme(responses):
     return cleaned, cols, cfg
 
 
+def test_rules_signal_is_one_on_sparse_tgt_patterns(spark, monkeypatch):
+    """The rules family's label is its rules column, a `_tgt` column, so
+    its signal loss is 1.0 in every key also on a wide survey, where
+    most respondents answer the `_tgt` questions in a pattern of their
+    own and most held-out patterns are unseen in training."""
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import signal as S
+
+    pdf = make_responses(n=600)
+    rng = np.random.default_rng(5)
+    for i in range(3):
+        pdf[f"fin_uk_goal_x{i}_fb"] = [f"opt{v}" for v in rng.integers(0, 8, 600)]
+    tables, real = [], S.pattern_signal
+
+    def spy(rows, features, tgt_idx, pred, seed=42):
+        tables.append({tuple(r[features][i] for i in tgt_idx) for r in rows})
+        return real(rows, features, tgt_idx, pred, seed)
+
+    monkeypatch.setattr(S, "pattern_signal", spy)
+    cleaned, cols, _ = _tagged_scheme(spark.createDataFrame(pdf))
+    cfg = SegmentationConfig(
+        survey_name="wide",
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("rules_based",),
+        ks=[3],
+    )
+    out = P.run_scheme(spark, cleaned, cols, cfg)
+    # sparse: far more tgt patterns than a 33% holdout could all meet
+    # in training
+    [patterns] = tables
+    assert len(patterns) > 400
+    sig = out["rules_based"]["metrics"]["signal_loss"]
+    assert set(sig) == {"all", "0", "1", "2"}
+    for key, m in sig.items():
+        assert m["signal"] == m["f1_score"] == m["precision"] == 1.0, key
+
+
 def _canonical(obj) -> str:
     """repr with dict keys sorted: full float reprs, NaN included."""
     if isinstance(obj, dict):
@@ -348,19 +386,26 @@ def _canonical(obj) -> str:
     return repr(obj)
 
 
-# md5 of each family's _canonical metrics dict on the tagged scheme; the
-# kmodes family runs as kprototypes on the fixture's numeric answers
+# md5 of each family's _canonical metrics dict on the tagged scheme, in
+# two parts: the signal-loss keys, and every other key. The kmodes family
+# runs as kprototypes on the fixture's numeric answers.
+SIGNAL_KEYS = ("signal_loss", "message_reach")
 METRICS_MD5 = {
-    "kprototypes": "07b6e5e8a4c058a7ba068e7d40343cf7",
-    "rules_based": "119208e933a13145d7bc863661f4c064",
+    "kprototypes": "da9efda1ca01ba6532d32f609b6c6305",
+    "rules_based": "15adc2b735d76b648913144c444377da",
+}
+SIGNAL_MD5 = {
+    "kprototypes": "d533aa13a281e6811a7391e0ce17e431",
+    "rules_based": "925478e0458902e03ff1504a07e44b05",
 }
 
 
 def test_metrics_dicts_are_pinned(spark, responses):
     """Every key and full float of each family's metrics dict (quality,
     fb_presence, magnitude, signal_loss, uniqueness, spread...) stays
-    fixed: a change to a metric's input, such as the partitioning the
-    random forest trains on, fails here."""
+    fixed: a change to a metric's input fails here. The signal-loss keys
+    are pinned apart, so a change to the signal classifier moves their
+    pin and leaves the other keys' pin standing."""
     import hashlib
 
     from qudo_etl_pipeline_spark import pipeline as P
@@ -372,8 +417,13 @@ def test_metrics_dicts_are_pinned(spark, responses):
     assert isinstance(out["rules_based"]["metrics"]["magnitude"], dict)
     for algo, res in out.items():
         m = res["metrics"]
-        got = hashlib.md5(_canonical(m).encode()).hexdigest()
-        assert got == METRICS_MD5[algo], (algo, _canonical(m))
+        assert set(SIGNAL_KEYS) <= set(m), algo
+        rest = {k: v for k, v in m.items() if k not in SIGNAL_KEYS}
+        sig = {k: m[k] for k in SIGNAL_KEYS}
+        got = hashlib.md5(_canonical(rest).encode()).hexdigest()
+        assert got == METRICS_MD5[algo], (algo, _canonical(rest))
+        got = hashlib.md5(_canonical(sig).encode()).hexdigest()
+        assert got == SIGNAL_MD5[algo], (algo, _canonical(sig))
 
 
 def _group_id(spark):
@@ -389,7 +439,6 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
     from qudo_etl_pipeline_spark import pipeline as P
     from qudo_etl_pipeline_spark.ml import features as FE
-    from qudo_etl_pipeline_spark.ml import signal as S
 
     lock, seen = threading.Lock(), {}
 
@@ -403,16 +452,12 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
     # the metrics' pattern-table collect; the kmodes fit binds its own
     # name for pattern_table, so only the finalize phase calls this one
-    for mod, name in [
-        (FE, "pattern_table"),
-        (S, "signal_loss"),
-        (P, "deliver_stats"),
-    ]:
+    for mod, name in [(FE, "pattern_table"), (P, "deliver_stats")]:
         monkeypatch.setattr(mod, name, recording(name, getattr(mod, name)))
     cleaned, cols, cfg = _tagged_scheme(responses)
     out = P.run_scheme(spark, cleaned, cols, cfg)
     assert all(r["labels"] is not None for r in out.values())
-    assert set(seen) == {"pattern_table", "signal_loss", "deliver_stats"}
+    assert set(seen) == {"pattern_table", "deliver_stats"}
     groups = {g for ids in seen.values() for g in ids}
     assert all(re.fullmatch(r"scheme\d+:finalize:.+", g or "") for g in groups)
     [scheme] = {g.split(":")[0] for g in groups}
@@ -422,44 +467,41 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
 
 def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypatch):
-    """A metric read that raises after the family's feature frame is
-    cached fails that family only: the other family finishes, and the
-    failed family's cache and reads are released with it."""
-    import threading
-
+    """A metrics read that raises while the family's inference chain is
+    still running fails that family only: the other family finishes,
+    and nothing the scheme cached stays persisted after it."""
     from qudo_etl_pipeline_spark import pipeline as P
     from qudo_etl_pipeline_spark.ml import features as FE
-    from qudo_etl_pipeline_spark.ml import signal as S
 
     jsc = spark.sparkContext._jsc
-    real_table = FE.pattern_table
-    table_done = threading.Event()
-    persisted_mid_flight = []
+    persisted_mid_flight, delivered, delivered_at_raise = [], [], []
+    real_table, real_deliver = FE.pattern_table, P.deliver_stats
 
+    # the metrics' table collect; the kmodes fit binds its own name for
+    # pattern_table, so only the finalize phase calls this one
     def table(*args, **kwargs):
-        try:
-            return real_table(*args, **kwargs)
-        finally:
-            if _group_id(spark).endswith(":finalize:rules_based"):
-                table_done.set()
-
-    real_signal = S.signal_loss
-
-    def signal(*args, **kwargs):
         if _group_id(spark).endswith(":finalize:rules_based"):
-            assert table_done.wait(timeout=120)
             persisted_mid_flight.append(jsc.getPersistentRDDs().size())
+            delivered_at_raise.append(bool(delivered))
             raise RuntimeError("planted read failure")
-        return real_signal(*args, **kwargs)
+        return real_table(*args, **kwargs)
+
+    def deliver(*args, **kwargs):
+        out = real_deliver(*args, **kwargs)
+        if _group_id(spark).endswith(":finalize:rules_based"):
+            delivered.append(True)
+        return out
 
     monkeypatch.setattr(FE, "pattern_table", table)
-    monkeypatch.setattr(S, "signal_loss", signal)
+    monkeypatch.setattr(P, "deliver_stats", deliver)
     cleaned, cols, cfg = _tagged_scheme(responses)
     before = jsc.getPersistentRDDs().size()
     out = P.run_scheme(spark, cleaned, cols, cfg)
-    # the feature frame (and the scheme's encoded table) were cached
-    # when the read failed
+    # the scheme's encoded table was cached when the read failed, and
+    # the family's inference chain had not finished: leaving the
+    # finalize phase joined it
     assert persisted_mid_flight and persisted_mid_flight[0] > before
+    assert delivered_at_raise == [False] and delivered == [True]
     assert out["rules_based"] == {
         "labels": None,
         "metrics": {

@@ -99,14 +99,14 @@ def test_adjusted_rand_index(spark, clustered):
     perm = df.withColumn(
         "perm", (F.col("prediction") + 1) % 3
     )
-    assert Q.adjusted_rand_index(perm, "prediction", "perm") == pytest.approx(
+    assert MQ.adjusted_rand_index(perm, "prediction", "perm") == pytest.approx(
         1.0
     )
     rng = np.random.default_rng(3)
     noisy = np.where(rng.random(len(labels)) < 0.3, rng.integers(0, 3, len(labels)), labels)
     rows = [(int(a), int(b)) for a, b in zip(labels, noisy)]
     two = spark.createDataFrame(rows, "a: int, b: int")
-    assert Q.adjusted_rand_index(two, "a", "b") == pytest.approx(
+    assert MQ.adjusted_rand_index(two, "a", "b") == pytest.approx(
         R.adjusted_rand_np(labels, noisy), rel=1e-9
     )
 
@@ -302,7 +302,7 @@ def test_random_checker_exact_values(spark, clustered):
 def test_label_consistency_exact_value(spark, clustered):
     """Pin label_consistency's seeded sampleBy path: replay the same
     stratified sample and reproduce the ARI in numpy exactly."""
-    from qudo_etl_pipeline_spark.ml.signal import label_consistency
+    from qudo_etl_pipeline_spark.catalog.ml_q import label_consistency
 
     df, _, _ = clustered
 

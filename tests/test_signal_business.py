@@ -1,15 +1,19 @@
-"""Tests for ml/signal.py (M33/M34/M18/M20) and ml/business.py
-(M28-M31, M35-M37) — reference: src/kraken/app/metrics.py."""
+"""Tests for ml/signal.py (M33), its catalog-side samplers, slice signal
+and consistency checks in catalog/ml_q.py (M33/M34/M18/M20) and
+ml/business.py (M28-M31, M35-M37) — reference: src/kraken/app/metrics.py."""
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 import pytest
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.catalog import ml_q as MQ
 from qudo_etl_pipeline_spark.ml import business as B
 from qudo_etl_pipeline_spark.ml import signal as S
 
@@ -138,7 +142,7 @@ def test_sig_variables_and_spread(spark, deliver):
 def test_classification_metrics_perfect_and_weighted(spark):
     rows = [(0, 0)] * 50 + [(1, 1)] * 30 + [(1, 0)] * 20
     df = spark.createDataFrame(rows, "label: int, prediction: int")
-    m = S.classification_metrics(df, "label", "prediction")
+    m = MQ.classification_metrics(df, "label", "prediction")
     # sklearn-checked by hand: acc 0.8; weighted prec/rec/f1
     assert m["signal"] == pytest.approx(0.8)
     assert m["recall_score"] == pytest.approx(0.8)
@@ -151,15 +155,292 @@ def test_classification_metrics_perfect_and_weighted(spark):
 
 
 def test_signal_loss_rf(spark, labeled):
-    out = S.signal_loss(labeled, ["q1_tgt", "q2_tgt"])
+    out = MQ.signal_loss(labeled, ["q1_tgt", "q2_tgt"])
     assert out["all"]["signal"] > 0.7  # tgt features carry the cluster
     assert set(out) == {"all", "0", "1"}
     for k in ["signal", "f1_score", "precision", "recall_score", "cohen_kappa_score"]:
         assert 0 <= out["all"][k] <= 1
+    # the frame's signal loss is pattern_signal over its (tgt codes,
+    # label, count) table, here counted by hand from the rows
+    counts = Counter(
+        ((float(r["q1_tgt"]), float(r["q2_tgt"])), r["prediction"])
+        for r in labeled.collect()
+    )
+    table = [
+        Row(features=list(x), prediction=y, _w=n) for (x, y), n in counts.items()
+    ]
+    assert out == S.pattern_signal(table, "features", [0, 1], "prediction")
+
+
+# -- pattern_signal on hand-built pattern tables ------------------------------
+
+
+def _table(cells):
+    """Pattern-table rows from (features, label, weight) triples."""
+    return [Row(features=list(x), label=y, _w=w) for x, y, w in cells]
+
+
+def _split(rows, tgt, seed=42):
+    """The documented split of the (tgt pattern, label) cells: sorted,
+    one seeded generator, rint(w) binomial draws scaled back to w.
+    Returns {cell: (train, test)}."""
+    cells: dict = {}
+    for r in rows:
+        key = (tuple(r["features"][i] for i in tgt), r["label"])
+        cells[key] = cells.get(key, 0.0) + r["_w"]
+    keys = sorted(cells)
+    w = np.array([cells[k] for k in keys])
+    m = np.rint(w)
+    draws = np.random.default_rng(seed).binomial(m.astype(np.int64), 0.67)
+    train = draws * w / m
+    return {k: (t, wk - t) for k, t, wk in zip(keys, train, w)}
+
+
+def _weighted_scores(truth, guess, weight) -> dict:
+    """accuracy, support-weighted precision / recall / F1 and Cohen's
+    kappa of weighted (truth, guess) rows, from a numpy confusion matrix."""
+    labels = np.unique(np.concatenate([truth, guess]))
+    t = np.searchsorted(labels, truth)
+    g = np.searchsorted(labels, guess)
+    conf = np.zeros((len(labels), len(labels)))
+    np.add.at(conf, (t, g), weight)
+    n = conf.sum()
+    tp, actual, predicted = np.diag(conf), conf.sum(axis=1), conf.sum(axis=0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        prec = np.where(predicted > 0, tp / predicted, 0.0)
+        rec = np.where(actual > 0, tp / actual, 0.0)
+        f1 = np.where(prec + rec > 0, 2 * prec * rec / (prec + rec), 0.0)
+    acc = tp.sum() / n
+    pe = (actual * predicted).sum() / n**2
+    return {
+        "signal": round(acc, 3),
+        "f1_score": round(float(actual @ f1 / n), 3),
+        "precision": round(float(actual @ prec / n), 3),
+        "recall_score": round(float(actual @ rec / n), 3),
+        "cohen_kappa_score": round((acc - pe) / (1 - pe) if pe != 1 else 0.0, 3),
+    }
+
+
+def _expanded_oracle(rows, tgt, seed=42) -> dict:
+    """pattern_signal by a direct count over the expanded rows: every
+    integer cell becomes w unit rows, the first `train` of them in the
+    train part."""
+    split = _split(rows, tgt, seed)
+    pat, lab, is_train = [], [], []
+    for (p, y), (tr, te) in split.items():
+        k = int(round(tr + te))
+        pat += [p] * k
+        lab += [y] * k
+        is_train += [True] * int(round(tr)) + [False] * (k - int(round(tr)))
+    lab, is_train = np.array(lab), np.array(is_train)
+    codes = {p: i for i, p in enumerate(sorted(set(pat)))}
+    pid = np.array([codes[p] for p in pat])
+    labels = np.unique(lab)
+    votes = np.zeros((len(codes), len(labels)))
+    np.add.at(votes, (pid[is_train], np.searchsorted(labels, lab[is_train])), 1)
+    overall = labels[np.argmax(votes.sum(axis=0))]
+    # the column back-off: each tgt column's value -> train-majority
+    # label, applied from the least to the most accurate column so the
+    # most accurate column with a seen value wins
+    cols = np.array(pat)
+    guess, col_guess, col_seen, acc = np.full(len(lab), overall), [], [], []
+    for j in range(cols.shape[1]):
+        _, vid = np.unique(cols[:, j], return_inverse=True)
+        cv = np.zeros((vid.max() + 1, len(labels)))
+        np.add.at(cv, (vid[is_train], np.searchsorted(labels, lab[is_train])), 1)
+        acc.append(cv.max(axis=1).sum())
+        col_guess.append(labels[cv.argmax(axis=1)][vid])
+        col_seen.append(cv.sum(axis=1)[vid] > 0)
+    for j in np.argsort(-np.array(acc), kind="stable")[::-1]:
+        guess = np.where(col_seen[j], col_guess[j], guess)
+    # argmax takes the first maximum: ties go to the lower label
+    seen = votes.sum(axis=1)[pid] > 0
+    guess = np.where(seen, labels[votes.argmax(axis=1)][pid], guess)
+    ones = np.ones(len(lab))
+    out = {"all": _weighted_scores(lab[~is_train], guess[~is_train], ones[~is_train])}
+    for seg in labels:
+        sel = lab == seg
+        out[str(int(seg))] = _weighted_scores(lab[sel], guess[sel], ones[sel])
+    return out
+
+
+# 3 labels; tgt codes at positions 0 and 2; the non-tgt position 1 splits
+# some tgt patterns over several rows; the single row of pattern (2, 0)
+# falls in the holdout at some seeds
+_CELLS = [
+    ((0.0, 0.0, 0.0), 0, 30), ((0.0, 1.0, 0.0), 0, 9), ((0.0, 0.0, 0.0), 1, 12),
+    ((0.0, 0.0, 1.0), 1, 25), ((0.0, 1.0, 1.0), 2, 14), ((1.0, 0.0, 0.0), 2, 22),
+    ((1.0, 1.0, 0.0), 0, 8), ((1.0, 0.0, 1.0), 2, 17), ((1.0, 0.0, 1.0), 1, 15),
+    ((2.0, 0.0, 2.0), 1, 3), ((2.0, 1.0, 0.0), 0, 1),
+]
+
+
+def test_pattern_signal_equals_a_count_over_the_expanded_rows():
+    rows = _table(_CELLS)
+    # seed 7 leaves pattern (2, 0) without train weight while its
+    # column-0 value has some: the column back-off is exercised
+    split = _split(rows, [0, 2], 7)
+    assert split[((2.0, 0.0), 0)][0] == 0 < split[((2.0, 2.0), 1)][0]
+    for seed in (42, 7, 1):
+        got = S.pattern_signal(rows, "features", [0, 2], "label", seed)
+        assert got == _expanded_oracle(rows, [0, 2], seed), seed
+    assert set(got) == {"all", "0", "1", "2"}
+    # plain floats: the dict feeds Spark rows and sinks, which refuse
+    # numpy scalars
+    assert all(type(v) is float for m in got.values() for v in m.values())
+
+
+def test_pattern_signal_shuffled_rows_give_the_same_dict():
+    rows = _table(_CELLS)
+    want = S.pattern_signal(rows, "features", [0, 2], "label")
+    rng = np.random.default_rng(3)
+    for _ in range(5):
+        shuffled = [rows[i] for i in rng.permutation(len(rows))]
+        assert S.pattern_signal(shuffled, "features", [0, 2], "label") == want
+
+
+def _seed_where(rows, tgt, cond):
+    return next(s for s in range(1000) if cond(_split(rows, tgt, s)))
+
+
+def test_pattern_signal_majority_tie_goes_to_the_lower_label():
+    # pattern (0,) is split evenly between labels 1 and 2; label 0 is
+    # the overall majority, so the tie is not settled by the fallback
+    rows = _table([((0.0,), 1, 3), ((0.0,), 2, 3), ((1.0,), 0, 40)])
+    seed = _seed_where(
+        rows, [0],
+        lambda sp: sp[((0.0,), 1)][0] == sp[((0.0,), 2)][0] > 0,
+    )
+    got = S.pattern_signal(rows, "features", [0], "label", seed)
+    assert got == _expanded_oracle(rows, [0], seed)
+    assert got["1"]["signal"] == 1.0 and got["2"]["signal"] == 0.0
+
+
+def test_pattern_signal_unseen_pattern_gets_the_overall_majority():
+    # pattern (5,) has no train weight, nor has its one column's value;
+    # label 1 is the overall train majority, and the lower label 0 is not
+    rows = _table([((0.0,), 0, 5), ((1.0,), 1, 20), ((5.0,), 1, 1)])
+    seed = _seed_where(
+        rows, [0],
+        lambda sp: sp[((5.0,), 1)][0] == 0
+        and sp[((0.0,), 0)][0] > 0
+        and sp[((1.0,), 1)][0] > 0,
+    )
+    got = S.pattern_signal(rows, "features", [0], "label", seed)
+    assert got == _expanded_oracle(rows, [0], seed)
+    assert got["1"]["signal"] == 1.0
+    # the unseen pattern's row is scored in the holdout
+    assert got["all"]["signal"] == 1.0
+
+
+def test_pattern_signal_unseen_pattern_backs_off_to_the_best_column():
+    # column a decides the label and column b does not, so a ranks
+    # first wherever it stands. Pattern (a=0, b=2) has no train weight:
+    # its a value says 0, its b value and the overall majority say 1
+    cells = [
+        ((0.0, 0.0), 0, 20), ((0.0, 1.0), 0, 20), ((1.0, 0.0), 1, 10),
+        ((1.0, 1.0), 1, 10), ((1.0, 2.0), 1, 30), ((0.0, 2.0), 0, 1),
+    ]
+    for order in ([0, 1], [1, 0]):
+        rows = _table([(tuple(x[i] for i in order), y, w) for x, y, w in cells])
+        unseen = (tuple((0.0, 2.0)[i] for i in order), 0)
+        seed = _seed_where(
+            rows, [0, 1],
+            lambda sp: sp[unseen][0] == 0
+            and all(tr > 0 for k, (tr, _) in sp.items() if k != unseen),
+        )
+        got = S.pattern_signal(rows, "features", [0, 1], "label", seed)
+        assert got == _expanded_oracle(rows, [0, 1], seed), order
+        assert got["all"]["signal"] == got["0"]["signal"] == 1.0, order
+
+
+def test_pattern_signal_drops_null_codes_and_labels():
+    rows = _table(_CELLS)
+    dirty = rows + _table([
+        ((None, 0.0, 0.0), 0, 50),
+        ((0.0, 0.0, float("nan")), 2, 50),
+        ((1.0, 0.0, 1.0), None, 50),
+    ])
+    want = S.pattern_signal(rows, "features", [0, 2], "label")
+    assert S.pattern_signal(dirty, "features", [0, 2], "label") == want
+    # a NULL outside the tgt positions keeps its row
+    kept = rows + _table([((0.0, None, 0.0), 2, 50)])
+    assert S.pattern_signal(kept, "features", [0, 2], "label") != want
+
+
+def test_pattern_signal_edge_cases():
+    rows = _table(_CELLS)
+    assert S.pattern_signal(rows, "features", [], "label") == {}
+    nothing = _table([((None, 0.0, 0.0), 0, 5), ((1.0, 0.0, 1.0), None, 5)])
+    zeros = dict.fromkeys(
+        ["signal", "f1_score", "precision", "recall_score", "cohen_kappa_score"],
+        0.0,
+    )
+    assert S.pattern_signal(nothing, "features", [0, 2], "label") == {"all": zeros}
+
+
+def test_pattern_signal_splits_horvitz_thompson_weights():
+    # sampled-table weights are not integers: each cell's rint(w) draws
+    # are scaled back to w, so train + test keeps the cell's mass
+    cells = [
+        ((0.0,), 0, 12.7), ((0.0,), 1, 3.2), ((1.0,), 1, 9.5),
+        ((1.0,), 2, 4.4), ((2.0,), 2, 7.9), ((2.0,), 0, 1.3),
+    ]
+    rows = _table(cells)
+    split = _split(rows, [0])
+    for (p, y), (tr, te) in split.items():
+        w = dict(((c[0], c[1]), c[2]) for c in cells)[(p, y)]
+        assert tr + te == pytest.approx(w) and 0 <= tr <= w
+    guess = {}
+    for p in {p for p, _ in split}:
+        lw = {y: tr for (q, y), (tr, _) in split.items() if q == p}
+        guess[p] = max(sorted(lw), key=lambda y: lw[y])
+    keys = sorted(split)
+    truth = np.array([y for _, y in keys])
+    pred = np.array([guess[p] for p, _ in keys])
+    test = np.array([split[k][1] for k in keys])
+    full = np.array([sum(split[k]) for k in keys])
+    want = {"all": _weighted_scores(truth, pred, test)}
+    for seg in (0, 1, 2):
+        sel = truth == seg
+        want[str(seg)] = _weighted_scores(truth[sel], pred[sel], full[sel])
+    assert S.pattern_signal(rows, "features", [0], "label") == want
+
+
+def test_pattern_signal_of_a_tgt_derived_label_is_one_everywhere():
+    # the label is a tgt code, as the rules family's label is its rules
+    # column. Dense: 18 patterns of 5-40 rows, every pattern pure.
+    # Sparse: 192 singleton patterns, so every held-out pattern is unseen
+    # in train; a leading row-id column is as accurate on train and ranks
+    # first, but its held-out values are never seen, so the back-off
+    # moves on to the label's column
+    rng = np.random.default_rng(11)
+    dense = [
+        ((float(a), float(b), float(c)), a, int(rng.integers(5, 40)))
+        for a in range(3) for b in range(2) for c in range(3)
+    ]
+    codes = [
+        (a, b, c, d)
+        for a in range(3) for b in range(4) for c in range(4) for d in range(4)
+    ]
+    sparse = [((float(i), *map(float, x)), x[0], 1) for i, x in enumerate(codes)]
+    for cells, tgt in [(dense, [0, 2]), (sparse, [0, 1, 2, 3, 4])]:
+        for seed in (42, 7):
+            rows = _table(cells)
+            got = S.pattern_signal(rows, "features", tgt, "label", seed)
+            assert got == _expanded_oracle(rows, tgt, seed)
+            assert set(got) == {"all", "0", "1", "2"}
+            for key, m in got.items():
+                assert m["signal"] == m["f1_score"] == m["precision"] == 1.0, key
+                assert m["recall_score"] == 1.0, key
+            assert got["all"]["cohen_kappa_score"] == 1.0
+    # without the label's column the sparse table scores far below 1
+    got = S.pattern_signal(_table(sparse), "features", [0, 2, 3, 4], "label")
+    assert got["all"]["signal"] < 0.6
 
 
 def test_best_signal_metric_votes(spark, labeled):
-    best = S.best_signal_metric(labeled, ["q1_tgt", "q2_tgt"])
+    best = MQ.best_signal_metric(labeled, ["q1_tgt", "q2_tgt"])
     assert "all" in best and best["all"]["signal"] > 0.5
 
 
@@ -176,13 +457,13 @@ def test_resample_shapes(spark, labeled):
         r["label"]: r["n"]
         for r in base.groupBy("label").agg(F.count("*").alias("n")).collect()
     }
-    over = S._resample(base, "label", "over", 42)
+    over = MQ._resample(base, "label", "over", 42)
     oc = {
         r["label"]: r["n"]
         for r in over.groupBy("label").agg(F.count("*").alias("n")).collect()
     }
     assert oc[1.0] > counts[1.0]  # minority class grew
-    sm = S._resample(base, "label", "smote", 42)
+    sm = MQ._resample(base, "label", "smote", 42)
     sc = {
         r["label"]: r["n"]
         for r in sm.groupBy("label").agg(F.count("*").alias("n")).collect()
@@ -191,15 +472,15 @@ def test_resample_shapes(spark, labeled):
 
 
 def test_data_slicer_and_chi_square_signal(spark, labeled):
-    sliced, core, sub, pct = S.data_slicer(
+    sliced, core, sub, pct = MQ.data_slicer(
         labeled.filter(F.col("prediction") == 0),
         ["q1_tgt", "q2_tgt"],
         [0, 0],
     )
     assert set(core) | set(sub) == {"q1_tgt", "q2_tgt"}
-    res = S.chi_square_signal(sliced, labeled, 0)
+    res = MQ.chi_square_signal(sliced, labeled, 0)
     assert res["recall_score"] > 0.5
-    empty = S.chi_square_signal(
+    empty = MQ.chi_square_signal(
         labeled.filter(F.lit(False)), labeled, 0
     )
     assert empty == {"signal": 0, "precision": 0, "recall_score": 0, "f1_score": 0}
@@ -217,8 +498,8 @@ def test_consistency_checkers(spark, labeled):
 
         return predict
 
-    mc = S.model_consistency(labeled, refit)
-    lc = S.label_consistency(labeled, refit)
+    mc = MQ.model_consistency(labeled, refit)
+    lc = MQ.label_consistency(labeled, refit)
     # q1_tgt agrees with the cluster ~90% of the time -> high but <1 ARI
     assert mc > 0.4 and lc > 0.4
 
@@ -231,7 +512,7 @@ def test_get_all_metrics_composition(spark, labeled, deliver):
     m = B.get_all_metrics(
         feats,
         deliver=deliver,
-        tgt_cols=["q1_tgt", "q2_tgt"],
+        tgt_idx=[0, 1],
     )
     for key in [
         "silhouette", "davies_bouldin", "calinski_harabasz",
@@ -245,7 +526,7 @@ def test_get_all_metrics_composition(spark, labeled, deliver):
 def test_chi_square_signal_all_null_labels(spark):
     """A non-empty slice whose labels are all NULL must yield zeros, not
     a TypeError from NULL - int arithmetic."""
-    from qudo_etl_pipeline_spark.ml.signal import chi_square_signal
+    from qudo_etl_pipeline_spark.catalog.ml_q import chi_square_signal
 
     df = spark.createDataFrame(
         [(1, None), (2, None)], "id long, prediction string"
@@ -260,7 +541,7 @@ def test_smote_interpolates_true_nearest_neighbors(spark):
     wide gap. True k-NN interpolation synthesizes only WITHIN a
     sub-cluster; random-pair interpolation (the old implementation)
     would drop ~half its synthetic mass into the empty gap."""
-    from qudo_etl_pipeline_spark.ml.signal import _resample
+    from qudo_etl_pipeline_spark.catalog.ml_q import _resample
 
     rows = []
     rid = 0
@@ -296,7 +577,7 @@ def test_smote_max_class_rows_guard(spark):
     the majority size, and synthetic rows still interpolate inside the
     class manifold (donor pool is a subsample of the class, so the
     bounding-box property survives)."""
-    from qudo_etl_pipeline_spark.ml.signal import _resample
+    from qudo_etl_pipeline_spark.catalog.ml_q import _resample
 
     rows = []
     # class 0 (majority, "oversized" vs the tiny cap): 400 tight rows
@@ -325,7 +606,7 @@ def test_smote_max_class_rows_guard(spark):
 def test_classification_metrics_null_pairs_unscoreable(spark):
     """A NULL truth or prediction belongs to no confusion cell —
     metrics equal the NULL-free subset's (r11 NULL-salt sweep)."""
-    from qudo_etl_pipeline_spark.ml.signal import classification_metrics
+    from qudo_etl_pipeline_spark.catalog.ml_q import classification_metrics
 
     rows = [("a", "a"), ("a", "b"), ("b", "b"), (None, "a"), ("b", None)]
     df = spark.createDataFrame(rows, "label string, pred string")
@@ -341,7 +622,7 @@ def test_consistency_checks_skip_null_labels(spark):
     excluded instead of crashing sampleBy (r11 NULL-salt sweep)."""
     from pyspark.sql import functions as F
 
-    from qudo_etl_pipeline_spark.ml.signal import (
+    from qudo_etl_pipeline_spark.catalog.ml_q import (
         label_consistency,
         model_consistency,
     )

@@ -5,7 +5,9 @@ points (``pipeline``, ``workqueue``, ``sources.io``, ``session``) through
 package-internal imports, function-level (lazy) imports included, plus
 the ``__init__`` of every package on the way, which importing a
 submodule runs. No catalog, streaming or skew-salting module may be in
-it: they do not run on the survey path. Its size is a design metric:
+it: they do not run on the survey path. No closure module imports
+MLlib's classifiers or evaluators either: the survey's classifier and
+cluster metrics run on the driver. Its size is a design metric:
 the closure's line count stays under a budget, so growth is a visible
 edit of ``CLOSURE_LINES_MAX``.
 """
@@ -20,8 +22,11 @@ ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = ("pipeline", "workqueue", "sources.io", "session")
 FORBIDDEN_PREFIXES = (f"{PKG}.catalog", f"{PKG}.streaming")
 FORBIDDEN = {f"{PKG}.plans.skew", f"{PKG}.operators.checks"}
+# MLlib modules no survey step uses: the survey's classifier and its
+# cluster metrics run on the driver over pattern tables
+FORBIDDEN_PYSPARK = ("pyspark.ml.classification", "pyspark.ml.evaluation")
 # lines of every closure module, summed; lower it when the closure shrinks
-CLOSURE_LINES_MAX = 4837
+CLOSURE_LINES_MAX = 4504
 
 
 def _path(mod: str) -> Path | None:
@@ -31,21 +36,26 @@ def _path(mod: str) -> Path | None:
     return base.with_suffix(".py") if base.with_suffix(".py").exists() else None
 
 
-def _imports(mod: str) -> set[str]:
-    """Package modules ``mod`` imports anywhere in its body."""
+def _imported_names(mod: str) -> set[str]:
+    """Every module name ``mod`` imports anywhere in its body; a
+    ``from a import b`` yields both ``a`` and ``a.b``."""
     out = set()
     for node in ast.walk(ast.parse(_path(mod).read_text())):
         if isinstance(node, ast.Import):
-            out |= {a.name for a in node.names if a.name.split(".")[0] == PKG}
-        elif (
-            isinstance(node, ast.ImportFrom)
-            and node.level == 0
-            and (node.module or "").split(".")[0] == PKG
-        ):
+            out |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
             out.add(node.module)
-            # `from pkg import submodule`
             out |= {f"{node.module}.{a.name}" for a in node.names}
-    return {m for m in out if _path(m) is not None}
+    return out
+
+
+def _imports(mod: str) -> set[str]:
+    """Package modules ``mod`` imports anywhere in its body."""
+    return {
+        m
+        for m in _imported_names(mod)
+        if m.split(".")[0] == PKG and _path(m) is not None
+    }
 
 
 def survey_closure() -> set[str]:
@@ -76,3 +86,13 @@ def test_survey_closure_stays_within_its_line_budget():
         len(_path(m).read_text().splitlines()) for m in survey_closure()
     )
     assert lines <= CLOSURE_LINES_MAX, lines
+
+
+def test_survey_closure_imports_no_mllib_classifier_or_evaluator():
+    leaked = sorted(
+        (m, name)
+        for m in survey_closure()
+        for name in _imported_names(m)
+        if any(name == f or name.startswith(f + ".") for f in FORBIDDEN_PYSPARK)
+    )
+    assert not leaked, leaked
