@@ -582,7 +582,7 @@ def sig_spread_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "offsets and -99 ignore group (rows-only: nested MLlib fits)",
 )
 def hierarchical_segmentation_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.clustering import hierarchical_segmentation
+    from qudo_etl_pipeline_spark.catalog.ml_q import hierarchical_segmentation
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("features"),
@@ -617,7 +617,7 @@ def hierarchical_segmentation_rows(spark: SparkSession, sf_dir: str) -> DataFram
                      ELSE 2 + vec_id % 2 END AS INT) AS prediction
     FROM embeddings
     -- the operator explicitly excludes the NULL pivot group from the
-    -- group loop (clustering.py hierarchical_segmentation)
+    -- group loop (ml_q.py hierarchical_segmentation)
     WHERE label IS NOT NULL
     """,
     survey_ids=["M10"],
@@ -627,7 +627,7 @@ def hierarchical_segmentation_rows(spark: SparkSession, sf_dir: str) -> DataFram
 def hierarchical_segmentation_pinned(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.clustering import hierarchical_segmentation
+    from qudo_etl_pipeline_spark.catalog.ml_q import hierarchical_segmentation
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),

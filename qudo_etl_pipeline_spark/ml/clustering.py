@@ -1,5 +1,6 @@
 """Clustering algorithms: KMeans multi-seed, optimal-k/elbow, Gaussian
-mixture with BIC/AIC, rules-based, hierarchical wrapper.
+mixture with BIC/AIC, rules-based. The hierarchical wrapper, which no
+survey step calls, is ``catalog.ml_q.hierarchical_segmentation``.
 
 Re-implements the reference's clustering engine (reference:
 src/kraken/app/clustering.py) on MLlib:
@@ -14,8 +15,6 @@ src/kraken/app/clustering.py) on MLlib:
   log-likelihood and EFFECTIVE component count            (clustering.py:921-941)
 - reject mixtures with any class < 1% of rows             (clustering.py:944-945)
 - rules-based = label-encode one answer column            (clustering.py:1037-1077)
-- hierarchical: per-group optimal-k in 2..3, global label
-  offset, -99 for ignored groups                          (clustering.py:140-155,567-625)
 
 Documented deltas (SURVEY §7 "known hard spots"): sklearn KMeans
 (k-means++, n_init=10) vs MLlib (k-means||) and sklearn
@@ -30,9 +29,6 @@ Scale notes (100 TB design):
   driver thread pool (scheduler interleaves stages; data stays put).
 - Quality metrics are one collect of the fit's (features, prediction,
   count) table each, computed on the driver (quality.py).
-- The hierarchical wrapper loops driver-side over FEW groups (pivot
-  cardinality), each an independent MLlib fit — no nested parallelism,
-  no data re-pickling (the reference forks joblib children per task).
 """
 
 from __future__ import annotations
@@ -370,80 +366,3 @@ def rules_based(
     return out.withColumn(pred, F.col(rules_col + "__code")).drop(
         rules_col + "__code"
     )
-
-
-def hierarchical_segmentation(
-    df: DataFrame,
-    pivot_col: str,
-    features_col: str = FEATURES,
-    ignore_value=None,
-    seed: int = 42,
-    hier_ks: list[int] | None = None,
-    fitter=None,
-) -> DataFrame:
-    """Two-level segmentation (clustering.py:140-155,567-625, M10):
-    group rows by `pivot_col`; per group pick optimal k in 2..3, run
-    KMeans, offset labels so ids are globally unique; rows of the
-    ignored group get label -99. Groups are FEW (pivot cardinality):
-    the loop is driver-side; each fit is a distributed MLlib job.
-
-    ``fitter``: optional ``sub_df -> (labeled_df, k)`` replacing the
-    default optimal-k + KMeans per group — the reference dispatches any
-    family into the hierarchical wrapper (e.g. LCA via
-    ``lca_with_timer(hierarchical=...)``, clustering.py:841-845); pass
-    e.g. a closure over ``ml.lca.lca_fit`` for that behavior.
-    """
-    hier_ks = hier_ks or [2, 3]
-    # every group runs |ks| optimal-k fits + 1 final fit, each an
-    # iterative scan of its slice — cache the input once so those reads
-    # hit memory instead of re-scanning the source per (group, k, iter);
-    # released after the eager fits (the returned lazy union then pays
-    # one uncached pass per group for the cheap transforms)
-    df = df.cache()
-    try:
-        groups = sorted(
-            r[pivot_col]
-            for r in df.select(pivot_col).distinct().collect()
-            if r[pivot_col] is not None
-        )
-        # per-group fits are independent slice jobs — run them on a
-        # thread pool (pool.map preserves group order); the label
-        # offsets, which depend on every earlier group's k, are applied
-        # afterwards in the same sorted-group order as the serial loop,
-        # so the output labels are identical
-        def fit_group(g):
-            sub = df.filter(F.col(pivot_col) == g)
-            if ignore_value is not None and g == ignore_value:
-                return sub.withColumn(PREDICTION, F.lit(-99)), 0
-            if fitter is not None:
-                return fitter(sub)
-            best_k = optimal_k(sub, features_col, ks=hier_ks, seed=seed)
-            labeled = kmeans_fit(
-                sub, best_k, seed=seed, features_col=features_col
-            )["labels"]
-            return labeled, best_k
-
-        if not groups:  # all-null pivot / empty input: empty labeling
-            return df.withColumn(PREDICTION, F.lit(None).cast("int")).filter(
-                F.lit(False)
-            )
-        with ThreadPoolExecutor(max_workers=min(4, max(1, len(groups)))) as pool:
-            fitted = list(pool.map(fit_group, groups))
-        parts: list[DataFrame] = []
-        offset = 0
-        for (labeled, best_k), g in zip(fitted, groups):
-            if ignore_value is not None and g == ignore_value:
-                parts.append(labeled)
-                continue
-            parts.append(
-                labeled.withColumn(
-                    PREDICTION, F.col(PREDICTION) + F.lit(offset)
-                )
-            )
-            offset += best_k
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    finally:
-        df.unpersist()

@@ -21,6 +21,8 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
    inference chain runs beside that collect
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
+   — every table is a local frame, written from the driver with no
+   Spark job, one file per table as the reference's pandas calls write
 
 The reference forks joblib child processes per family and re-pickles
 the table into each (clustering.py:1085-1088); here the cleaned encoded
@@ -440,7 +442,8 @@ def run_all_segmentations(
 ) -> dict:
     """The full main.py:45-183 flow. Returns
     {scheme: {algorithm: {labels, deliver, discover, mode_list, metrics}}};
-    optionally writes metrics CSV + deliver/discover Parquet."""
+    optionally writes metrics CSV + deliver/discover Parquet, each from
+    the driver (``sources.io``: a local frame's sink starts no job)."""
     cleaned = CL.clean_responses(responses, questions=questions).cache()
     all_results: dict = {}
     try:

@@ -9,5 +9,4 @@ from qudo_etl_pipeline_spark.sources.io import (  # noqa: F401
     write_csv_single,
     write_json_doc,
     write_parquet,
-    read_or_build_cache,
 )

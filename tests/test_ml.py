@@ -10,7 +10,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.catalog.ml_q import adjusted_rand_index
+from qudo_etl_pipeline_spark.catalog.ml_q import (
+    adjusted_rand_index,
+    hierarchical_segmentation,
+)
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
 
@@ -156,7 +159,7 @@ def test_hierarchical_offsets_and_ignore(spark, blobs):
         "grp",
         F.when(F.col("row_id") < 120, F.lit("a")).otherwise(F.lit("b")),
     )
-    out = C.hierarchical_segmentation(
+    out = hierarchical_segmentation(
         two_groups, "grp", hier_ks=[2], seed=42
     )
     by_grp = {
@@ -168,7 +171,7 @@ def test_hierarchical_offsets_and_ignore(spark, blobs):
     assert sorted(by_grp["a"]) == [0, 1]
     assert sorted(by_grp["b"]) == [2, 3]  # offset past group a's k
 
-    ignored = C.hierarchical_segmentation(
+    ignored = hierarchical_segmentation(
         two_groups, "grp", hier_ks=[2], seed=42, ignore_value="b"
     )
     vals = {
@@ -198,7 +201,7 @@ def test_hierarchical_with_custom_fitter(spark):
         fit = LCA.lca_fit(sub, ["q0"], k=2, seed=42, max_iter=20)
         return fit["labels"], fit["k"]
 
-    out = C.hierarchical_segmentation(df, "grp", fitter=lca_fitter)
+    out = hierarchical_segmentation(df, "grp", fitter=lca_fitter)
     by_grp = {
         r["grp"]: sorted(r["labels"])
         for r in out.groupBy("grp")

@@ -89,6 +89,27 @@ def test_end_to_end_segmentation(spark, responses, tmp_path):
         str(tmp_path / "out" / "behavioral" / "kmeans_and_pca" / "deliver")
     )
     assert deliver_rt.count() == by_algo["kmeans_and_pca"]["deliver"].count()
+    # every sink reads back, by Spark and by pandas, equal to the frame
+    # the pipeline returns; the CSV's doubles parse to the metrics' floats
+    import pandas as pd
+
+    def plain(v):  # a pandas cell as the collected Python value
+        v = v.tolist() if hasattr(v, "tolist") else v
+        return None if not isinstance(v, list) and pd.isna(v) else v
+
+    for algo, res in by_algo.items():
+        for sink in ("deliver", "discover"):
+            path = str(tmp_path / "out" / "behavioral" / algo / sink)
+            rows = res[sink].collect()
+            assert spark.read.parquet(path).collect() == rows, (algo, sink)
+            pdf = pd.read_parquet(path)
+            assert list(pdf.columns) == res[sink].columns
+            got = [tuple(map(plain, t)) for t in pdf.itertuples(index=False)]
+            assert got == [tuple(r) for r in rows], (algo, sink)
+    for r in metrics_csv.collect():
+        m = by_algo[r["algorithm"]]["metrics"]
+        for key in ("silhouette", "davies_bouldin", "calinski_harabasz"):
+            assert float(r[key]) == float(m.get(key) or 0.0), (r, key)
 
 
 def test_workqueue_protocol(tmp_path):

@@ -65,9 +65,9 @@ def test_population_modes_not_selected_only_kept(spark, multiselect):
 
 
 def test_io_roundtrips(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id: bigint, name: string"
-    )
+    from qudo_etl_pipeline_spark.operators.contingency import local_frame
+
+    df = local_frame(spark, "id: bigint, name: string", [(1, "a"), (2, "b")])
     pq = str(tmp_path / "t.parquet")
     IO.write_parquet(df, pq)
     assert IO.exists(spark, pq)
@@ -95,6 +95,8 @@ def test_io_roundtrips(spark, tmp_path):
 
 
 def test_read_or_build_cache(spark, tmp_path):
+    from qudo_etl_pipeline_spark.catalog.io_q import read_or_build_cache
+
     path = str(tmp_path / "cache.parquet")
     calls = []
 
@@ -102,9 +104,9 @@ def test_read_or_build_cache(spark, tmp_path):
         calls.append(1)
         return spark.range(3).toDF("id")
 
-    first = IO.read_or_build_cache(spark, path, build)
+    first = read_or_build_cache(spark, path, build)
     assert first.count() == 3 and len(calls) == 1
-    second = IO.read_or_build_cache(spark, path, build)
+    second = read_or_build_cache(spark, path, build)
     assert second.count() == 3 and len(calls) == 1  # cache hit, no rebuild
 
 
@@ -124,7 +126,7 @@ def test_json_doc_uri_without_session_raises(tmp_path):
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from qudo_etl_pipeline_spark.sources.io import read_orc, write_orc
+    from qudo_etl_pipeline_spark.catalog.io_q import read_orc, write_orc
 
     src = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     path = str(tmp_path / "nation_orc")
@@ -148,7 +150,7 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
 def test_partitioned_sink_dynamic_overwrite(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from qudo_etl_pipeline_spark.sources.io import write_parquet_partitioned
+    from qudo_etl_pipeline_spark.catalog.io_q import write_parquet_partitioned
 
     path = str(tmp_path / "events_by_type")
     full = spark.createDataFrame(
@@ -179,7 +181,7 @@ def test_partitioned_sink_dynamic_overwrite(spark, tmp_path):
 def test_schema_evolution_merged_read(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from qudo_etl_pipeline_spark.sources.io import read_parquet_merged
+    from qudo_etl_pipeline_spark.catalog.io_q import read_parquet_merged
 
     path = str(tmp_path / "evolving")
     spark.createDataFrame(
