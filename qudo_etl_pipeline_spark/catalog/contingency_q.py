@@ -1,4 +1,6 @@
-"""Contingency/inference catalog entries (SURVEY §2.4, §2.7 M21-M26).
+"""Contingency/inference catalog entries (SURVEY §2.4, §2.7 M21-M26),
+and the ContingencyTables readers only the catalog uses: the chi²
+statistics, dense and post-hoc cells and Cramér's V as frames.
 
 The survey-shaped input is synthesized from TPC-H tables: cluster =
 c_mktsegment, variables = nation name + an account-balance bucket. The
@@ -17,12 +19,133 @@ from pyspark.sql import functions as F
 from qudo_etl_pipeline_spark.catalog import load_table, register
 from qudo_etl_pipeline_spark.functions.rounding import ref_round, ref_round_sql
 from qudo_etl_pipeline_spark.operators.contingency import (
-    chi2_by_variable,
+    ContingencyTables,
+    _frame,
     cluster_mode_list,
     contingency_tables,
     deliver_stats,
-    dense_cells,
 )
+
+
+# The catalog's readers of a ContingencyTables: the survey reads only
+# deliver, discover and the mode list (operators.contingency).
+
+
+def chi2_by_variable(tables: ContingencyTables) -> DataFrame:
+    """Per-variable chi-squared test over all crosstabs at once.
+
+    Returns: variable, chi2_stat, dof, yates, n_values, n_clusters,
+    p_value. Statistical semantics live in
+    ``operators.contingency._finalize``.
+    """
+    return _frame(
+        tables,
+        "variable: string, chi2_stat: double, dof: bigint, yates: boolean,"
+        " n_values: bigint, n_clusters: bigint, p_value: double",
+        [
+            (
+                v.name,
+                v.chi2_stat,
+                v.dof,
+                v.yates,
+                v.n_values,
+                len(v.clusters),
+                v.p_value,
+            )
+            for v in tables.variables()
+        ],
+    )
+
+
+def dense_cells(tables: ContingencyTables) -> DataFrame:
+    """Every variable's dense (value x cluster) crosstab, one row per
+    cell, with its row, column and grand totals (:func:`_finalize`)."""
+    return _frame(
+        tables,
+        "variable: string, {cluster}, value: string, observed: bigint,"
+        " w_observed: double, row_tot: bigint, col_tot: bigint, n: bigint",
+        [
+            (
+                v.name,
+                g.cluster,
+                g.value,
+                g.observed,
+                g.w_observed,
+                g.row_tot,
+                g.col_tot,
+                v.n,
+            )
+            for v in tables.variables()
+            for g in v.grid
+        ],
+    )
+
+
+def post_hoc_cells(tables: ContingencyTables, alpha: float = 0.05) -> DataFrame:
+    """Adjusted residuals + Bonferroni post-hoc per crosstab cell.
+
+    Returns one row per (variable, cluster, value) of every variable whose
+    chi-squared p <= alpha, with ``adj_residual`` (rounded to 3, as the
+    reference does before squaring — chisquared_tester.py:475) and
+    ``post_hoc`` in {'pos','neg','neu'} (:meth:`_Variable.post_hoc`).
+    """
+    return _frame(
+        tables,
+        "variable: string, {cluster}, value: string, observed: bigint,"
+        " w_observed: double, expected: double, adj_residual: double,"
+        " post_hoc: string, p_value: double, chi2_stat: double",
+        [
+            (
+                v.name,
+                g.cluster,
+                g.value,
+                g.observed,
+                g.w_observed,
+                g.expected,
+                z,
+                label,
+                v.p_value,
+                v.chi2_stat,
+            )
+            for v in tables.variables()
+            if v.p_value <= alpha
+            for g, z, label in v.post_hoc(alpha)
+        ],
+    )
+
+
+def cramers_v(tables: ContingencyTables) -> DataFrame:
+    """Cramér's V effect size per variable — the magnitude companion to
+    the chi-squared p-value (p says "dependent"; V says "how much"):
+    V = sqrt(chi2 / (n * (min(r, c) - 1))), in [0, 1].
+
+    Reads the finalized variables: the statistic and the observation
+    total (the dense grid's grand total) per variable, in one local
+    frame the projection below folds on the driver.
+    """
+    per_var = _frame(
+        tables,
+        "variable: string, chi2_stat: double, dof: bigint, n_obs: bigint,"
+        " n_values: bigint, n_clusters: bigint",
+        [
+            (v.name, v.chi2_stat, v.dof, v.n, v.n_values, len(v.clusters))
+            for v in tables.variables()
+        ],
+    )
+    k = (
+        F.least(F.col("n_values"), F.col("n_clusters")) - F.lit(1)
+    ).cast("double")
+    # V from the 6-rounded statistic, mirroring the chi2 query's
+    # rounding so the oracle derives from the identical value
+    stat6 = F.round(F.col("chi2_stat"), 6)
+    v = F.sqrt(stat6 / (F.col("n_obs").cast("double") * k))
+    return per_var.select(
+        "variable",
+        stat6.alias("chi2_stat"),
+        "dof",
+        "n_obs",
+        F.when(k > 0, ref_round(v, 6)).alias("cramers_v6"),
+    )
 
 # Shared CTE prefix: the melted customer table and its crosstab cells.
 _MELT_CTE = """
@@ -649,7 +772,6 @@ def deliver_stats_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "|variables|-row broadcast-sized arithmetic",
 )
 def cramers_v_by_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.operators.contingency import cramers_v
 
     t = contingency_tables(_survey_wide(spark, sf_dir), "cluster", id_vars=["id"])
     return cramers_v(t)

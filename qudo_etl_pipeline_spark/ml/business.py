@@ -21,33 +21,28 @@ Re-implements (reference: src/kraken/app/metrics.py):
 (columns q_code, targeting_seg, sig_more_category array, chi_2_result,
 pop_mode...): a table sized by the survey's schema (significant
 variables x segments), so the metrics over it run in Python over its
-rows. They take the rows, a DataFrame, which they collect once, or a
-``Future`` of either, which they wait for.
-`labeled` is the respondent table with a `prediction` column. The
-metrics over it read one pattern table (``features.pattern_table``):
-the distinct (columns, prediction) combinations and their row counts,
-sized by the answer options rather than the respondents, so they are
-computed on the driver from its rows.
+rows. They take the rows, or a DataFrame, which they collect once.
+`labeled` is the respondent table with a `prediction` column, or the
+survey's labelled pattern table. The metrics over it read one pattern
+table: the distinct (columns, prediction) combinations and their row
+counts, sized by the answer options rather than the respondents, so
+they are computed on the driver from its rows.
 """
 
 from __future__ import annotations
 
 import re
 from collections import Counter
-from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, Row
 
 from qudo_etl_pipeline_spark.ml import features as FE
 
-Deliver = DataFrame | list[Row] | Future
+Deliver = DataFrame | list[Row]
 
 
 def _rows(deliver: Deliver) -> list[Row]:
-    """The deliver rows: a Future is waited for, and a DataFrame is
-    collected once."""
-    if isinstance(deliver, Future):
-        deliver = deliver.result()
+    """The deliver rows: a DataFrame is collected once."""
     return deliver.collect() if isinstance(deliver, DataFrame) else deliver
 
 
@@ -266,7 +261,7 @@ def significant_variables_and_spread(
 
 
 def get_all_metrics(
-    labeled: DataFrame,
+    labeled: DataFrame | list,
     deliver: Deliver | None = None,
     features_col: str = "features",
     pred: str = "prediction",
@@ -279,21 +274,24 @@ def get_all_metrics(
     one dict. The consistency checks need a train->scorer refit the
     survey has no handle on; their keys stay, NaN.
 
-    Every metric of ``labeled`` comes from ONE collect of its (features,
-    `mc_` columns, prediction, count) pattern table, computed on the
+    Every metric of the labelled rows comes from ONE (features, `mc_`
+    columns, prediction, count ``_w``) pattern table, computed on the
     driver: quality, social presence, magnitude's cluster sizes and the
     signal loss, whose `_tgt` columns are the ``features`` positions
-    ``tgt_idx``. The social presence needs the original answers, which
-    label codes never match ('facebook', metrics.py:840 full_data): an
-    `mc_` column in ``code_maps`` holds codes and is decoded with them.
-
-    The deliver-derived metrics run once the deliver rows arrive:
-    ``deliver`` may be a ``Future`` still being computed."""
+    ``tgt_idx``. ``labeled`` is that table's rows (the survey's, summed
+    from its scheme table) or a frame, whose table is collected once.
+    The social presence needs the original answers, which label codes
+    never match ('facebook', metrics.py:840 full_data): an `mc_` column
+    in ``code_maps`` holds codes and is decoded with them."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
-    cands = [c for c in labeled.columns if "mc_" in c]
-    table = FE.pattern_table(labeled, [features_col, *cands, pred])
+    if isinstance(labeled, DataFrame):
+        cands = [c for c in labeled.columns if "mc_" in c]
+        table = FE.pattern_table(labeled, [features_col, *cands, pred])
+    else:
+        table = labeled
+        cands = [c for c in (table[0] if table else ()) if "mc_" in c]
     metrics = Q.pattern_quality(table, features_col, pred, n_seed)
     metrics["fb_presence"] = _presence(
         table, cands, sm_platform, pred, code_maps or {}

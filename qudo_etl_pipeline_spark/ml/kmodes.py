@@ -6,11 +6,12 @@ KModes(init='Cao'), KPrototypes(init='Cao', n_init=1)). One entry point,
 ``kmodes_fit``, fits both: KPrototypes is the ``num_cols`` case.
 
 One fit device, the one ``ml.lca`` shares: the whole Cao init + Lloyd
-loop is a function of the (answer pattern, count, min id) table that
-``features.pattern_table`` collects — the exact table up to its
+loop is a function of the (answer pattern, count, min id) table, read
+off the rows of a ``features.scheme_table`` — the exact table up to its
 threshold, a priority sample with Horvitz-Thompson weights above it.
-The loop runs in numpy over the weighted patterns, zero Spark jobs;
-labels are one lazy assignment pass over every row.
+``kmodes_table`` fits those rows in numpy, zero Spark jobs, and returns
+the fitted row expression ``label``; ``kmodes_fit`` is one scheme-table
+read of a frame, that fit, and ``label`` over every row (lazy).
 
 - **Cao init** (deterministic, no seed): density(x) = mean over
   attributes of freq(x_attr)/n; first mode = argmax density; mode j =
@@ -35,17 +36,18 @@ Documented deltas: an emptied cluster keeps its previous mode (the lib
 re-seeds from a random point); KPrototypes numeric init takes the
 Cao-selected pattern's numeric values.
 
-Scale notes (100 TB design): a fit costs the pattern table's shuffle;
+Scale notes (100 TB design): a fit costs the scheme table's shuffle;
 the driver holds at most ``features.PATTERN_THRESHOLD`` patterns at any
 input size, and labelling is embarrassingly parallel.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.ml.features import pattern_table
+from qudo_etl_pipeline_spark.ml import features as FE
 
 
 def _hamming(cols: list[str], mode: dict) -> Column:
@@ -110,8 +112,6 @@ def _kmodes_patterns(
     are the modes of the LAST assignment (what labels/cost are measured
     under — on a non-converged exit the returned modes are one update
     ahead of the labels)."""
-    import numpy as np
-
     P = len(pat)
     w = np.array([r["_w"] for r in pat], dtype=np.float64)
     # None-safe id tie-break, NULLS FIRST like Spark's
@@ -256,14 +256,59 @@ def _kmodes_patterns(
     return label_modes, modes, cost, n_iter
 
 
-def default_gamma(df: DataFrame, num_cols: list[str]) -> float:
-    """kmodes lib default: 0.5 * mean population std of numeric cols."""
+def default_gamma(pat: list[dict], num_cols: list[str]) -> float:
+    """kmodes lib default: 0.5 * mean population std of the numeric
+    columns over the weighted patterns (NULLs skipped, as
+    ``stddev_pop`` skips them; a column with no value counts 0)."""
     if not num_cols:
         return 0.0
-    row = df.agg(
-        *[F.stddev_pop(F.col(c).cast("double")).alias(c) for c in num_cols]
-    ).collect()[0]
-    return 0.5 * sum(row[c] or 0.0 for c in num_cols) / len(num_cols)
+    stds = []
+    for c in num_cols:
+        x = np.array([float(r[c]) for r in pat if r[c] is not None])
+        w = np.array([float(r["_w"]) for r in pat if r[c] is not None])
+        if not w.sum():
+            stds.append(0.0)
+            continue
+        mean = (w * x).sum() / w.sum()
+        stds.append(float(np.sqrt((w * (x - mean) ** 2).sum() / w.sum())))
+    return 0.5 * sum(stds) / len(num_cols)
+
+
+def kmodes_table(
+    rows: list[dict],
+    cat_cols: list[str],
+    k: int,
+    num_cols: list[str] | None = None,
+    gamma: float | None = None,
+    max_iter: int = 20,
+) -> dict:
+    """KModes (num_cols empty) / KPrototypes (num_cols given: mixed
+    distance sq_euclid(num) + gamma * hamming(cat), clustering.py:328-346)
+    over scheme-table rows (``features.SchemeTable.rows``, raw or coded),
+    grouped to their (``cat_cols``, ``num_cols``) patterns. Zero Spark
+    jobs.
+
+    Returns dict(label, modes, cost, n_iter, k, gamma): ``label`` maps a
+    frame holding those columns to the frame with a ``prediction``
+    column. Deterministic: Cao init, fixed tie-breaks, no randomness.
+    """
+    num_cols = list(num_cols or [])
+    pat = FE.group_patterns(rows, [*cat_cols, *num_cols])
+    if gamma is None:
+        gamma = default_gamma(pat, num_cols)
+    label_modes, modes, cost, n_iter = _kmodes_patterns(
+        pat, cat_cols, num_cols, k, gamma, max_iter
+    )
+    return {
+        "label": lambda df: _assign(
+            df, label_modes, cat_cols, num_cols, gamma
+        ).drop("_dist"),
+        "modes": modes,
+        "cost": cost,
+        "n_iter": n_iter,
+        "k": k,
+        "gamma": gamma,
+    }
 
 
 def kmodes_fit(
@@ -275,26 +320,10 @@ def kmodes_fit(
     max_iter: int = 20,
     id_col: str = "row_id",
 ) -> dict:
-    """Full KModes (num_cols empty) / KPrototypes (num_cols given: mixed
-    distance sq_euclid(num) + gamma * hamming(cat), clustering.py:328-346)
-    fit.
-
-    Returns dict(labels=DataFrame with `prediction`, modes, cost, n_iter).
-    Deterministic: Cao init, fixed tie-breaks, no randomness.
-    """
-    num_cols = num_cols or []
-    if gamma is None:
-        gamma = default_gamma(df, num_cols)
-    pat = pattern_table(df, cat_cols, num_cols, min_col=id_col)
-    label_modes, modes, cost, n_iter = _kmodes_patterns(
-        pat, cat_cols, num_cols, k, gamma, max_iter
-    )
-    labels = _assign(df, label_modes, cat_cols, num_cols, gamma)
-    return {
-        "labels": labels.drop("_dist"),
-        "modes": modes,
-        "cost": cost,
-        "n_iter": n_iter,
-        "k": k,
-        "gamma": gamma,
-    }
+    """:func:`kmodes_table` over ``df``'s scheme table (Cao's ties go to
+    the least ``id_col``), plus ``labels``: ``df`` with `prediction`."""
+    num_cols = list(num_cols or [])
+    table = FE.scheme_table(df, [*cat_cols, *num_cols], id_col=id_col)
+    fit = kmodes_table(table.rows, cat_cols, k, num_cols, gamma, max_iter)
+    fit["labels"] = fit["label"](df)
+    return fit

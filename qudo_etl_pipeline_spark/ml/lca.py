@@ -11,14 +11,15 @@ clustering.py:834-904. There is no JVM/MLlib equivalent; this module
 implements both models — a finite mixture of independent per-column
 factors — as one EM loop over weighted answer patterns.
 
-One path fits and selects: ``lca_fit`` is the one-model case of
-``lca_select``. A private prepare step normalizes the input once
-(categorical answers as strings, rows with a NULL numeric dropped) and
-collects the (answer pattern, count) table through
-``features.pattern_table``, the device ``ml.kmodes`` shares: the exact
-table up to its threshold, a priority sample with Horvitz-Thompson
-weights above it. Every (k, seed) of the grid then runs the same EM,
-and only the min-BIC model is labeled:
+One path fits and selects: ``lca_table`` fits a (k, seed) grid over the
+rows of a ``features.scheme_table``, the table ``ml.kmodes`` reads too:
+the exact table up to its threshold, a priority sample with
+Horvitz-Thompson weights above it. The rows are grouped to their
+(answer pattern, count) table once, categorical answers as strings and
+rows with a NULL numeric dropped (poLCA/depmixS4 na.rm). Every (k, seed)
+runs the same EM, and the min-BIC model comes back with its row
+expression ``label``. ``lca_select`` and ``lca_fit`` (its one-model
+case) are one scheme-table read of a frame, that fit and its labels:
 
 - **Pattern EM**: the row likelihood depends on the row only through
   its pattern, so every iteration's sufficient statistics are exact
@@ -27,8 +28,8 @@ and only the min-BIC model is labeled:
   table for the same reason); gaussian factors ride the same weighted
   arrays. The whole k x restart grid costs the table's shuffle.
 - **Labels**: ``_estep_sql`` is the per-class log-joint as SQL text;
-  the winner's labels are ``F.expr`` over it, a lazy map-only argmax
-  over every row.
+  ``label`` is ``F.expr`` over it, a map-only argmax over any frame
+  with the model's columns — every row lazily, or a pattern table.
 - **Converge**: stop when the total log-likelihood improves < tol.
 - **Selection**: min BIC over k x seeded restarts (poLCA semantics),
   first wins ties. BIC = -2 logL + p ln n with p = (k-1) +
@@ -39,7 +40,7 @@ Documented delta: poLCA's EM + Newton-Raphson hybrid and R's RNG are
 not reproducible bit-for-bit; tests assert model recovery on planted
 mixtures (ARI) and BIC monotonicity, not label identity (SURVEY §7).
 
-Scale notes (100 TB design): a selection costs the pattern table's
+Scale notes (100 TB design): a selection costs the scheme table's
 shuffle, with schema-bound output; the driver holds theta (KB) and at
 most ``features.PATTERN_THRESHOLD`` patterns at any input size.
 Labelling is one map-only pass.
@@ -138,8 +139,7 @@ def _init_theta(
 
 
 def _values_from_patterns(pat: list, cols: list[str]) -> dict[str, list]:
-    """Sorted distinct non-null values per column of the pattern table
-    (on the exact table, the key sets of ``build_code_maps(df, cols)``)."""
+    """Sorted distinct non-null values per column of the pattern table."""
     vals: dict[str, set] = {c: set() for c in cols}
     for r in pat:
         for c in cols:
@@ -302,49 +302,47 @@ def _em_patterns(
     }
 
 
-def _prepare(
-    df: DataFrame, cols: list[str], num_cols: list[str]
-) -> tuple[DataFrame, list, dict[str, list], float]:
-    """Entry normalization and the pattern table, once per selection.
-
-    Categorical values are modeled AS STRINGS (a raw pattern collect
-    would keep native types, giving a different value sort order — int
-    10 < 2 lexicographically — and therefore different seeded inits).
-    poLCA/depmixS4 drop incomplete rows (na.rm); a NULL numeric would
-    otherwise NaN the fit. Returns (df, pat, values, n), ``n`` the
+def _patterns(
+    rows: list[dict], cols: list[str], num_cols: list[str]
+) -> tuple[list[dict], dict[str, list], float]:
+    """The (pattern, ``_w``) table of scheme-table rows, once per
+    selection: rows with a NULL numeric dropped (poLCA/depmixS4 drop
+    incomplete rows, na.rm; a NULL numeric would NaN the fit) and
+    categorical values as strings, as the labelling pass casts them
+    (native values would sort differently — int 10 < 2 as strings — and
+    so seed different inits). Returns (pat, values, n), ``n`` the
     table's total weight."""
     if not cols and not num_cols:
         raise ValueError("lca_fit: no columns to model")
-    cat_set = set(cols)
-    df = df.select(
-        *[
-            F.col(c).cast("string").alias(c) if c in cat_set else F.col(c)
-            for c in df.columns
-        ]
-    )
-    for c in num_cols:
-        df = df.filter(F.col(c).isNotNull())
-    pat = FE.pattern_table(df, cols, num_cols)
-    n = sum(r["_w"] for r in pat)
+    complete = [r for r in rows if all(r[c] is not None for c in num_cols)]
+    pat = FE.group_patterns(complete, [*cols, *num_cols])
+    for p in pat:
+        for c in cols:
+            p[c] = None if p[c] is None else str(p[c])
+    n = sum(p["_w"] for p in pat)
     if n == 0:
         raise ValueError("lca_fit: empty input")
-    return df, pat, _values_from_patterns(pat, cols), n
+    return pat, _values_from_patterns(pat, cols), n
 
 
-def _select(
-    df: DataFrame,
+def lca_table(
+    rows: list[dict],
     cols: list[str],
-    num_cols: list[str],
     ks: list[int],
     seeds: list[int],
-    max_iter: int,
-    tol: float,
-    smoothing: float,
+    max_iter: int = 60,
+    tol: float = 1e-4,
+    smoothing: float = 1e-3,
+    num_cols: list[str] | None = None,
 ) -> dict:
-    """Fit every (k, seed) over ONE prepared input and finalize the
-    min-BIC model (first wins ties) — ``lca_fit`` is the one-model case."""
+    """Fit every (k, seed) over the scheme-table ``rows`` (raw or coded)
+    and keep the min-BIC model (first wins ties). Zero Spark jobs.
+    Returns dict(label, pi, theta, loglik, bic, aic, n_params, n_iter,
+    mu, var, k, seed); ``label`` maps a frame holding the model's
+    columns to its complete rows with a ``prediction`` column."""
     floor = 1e-12
-    df, pat, values, n = _prepare(df, cols, num_cols)
+    num_cols = list(num_cols or [])
+    pat, values, n = _patterns(rows, cols, num_cols)
     best = None
     for k in ks:
         # free parameters of the (multinomial x gaussian) mixture
@@ -363,44 +361,52 @@ def _select(
                 best = em | {
                     "bic": bic, "n_params": n_params, "k": k, "seed": seed
                 }
-    return _finalize(df, cols, num_cols, best, floor)
+    return best | {
+        "label": _labeller(cols, num_cols, best, floor),
+        "aic": -2 * best["loglik"] + 2 * best["n_params"],
+    }
 
 
-def _finalize(
-    df: DataFrame, cols: list[str], num_cols: list[str], fit: dict, floor: float
-) -> dict:
-    """The winning model's labels — a lazy, map-only argmax over the
-    SQL E-step — plus AIC."""
+def _labeller(cols: list[str], num_cols: list[str], fit: dict, floor: float):
+    """The model's labelling pass: the frame's complete rows, categorical
+    columns as strings, with the argmax of the SQL E-step."""
     k = fit["k"]
     lp = _estep_sql(
         cols, num_cols, k, fit["pi"], fit["theta"], fit["mu"], fit["var"],
         floor,
     )
-    scored = df.select(
-        "*", *[F.expr(s).alias(f"_lp{i}") for i, s in enumerate(lp)]
-    )
-    pred = F.lit(0)
-    best = F.col("_lp0")
-    for i in range(1, k):
-        pred = F.when(F.col(f"_lp{i}") > best, i).otherwise(pred)
-        best = F.greatest(best, F.col(f"_lp{i}"))
-    labels = scored.withColumn("prediction", pred).drop(
-        *[f"_lp{i}" for i in range(k)]
-    )
-    return {
-        "labels": labels,
-        "pi": fit["pi"],
-        "theta": fit["theta"],
-        "mu": fit["mu"],
-        "var": fit["var"],
-        "loglik": fit["loglik"],
-        "bic": fit["bic"],
-        "aic": -2 * fit["loglik"] + 2 * fit["n_params"],
-        "n_params": fit["n_params"],
-        "n_iter": fit["n_iter"],
-        "k": k,
-        "seed": fit["seed"],
-    }
+    cat_set = set(cols)
+
+    def label(df: DataFrame) -> DataFrame:
+        df = df.select(
+            *[
+                F.col(c).cast("string").alias(c) if c in cat_set else F.col(c)
+                for c in df.columns
+            ]
+        )
+        for c in num_cols:
+            df = df.filter(F.col(c).isNotNull())
+        scored = df.select(
+            "*", *[F.expr(s).alias(f"_lp{i}") for i, s in enumerate(lp)]
+        )
+        pred = F.lit(0)
+        best = F.col("_lp0")
+        for i in range(1, k):
+            pred = F.when(F.col(f"_lp{i}") > best, i).otherwise(pred)
+            best = F.greatest(best, F.col(f"_lp{i}"))
+        return scored.withColumn("prediction", pred).drop(
+            *[f"_lp{i}" for i in range(k)]
+        )
+
+    return label
+
+
+def _on_frame(df: DataFrame, cols: list[str], num_cols: list[str], **grid) -> dict:
+    """:func:`lca_table` over ``df``'s scheme table, plus ``labels``."""
+    table = FE.scheme_table(df, [*cols, *num_cols])
+    fit = lca_table(table.rows, cols, num_cols=num_cols, **grid)
+    fit["labels"] = fit["label"](df)
+    return fit
 
 
 def lca_fit(
@@ -425,9 +431,9 @@ def lca_fit(
     ride the SAME weighted arrays as the class masses, so the mixed
     model adds no Spark work.
     """
-    return _select(
-        df, cols, list(num_cols or []), [k], [seed], max_iter, tol,
-        smoothing,
+    return _on_frame(
+        df, cols, list(num_cols or []), ks=[k], seeds=[seed],
+        max_iter=max_iter, tol=tol, smoothing=smoothing,
     )
 
 
@@ -448,10 +454,10 @@ def lca_select(
     depmixS4 branch scans k in 2..8 and keeps the min-BIC mixture
     (lca.R:90-99); pass ``ks=list(range(2, 9))`` for exact parity.
 
-    The input is prepared once for the whole grid: the full selection
-    costs the pattern table's shuffle plus the winning model's lazy
-    labeling pass, regardless of |ks| x n_rep."""
-    return _select(
-        df, cols, list(num_cols or []), ks or list(range(3, 9)),
-        [seed + rep for rep in range(n_rep)], max_iter, 1e-4, 1e-3,
+    The whole grid reads one scheme table: the selection costs its
+    shuffle plus the winning model's lazy labelling pass, regardless of
+    |ks| x n_rep."""
+    return _on_frame(
+        df, cols, list(num_cols or []), ks=ks or list(range(3, 9)),
+        seeds=[seed + rep for rep in range(n_rep)], max_iter=max_iter,
     )

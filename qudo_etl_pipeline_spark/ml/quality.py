@@ -117,7 +117,8 @@ def pattern_quality(
 ) -> dict:
     """get_cluster_metrics (metrics.py:42-124) over a pattern table: each
     row holds a feature vector, its label and the number of rows ``_w``
-    it stands for (``features.pattern_table``). Returns silhouette,
+    it stands for (a ``features.pattern_table``, or in the survey the
+    family's labelled scheme-table patterns). Returns silhouette,
     davies_bouldin, calinski_harabasz and the proportions, with the
     reference's fallbacks: 0 / 999 / 0 below two clusters.
 
@@ -175,11 +176,9 @@ def cluster_quality(
     exact fallback values.
 
     One collect of the (features, pred, count) table feeds
-    :func:`pattern_quality`. The feature array is a pattern key, so the
-    table is probed directly: a continuous feature makes about one
-    pattern per row, and ``pattern_table`` keeps at most
-    ``PATTERN_THRESHOLD`` of them (a priority sample above it). Its
-    count-first rule for numeric columns would add two Spark jobs, since
-    AQE runs the count's shuffle as a job of its own."""
+    :func:`pattern_quality`. The feature array is a pattern key: a
+    continuous feature makes about one pattern per row, and
+    ``pattern_table`` keeps at most ``PATTERN_THRESHOLD`` of them (a
+    priority sample above it)."""
     table = pattern_table(df, [features, pred])
     return pattern_quality(table, features, pred, n_seed)

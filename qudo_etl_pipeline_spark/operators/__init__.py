@@ -1,8 +1,6 @@
 from qudo_etl_pipeline_spark.operators.contingency import (
     ContingencyTables,
     contingency_tables,
-    chi2_by_variable,
-    post_hoc_cells,
     deliver_stats,
     discover_stats,
 )
@@ -10,8 +8,6 @@ from qudo_etl_pipeline_spark.operators.contingency import (
 __all__ = [
     "ContingencyTables",
     "contingency_tables",
-    "chi2_by_variable",
-    "post_hoc_cells",
     "deliver_stats",
     "discover_stats",
 ]

@@ -9,7 +9,9 @@ table, computing one ``pd.crosstab`` per pair
 every crosstab cell simultaneously. That cell table is collected to the
 driver ONCE, and the finalizer — dense grid, expected counts,
 chi-squared test, post-hoc residuals, modes and percentages — runs in
-plain Python over it (:func:`_finalize`, :func:`deliver_stats`).
+plain Python over it (:func:`_finalize`, :func:`deliver_stats`). The
+survey sums the same cells from its scheme table's labelled answer
+patterns instead (:func:`pattern_tables`), with no Spark job.
 
 Scale notes (100 TB design):
 - The only pass over the input is the cell aggregation: one shuffle,
@@ -49,11 +51,10 @@ from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from qudo_etl_pipeline_spark.functions.rounding import ref_round
 from qudo_etl_pipeline_spark.functions.stats import chi2_sf, z_threshold
 from qudo_etl_pipeline_spark.plans.melt import melt
 
@@ -205,26 +206,30 @@ def _finalize(name: str, cells: list[_Cell]) -> _Variable | None:
 class ContingencyTables:
     """Aggregated crosstab state shared by every downstream statistic.
 
-    ``cells``  — one row per (variable, cluster, value) with ``observed``
-                 count and ``w_observed`` weighted count, *including*
-                 sentinel values (callers filter as needed).
-    ``cluster_sizes`` — one row per cluster: ``cluster_n`` rows,
-                 ``cluster_w`` total weight.
-    ``names`` — the melted variables, in the caller's order.
-    Both frames are lazy filters of one cell aggregation; construction
-    launches no job. The statistics read neither: the first of them runs
-    ONE collect of that aggregation and memoizes its cells (:meth:`raw`,
-    :meth:`sizes`) and the finalized variables (:meth:`variables`);
-    :meth:`unpersist` drops the memo.
+    The state is the crosstab cells, one per (variable, cluster, value)
+    with its ``observed`` count and ``w_observed`` weighted count,
+    *including* sentinel values, and one size per cluster (NULL
+    included): its row count and total weight. ``names`` are the
+    variables, in the caller's order; ``cluster_type`` is the cluster
+    column's type (DDL). :meth:`raw`, :meth:`sizes` and :meth:`variables`
+    (the finalized crosstabs) read the state from a memo.
+
+    :func:`contingency_tables` builds the state lazily with one Spark
+    aggregation: ``cells`` and ``cluster_sizes`` are lazy filters of it,
+    and the first statistic runs ONE collect of it into the memo.
+    :func:`pattern_tables` builds it from collected cells, memo filled.
+    :meth:`unpersist` drops a memo it can collect again.
     """
 
-    cells: DataFrame
-    cluster_sizes: DataFrame
+    spark: SparkSession
     cluster_col: str
+    cluster_type: str
     weighted: bool
     names: list[str]
-    _all_cells: DataFrame  # the aggregation cells/cluster_sizes filter
-    _row_marker: str
+    cells: DataFrame | None = None
+    cluster_sizes: DataFrame | None = None
+    _all_cells: DataFrame | None = None  # what cells/cluster_sizes filter
+    _row_marker: str = "__rows__"
     _memo: dict = field(default_factory=dict)
 
     def variables(self) -> list[_Variable]:
@@ -261,6 +266,9 @@ class ContingencyTables:
         for var, value, cluster, seg, n, w in rows:
             cell = _Cell(value, cluster, seg, n, w)
             (sizes if var == self._row_marker else raw[var]).append(cell)
+        self._load(raw, sizes)
+
+    def _load(self, raw: dict[str, list[_Cell]], sizes: list[_Cell]) -> None:
         for cells in raw.values():
             cells.sort(key=lambda c: c.value)
         finalized = (_finalize(var, cells) for var, cells in sorted(raw.items()))
@@ -274,8 +282,21 @@ class ContingencyTables:
         return sum(c.observed for c in self.sizes())
 
     def unpersist(self) -> None:
-        """Drop the memoized rows (nothing is cached on the cluster)."""
-        self._memo.clear()
+        """Drop the memoized rows (nothing is cached on the cluster); the
+        next statistic collects them again. Cells loaded by
+        :func:`pattern_tables` have no Spark state to re-read, so they
+        stay."""
+        if self._all_cells is not None:
+            self._memo.clear()
+
+
+def cell_weight(weight_col: str | None) -> Column:
+    """The weight a row adds to its cells: ``weight_col`` as a double,
+    NULL counting 0 (as ``sum`` skips it) so ``w_observed`` is never
+    NULL — the weighted mode is an argmax over it; 1.0 without weights."""
+    if not weight_col:
+        return F.lit(1.0)
+    return F.coalesce(F.col(weight_col).cast("double"), F.lit(0.0))
 
 
 def contingency_tables(
@@ -311,13 +332,7 @@ def contingency_tables(
         value_vars=variables + [row_marker],
     )
 
-    # null weights count as 0 (same as sum's null-skip) so w_observed is
-    # never NULL — the weighted mode is an argmax over it
-    w = (
-        F.coalesce(F.col(weight_col).cast("double"), F.lit(0.0))
-        if weight_col
-        else F.lit(1.0)
-    )
+    w = cell_weight(weight_col)
     # THE one big-data shuffle (and the only pass over the input). Its
     # result is tiny (|vars| x |values| x |clusters|) and is collected
     # once by the first statistic that needs it.
@@ -338,14 +353,54 @@ def contingency_tables(
         F.col("w_observed").alias("cluster_w"),
     )
     return ContingencyTables(
-        cells=cells,
-        cluster_sizes=cluster_sizes,
+        spark=wide.sparkSession,
         cluster_col=cluster_col,
+        cluster_type=wide.schema[cluster_col].dataType.simpleString(),
         weighted=weight_col is not None,
         names=variables,
+        cells=cells,
+        cluster_sizes=cluster_sizes,
         _all_cells=all_cells,
         _row_marker=row_marker,
     )
+
+
+def pattern_tables(
+    spark: SparkSession,
+    patterns: list[dict],
+    variables: list[str],
+    weighted: bool,
+    cluster_col: str = "prediction",
+    cluster_type: str = "int",
+) -> ContingencyTables:
+    """The :class:`ContingencyTables` of a labelled pattern table, with no
+    Spark job: each pattern — its ``variables`` as strings (NULL as
+    None), its cluster ``cluster_col`` and that cluster as a string
+    ``_seg``, its row count ``_n`` and weight sum ``_wt`` — adds its
+    counts to one cell per answered variable and to its cluster's size.
+    Summed in the patterns' order, the counts equal
+    :func:`contingency_tables`' over the rows the patterns stand for."""
+    cells: dict = {}
+    sizes: dict = {}
+
+    def add(at: dict, key, p: dict) -> None:
+        n, w = at.get(key, (0, 0.0))
+        at[key] = (n + p["_n"], w + p["_wt"])
+
+    for p in patterns:
+        k = (p[cluster_col], p["_seg"])
+        add(sizes, k, p)
+        for var in variables:
+            if p[var] is not None:
+                add(cells, (var, p[var], k), p)
+    raw: dict[str, list[_Cell]] = {v: [] for v in variables}
+    for (var, value, (k, seg)), (n, w) in cells.items():
+        raw[var].append(_Cell(value, k, seg, n, w))
+    tables = ContingencyTables(
+        spark, cluster_col, cluster_type, weighted, list(variables)
+    )
+    tables._load(raw, [_Cell("1", k, seg, n, w) for (k, seg), (n, w) in sizes.items()])
+    return tables
 
 
 def local_frame(spark: SparkSession, ddl: str, rows: list[tuple]) -> DataFrame:
@@ -371,94 +426,9 @@ def _frame(tables: ContingencyTables, fields: str, rows: list[tuple]) -> DataFra
     """:func:`local_frame` of ``rows`` with the DDL schema ``fields``, in
     which ``{cluster}`` stands for the cluster column, typed as in the
     cells."""
-    cc = tables.cluster_col
-    ctype = tables.cells.schema[cc].dataType.simpleString()
-    cluster = f"`{cc.replace('`', '``')}`: {ctype}"
-    return local_frame(
-        tables.cells.sparkSession, fields.format(cluster=cluster), rows
-    )
-
-
-def chi2_by_variable(tables: ContingencyTables) -> DataFrame:
-    """Per-variable chi-squared test over all crosstabs at once.
-
-    Returns: variable, chi2_stat, dof, yates, n_values, n_clusters,
-    p_value. Statistical semantics live in :func:`_finalize`.
-    """
-    return _frame(
-        tables,
-        "variable: string, chi2_stat: double, dof: bigint, yates: boolean,"
-        " n_values: bigint, n_clusters: bigint, p_value: double",
-        [
-            (
-                v.name,
-                v.chi2_stat,
-                v.dof,
-                v.yates,
-                v.n_values,
-                len(v.clusters),
-                v.p_value,
-            )
-            for v in tables.variables()
-        ],
-    )
-
-
-def dense_cells(tables: ContingencyTables) -> DataFrame:
-    """Every variable's dense (value x cluster) crosstab, one row per
-    cell, with its row, column and grand totals (:func:`_finalize`)."""
-    return _frame(
-        tables,
-        "variable: string, {cluster}, value: string, observed: bigint,"
-        " w_observed: double, row_tot: bigint, col_tot: bigint, n: bigint",
-        [
-            (
-                v.name,
-                g.cluster,
-                g.value,
-                g.observed,
-                g.w_observed,
-                g.row_tot,
-                g.col_tot,
-                v.n,
-            )
-            for v in tables.variables()
-            for g in v.grid
-        ],
-    )
-
-
-def post_hoc_cells(tables: ContingencyTables, alpha: float = 0.05) -> DataFrame:
-    """Adjusted residuals + Bonferroni post-hoc per crosstab cell.
-
-    Returns one row per (variable, cluster, value) of every variable whose
-    chi-squared p <= alpha, with ``adj_residual`` (rounded to 3, as the
-    reference does before squaring — chisquared_tester.py:475) and
-    ``post_hoc`` in {'pos','neg','neu'} (:meth:`_Variable.post_hoc`).
-    """
-    return _frame(
-        tables,
-        "variable: string, {cluster}, value: string, observed: bigint,"
-        " w_observed: double, expected: double, adj_residual: double,"
-        " post_hoc: string, p_value: double, chi2_stat: double",
-        [
-            (
-                v.name,
-                g.cluster,
-                g.value,
-                g.observed,
-                g.w_observed,
-                g.expected,
-                z,
-                label,
-                v.p_value,
-                v.chi2_stat,
-            )
-            for v in tables.variables()
-            if v.p_value <= alpha
-            for g, z, label in v.post_hoc(alpha)
-        ],
-    )
+    cc = tables.cluster_col.replace("`", "``")
+    cluster = f"`{cc}`: {tables.cluster_type}"
+    return local_frame(tables.spark, fields.format(cluster=cluster), rows)
 
 
 def deliver_stats(
@@ -601,7 +571,7 @@ def cluster_mode_list(tables: ContingencyTables) -> DataFrame:
             rows.append((size.seg, name, mode))
         rows.append((size.seg, tables.cluster_col, size.seg))
     return local_frame(
-        tables.cells.sparkSession,
+        tables.spark,
         "cluster: string, variable: string, mode_value: string",
         rows,
     )
@@ -647,38 +617,4 @@ def discover_stats(deliver: DataFrame, n_feats: int = 10) -> DataFrame:
         deliver.sparkSession,
         ", ".join(f"{renamed.get(c, c)}: {types[c]}" for c in cols),
         rows,
-    )
-
-
-def cramers_v(tables: "ContingencyTables") -> DataFrame:
-    """Cramér's V effect size per variable — the magnitude companion to
-    the chi-squared p-value (p says "dependent"; V says "how much"):
-    V = sqrt(chi2 / (n * (min(r, c) - 1))), in [0, 1].
-
-    Reads the finalized variables: the statistic and the observation
-    total (the dense grid's grand total) per variable, in one local
-    frame the projection below folds on the driver.
-    """
-    per_var = _frame(
-        tables,
-        "variable: string, chi2_stat: double, dof: bigint, n_obs: bigint,"
-        " n_values: bigint, n_clusters: bigint",
-        [
-            (v.name, v.chi2_stat, v.dof, v.n, v.n_values, len(v.clusters))
-            for v in tables.variables()
-        ],
-    )
-    k = (
-        F.least(F.col("n_values"), F.col("n_clusters")) - F.lit(1)
-    ).cast("double")
-    # V from the 6-rounded statistic, mirroring the chi2 query's
-    # rounding so the oracle derives from the identical value
-    stat6 = F.round(F.col("chi2_stat"), 6)
-    v = F.sqrt(stat6 / (F.col("n_obs").cast("double") * k))
-    return per_var.select(
-        "variable",
-        stat6.alias("chi2_stat"),
-        "dof",
-        "n_obs",
-        F.when(k > 0, ref_round(v, 6)).alias("cramers_v6"),
     )

@@ -14,21 +14,36 @@ clustering.py:1079-1187, SegmentationConfig.py:4-18):
 4. per family: optimal-k, multi-seed fit, balance filter, rank-sum
    best (clustering.py:391-478,627-713)
 5. chi-squared inference -> deliver, discover and the mode list, all
-   from one collect of the family's cell table (§3.3 single-shuffle
-   plan), and get_all_metrics                 (main.py:158; metrics.py:814-911)
-   — quality, social presence, magnitude and signal loss from one
-   collect of the family's pattern table, computed on the driver; the
-   inference chain runs beside that collect
+   from the family's cell table (§3.3 single-shuffle plan), and
+   get_all_metrics                            (main.py:158; metrics.py:814-911)
+   — quality, social presence, magnitude and signal loss from the
+   family's labelled pattern table, computed on the driver
 6. sinks: metrics CSV + per-scheme Parquet results replacing the
    reference's pickles                        (main.py:160-182; SURVEY S5-S7)
    — every table is a local frame, written from the driver with no
    Spark job, one file per table as the reference's pandas calls write
 
+Every crosstab, fit and metric of a scheme is a sum over the survey's
+answer patterns, so a scheme reads its data through ONE aggregate, its
+scheme table (``features.scheme_table``: the full patterns of the
+scheme, rules and `mc_` columns, with count, weight sum and least id).
+Projected on each column, its rows give the code maps and the numeric
+sniff; the kmodes / kprototypes / LCA fits and the rules codes run on
+them; each family labels the patterns with its own row expression,
+applied to them as a local frame (no Spark job), so a pattern's label
+is its rows' label; and the family's chi² cells and metric table are
+sums over the labelled patterns. Above ``features.PATTERN_THRESHOLD``
+full patterns the metrics read the table's priority sample, the fits
+read the scheme columns' own table (itself a priority sample only when
+those patterns overflow too), and the cells come exact from one Spark
+aggregate of the labelled rows. kmeans and gmm fit in MLlib over the
+encoded rows and read their cells and metric table from those rows.
+
 The reference forks joblib child processes per family and re-pickles
-the table into each (clustering.py:1085-1088); here the cleaned encoded
-table is cached ONCE on the executors and families run as concurrent
-MLlib jobs from driver threads — no data movement between stages. After
-the fit the families finalize concurrently as well.
+the table into each (clustering.py:1085-1088); here the families fit
+concurrently from driver threads, over the one scheme table or the
+encoded table cached once on the executors, and finalize concurrently
+as well.
 """
 
 from __future__ import annotations
@@ -38,9 +53,10 @@ import logging
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FutureTimeoutError
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark import inheritable_thread_target
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +73,7 @@ from qudo_etl_pipeline_spark.operators.contingency import (
     deliver_stats,
     discover_stats,
     local_frame,
+    pattern_tables,
 )
 
 
@@ -101,13 +118,27 @@ def select_scheme_columns(
     ]
 
 
+@dataclass
+class _Scheme:
+    """What a scheme's families read: the encoded rows (the cleaned
+    table, scheme and rules columns as label codes; cached, read by the
+    MLlib families and by the lazy labels), the scheme table's full
+    patterns with the same columns coded (what each family labels), and
+    the coded rows the kmodes and LCA fits read (those patterns, or
+    above the threshold the scheme columns' own table)."""
+
+    encoded: DataFrame
+    patterns: list[dict]
+    fit_rows: list[dict]
+
+
 def _family_kmeans(
-    encoded: DataFrame,
+    scheme: _Scheme,
     cols: list[str],
     cfg: SegmentationConfig,
     num_cols: list[str],
 ):
-    std, _ = FE.standardize(encoded.select(cfg.id_col, *cols), cols)
+    std, _ = FE.standardize(scheme.encoded.select(cfg.id_col, *cols), cols)
     std = FE.assemble_array(std, cols)
     proj, _ = FE.pca_transform(std)
     best_k = C.optimal_k(proj, ks=cfg.ks or [3, 4, 5], seed=42, max_workers=2)
@@ -118,12 +149,12 @@ def _family_kmeans(
 
 
 def _family_gmm(
-    encoded: DataFrame,
+    scheme: _Scheme,
     cols: list[str],
     cfg: SegmentationConfig,
     num_cols: list[str],
 ):
-    feats = FE.assemble_array(encoded, cols)
+    feats = FE.assemble_array(scheme.encoded, cols)
     fit = C.gmm_multi_seed(
         feats, k=(cfg.ks or [3])[0], seeds=cfg.seeds or [42, 100], max_workers=2
     )
@@ -131,7 +162,7 @@ def _family_gmm(
 
 
 def _family_kmodes(
-    encoded: DataFrame,
+    scheme: _Scheme,
     cols: list[str],
     cfg: SegmentationConfig,
     num_cols: list[str],
@@ -140,29 +171,36 @@ def _family_kmodes(
     # (clustering.py:220-234): numeric features switch the family to the
     # mixed-distance variant, like the reference's dispatch
     cat = [c for c in cols if c not in num_cols]
-    fit = KM.kmodes_fit(
-        encoded, cat, k=(cfg.ks or [3])[0], num_cols=num_cols, id_col=cfg.id_col
+    fit = KM.kmodes_table(
+        scheme.fit_rows, cat, k=(cfg.ks or [3])[0], num_cols=num_cols
     )
+    fit["labels"] = fit["label"](scheme.encoded)
     fit["seed"] = None
     return ("kprototypes" if num_cols else "kmodes", fit)
 
 
 def _family_rules(
-    encoded: DataFrame,
+    scheme: _Scheme,
     cols: list[str],
     cfg: SegmentationConfig,
     num_cols: list[str],
 ):
     if not cfg.rules_col:
         return ("rules_based", None)
+
     # labels = the rules column's sorted-value codes (M9), which the
     # scheme's label encode already holds
-    labeled = encoded.withColumn(C.PREDICTION, F.col(cfg.rules_col))
-    return ("rules_based", {"labels": labeled, "k": None, "seed": None})
+    def label(df: DataFrame) -> DataFrame:
+        return df.withColumn(C.PREDICTION, F.col(cfg.rules_col))
+
+    return (
+        "rules_based",
+        {"label": label, "labels": label(scheme.encoded), "k": None, "seed": None},
+    )
 
 
 def _family_lca(
-    encoded: DataFrame,
+    scheme: _Scheme,
     cols: list[str],
     cfg: SegmentationConfig,
     num_cols: list[str],
@@ -178,14 +216,16 @@ def _family_lca(
     # fixture (ks=2..5, 6-8 data seeds, noise 0.15-0.4): the selected k
     # is already stable at n_rep=1 and stays stable through n_rep=10 —
     # the pattern-EM's deterministic responsibility init removes most
-    # restart sensitivity. n_rep=3 (lca_select's own default) is kept
-    # as robustness margin: the whole k x restart grid fits driver-side
-    # over the collected pattern table, so extra restarts cost ~no
-    # Spark work (measured: n_rep=10 within noise of n_rep=1).
-    fit = LCA.lca_select(
-        encoded, cat, ks=cfg.ks or [3], n_rep=3, max_iter=30,
-        num_cols=num_cols or None,
+    # restart sensitivity. n_rep=3 (lca_select's own default: seeds
+    # 42..44) is kept as robustness margin: the whole k x restart grid
+    # fits driver-side over the scheme table's patterns, so extra
+    # restarts cost no Spark work (measured: n_rep=10 within noise of
+    # n_rep=1).
+    fit = LCA.lca_table(
+        scheme.fit_rows, cat, ks=cfg.ks or [3], seeds=[42, 43, 44],
+        max_iter=30, num_cols=num_cols,
     )
+    fit["labels"] = fit["label"](scheme.encoded)
     return ("lca", fit)
 
 
@@ -199,6 +239,21 @@ _FAMILIES = {
 
 # monotone id distinguishing concurrent run_scheme calls' job groups
 _RUN_COUNTER = itertools.count()
+
+
+@contextmanager
+def _job_group(sc: SparkContext, group: str, description: str):
+    """Run the block's Spark jobs under the job group ``group``, which
+    cancelling the group interrupts; the thread's previous group is
+    restored after."""
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    prev = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, description, interruptOnCancel=True)
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, prev):
+            sc.setLocalProperty(k, v)
 
 
 def _daemonize_current_thread() -> None:
@@ -235,6 +290,43 @@ def _failed(algo: str, error: str) -> dict:
     return {"labels": None, "metrics": {"algorithm": algo, "error": error}}
 
 
+def _label_patterns(
+    spark: SparkSession, label, patterns: list[dict], cols: list[str]
+) -> list[tuple]:
+    """(index, prediction, prediction as a string) of each pattern a
+    family's row expression ``label`` keeps, in pattern order: ``label``
+    runs over the patterns' coded ``cols`` as a local frame, typed as the
+    encoded rows, so it costs no Spark job and gives every pattern the
+    label of its rows."""
+    frame = local_frame(
+        spark,
+        ", ".join(["_i: int", *(f"`{c.replace('`', '``')}`: int" for c in cols)]),
+        [(i, *(p[c] for c in cols)) for i, p in enumerate(patterns)],
+    )
+    pred = F.col(C.PREDICTION)
+    return sorted(label(frame).select("_i", pred, pred.cast("string")).collect())
+
+
+def _metric_rows(
+    coded: list[dict], labels: list[tuple], cols: list[str], cands: list[str]
+) -> list[dict]:
+    """The metrics' pattern table of the ``labels`` of coded patterns:
+    (codes of ``cols`` as ``features``, the `mc_` columns ``cands``,
+    prediction) with row count ``_w``."""
+    rows = [
+        {
+            "features": tuple(
+                None if coded[i][c] is None else float(coded[i][c]) for c in cols
+            ),
+            **{c: coded[i][c] for c in cands},
+            C.PREDICTION: k,
+            "_n": coded[i]["_n"],
+        }
+        for i, k, _ in labels
+    ]
+    return FE.group_patterns(rows, ["features", *cands, C.PREDICTION])
+
+
 def run_scheme(
     spark: SparkSession,
     cleaned: DataFrame,
@@ -242,20 +334,41 @@ def run_scheme(
     cfg: SegmentationConfig,
 ) -> dict:
     """One segmentation scheme: families -> inference -> metrics
-    (clustering.py:1079-1138)."""
-    # one column profile of the scheme columns and the rules column:
-    # the code maps, and the numeric-vs-categorical sniff on the
-    # PRE-encoded data (the reference detects dtypes on self.data,
-    # clustering.py:207-234) that drives the kmodes/kprototypes and
-    # pure/mixed-LCA family dispatch
+    (clustering.py:1079-1138), all from one scheme table: the full
+    patterns of the scheme columns, the rules column and every `mc_`
+    column, and the column profile of the scheme and rules columns (the
+    code maps, and the numeric-vs-categorical sniff on the PRE-encoded
+    data — the reference detects dtypes on self.data,
+    clustering.py:207-234 — that drives the kmodes/kprototypes and
+    pure/mixed-LCA family dispatch)."""
     enc_cols = list(scheme_cols)
     if cfg.rules_col in cleaned.columns and cfg.rules_col not in enc_cols:
         enc_cols.append(cfg.rules_col)
-    code_maps, numeric = FE.build_code_maps(cleaned, enc_cols)
-    encoded = FE.label_encode(cleaned, enc_cols, code_maps=code_maps).cache()
+    cands = [c for c in cleaned.columns if "mc_" in c]
+    run_id = next(_RUN_COUNTER)
+    with _job_group(
+        spark.sparkContext, f"scheme{run_id}:table", "the scheme table"
+    ):
+        table = FE.scheme_table(
+            cleaned,
+            list(dict.fromkeys(enc_cols + cands)),
+            weight_col=cfg.weight_col,
+            id_col=cfg.id_col,
+        )
+        patterns = table.coded(enc_cols)
+        fit_rows = patterns
+        if not table.exact:
+            # the fits read the scheme columns' own table, exact whenever
+            # their patterns fit the threshold; its profile is exact
+            # too, so its codes are the scheme table's
+            fit_rows = FE.scheme_table(
+                cleaned, scheme_cols, id_col=cfg.id_col
+            ).coded(scheme_cols)
+    encoded = FE.label_encode(cleaned, enc_cols, code_maps=table.code_maps).cache()
     try:
         return _run_families(
-            spark, cleaned, encoded, scheme_cols, code_maps, numeric, cfg
+            spark, run_id, cleaned, _Scheme(encoded, patterns, fit_rows),
+            table, scheme_cols, enc_cols, cands, cfg,
         )
     finally:
         encoded.unpersist()
@@ -263,34 +376,32 @@ def run_scheme(
 
 def _run_families(
     spark: SparkSession,
+    run_id: int,
     cleaned: DataFrame,
-    encoded: DataFrame,
+    scheme: _Scheme,
+    table: FE.SchemeTable,
     scheme_cols: list[str],
-    code_maps: dict[str, dict[str, int]],
-    numeric: list[str],
+    enc_cols: list[str],
+    cands: list[str],
     cfg: SegmentationConfig,
 ) -> dict:
-    """:func:`run_scheme`'s fit and finalize phases over the scheme's
-    cached encoded table, whose ``code_maps`` columns hold codes."""
-    num_cols = [c for c in numeric if c in scheme_cols]
+    """:func:`run_scheme`'s fit and finalize phases."""
+    num_cols = [c for c in table.numeric if c in scheme_cols]
     algos = _algorithms(cfg)
     sc = spark.sparkContext
-    # scheme-unique token: job groups are context-global, so two
-    # concurrent run_scheme calls must not share group names (one
-    # scheme's timeout would cancel the other's jobs)
-    run_id = next(_RUN_COUNTER)
+    # job groups are context-global, so two concurrent run_scheme calls
+    # must not share group names (one scheme's timeout would cancel the
+    # other's jobs): each carries the scheme's run id
 
     def run_family(algo: str):
         # job group tagged per (run, family) so a timeout can cancel
         # exactly this family's in-flight Spark jobs (thread-local
         # property — PySpark pins driver threads to JVM threads by
         # default)
-        sc.setJobGroup(
-            f"scheme{run_id}:family:{algo}",
-            f"segmentation family {algo}",
-            interruptOnCancel=True,
-        )
-        return _FAMILIES[algo](encoded, scheme_cols, cfg, num_cols)
+        with _job_group(
+            sc, f"scheme{run_id}:family:{algo}", f"segmentation family {algo}"
+        ):
+            return _FAMILIES[algo](scheme, scheme_cols, cfg, num_cols)
 
     import time as _time
 
@@ -341,58 +452,56 @@ def _run_families(
     if timed_out:
         _abandon_pool_threads(pool)
 
+    tgt_idx = [i for i, c in enumerate(scheme_cols) if "tgt" in c.lower()]
+    code_maps = {c: table.code_maps[c] for c in enc_cols}
+
     def finalize_family(algo: str, fit: dict) -> dict:
-        sc.setJobGroup(
-            f"scheme{run_id}:finalize:{algo}",
-            f"inference + metrics for {algo}",
-            interruptOnCancel=True,
-        )
         labeled = fit["labels"]
-        # inference runs on the ORIGINAL (string) answers + prediction
-        with_pred = cleaned.join(
-            labeled.select(cfg.id_col, "prediction"), cfg.id_col
-        )
-
-        tables = None
-
-        def infer() -> DataFrame:
-            nonlocal tables
+        # a family with a row expression labels the scheme table's
+        # patterns (exact or sampled); kmeans and gmm label rows only
+        labels = None
+        if "label" in fit:
+            labels = _label_patterns(spark, fit["label"], scheme.patterns, enc_cols)
+        if labels is not None and table.exact:
+            tables = pattern_tables(
+                spark,
+                [table.rows[i] | {C.PREDICTION: k, "_seg": seg} for i, k, seg in labels],
+                scheme_cols,
+                weighted=cfg.weight_col is not None,
+            )
+        else:
+            # exact cells of the labelled rows, on the ORIGINAL (string)
+            # answers: one Spark aggregate
+            with_pred = cleaned.join(
+                labeled.select(cfg.id_col, C.PREDICTION), cfg.id_col
+            )
             tables = contingency_tables(
                 with_pred,
-                cluster_col="prediction",
+                cluster_col=C.PREDICTION,
                 variables=scheme_cols,
                 weight_col=cfg.weight_col,
                 id_vars=[cfg.id_col],
             )
-            return deliver_stats(tables, alpha=1 - cfg.conf_interval)
-
-        feats = FE.assemble_array(encoded, scheme_cols).join(
-            labeled.select(cfg.id_col, "prediction"), cfg.id_col
-        )
-        tgt_idx = [i for i, c in enumerate(scheme_cols) if "tgt" in c.lower()]
-        # the inference chain runs beside get_all_metrics' table collect;
-        # leaving the block joins it, so when a metric raises no Spark
-        # job of this family outlives it
-        with ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix=f"scheme{run_id}-infer"
-        ) as pool:
-            deliver = pool.submit(inheritable_thread_target(spark)(infer))
-            metrics = get_all_metrics(
-                feats,
-                # resolves to a local frame: collecting its rows runs no
-                # Spark job
-                deliver=deliver,
-                tgt_idx=tgt_idx,
-                n_seed=fit.get("seed"),
-                # social presence decodes the scheme's coded `mc_`
-                # answers: label codes can never contain 'facebook'
-                # (metrics.py:840 full_data)
-                code_maps=code_maps,
+        deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
+        if labels is not None:
+            metric_table = _metric_rows(scheme.patterns, labels, scheme_cols, cands)
+        else:
+            metric_table = FE.assemble_array(scheme.encoded, scheme_cols).join(
+                labeled.select(cfg.id_col, C.PREDICTION), cfg.id_col
             )
-        deliver = deliver.result()
+        metrics = get_all_metrics(
+            metric_table,
+            deliver=deliver,
+            tgt_idx=tgt_idx,
+            n_seed=fit.get("seed"),
+            # social presence decodes the scheme's coded `mc_` answers:
+            # label codes can never contain 'facebook' (metrics.py:840
+            # full_data)
+            code_maps=code_maps,
+        )
         metrics["algorithm"] = algo
         # the reference's return_API_data triple (chisquared_tester.py:
-        # 1762-1793), all local frames from the tables' one collect
+        # 1762-1793), all local frames from the one cell table
         return {
             "labels": labeled,
             "deliver": deliver,
@@ -403,19 +512,19 @@ def _run_families(
 
     def finalize_contained(algo: str, fit: dict) -> dict:
         try:
-            return finalize_family(algo, fit)
+            with _job_group(
+                sc, f"scheme{run_id}:finalize:{algo}", f"inference + metrics for {algo}"
+            ):
+                return finalize_family(algo, fit)
         except Exception as exc:  # one family failing leaves the others
             _LOG.exception("family %s: inference or metrics failed", algo)
             return _failed(algo, f"{type(exc).__name__}: {exc}")
 
     # Inference + metrics for the surviving families run CONCURRENTLY,
-    # mirroring the fit phase above, and within a family its two Spark
-    # reads overlap too: the inference chain (cells -> deliver) on one
-    # worker, and the pattern-table collect that every metric of the
-    # family is computed from, both under the family's job group. Each
-    # read is a few small Spark jobs, so one after another they would
-    # leave the executors idle. Families share only read-only parent
-    # frames (the cleaned/encoded caches).
+    # mirroring the fit phase above, each under its family's job group.
+    # Over the exact scheme table a family's finalize is driver-side
+    # work with no Spark job; the sampled table and the MLlib families
+    # read Spark here. Families share only read-only inputs.
     if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),

@@ -6,12 +6,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.operators.contingency import (
+from qudo_etl_pipeline_spark.catalog.contingency_q import (
     chi2_by_variable,
+    post_hoc_cells,
+)
+from qudo_etl_pipeline_spark.operators.contingency import (
     contingency_tables,
     deliver_stats,
     discover_stats,
-    post_hoc_cells,
 )
 from qudo_etl_pipeline_spark.plans.melt import melt
 
@@ -207,10 +209,7 @@ def test_salt_cells_auto_activates_and_is_hash_identical(spark):
 
 def test_cramers_v_known_table(spark):
     """Perfect association in a 2x2 -> V = 1; independence -> V ~ 0."""
-    from qudo_etl_pipeline_spark.operators.contingency import (
-        contingency_tables,
-        cramers_v,
-    )
+    from qudo_etl_pipeline_spark.catalog.contingency_q import cramers_v
 
     # perfect: cluster == x
     rows = [(i, str(i % 2), str(i % 2)) for i in range(40)]
@@ -236,10 +235,6 @@ def test_posthoc_bonferroni_fallback_wide_table(spark):
     against the Python chi2_sf on every emitted cell: the labels must
     be exactly the |z| >= 1.96 AND chi2_sf(z^2, 1) <= alpha/m rule."""
     from qudo_etl_pipeline_spark.functions.stats import chi2_sf
-    from qudo_etl_pipeline_spark.operators.contingency import (
-        contingency_tables,
-        post_hoc_cells,
-    )
 
     # 8 clusters x 160 values -> m = 1280 > 1024. A planted dependence
     # (every 3rd row answers its own cluster's sentinel value) makes

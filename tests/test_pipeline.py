@@ -452,9 +452,12 @@ def _group_id(spark):
 
 
 def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
-    """Each family's post-fit reads run on worker threads; every one of
-    them runs under that family's finalize job group, so cancelling the
-    group reaches them and their jobs are attributed to the family."""
+    """On the sampled side (more full patterns than the threshold) each
+    family's finalize still reads Spark: its exact cells are one
+    aggregate of its labelled rows. The families finalize concurrently
+    on worker threads, and every such read runs under that family's
+    finalize job group, so cancelling the group reaches it and its jobs
+    are attributed to the family."""
     import re
     import threading
 
@@ -471,14 +474,13 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
         return wrapper
 
-    # the metrics' pattern-table collect; the kmodes fit binds its own
-    # name for pattern_table, so only the finalize phase calls this one
-    for mod, name in [(FE, "pattern_table"), (P, "deliver_stats")]:
-        monkeypatch.setattr(mod, name, recording(name, getattr(mod, name)))
+    for name in ("contingency_tables", "deliver_stats"):
+        monkeypatch.setattr(P, name, recording(name, getattr(P, name)))
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
     cleaned, cols, cfg = _tagged_scheme(responses)
     out = P.run_scheme(spark, cleaned, cols, cfg)
     assert all(r["labels"] is not None for r in out.values())
-    assert set(seen) == {"pattern_table", "deliver_stats"}
+    assert set(seen) == {"contingency_tables", "deliver_stats"}
     groups = {g for ids in seen.values() for g in ids}
     assert all(re.fullmatch(r"scheme\d+:finalize:.+", g or "") for g in groups)
     [scheme] = {g.split(":")[0] for g in groups}
@@ -488,24 +490,22 @@ def test_job_group_reaches_every_concurrent_read(spark, responses, monkeypatch):
 
 
 def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypatch):
-    """A metrics read that raises while the family's inference chain is
-    still running fails that family only: the other family finishes,
-    and nothing the scheme cached stays persisted after it."""
+    """A driver-side metric that raises in one family fails that family
+    only: the other family finishes, the failing family's inference had
+    run, and nothing the survey cached stays persisted after it."""
     from qudo_etl_pipeline_spark import pipeline as P
-    from qudo_etl_pipeline_spark.ml import features as FE
+    from qudo_etl_pipeline_spark.ml import quality as Q
 
     jsc = spark.sparkContext._jsc
     persisted_mid_flight, delivered, delivered_at_raise = [], [], []
-    real_table, real_deliver = FE.pattern_table, P.deliver_stats
+    real_quality, real_deliver = Q.pattern_quality, P.deliver_stats
 
-    # the metrics' table collect; the kmodes fit binds its own name for
-    # pattern_table, so only the finalize phase calls this one
-    def table(*args, **kwargs):
+    def quality(*args, **kwargs):
         if _group_id(spark).endswith(":finalize:rules_based"):
             persisted_mid_flight.append(jsc.getPersistentRDDs().size())
             delivered_at_raise.append(bool(delivered))
-            raise RuntimeError("planted read failure")
-        return real_table(*args, **kwargs)
+            raise RuntimeError("planted metric failure")
+        return real_quality(*args, **kwargs)
 
     def deliver(*args, **kwargs):
         out = real_deliver(*args, **kwargs)
@@ -513,21 +513,23 @@ def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypat
             delivered.append(True)
         return out
 
-    monkeypatch.setattr(FE, "pattern_table", table)
+    monkeypatch.setattr(Q, "pattern_quality", quality)
     monkeypatch.setattr(P, "deliver_stats", deliver)
-    cleaned, cols, cfg = _tagged_scheme(responses)
+    _, _, cfg = _tagged_scheme(responses)
+    cfg.schemes = {
+        "tagged": ["weightgain_", "fin_uk_risk", "tech_", "psy_", "fin_uk_goal", "mc_"]
+    }
     before = jsc.getPersistentRDDs().size()
-    out = P.run_scheme(spark, cleaned, cols, cfg)
-    # the scheme's encoded table was cached when the read failed, and
-    # the family's inference chain had not finished: leaving the
-    # finalize phase joined it
+    out = run_all_segmentations(spark, responses, cfg)["tagged"]
+    # the survey's cleaned table was cached when the metric failed, and
+    # the family's deliver had been computed
     assert persisted_mid_flight and persisted_mid_flight[0] > before
-    assert delivered_at_raise == [False] and delivered == [True]
+    assert delivered_at_raise == [True] and delivered == [True]
     assert out["rules_based"] == {
         "labels": None,
         "metrics": {
             "algorithm": "rules_based",
-            "error": "RuntimeError: planted read failure",
+            "error": "RuntimeError: planted metric failure",
         },
     }
     done = out["kprototypes"]
@@ -536,20 +538,20 @@ def test_failing_read_is_contained_and_leaks_nothing(spark, responses, monkeypat
 
 
 def test_failing_scheme_releases_the_caches(spark, monkeypatch):
-    """A scheme whose column profile raises fails the survey; the
+    """A scheme whose scheme-table read raises fails the survey; the
     cleaned table cached for the survey is released with it, so a drain
     that goes on to the next survey does not grow."""
     from qudo_etl_pipeline_spark.ml import features as FE
 
-    real, calls = FE.build_code_maps, []
+    real, calls = FE.scheme_table, []
 
-    def second_profile_fails(df, cols):
+    def second_table_fails(df, cols, **kwargs):
         calls.append(cols)
         if len(calls) == 2:
-            raise ValueError("planted profile failure")
-        return real(df, cols)
+            raise ValueError("planted scheme-table failure")
+        return real(df, cols, **kwargs)
 
-    monkeypatch.setattr(FE, "build_code_maps", second_profile_fails)
+    monkeypatch.setattr(FE, "scheme_table", second_table_fails)
     responses = spark.createDataFrame(make_responses(n=200))
     cfg = SegmentationConfig(
         survey_name="bad_scheme",
@@ -562,7 +564,7 @@ def test_failing_scheme_releases_the_caches(spark, monkeypatch):
     )
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    with pytest.raises(ValueError, match="planted profile failure"):
+    with pytest.raises(ValueError, match="planted scheme-table failure"):
         run_all_segmentations(spark, responses, cfg)
     assert len(calls) == 2
     assert jsc.getPersistentRDDs().size() == before
@@ -636,3 +638,113 @@ def test_returned_frames_start_no_spark_job(spark, responses):
     }
     assert len(jobs) == 6
     assert jobs == dict.fromkeys(jobs, 0)
+
+
+def _crosstab(cleaned, labels, cols, cfg):
+    """deliver, discover and mode-list rows of a Spark crosstab of the
+    cleaned answers against the row labels ``labels``."""
+    from qudo_etl_pipeline_spark.operators.contingency import (
+        cluster_mode_list,
+        contingency_tables,
+        deliver_stats,
+        discover_stats,
+    )
+
+    with_pred = cleaned.join(labels.select(cfg.id_col, "prediction"), cfg.id_col)
+    tables = contingency_tables(
+        with_pred, "prediction", cols, cfg.weight_col, [cfg.id_col]
+    )
+    deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
+    return {
+        "deliver": deliver.collect(),
+        "discover": discover_stats(deliver).collect(),
+        "mode_list": cluster_mode_list(tables).collect(),
+    }
+
+
+@pytest.mark.parametrize("side", ["exact", "sampled"])
+def test_outputs_are_a_crosstab_of_the_returned_labels(
+    spark, responses, monkeypatch, side
+):
+    """On both sides of the pattern threshold every family's deliver,
+    discover and mode list equal a Spark crosstab of its own returned
+    row labels: on the exact side the cells are summed from labelled
+    patterns, so a pattern labelled apart from its rows would show."""
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    tables = []
+    real = FE.scheme_table
+
+    def spy(*args, **kwargs):
+        tables.append(real(*args, **kwargs))
+        return tables[-1]
+
+    monkeypatch.setattr(FE, "scheme_table", spy)
+    if side == "sampled":
+        monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    cfg.weight_col, cfg.include_lca = "weight", True
+    out = P.run_scheme(spark, cleaned, cols, cfg)
+    # the sampled side's fits read the scheme columns' own table
+    table = tables[0]
+    assert table.exact == (side == "exact")
+    assert [t.cols for t in tables[1:]] == ([] if table.exact else [cols])
+    assert set(out) == {"kprototypes", "rules_based", "lca"}
+    for algo, res in out.items():
+        assert "error" not in res["metrics"], algo
+        want = _crosstab(cleaned, res["labels"], cols, cfg)
+        assert want["deliver"], algo
+        for key, rows in want.items():
+            got = res[key].collect()
+            assert len(got) == len(rows), (algo, key)
+            for g, w in zip(got, rows):
+                # weighted values: within summation order
+                assert all(
+                    x == pytest.approx(y, rel=1e-12)
+                    if isinstance(y, (float, list))
+                    else x == y
+                    for x, y in zip(g, w, strict=True)
+                ), (algo, key, g, w)
+
+
+# Spark jobs of one run_scheme on the tagged fixture with kmodes (as
+# kprototypes), rules_based and lca, summed over the run's job groups:
+# measured 2 (the scheme table's aggregate and its result stage), with
+# 0 in every fit and finalize group.
+SCHEME_JOBS_MAX = 2
+
+
+def test_one_scheme_runs_one_aggregate(spark, responses, monkeypatch):
+    """A scheme's Spark work is its scheme table: the fits and every
+    family's inference and metrics run no Spark job."""
+    import itertools
+
+    from qudo_etl_pipeline_spark import pipeline as P
+
+    monkeypatch.setattr(P, "_RUN_COUNTER", itertools.count(7_000_000))
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    cleaned = cleaned.cache()
+    cleaned.count()  # the survey caches its cleaned table before a scheme
+    cfg.include_lca = True
+    sc = spark.sparkContext
+    outside = "test-outside-the-scheme-groups"
+    sc.setJobGroup(outside, "jobs of the run outside its own groups")
+    try:
+        out = P.run_scheme(spark, cleaned, cols, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        cleaned.unpersist()
+    assert all("error" not in r["metrics"] for r in out.values())
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    algos = ["kmodes", "rules_based", "lca"]
+    groups = [outside, "scheme7000000:table"] + [
+        f"scheme7000000:{phase}:{name}"
+        for phase, names in (("family", algos), ("finalize", list(out)))
+        for name in names
+    ]
+    jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
+    assert jobs["scheme7000000:table"] > 0
+    finalize = [n for g, n in jobs.items() if ":finalize:" in g]
+    assert finalize == [0, 0, 0], jobs
+    assert sum(jobs.values()) <= SCHEME_JOBS_MAX, jobs

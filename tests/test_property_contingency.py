@@ -13,8 +13,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from qudo_etl_pipeline_spark.catalog.contingency_q import chi2_by_variable
 from qudo_etl_pipeline_spark.operators.contingency import (
-    chi2_by_variable,
     contingency_tables,
     deliver_stats,
 )

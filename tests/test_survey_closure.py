@@ -26,7 +26,7 @@ FORBIDDEN = {f"{PKG}.plans.skew", f"{PKG}.operators.checks"}
 # cluster metrics run on the driver over pattern tables
 FORBIDDEN_PYSPARK = ("pyspark.ml.classification", "pyspark.ml.evaluation")
 # lines of every closure module, summed; lower it when the closure shrinks
-CLOSURE_LINES_MAX = 4446
+CLOSURE_LINES_MAX = 4411
 
 
 def _path(mod: str) -> Path | None:
