@@ -363,7 +363,7 @@ def population_modes_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "answer column",
 )
 def rules_based_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.clustering import rules_based
+    from qudo_etl_pipeline_spark.catalog.ml_q import rules_based
 
     o = load_table(spark, sf_dir, "orders").select("o_orderpriority")
     labeled = rules_based(o, "o_orderpriority")
@@ -661,7 +661,7 @@ def random_checker(
     INCLUSIVE — k+1 possible random labels — replicated here."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from qudo_etl_pipeline_spark.ml import quality as Q
+    from qudo_etl_pipeline_spark.catalog.ml_q import cluster_quality
 
     cluster_metrics = dict(cluster_metrics or {})
     k = df.select(pred).distinct().count()
@@ -677,7 +677,7 @@ def random_checker(
             "_rand_label",
             F.floor(F.rand(seed + i) * (k + 1)).cast("int"),
         )
-        m = Q.cluster_quality(rnd, features, "_rand_label")
+        m = cluster_quality(rnd, features, "_rand_label")
         return m["silhouette"], m["davies_bouldin"], m["calinski_harabasz"]
 
     with ThreadPoolExecutor(max_workers=min(8, n_runs)) as pool:
@@ -715,15 +715,17 @@ def random_checker(
     "planted clustering (rows-only: seeded randomness)",
 )
 def random_baseline_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import quality as Q
-    from qudo_etl_pipeline_spark.catalog.ml_q import label_consistency
+    from qudo_etl_pipeline_spark.catalog.ml_q import (
+        cluster_quality,
+        label_consistency,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
         (F.col("label") % 4).alias("prediction"),
     )
-    base = Q.cluster_quality(emb)
+    base = cluster_quality(emb)
     out = random_checker(emb, cluster_metrics=base, n_runs=2)
 
     def refit(train):

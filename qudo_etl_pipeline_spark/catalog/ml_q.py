@@ -19,9 +19,19 @@ from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.catalog import load_table, none_last_key, register
 from qudo_etl_pipeline_spark.functions.rounding import ref_round_sql
-from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
+from qudo_etl_pipeline_spark.ml import quality as Q
 from qudo_etl_pipeline_spark.ml import signal as S
+from qudo_etl_pipeline_spark.ml.clustering import (
+    BALANCE_HI,
+    BALANCE_LO,
+    MAX_K,
+    MIN_K,
+    SEEDS,
+    elbow_index,
+    rank_best,
+    remove_unbalanced,
+)
 from qudo_etl_pipeline_spark.ml.quality import FEATURES, PREDICTION
 
 # --- Spark quality metrics and feature encoders ------------------------
@@ -728,7 +738,7 @@ def signal_loss(
     if not tgt_cols:
         return {}
     table = FE.pattern_table(
-        FE.assemble_array(df, tgt_cols), ["features", target_col]
+        assemble_array(df, tgt_cols), ["features", target_col]
     )
     return S.pattern_signal(
         table, "features", list(range(len(tgt_cols))), target_col, seed
@@ -894,6 +904,418 @@ _LI_FEATS = """
            l_discount * 10.0 AS f3
     FROM lineitem
 """
+
+
+# --- MLlib fits and the frame versions of the survey's scaling, PCA,
+# sizes and cluster metrics ------------------------------------------
+# The survey fits kmeans and GMM on its scheme table's patterns
+# (ml.clustering); the queries below and the tests fit frames in MLlib
+# with these (documented deltas: MLlib's k-means|| init against
+# sklearn's k-means++, and MLlib's GaussianMixture against sklearn's
+# BayesianGaussianMixture).
+
+
+def cluster_sizes(df: DataFrame, pred: str = PREDICTION) -> DataFrame:
+    """Per-cluster row count and share of total (metrics.py:24-38)."""
+    total = Window.partitionBy()
+    return (
+        df.groupBy(pred)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .withColumn("share", F.col("n") / F.sum("n").over(total))
+    )
+
+
+def balance_ok(
+    df: DataFrame,
+    pred: str = PREDICTION,
+    lo: float = 0.02,
+    hi: float = 0.55,
+) -> bool:
+    """Reject clustering unless every cluster share is in (lo, hi)
+    (clustering.py:117-118,792-809)."""
+    shares = [r["share"] for r in cluster_sizes(df, pred).collect()]
+    return all(lo < s < hi for s in shares)
+
+
+def cluster_quality(
+    df: DataFrame,
+    features: str = FEATURES,
+    pred: str = PREDICTION,
+    n_seed=None,
+) -> dict:
+    """get_cluster_metrics equivalent (metrics.py:42-124): silhouette /
+    davies_bouldin / calinski_harabasz / proportions of ``df``'s
+    ``features`` array under its ``pred`` labels, with the reference's
+    exact fallback values.
+
+    One collect of the (features, pred, count) table feeds
+    :func:`pattern_quality`. The feature array is a pattern key: a
+    continuous feature makes about one pattern per row, and
+    ``pattern_table`` keeps at most ``PATTERN_THRESHOLD`` of them (a
+    priority sample above it)."""
+    table = FE.pattern_table(df, [features, pred])
+    return Q.pattern_quality(table, features, pred, n_seed)
+
+
+def standardize(
+    df: DataFrame, cols: list[str], stats: dict | None = None
+) -> tuple[DataFrame, dict]:
+    """Population-std z-score (sklearn StandardScaler parity, M2).
+
+    Constant columns pass through centered (std 0 -> divide by 1,
+    sklearn's behavior). Returns (transformed df, fitted stats) so a
+    train-fit can be replayed on test data (model-consistency checks).
+    """
+    if stats is None:
+        aggs = []
+        for c in cols:
+            aggs.append(F.avg(F.col(c).cast("double")).alias(f"m_{c}"))
+            aggs.append(F.stddev_pop(F.col(c).cast("double")).alias(f"s_{c}"))
+        row = df.agg(*aggs).collect()[0]
+        stats = {
+            c: (row[f"m_{c}"], row[f"s_{c}"] if row[f"s_{c}"] else 1.0)
+            for c in cols
+        }
+    out = df.select(
+        *[
+            ((F.col(c).cast("double") - F.lit(stats[c][0])) / F.lit(stats[c][1])).alias(c)
+            if c in cols
+            else F.col(c)
+            for c in df.columns
+        ]
+    )
+    return out, stats
+
+
+def assemble_array(
+    df: DataFrame, cols: list[str], out_col: str = "features"
+) -> DataFrame:
+    """Pack columns into an array<double> features column."""
+    return df.withColumn(
+        out_col, F.array(*[F.col(c).cast("double") for c in cols])
+    )
+
+
+def find_n_components(
+    df: DataFrame,
+    features_col: str = "features",
+    var_threshold: float = 0.5,
+):
+    """Fit full-rank PCA; smallest n with cum. explained variance >=
+    threshold (clustering.py:259-274). Returns (ideal_n, fitted model)."""
+    from pyspark.ml.feature import PCA
+    from pyspark.ml.functions import array_to_vector
+
+    vdf = df.select(
+        array_to_vector(F.col(features_col).cast("array<double>")).alias("_v")
+    )
+    dim = len(vdf.first()["_v"])
+    model = PCA(k=dim, inputCol="_v", outputCol="_pca").fit(vdf)
+    cum = 0.0
+    ideal_n = dim
+    for i, ratio in enumerate(model.explainedVariance):
+        cum += ratio
+        if cum >= var_threshold:
+            ideal_n = i + 1
+            break
+    return ideal_n, model
+
+
+def pca_transform(
+    df: DataFrame,
+    features_col: str = "features",
+    n_components: int | None = None,
+    var_threshold: float = 0.5,
+) -> tuple[DataFrame, int]:
+    """Project features onto the first n principal components (M3).
+
+    Output column replaces `features_col` with the array<double>
+    projection; other columns pass through.
+    """
+    from pyspark.ml.feature import PCA
+    from pyspark.ml.functions import array_to_vector, vector_to_array
+
+    vdf = df.withColumn(
+        "_v", array_to_vector(F.col(features_col).cast("array<double>"))
+    )
+    if n_components is None:
+        # reuse the full-rank model find_n_components already fitted:
+        # PCA components are nested (same ordered eigenvectors), so the
+        # first n coordinates of the full projection ARE the
+        # n-component projection — a second covariance/SVD job over the
+        # data would recompute the identical subspace
+        n_components, model = find_n_components(
+            df, features_col, var_threshold
+        )
+        projected = F.slice(
+            vector_to_array(F.col("_pca")), 1, n_components
+        )
+    else:
+        model = PCA(k=n_components, inputCol="_v", outputCol="_pca").fit(vdf)
+        projected = vector_to_array(F.col("_pca"))
+    out = (
+        model.transform(vdf)
+        .withColumn(features_col, projected)
+        .drop("_v", "_pca")
+    )
+    return out, n_components
+
+
+def _to_vec(df: DataFrame, features_col: str) -> DataFrame:
+    from pyspark.ml.functions import array_to_vector
+
+    return df.withColumn(
+        "_v", array_to_vector(F.col(features_col).cast("array<double>"))
+    )
+
+
+def kmeans_fit(
+    df: DataFrame,
+    k: int,
+    seed: int = 42,
+    features_col: str = FEATURES,
+) -> dict:
+    """One KMeans fit. Returns dict(labels=DataFrame+prediction,
+    inertia=float, model). MLlib k-means|| init (delta vs sklearn
+    k-means++ documented above).
+
+    Multi-fit callers (multi-seed, optimal-k) pass a frame that already
+    carries the cached ``_v`` vector column, so the array→vector
+    conversion isn't re-executed once per fit."""
+    from pyspark.ml.clustering import KMeans
+
+    vdf = df if "_v" in df.columns else _to_vec(df, features_col)
+    model = KMeans(
+        k=k, seed=seed, featuresCol="_v", predictionCol=PREDICTION
+    ).fit(vdf)
+    labeled = model.transform(vdf).drop("_v")
+    return {
+        "labels": labeled,
+        "inertia": float(model.summary.trainingCost),
+        "model": model,
+        "k": k,
+        "seed": seed,
+    }
+
+
+def fit_quality(
+    fit: dict, features_col: str = FEATURES, information: bool = False
+) -> dict:
+    """get_cluster_metrics over one fit's labeled frame."""
+    m = cluster_quality(
+        fit["labels"], features=features_col, pred=PREDICTION, n_seed=fit["seed"]
+    )
+    m["n_clusters"] = fit["k"]
+    if information:
+        m["bic"] = fit.get("bic")
+        m["aic"] = fit.get("aic")
+    return m
+
+
+def kmeans_multi_seed(
+    df: DataFrame,
+    k: int,
+    seeds: list[int] | None = None,
+    features_col: str = FEATURES,
+    max_workers: int = 8,
+) -> dict | None:
+    """Fan 10 seeds out as concurrent MLlib jobs, drop unbalanced fits,
+    pick the best by rank-sum (clustering.py:627-713)."""
+    seeds = seeds or SEEDS
+    # cache the VECTORIZED frame: every seed's fit (and every metric
+    # pass) reads _v, so converting once saves 10 array->vector
+    # re-executions
+    vdf = _to_vec(df, features_col).cache()
+    try:
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            fits = list(
+                pool.map(
+                    lambda s: kmeans_fit(
+                        vdf, k, seed=s, features_col=features_col
+                    ),
+                    seeds,
+                )
+            )
+        # balance pre-filter BEFORE the metric passes: unbalanced fits
+        # are dropped anyway, so their silhouette/DB/CH would be wasted
+        # jobs (the reference computes-then-filters; same surviving
+        # set either way — metrics of dropped fits are never used)
+        # balance probes are collect jobs too — same pool, order kept
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            ok = list(
+                pool.map(
+                    lambda f: balance_ok(
+                        f["labels"], PREDICTION, BALANCE_LO, BALANCE_HI
+                    ),
+                    fits,
+                )
+            )
+        balanced_fits = [f for f, good in zip(fits, ok) if good]
+        if not balanced_fits:
+            return None
+        # metric passes are independent DataFrame jobs — run them on the
+        # same thread pool as the fits (Spark's scheduler interleaves
+        # the stages; results are per-fit, so order is preserved by map)
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            metrics = list(
+                pool.map(lambda f: fit_quality(f, features_col), balanced_fits)
+            )
+        # no second remove_unbalanced pass: balance_ok above already
+        # enforced the identical (0.02, 0.55) share predicate on the
+        # identical counts, so re-filtering the metrics could never
+        # drop anything
+        best = rank_best(metrics)
+        fit, m = balanced_fits[best], metrics[best]
+        fit["metrics"] = m
+        return fit
+    finally:
+        vdf.unpersist()
+
+
+def optimal_k(
+    df: DataFrame,
+    features_col: str = FEATURES,
+    ks: list[int] | None = None,
+    seed: int = 42,
+    max_workers: int = 8,
+) -> int:
+    """Optimal-k search (clustering.py:391-478): per-k cost + metrics,
+    rank-sum with a +n_points bonus for the elbow k, argmax."""
+    ks = ks or list(range(MIN_K, MAX_K))
+    # cache the vectorized frame once for the whole k scan
+    vdf = _to_vec(df, features_col).cache()
+    try:
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            fits = list(
+                pool.map(
+                    lambda k: kmeans_fit(
+                        vdf, k, seed=seed, features_col=features_col
+                    ),
+                    ks,
+                )
+            )
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            metrics = list(
+                pool.map(lambda f: fit_quality(f, features_col), fits)
+            )
+        costs = [f["inertia"] for f in fits]
+        elbow_k = ks[elbow_index(costs)]
+        bonus = [
+            len(costs) if m["n_clusters"] == elbow_k else 0 for m in metrics
+        ]
+        return int(metrics[rank_best(metrics, bonus=bonus)]["n_clusters"])
+    finally:
+        vdf.unpersist()
+
+
+def gmm_fit(
+    df: DataFrame,
+    k: int,
+    seed: int = 42,
+    features_col: str = FEATURES,
+) -> dict | None:
+    """GaussianMixture fit with manual BIC/AIC (clustering.py:921-941).
+
+    score = mean log-likelihood; p counts means + full covariances +
+    weights over EFFECTIVE components (distinct predicted labels);
+    bic = -2*score*n + p*ln(n); aic = -2*score*n + 2p.
+    Returns None when any class takes < 1% of rows (clustering.py:944-945).
+    MLlib fits by EM (no Dirichlet prior — documented delta vs the
+    reference's BayesianGaussianMixture).
+    """
+    import math
+
+    from pyspark.ml.clustering import GaussianMixture
+
+    # multi-seed callers pass one shared cached vector frame (it carries
+    # ``_v``), the same device as kmeans_fit — a per-seed _to_vec +
+    # cache would hold n_seeds copies of the data at once
+    prevectorized = "_v" in df.columns
+    vdf = df if prevectorized else _to_vec(df, features_col).cache()
+    try:
+        model = GaussianMixture(
+            k=k, seed=seed, featuresCol="_v", predictionCol=PREDICTION
+        ).fit(vdf)
+        labeled = model.transform(vdf).drop("_v", "probability")
+        n = labeled.count()
+        counts = {
+            r[PREDICTION]: r["n"]
+            for r in labeled.groupBy(PREDICTION).agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        if min(counts.values()) < n * 0.01:
+            return None
+        n_features = len(
+            vdf.select(features_col).first()[features_col]
+        )
+        n_eff = len(counts)
+        cov_params = n_eff * n_features * (n_features + 1) / 2.0
+        mean_params = n_features * n_eff
+        p = int(cov_params + mean_params + n_eff - 1)
+        score = float(model.summary.logLikelihood) / n
+        bic = -2 * score * n + p * math.log(n)
+        aic = -2 * score * n + 2 * p
+        return {
+            "labels": labeled,
+            "model": model,
+            "k": k,
+            "seed": seed,
+            "bic": bic,
+            "aic": aic,
+        }
+    finally:
+        if not prevectorized:
+            vdf.unpersist()
+
+
+def gmm_multi_seed(
+    df: DataFrame,
+    k: int,
+    seeds: list[int] | None = None,
+    features_col: str = FEATURES,
+    max_workers: int = 8,
+) -> dict | None:
+    """Per-k seed fan-out + balance filter + IC-weighted rank-sum
+    (clustering.py:951-983)."""
+    seeds = seeds or SEEDS
+    vdf = _to_vec(df, features_col).cache()
+    try:
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            fits = [
+                f
+                for f in pool.map(
+                    lambda s: gmm_fit(
+                        vdf, k, seed=s, features_col=features_col
+                    ),
+                    seeds,
+                )
+                if f is not None
+            ]
+        if not fits:
+            return None
+        metrics = [fit_quality(f, features_col, information=True) for f in fits]
+        keep = [
+            (f, m) for f, m in zip(fits, metrics) if m in remove_unbalanced([m])
+        ]
+        if not keep:
+            return None
+        best = rank_best([m for _, m in keep], information=True)
+        fit, m = keep[best]
+        fit["metrics"] = m
+        return fit
+    finally:
+        vdf.unpersist()
+
+
+def rules_based(
+    df: DataFrame, rules_col: str, pred: str = PREDICTION
+) -> DataFrame:
+    """Rules-based segmentation: labels = sorted-value codes of one
+    answer column (clustering.py:1037-1077, M9). The pipeline reads the
+    same codes from its scheme's label encode instead."""
+    out = FE.label_encode(df, [rules_col], suffix="__code")
+    return out.withColumn(pred, F.col(rules_col + "__code")).drop(
+        rules_col + "__code"
+    )
 
 
 def _lineitem_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1224,7 +1646,7 @@ def label_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def standardize_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    scaled, _ = FE.standardize(cust, ["c_acctbal"])
+    scaled, _ = standardize(cust, ["c_acctbal"])
     return scaled.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.avg("c_acctbal"), 6).alias("mean_z"),
@@ -1301,7 +1723,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("features"),
         "label",
     )
-    fit = C.kmeans_multi_seed(emb, k=4, seeds=[1, 42, 100], max_workers=3)
+    fit = kmeans_multi_seed(emb, k=4, seeds=[1, 42, 100], max_workers=3)
     if fit is None:
         return spark.createDataFrame([], "prediction: int, n: bigint")
     return (
@@ -1322,7 +1744,7 @@ def optimal_k_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("features")
     )
-    best = C.optimal_k(emb, ks=[3, 4, 5, 6], seed=42, max_workers=2)
+    best = optimal_k(emb, ks=[3, 4, 5, 6], seed=42, max_workers=2)
     return spark.createDataFrame([(best,)], "best_k: bigint")
 
 
@@ -1337,8 +1759,8 @@ def gmm_pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("features")
     )
-    proj, n_comp = FE.pca_transform(emb, n_components=8)
-    fit = C.gmm_fit(proj, k=4, seed=42)
+    proj, n_comp = pca_transform(emb, n_components=8)
+    fit = gmm_fit(proj, k=4, seed=42)
     if fit is None:
         return spark.createDataFrame(
             [], "n_components: bigint, k: bigint, n_clusters_found: bigint"
@@ -1582,10 +2004,10 @@ def elbow_curve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
     ks = [2, 3, 4, 5, 6]
     costs = [
-        C.kmeans_fit(feats, k=k, seed=42)["inertia"] for k in ks
+        kmeans_fit(feats, k=k, seed=42)["inertia"] for k in ks
     ]
     feats.unpersist()
-    elbow = C.elbow_index(costs)
+    elbow = elbow_index(costs)
     return spark.createDataFrame(
         [
             (k, round(c, 3), int(i == elbow))
@@ -1598,13 +2020,11 @@ def elbow_curve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmeans_refit(train):
     """Shared train->scorer closure for both consistency queries —
     one definition so the two metrics can never silently diverge."""
-    model = C.kmeans_fit(
+    model = kmeans_fit(
         train.select("row_id", "features"), k=3, seed=42
     )["model"]
 
     def predict(test):
-        from qudo_etl_pipeline_spark.ml.clustering import _to_vec
-
         return model.transform(_to_vec(test, "features")).drop("_v")
 
     return predict
@@ -1623,7 +2043,7 @@ def model_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
     )
-    base = C.kmeans_fit(feats, k=3, seed=42)["labels"].cache()
+    base = kmeans_fit(feats, k=3, seed=42)["labels"].cache()
 
     ari = model_consistency(base, _kmeans_refit)
     base.unpersist()
@@ -1645,7 +2065,7 @@ def label_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
     )
-    base = C.kmeans_fit(feats, k=3, seed=42)["labels"].cache()
+    base = kmeans_fit(feats, k=3, seed=42)["labels"].cache()
 
     ari = label_consistency(base, _kmeans_refit)
     base.unpersist()
@@ -2048,8 +2468,8 @@ def hierarchical_segmentation(
                 return sub.withColumn(PREDICTION, F.lit(-99)), 0
             if fitter is not None:
                 return fitter(sub)
-            best_k = C.optimal_k(sub, features_col, ks=hier_ks, seed=seed)
-            labeled = C.kmeans_fit(
+            best_k = optimal_k(sub, features_col, ks=hier_ks, seed=seed)
+            labeled = kmeans_fit(
                 sub, best_k, seed=seed, features_col=features_col
             )["labels"]
             return labeled, best_k

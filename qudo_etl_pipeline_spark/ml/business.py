@@ -22,11 +22,12 @@ Re-implements (reference: src/kraken/app/metrics.py):
 pop_mode...): a table sized by the survey's schema (significant
 variables x segments), so the metrics over it run in Python over its
 rows. They take the rows, or a DataFrame, which they collect once.
-`labeled` is the respondent table with a `prediction` column, or the
-survey's labelled pattern table. The metrics over it read one pattern
-table: the distinct (columns, prediction) combinations and their row
-counts, sized by the answer options rather than the respondents, so
-they are computed on the driver from its rows.
+The metrics of labelled rows read one pattern table: the distinct
+(columns, prediction) combinations and their row counts, sized by the
+answer options rather than the respondents, so they are computed on the
+driver from its rows. :func:`get_all_metrics` takes those rows (the
+survey's labelled scheme-table patterns); :func:`social_presence` and
+:func:`magnitude` take a labelled frame and collect its table once.
 """
 
 from __future__ import annotations
@@ -261,7 +262,7 @@ def significant_variables_and_spread(
 
 
 def get_all_metrics(
-    labeled: DataFrame | list,
+    table: list,
     deliver: Deliver | None = None,
     features_col: str = "features",
     pred: str = "prediction",
@@ -278,20 +279,16 @@ def get_all_metrics(
     columns, prediction, count ``_w``) pattern table, computed on the
     driver: quality, social presence, magnitude's cluster sizes and the
     signal loss, whose `_tgt` columns are the ``features`` positions
-    ``tgt_idx``. ``labeled`` is that table's rows (the survey's, summed
-    from its scheme table) or a frame, whose table is collected once.
-    The social presence needs the original answers, which label codes
-    never match ('facebook', metrics.py:840 full_data): an `mc_` column
-    in ``code_maps`` holds codes and is decoded with them."""
+    ``tgt_idx``. ``table`` is that table's rows: the survey's are summed
+    from its scheme table, and ``features.pattern_table`` collects them
+    from a frame. The social presence needs the original answers, which
+    label codes never match ('facebook', metrics.py:840 full_data): an
+    `mc_` column in ``code_maps`` holds codes and is decoded with them."""
     from qudo_etl_pipeline_spark.ml import quality as Q
     from qudo_etl_pipeline_spark.ml import signal as S
 
-    if isinstance(labeled, DataFrame):
-        cands = [c for c in labeled.columns if "mc_" in c]
-        table = FE.pattern_table(labeled, [features_col, *cands, pred])
-    else:
-        table = labeled
-        cands = [c for c in (table[0] if table else ()) if "mc_" in c]
+    first = table[0] if table else {}
+    cands = [c for c in (first.asDict() if isinstance(first, Row) else first) if "mc_" in c]
     metrics = Q.pattern_quality(table, features_col, pred, n_seed)
     metrics["fb_presence"] = _presence(
         table, cands, sm_platform, pred, code_maps or {}

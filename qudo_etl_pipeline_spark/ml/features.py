@@ -1,5 +1,4 @@
-"""Feature pipeline: the scheme table, dtype sniffing, label encoding,
-scaling, PCA.
+"""Feature pipeline: the scheme table, dtype sniffing, label encoding.
 
 Re-implements the reference's feature prep (reference:
 src/kraken/app/clustering.py:101-109,207-291) Spark-first:
@@ -13,10 +12,6 @@ src/kraken/app/clustering.py:101-109,207-291) Spark-first:
   from the same distinct values. sklearn sorts values (numerics
   numerically, strings lexicographically), so codes are computed per
   column in sorted order — NOT Spark StringIndexer's frequency order.
-- StandardScaler (clustering.py:236-257) -> population-std z-score
-  (sklearn ddof=0; MLlib StandardScaler would use ddof=1).
-- PCA component selection (clustering.py:259-291): smallest n with
-  cumulative explained variance >= 0.5.
 
 Scale notes (100 TB design):
 - A survey scheme reads its data through ONE aggregate,
@@ -30,9 +25,9 @@ Scale notes (100 TB design):
 - The per-column dictionaries (answer options — tiny) are re-applied as
   `F.create_map` literals, so ENCODING ADDS NO SHUFFLE to the downstream
   plan and survives Catalyst pushdown.
-- Scaling statistics are a single agg; the transform is pure column
-  arithmetic (whole-stage codegen).
-- PCA runs on MLlib vectors (distributed covariance/SVD), k<=#features.
+- Scaling and PCA are fitted on the same table's weighted patterns
+  (``ml.clustering.kmeans_table``); the catalog's MLlib versions are
+  ``catalog.ml_q``'s.
 """
 
 from __future__ import annotations
@@ -183,6 +178,7 @@ def scheme_table(
     cols: list[str],
     weight_col: str | None = None,
     id_col: str | None = None,
+    profile: tuple[dict[str, dict[str, int]], list[str]] | None = None,
 ) -> SchemeTable:
     """ONE aggregate of ``df`` and one collect: a ``groupBy`` over the
     full pattern of ``cols``, every column cast to string as
@@ -195,7 +191,9 @@ def scheme_table(
     ``limit``) is also the exact column profile. A table that overflows
     takes a priority sample of its full patterns
     (:func:`_priority_sample`) and reads its profile with
-    :func:`build_code_maps`."""
+    :func:`build_code_maps`, unless the caller passes the exact
+    ``profile`` (code maps, numeric columns) of a table over ``cols``
+    and more: then it reads no profile at all."""
     ident = F.col(id_col) if id_col else F.lit(None).cast("long")
     table = (
         df.select(
@@ -227,7 +225,11 @@ def scheme_table(
     else:
         full, sampled = _priority_sample(table, cols, "_n", scaled=("_wt",))
         exact = not sampled
-        maps, numeric = build_code_maps(df, cols)
+        if profile is None:
+            maps, numeric = build_code_maps(df, cols)
+        else:
+            maps = {c: profile[0][c] for c in cols}
+            numeric = [c for c in profile[1] if c in cols]
     full.sort(key=lambda r: [(r[c] is None, r[c] or "") for c in cols])
     return SchemeTable(list(cols), full, exact, maps, numeric)
 
@@ -276,107 +278,3 @@ def label_encode(
         else:
             out = out.withColumn(c + suffix, F.lit(None).cast("int"))
     return out
-
-
-def standardize(
-    df: DataFrame, cols: list[str], stats: dict | None = None
-) -> tuple[DataFrame, dict]:
-    """Population-std z-score (sklearn StandardScaler parity, M2).
-
-    Constant columns pass through centered (std 0 -> divide by 1,
-    sklearn's behavior). Returns (transformed df, fitted stats) so a
-    train-fit can be replayed on test data (model-consistency checks).
-    """
-    if stats is None:
-        aggs = []
-        for c in cols:
-            aggs.append(F.avg(F.col(c).cast("double")).alias(f"m_{c}"))
-            aggs.append(F.stddev_pop(F.col(c).cast("double")).alias(f"s_{c}"))
-        row = df.agg(*aggs).collect()[0]
-        stats = {
-            c: (row[f"m_{c}"], row[f"s_{c}"] if row[f"s_{c}"] else 1.0)
-            for c in cols
-        }
-    out = df.select(
-        *[
-            ((F.col(c).cast("double") - F.lit(stats[c][0])) / F.lit(stats[c][1])).alias(c)
-            if c in cols
-            else F.col(c)
-            for c in df.columns
-        ]
-    )
-    return out, stats
-
-
-def assemble_array(
-    df: DataFrame, cols: list[str], out_col: str = "features"
-) -> DataFrame:
-    """Pack columns into an array<double> features column."""
-    return df.withColumn(
-        out_col, F.array(*[F.col(c).cast("double") for c in cols])
-    )
-
-
-def find_n_components(
-    df: DataFrame,
-    features_col: str = "features",
-    var_threshold: float = 0.5,
-):
-    """Fit full-rank PCA; smallest n with cum. explained variance >=
-    threshold (clustering.py:259-274). Returns (ideal_n, fitted model)."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector
-
-    vdf = df.select(
-        array_to_vector(F.col(features_col).cast("array<double>")).alias("_v")
-    )
-    dim = len(vdf.first()["_v"])
-    model = PCA(k=dim, inputCol="_v", outputCol="_pca").fit(vdf)
-    cum = 0.0
-    ideal_n = dim
-    for i, ratio in enumerate(model.explainedVariance):
-        cum += ratio
-        if cum >= var_threshold:
-            ideal_n = i + 1
-            break
-    return ideal_n, model
-
-
-def pca_transform(
-    df: DataFrame,
-    features_col: str = "features",
-    n_components: int | None = None,
-    var_threshold: float = 0.5,
-) -> tuple[DataFrame, int]:
-    """Project features onto the first n principal components (M3).
-
-    Output column replaces `features_col` with the array<double>
-    projection; other columns pass through.
-    """
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vdf = df.withColumn(
-        "_v", array_to_vector(F.col(features_col).cast("array<double>"))
-    )
-    if n_components is None:
-        # reuse the full-rank model find_n_components already fitted:
-        # PCA components are nested (same ordered eigenvectors), so the
-        # first n coordinates of the full projection ARE the
-        # n-component projection — a second covariance/SVD job over the
-        # data would recompute the identical subspace
-        n_components, model = find_n_components(
-            df, features_col, var_threshold
-        )
-        projected = F.slice(
-            vector_to_array(F.col("_pca")), 1, n_components
-        )
-    else:
-        model = PCA(k=n_components, inputCol="_v", outputCol="_pca").fit(vdf)
-        projected = vector_to_array(F.col("_pca"))
-    out = (
-        model.transform(vdf)
-        .withColumn(features_col, projected)
-        .drop("_v", "_pca")
-    )
-    return out, n_components

@@ -145,7 +145,13 @@ def _kmodes_patterns(
 
     # --- Cao init (density: per-part cnt/n python floats, summed left
     # to right, / len(cat_cols); null attr -> null density -> never
-    # picked)
+    # picked). The density needs a categorical column: like the kmodes
+    # lib's KPrototypes, refuse an input with none
+    if not cat_cols:
+        raise ValueError(
+            "kprototypes needs at least one categorical column;"
+            " every column is numeric (kmeans fits such an input)"
+        )
     freq: dict[str, dict] = {c: {} for c in cat_cols}
     for c in cat_cols:
         f = freq[c]

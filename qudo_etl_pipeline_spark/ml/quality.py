@@ -3,7 +3,7 @@
 Re-implements the reference's metric layer (reference:
 src/kraken/app/metrics.py:24-124) without sklearn:
 
-- cluster proportions + balance predicate      (metrics.py:24-38; clustering.py:792-809)
+- cluster proportions                          (metrics.py:24-38)
 - silhouette / Davies-Bouldin / Calinski-Harabasz (metrics.py:73-90)
 
 Error-value semantics are replicated exactly because they feed the
@@ -13,11 +13,12 @@ Calinski-Harabasz -> 0 on degenerate inputs (metrics.py:75-90).
 Scale notes (100 TB design):
 - Every quality metric is a function of the (features, prediction,
   count) table, whose size is the number of distinct feature vectors,
-  not the row count. :func:`cluster_quality` collects that table once
-  through ``features.pattern_table`` and :func:`pattern_quality`
-  computes all the metrics from its rows in numpy: per-cluster count,
-  feature sum and squared-norm sum give the centroids, CH and the
-  silhouette; DB's scatter is one more pass over the same rows.
+  not the row count. :func:`pattern_quality` computes all the metrics
+  from its rows in numpy: per-cluster count, feature sum and
+  squared-norm sum give the centroids, CH and the silhouette; DB's
+  scatter is one more pass over the same rows. The survey passes its
+  labelled scheme-table patterns; ``catalog.ml_q.cluster_quality``
+  collects the table of a labelled frame.
 - The silhouette is MLlib ClusteringEvaluator's squared-Euclidean one
   (O(patterns x k)), not sklearn's O(n^2) Euclidean one: a documented
   delta; the rank-sum comparator only needs a consistent ordering.
@@ -26,41 +27,17 @@ Scale notes (100 TB design):
   are estimates over it.
 
 The adjusted Rand index (metrics.py:268,301), which only the consistency
-checks use, is catalog-side: ``catalog/ml_q.py``.
+checks use, and the frame versions of the sizes and the balance
+predicate are catalog-side: ``catalog/ml_q.py``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Row, Window
-from pyspark.sql import functions as F
-
-from qudo_etl_pipeline_spark.ml.features import pattern_table
+from pyspark.sql import Row
 
 FEATURES = "features"  # array<double>
 PREDICTION = "prediction"
-
-
-def cluster_sizes(df: DataFrame, pred: str = PREDICTION) -> DataFrame:
-    """Per-cluster row count and share of total (metrics.py:24-38)."""
-    total = Window.partitionBy()
-    return (
-        df.groupBy(pred)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("share", F.col("n") / F.sum("n").over(total))
-    )
-
-
-def balance_ok(
-    df: DataFrame,
-    pred: str = PREDICTION,
-    lo: float = 0.02,
-    hi: float = 0.55,
-) -> bool:
-    """Reject clustering unless every cluster share is in (lo, hi)
-    (clustering.py:117-118,792-809)."""
-    shares = [r["share"] for r in cluster_sizes(df, pred).collect()]
-    return all(lo < s < hi for s in shares)
 
 
 def _silhouette(X, w, idx, sqn, n, S, Q) -> float:
@@ -162,23 +139,3 @@ def pattern_quality(
     out["davies_bouldin"] = _davies_bouldin(X, w, idx, n, C)
     out["calinski_harabasz"] = _calinski_harabasz(n, C, Q)
     return out
-
-
-def cluster_quality(
-    df: DataFrame,
-    features: str = FEATURES,
-    pred: str = PREDICTION,
-    n_seed=None,
-) -> dict:
-    """get_cluster_metrics equivalent (metrics.py:42-124): silhouette /
-    davies_bouldin / calinski_harabasz / proportions of ``df``'s
-    ``features`` array under its ``pred`` labels, with the reference's
-    exact fallback values.
-
-    One collect of the (features, pred, count) table feeds
-    :func:`pattern_quality`. The feature array is a pattern key: a
-    continuous feature makes about one pattern per row, and
-    ``pattern_table`` keeps at most ``PATTERN_THRESHOLD`` of them (a
-    priority sample above it)."""
-    table = pattern_table(df, [features, pred])
-    return pattern_quality(table, features, pred, n_seed)

@@ -36,14 +36,15 @@ sums over the labelled patterns. Above ``features.PATTERN_THRESHOLD``
 full patterns the metrics read the table's priority sample, the fits
 read the scheme columns' own table (itself a priority sample only when
 those patterns overflow too), and the cells come exact from one Spark
-aggregate of the labelled rows. kmeans and gmm fit in MLlib over the
-encoded rows and read their cells and metric table from those rows.
+aggregate of the labelled rows. Every family fits, labels and
+finalizes through this one device: kmodes / kprototypes, LCA, the rules
+codes, and kmeans+PCA and the Gaussian mixture (``ml.clustering``), all
+fitted on the driver with no Spark job.
 
 The reference forks joblib child processes per family and re-pickles
 the table into each (clustering.py:1085-1088); here the families fit
-concurrently from driver threads, over the one scheme table or the
-encoded table cached once on the executors, and finalize concurrently
-as well.
+concurrently from driver threads over the one scheme table, and
+finalize concurrently as well.
 """
 
 from __future__ import annotations
@@ -121,11 +122,11 @@ def select_scheme_columns(
 @dataclass
 class _Scheme:
     """What a scheme's families read: the encoded rows (the cleaned
-    table, scheme and rules columns as label codes; cached, read by the
-    MLlib families and by the lazy labels), the scheme table's full
-    patterns with the same columns coded (what each family labels), and
-    the coded rows the kmodes and LCA fits read (those patterns, or
-    above the threshold the scheme columns' own table)."""
+    table, scheme and rules columns as label codes; lazy, what each
+    family's returned labels read), the scheme table's full patterns
+    with the same columns coded (what each family labels), and the coded
+    rows the fits read (those patterns, or above the threshold the
+    scheme columns' own table)."""
 
     encoded: DataFrame
     patterns: list[dict]
@@ -138,12 +139,8 @@ def _family_kmeans(
     cfg: SegmentationConfig,
     num_cols: list[str],
 ):
-    std, _ = FE.standardize(scheme.encoded.select(cfg.id_col, *cols), cols)
-    std = FE.assemble_array(std, cols)
-    proj, _ = FE.pca_transform(std)
-    best_k = C.optimal_k(proj, ks=cfg.ks or [3, 4, 5], seed=42, max_workers=2)
-    fit = C.kmeans_multi_seed(
-        proj, k=best_k, seeds=cfg.seeds or [1, 42, 100], max_workers=2
+    fit = C.kmeans_table(
+        scheme.fit_rows, cols, ks=cfg.ks or [3, 4, 5], seeds=cfg.seeds or [1, 42, 100]
     )
     return ("kmeans_and_pca", fit)
 
@@ -154,9 +151,8 @@ def _family_gmm(
     cfg: SegmentationConfig,
     num_cols: list[str],
 ):
-    feats = FE.assemble_array(scheme.encoded, cols)
-    fit = C.gmm_multi_seed(
-        feats, k=(cfg.ks or [3])[0], seeds=cfg.seeds or [42, 100], max_workers=2
+    fit = C.gmm_table(
+        scheme.fit_rows, cols, k=(cfg.ks or [3])[0], seeds=cfg.seeds or [42, 100]
     )
     return ("bmm", fit)
 
@@ -174,7 +170,6 @@ def _family_kmodes(
     fit = KM.kmodes_table(
         scheme.fit_rows, cat, k=(cfg.ks or [3])[0], num_cols=num_cols
     )
-    fit["labels"] = fit["label"](scheme.encoded)
     fit["seed"] = None
     return ("kprototypes" if num_cols else "kmodes", fit)
 
@@ -193,10 +188,7 @@ def _family_rules(
     def label(df: DataFrame) -> DataFrame:
         return df.withColumn(C.PREDICTION, F.col(cfg.rules_col))
 
-    return (
-        "rules_based",
-        {"label": label, "labels": label(scheme.encoded), "k": None, "seed": None},
-    )
+    return ("rules_based", {"label": label, "k": None, "seed": None})
 
 
 def _family_lca(
@@ -225,7 +217,6 @@ def _family_lca(
         scheme.fit_rows, cat, ks=cfg.ks or [3], seeds=[42, 43, 44],
         max_iter=30, num_cols=num_cols,
     )
-    fit["labels"] = fit["label"](scheme.encoded)
     return ("lca", fit)
 
 
@@ -359,33 +350,15 @@ def run_scheme(
         fit_rows = patterns
         if not table.exact:
             # the fits read the scheme columns' own table, exact whenever
-            # their patterns fit the threshold; its profile is exact
-            # too, so its codes are the scheme table's
+            # their patterns fit the threshold; it takes the scheme
+            # table's exact profile, so its codes are the scheme table's
+            # and it reads no profile of its own
             fit_rows = FE.scheme_table(
-                cleaned, scheme_cols, id_col=cfg.id_col
+                cleaned, scheme_cols, id_col=cfg.id_col,
+                profile=(table.code_maps, table.numeric),
             ).coded(scheme_cols)
-    encoded = FE.label_encode(cleaned, enc_cols, code_maps=table.code_maps).cache()
-    try:
-        return _run_families(
-            spark, run_id, cleaned, _Scheme(encoded, patterns, fit_rows),
-            table, scheme_cols, enc_cols, cands, cfg,
-        )
-    finally:
-        encoded.unpersist()
-
-
-def _run_families(
-    spark: SparkSession,
-    run_id: int,
-    cleaned: DataFrame,
-    scheme: _Scheme,
-    table: FE.SchemeTable,
-    scheme_cols: list[str],
-    enc_cols: list[str],
-    cands: list[str],
-    cfg: SegmentationConfig,
-) -> dict:
-    """:func:`run_scheme`'s fit and finalize phases."""
+    encoded = FE.label_encode(cleaned, enc_cols, code_maps=table.code_maps)
+    scheme = _Scheme(encoded, patterns, fit_rows)
     num_cols = [c for c in table.numeric if c in scheme_cols]
     algos = _algorithms(cfg)
     sc = spark.sparkContext
@@ -456,13 +429,11 @@ def _run_families(
     code_maps = {c: table.code_maps[c] for c in enc_cols}
 
     def finalize_family(algo: str, fit: dict) -> dict:
-        labeled = fit["labels"]
-        # a family with a row expression labels the scheme table's
-        # patterns (exact or sampled); kmeans and gmm label rows only
-        labels = None
-        if "label" in fit:
-            labels = _label_patterns(spark, fit["label"], scheme.patterns, enc_cols)
-        if labels is not None and table.exact:
+        # every family's row expression labels the scheme table's
+        # patterns (exact or sampled), and the encoded rows lazily
+        labeled = fit["label"](scheme.encoded)
+        labels = _label_patterns(spark, fit["label"], scheme.patterns, enc_cols)
+        if table.exact:
             tables = pattern_tables(
                 spark,
                 [table.rows[i] | {C.PREDICTION: k, "_seg": seg} for i, k, seg in labels],
@@ -483,14 +454,8 @@ def _run_families(
                 id_vars=[cfg.id_col],
             )
         deliver = deliver_stats(tables, alpha=1 - cfg.conf_interval)
-        if labels is not None:
-            metric_table = _metric_rows(scheme.patterns, labels, scheme_cols, cands)
-        else:
-            metric_table = FE.assemble_array(scheme.encoded, scheme_cols).join(
-                labeled.select(cfg.id_col, C.PREDICTION), cfg.id_col
-            )
         metrics = get_all_metrics(
-            metric_table,
+            _metric_rows(scheme.patterns, labels, scheme_cols, cands),
             deliver=deliver,
             tgt_idx=tgt_idx,
             n_seed=fit.get("seed"),
@@ -523,8 +488,8 @@ def _run_families(
     # Inference + metrics for the surviving families run CONCURRENTLY,
     # mirroring the fit phase above, each under its family's job group.
     # Over the exact scheme table a family's finalize is driver-side
-    # work with no Spark job; the sampled table and the MLlib families
-    # read Spark here. Families share only read-only inputs.
+    # work with no Spark job; over the sampled table its cells are one
+    # Spark aggregate. Families share only read-only inputs.
     if pending:
         finalize_pool = ThreadPoolExecutor(
             max_workers=len(pending),

@@ -21,7 +21,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.ml import clustering as C
+from qudo_etl_pipeline_spark.catalog.ml_q import kmeans_fit
 from qudo_etl_pipeline_spark.operators import similarity as SIM
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -70,7 +70,7 @@ def _learned_centroids(df, k: int) -> list[list[float]]:
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
     )
-    fit = C.kmeans_fit(feats, k=k, seed=42)
+    fit = kmeans_fit(feats, k=k, seed=42)
     return [[float(x) for x in c] for c in fit["model"].clusterCenters()]
 
 

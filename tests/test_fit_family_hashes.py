@@ -38,8 +38,10 @@ PINNED = [
     "mode_list_planted",
 ]
 # The HASHES_r12.json entry of the whole-pipeline query is older than a
-# change of its summary; this hash has held since, so it is pinned here.
-E2E_HASH = "539c730b773145e4832e236bffea6ca9"
+# change of its summary, so its hash is pinned here. Re-recorded when
+# kmeans+PCA moved to the driver fit over the scheme table: only the
+# kmeans_and_pca row moved (silhouette6 0.279064 -> 0.278091).
+E2E_HASH = "9a9f477a089c99e18f319e232103add2"
 
 
 @pytest.fixture(scope="module")

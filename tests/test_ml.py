@@ -1,7 +1,9 @@
-"""Tests for ml/features.py and ml/clustering.py (reference:
-src/kraken/app/clustering.py). Label-identity with sklearn is impossible
-(k-means++ vs k-means||) — these assert structure: encode/scale/PCA
-numerics, balance/rank semantics, blob recovery via ARI."""
+"""Tests for ml/features.py, ml/clustering.py and the catalog's frame
+versions of scaling, PCA and the rules codes (reference:
+src/kraken/app/clustering.py). Label identity with sklearn is not the
+aim — these assert structure: encode/scale/PCA numerics, balance/rank
+semantics, blob recovery via ARI, and that a fit over weighted patterns
+is the fit over the rows they stand for."""
 
 from __future__ import annotations
 
@@ -10,12 +12,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from qudo_etl_pipeline_spark.catalog.ml_q import (
-    adjusted_rand_index,
-    hierarchical_segmentation,
-)
+from qudo_etl_pipeline_spark.catalog import ml_q as MQ
+from qudo_etl_pipeline_spark.catalog.ml_q import hierarchical_segmentation
 from qudo_etl_pipeline_spark.ml import clustering as C
 from qudo_etl_pipeline_spark.ml import features as FE
+from tests.reference_stats import adjusted_rand_np
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +36,18 @@ def blobs(spark):
         rows, "row_id: long, features: array<double>, truth: int"
     )
     return df.cache(), X, np.array(labels)
+
+
+def _rows(X: np.ndarray, n=None) -> list[dict]:
+    """Scheme-table-shaped rows of a point matrix: columns x0.., ``_n``."""
+    n = np.ones(len(X), dtype=int) if n is None else n
+    return [
+        {**{f"x{j}": float(v) for j, v in enumerate(x)}, "_n": int(c)}
+        for x, c in zip(X, n)
+    ]
+
+
+XCOLS = ["x0", "x1"]
 
 
 def test_sniff_numeric_columns(spark):
@@ -80,14 +93,14 @@ def test_label_encode_sorted_order(spark):
 def test_standardize_population_std(spark):
     vals = [1.0, 2.0, 3.0, 4.0]
     df = spark.createDataFrame([(v,) for v in vals], "x: double")
-    out, stats = FE.standardize(df, ["x"])
+    out, stats = MQ.standardize(df, ["x"])
     got = sorted(r["x"] for r in out.collect())
     arr = np.array(vals)
     expect = sorted((arr - arr.mean()) / arr.std())  # ddof=0
     assert got == pytest.approx(expect, rel=1e-12)
     # replay on new data with fitted stats
     df2 = spark.createDataFrame([(10.0,)], "x: double")
-    out2, _ = FE.standardize(df2, ["x"], stats=stats)
+    out2, _ = MQ.standardize(df2, ["x"], stats=stats)
     assert out2.collect()[0]["x"] == pytest.approx(
         (10.0 - arr.mean()) / arr.std(), rel=1e-12
     )
@@ -102,9 +115,9 @@ def test_pca_component_selection(spark):
     df = spark.createDataFrame(
         [([float(v) for v in row],) for row in X], "features: array<double>"
     )
-    n, _ = FE.find_n_components(df)
+    n, _ = MQ.find_n_components(df)
     assert n == 1
-    proj, n_used = FE.pca_transform(df, n_components=2)
+    proj, n_used = MQ.pca_transform(df, n_components=2)
     row = proj.first()
     assert n_used == 2 and len(row["features"]) == 2
 
@@ -116,31 +129,131 @@ def test_elbow_index():
     assert C.elbow_index([5.0, 4.0]) == 0
 
 
-def test_kmeans_multi_seed_recovers_blobs(spark, blobs):
-    df, X, truth = blobs
-    fit = C.kmeans_multi_seed(df, k=3, seeds=[1, 42], max_workers=2)
+def test_kmeans_multi_seed_recovers_blobs(blobs):
+    _, X, truth = blobs
+    fit = C.kmeans_table(_rows(X), XCOLS, ks=[3], seeds=[1, 42])
     assert fit is not None
-    labeled = fit["labels"].withColumnRenamed("prediction", "pred")
-    ari = adjusted_rand_index(labeled, "truth", "pred")
-    assert ari > 0.95
+    assert adjusted_rand_np(truth, fit["labels"]) > 0.95
     assert fit["metrics"]["n_clusters"] == 3
     shares = fit["metrics"]["cluster_proportions"].values()
     assert all(0.02 < s < 0.55 for s in shares)
 
 
-def test_optimal_k_picks_three(spark, blobs):
-    df, _, _ = blobs
-    best = C.optimal_k(df, ks=[2, 3, 4, 5], seed=42, max_workers=2)
-    assert best == 3
+def test_optimal_k_picks_three(blobs):
+    _, X, _ = blobs
+    fit = C.kmeans_table(_rows(X), XCOLS, ks=[2, 3, 4, 5], seeds=[42])
+    assert fit["k"] == 3
 
 
-def test_gmm_fit_bic_aic(spark, blobs):
-    df, _, truth = blobs
-    fit = C.gmm_fit(df, k=3, seed=42)
+def test_gmm_fit_bic_aic(blobs):
+    _, X, truth = blobs
+    fit = C.gmm_table(_rows(X), XCOLS, k=3, seeds=[42])
     assert fit is not None
     assert fit["bic"] > fit["aic"]  # ln(240) > 2 per parameter
-    labeled = fit["labels"].withColumnRenamed("prediction", "pred")
-    assert adjusted_rand_index(labeled, "truth", "pred") > 0.9
+    assert adjusted_rand_np(truth, fit["labels"]) > 0.9
+
+
+@pytest.fixture(scope="module")
+def weighted_blobs():
+    """Three 3-d blobs of distinct points, each standing for 1-4 rows."""
+    rng = np.random.default_rng(11)
+    X = np.vstack(
+        [rng.normal(loc=c, scale=1.0, size=(40, 3)) for c in ((0, 0, 0), (4, 4, 0), (0, 5, 5))]
+    )
+    return X, rng.integers(1, 5, size=len(X))
+
+
+def test_a_weighted_fit_is_the_fit_of_the_expanded_rows(weighted_blobs):
+    """A pattern of count n weighs as n rows of weight 1: the k-means++
+    draws, Lloyd, EM and the BIC/AIC give the same labels, inertia and
+    information criteria on the patterns as on their expanded rows."""
+    X, n = weighted_blobs
+    w = n.astype(float)
+    rows = np.repeat(X, n, axis=0)
+    ones = np.ones(len(rows))
+    for seed in (1, 42, 100):
+        for k in (2, 3, 4):
+            a, b = C._kmeans(X, w, k, seed), C._kmeans(rows, ones, k, seed)
+            assert (np.repeat(a["labels"], n) == b["labels"]).all(), (seed, k)
+            assert a["inertia"] == pytest.approx(b["inertia"], rel=1e-9)
+        a, b = C._gmm(X, w, 3, seed), C._gmm(rows, ones, 3, seed)
+        assert (np.repeat(a["labels"], n) == b["labels"]).all(), seed
+        for key in ("loglik", "bic", "aic"):
+            assert a[key] == pytest.approx(b[key], rel=1e-9), (seed, key)
+    # the table API groups the expanded rows back into the patterns
+    cols = ["x0", "x1", "x2"]
+    for fit in (
+        lambda r: C.kmeans_table(r, cols, ks=[3, 4], seeds=[1, 42]),
+        lambda r: C.gmm_table(r, cols, k=3, seeds=[42, 100]),
+    ):
+        a, b = fit(_rows(X, n)), fit(_rows(rows))
+        assert (a["labels"] == b["labels"]).all()
+        assert (a["k"], a["seed"]) == (b["k"], b["seed"])
+        assert a["metrics"] == b["metrics"]
+
+
+def test_table_fits_start_no_spark_job(spark, weighted_blobs):
+    from tests.test_pipeline import _jobs_started_by
+
+    X, n = weighted_blobs
+    rows, cols = _rows(X, n), ["x0", "x1", "x2"]
+    assert _jobs_started_by(spark, lambda: C.kmeans_table(rows, cols, ks=[3])) == 0
+    assert _jobs_started_by(spark, lambda: C.gmm_table(rows, cols, k=3)) == 0
+
+
+def test_gmm_reg_covar_fits_a_duplicated_column():
+    """An exact copy of a column makes the sample covariance singular;
+    the 1e-6 on its diagonal keeps every fit finite."""
+    rng = np.random.default_rng(3)
+    x = rng.integers(0, 4, size=300).astype(float)
+    X = np.column_stack([x, x, rng.integers(0, 3, size=300)])
+    for seed in (42, 100):
+        fit = C._gmm(X, np.ones(len(X)), 3, seed)
+        if fit is not None:
+            assert np.isfinite([fit["loglik"], fit["bic"], fit["aic"]]).all()
+
+
+def test_gmm_selection_rules(monkeypatch):
+    """Before the BIC/AIC rank-sum a mixture must pass the reference's
+    rules: a fit with a class under 1% of the rows is rejected (here a
+    lone far point isolated by the seed's Lloyd start), and an
+    unbalanced fit is dropped even when its information criteria are
+    the best, as a collapsed fit's are."""
+    rng = np.random.default_rng(0)
+    X = np.vstack(
+        [rng.normal((0, 0), 1, (100, 2)), rng.normal((12, 0), 1, (100, 2)), [(0.0, 12.0)]]
+    )
+    w = np.ones(len(X))
+    assert C._gmm(X, w, 3, 0) is None
+    assert C.gmm_table(_rows(X), XCOLS, k=3, seeds=[0, 3])["seed"] == 3
+    good = C._gmm(X, w, 3, 3)
+    one_heavy = np.where(np.arange(len(X)) < 150, 0, good["labels"])
+    collapsed = good | {
+        "labels": one_heavy, "seed": 1, "bic": good["bic"] - 1e3, "aic": good["aic"] - 1e3
+    }
+    fits = {1: collapsed, 3: good}
+    monkeypatch.setattr(C, "_gmm", lambda X, w, k, seed: fits[seed])
+    assert C.gmm_table(_rows(X), XCOLS, k=3, seeds=[1, 3])["seed"] == 3
+    assert C.gmm_table(_rows(X), XCOLS, k=3, seeds=[1]) is None
+
+
+def test_row_expressions_label_rows_as_the_fit_labels_them(spark, weighted_blobs):
+    """The fitted row expression ``label`` (z-score, projection,
+    distances or log-densities as Column arithmetic) gives each point
+    the label the numpy fit gave it; a NULL code gets no label."""
+    X, n = weighted_blobs
+    cols = ["x0", "x1", "x2"]
+    df = spark.createDataFrame(
+        [(i, *map(float, x)) for i, x in enumerate(X)] + [(len(X), None, 0.0, 0.0)],
+        "i: int, x0: double, x1: double, x2: double",
+    )
+    for fit in (
+        C.kmeans_table(_rows(X, n), cols, ks=[3, 4], seeds=[1, 42]),
+        C.gmm_table(_rows(X, n), cols, k=3, seeds=[42, 100]),
+    ):
+        got = dict(fit["label"](df).select("i", "prediction").collect())
+        assert got.pop(len(X)) is None
+        assert [got[i] for i in range(len(X))] == list(fit["labels"])
 
 
 def test_rules_based_labels(spark):
@@ -148,7 +261,7 @@ def test_rules_based_labels(spark):
         [("Agree",), ("Disagree",), ("Agree",), ("Neutral",)],
         "q1: string",
     )
-    out = C.rules_based(df, "q1")
+    out = MQ.rules_based(df, "q1")
     got = {(r["q1"], r["prediction"]) for r in out.collect()}
     assert got == {("Agree", 0), ("Disagree", 1), ("Neutral", 2)}
 

@@ -667,9 +667,10 @@ def test_outputs_are_a_crosstab_of_the_returned_labels(
     spark, responses, monkeypatch, side
 ):
     """On both sides of the pattern threshold every family's deliver,
-    discover and mode list equal a Spark crosstab of its own returned
-    row labels: on the exact side the cells are summed from labelled
-    patterns, so a pattern labelled apart from its rows would show."""
+    discover and mode list, all five families through one finalize path,
+    equal a Spark crosstab of its own returned row labels: on the exact
+    side the cells are summed from labelled patterns, so a pattern
+    labelled apart from its rows would show."""
     from qudo_etl_pipeline_spark import pipeline as P
     from qudo_etl_pipeline_spark.ml import features as FE
 
@@ -685,12 +686,13 @@ def test_outputs_are_a_crosstab_of_the_returned_labels(
         monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
     cleaned, cols, cfg = _tagged_scheme(responses)
     cfg.weight_col, cfg.include_lca = "weight", True
+    cfg.algorithms = ("kmeans", "gmm", "kmodes", "rules_based")
     out = P.run_scheme(spark, cleaned, cols, cfg)
     # the sampled side's fits read the scheme columns' own table
     table = tables[0]
     assert table.exact == (side == "exact")
     assert [t.cols for t in tables[1:]] == ([] if table.exact else [cols])
-    assert set(out) == {"kprototypes", "rules_based", "lca"}
+    assert set(out) == {"kmeans_and_pca", "bmm", "kprototypes", "rules_based", "lca"}
     for algo, res in out.items():
         assert "error" not in res["metrics"], algo
         want = _crosstab(cleaned, res["labels"], cols, cfg)
@@ -708,16 +710,17 @@ def test_outputs_are_a_crosstab_of_the_returned_labels(
                 ), (algo, key, g, w)
 
 
-# Spark jobs of one run_scheme on the tagged fixture with kmodes (as
-# kprototypes), rules_based and lca, summed over the run's job groups:
-# measured 2 (the scheme table's aggregate and its result stage), with
-# 0 in every fit and finalize group.
+# Spark jobs of one run_scheme on the tagged fixture with all five
+# families (kmeans, gmm, kmodes as kprototypes, rules_based, lca),
+# summed over the run's job groups: measured 2 (the scheme table's
+# aggregate and its result stage), with 0 in every fit and finalize
+# group.
 SCHEME_JOBS_MAX = 2
 
 
 def test_one_scheme_runs_one_aggregate(spark, responses, monkeypatch):
-    """A scheme's Spark work is its scheme table: the fits and every
-    family's inference and metrics run no Spark job."""
+    """A scheme's Spark work is its scheme table: every family's fit,
+    inference and metrics, kmeans and gmm included, run no Spark job."""
     import itertools
 
     from qudo_etl_pipeline_spark import pipeline as P
@@ -726,6 +729,7 @@ def test_one_scheme_runs_one_aggregate(spark, responses, monkeypatch):
     cleaned, cols, cfg = _tagged_scheme(responses)
     cleaned = cleaned.cache()
     cleaned.count()  # the survey caches its cleaned table before a scheme
+    cfg.algorithms = ("kmeans", "gmm", "kmodes", "rules_based")
     cfg.include_lca = True
     sc = spark.sparkContext
     outside = "test-outside-the-scheme-groups"
@@ -735,9 +739,10 @@ def test_one_scheme_runs_one_aggregate(spark, responses, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         cleaned.unpersist()
-    assert all("error" not in r["metrics"] for r in out.values())
+    assert set(out) == {"kmeans_and_pca", "bmm", "kprototypes", "rules_based", "lca"}
+    assert all(r["deliver"] is not None for r in out.values()), out
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    algos = ["kmodes", "rules_based", "lca"]
+    algos = ["kmeans", "gmm", "kmodes", "rules_based", "lca"]
     groups = [outside, "scheme7000000:table"] + [
         f"scheme7000000:{phase}:{name}"
         for phase, names in (("family", algos), ("finalize", list(out)))
@@ -746,5 +751,104 @@ def test_one_scheme_runs_one_aggregate(spark, responses, monkeypatch):
     jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
     assert jobs["scheme7000000:table"] > 0
     finalize = [n for g, n in jobs.items() if ":finalize:" in g]
-    assert finalize == [0, 0, 0], jobs
+    assert finalize == [0] * 5, jobs
     assert sum(jobs.values()) <= SCHEME_JOBS_MAX, jobs
+
+
+def test_row_labels_are_their_pattern_labels(spark, responses):
+    """kmeans and gmm label the encoded rows lazily with the same row
+    expression that labels the scheme table's patterns: every row gets
+    its pattern's label, and the patterns' labels are the fit's own."""
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import clustering as C
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    table = FE.scheme_table(cleaned, cols, id_col=cfg.id_col)
+    patterns = table.coded(cols)
+    encoded = FE.label_encode(cleaned, cols, code_maps=table.code_maps)
+    fits = {
+        "kmeans": C.kmeans_table(patterns, cols, ks=[3, 4], seeds=[1, 42]),
+        "gmm": C.gmm_table(patterns, cols, k=3, seeds=[42, 100]),
+    }
+    for name, fit in fits.items():
+        assert fit is not None, name
+        labels = P._label_patterns(spark, fit["label"], patterns, cols)
+        assert [k for _, k, _ in labels] == list(fit["labels"]), name
+        of = {tuple(patterns[i][c] for c in cols): k for i, k, _ in labels}
+        rows = fit["label"](encoded).select(*cols, "prediction").collect()
+        assert len(rows) == 600
+        assert all(r["prediction"] == of[tuple(r[c] for c in cols)] for r in rows), name
+
+
+def test_kprototypes_with_no_categorical_column_fails_contained(spark):
+    """A scheme whose every column is numeric sends the kmodes family to
+    kprototypes with no categorical column, which it refuses by name;
+    the scheme's other families still finish."""
+    cfg = SegmentationConfig(
+        survey_name="numeric_only",
+        schemes={"psy": ["psy_"]},
+        rules_col="fin_uk_goal_fb_tgt",
+        algorithms=("kmodes", "rules_based"),
+        ks=[3],
+    )
+    responses = spark.createDataFrame(make_responses(n=200))
+    out = run_all_segmentations(spark, responses, cfg)["psy"]
+    err = out["kmodes"]["metrics"]["error"]
+    assert err.startswith("ValueError: kprototypes needs at least one categorical column"), err
+    assert out["kmodes"]["labels"] is None
+    assert out["rules_based"]["deliver"] is not None
+    assert "error" not in out["rules_based"]["metrics"]
+
+
+# Spark jobs in the `:table` group of one run_scheme on the tagged
+# fixture with the threshold at 40, so that both the widened table and
+# the scheme columns' own table (its numeric column makes many
+# patterns) overflow: measured 12 when the second table read its own
+# profile (a melt + distinct: its shuffle stage and its result stage),
+# 10 with the first table's profile passed in.
+SAMPLED_TABLE_JOBS = 10
+
+
+def test_the_fits_table_reads_no_second_profile(spark, responses, monkeypatch):
+    """Above the threshold the fits read the scheme columns' own table;
+    when it overflows too it takes the scheme table's exact profile
+    instead of reading one, so the codes are the same as a profile
+    pass over the cleaned rows gives, with that pass's jobs fewer."""
+    import itertools
+
+    from qudo_etl_pipeline_spark import pipeline as P
+    from qudo_etl_pipeline_spark.ml import features as FE
+
+    tables, profiles = [], []
+    real_table, real_maps = FE.scheme_table, FE.build_code_maps
+
+    def spy_table(*args, **kwargs):
+        tables.append(real_table(*args, **kwargs))
+        return tables[-1]
+
+    def spy_maps(*args, **kwargs):
+        profiles.append(args[1])
+        return real_maps(*args, **kwargs)
+
+    monkeypatch.setattr(FE, "scheme_table", spy_table)
+    monkeypatch.setattr(FE, "build_code_maps", spy_maps)
+    monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
+    monkeypatch.setattr(P, "_RUN_COUNTER", itertools.count(8_000_000))
+    cleaned, cols, cfg = _tagged_scheme(responses)
+    cfg.algorithms = ("rules_based",)
+    cleaned = cleaned.cache()
+    cleaned.count()
+    try:
+        P.run_scheme(spark, cleaned, cols, cfg)
+        maps, numeric = real_maps(cleaned, cols)
+    finally:
+        cleaned.unpersist()
+    assert [t.exact for t in tables] == [False, False]
+    assert "psy_ww_openness_sc" in tables[1].numeric
+    assert len(profiles) == 1  # the widened table's only
+    assert (tables[1].code_maps, tables[1].numeric) == (maps, numeric)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("scheme8000000:table")
+    assert len(jobs) == SAMPLED_TABLE_JOBS

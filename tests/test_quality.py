@@ -44,12 +44,12 @@ def test_cluster_sizes_and_balance(spark, clustered):
     df, _, labels = clustered
     sizes = {
         r["prediction"]: (r["n"], r["share"])
-        for r in Q.cluster_sizes(df).collect()
+        for r in MQ.cluster_sizes(df).collect()
     }
     assert sizes[0][0] == 60 and abs(sizes[0][1] - 1 / 3) < 1e-12
-    assert Q.balance_ok(df)
+    assert MQ.balance_ok(df)
     # degenerate: all rows one cluster -> share 1.0 outside (0.02, 0.55)
-    assert not Q.balance_ok(df.withColumn("prediction", F.lit(0)))
+    assert not MQ.balance_ok(df.withColumn("prediction", F.lit(0)))
 
 
 def test_davies_bouldin_matches_numpy(spark, clustered):
@@ -86,11 +86,11 @@ def test_silhouette_squared_orders_like_exact(spark, clustered):
     """The squared silhouette of cluster_quality must at least agree in
     sign/ordering with the exact metric on clean vs random labels."""
     df, _, _ = clustered
-    good = Q.cluster_quality(df)["silhouette"]
+    good = MQ.cluster_quality(df)["silhouette"]
     rnd = df.withColumn(
         "prediction", F.floor(F.rand(7) * 3).cast("int")
     )
-    bad = Q.cluster_quality(rnd)["silhouette"]
+    bad = MQ.cluster_quality(rnd)["silhouette"]
     assert good > 0.5 and good > bad
 
 
@@ -242,7 +242,7 @@ def test_rank_cluster_metrics_pandas_semantics(spark):
 
 def test_cluster_quality_dict(spark, clustered):
     df, X, labels = clustered
-    m = Q.cluster_quality(df, n_seed=42)
+    m = MQ.cluster_quality(df, n_seed=42)
     assert m["n_clusters"] == 3
     assert m["davies_bouldin"] == pytest.approx(R.davies_bouldin_np(X, labels), rel=1e-9)
     assert m["calinski_harabasz"] == pytest.approx(
@@ -254,7 +254,7 @@ def test_cluster_quality_dict(spark, clustered):
 
 def test_random_checker_ratios(spark, clustered):
     df, _, _ = clustered
-    base = Q.cluster_quality(df)
+    base = MQ.cluster_quality(df)
     out = random_checker(df, cluster_metrics=base, n_runs=2)
     # clean blobs must beat random labelings on every ratio
     assert out["calinski_harabasz_random_ratio"] > 1.0
@@ -269,7 +269,7 @@ def test_random_checker_exact_values(spark, clustered):
     reproduce every ratio through the numpy mirrors — not just the
     >1.0 ordering."""
     df, X, _ = clustered
-    base = Q.cluster_quality(df)
+    base = MQ.cluster_quality(df)
     out = random_checker(df, cluster_metrics=base, n_runs=2)
     k = 3  # distinct planted predictions; checker draws from 0..k incl.
     sils, dbs, chs = [], [], []
@@ -328,8 +328,6 @@ def test_label_consistency_exact_value(spark, clustered):
 def test_cluster_quality_excludes_null_predictions(spark):
     """NULL prediction = unassigned: contributes to no quality metric
     and must not crash driver-side sorts (r11 NULL-salt sweep)."""
-    from qudo_etl_pipeline_spark.ml import quality as Q
-
     rows = [
         (0, [0.0, 0.0], 0), (1, [0.1, 0.0], 0),
         (2, [5.0, 5.0], 1), (3, [5.1, 5.0], 1),
@@ -338,11 +336,11 @@ def test_cluster_quality_excludes_null_predictions(spark):
     df = spark.createDataFrame(
         rows, "row_id long, features array<double>, prediction int"
     )
-    m = Q.cluster_quality(df)
+    m = MQ.cluster_quality(df)
     assert m["n_clusters"] == 2
     assert set(m["cluster_proportions"]) == {0, 1}
     assert abs(sum(m["cluster_proportions"].values()) - 1.0) < 1e-12
-    base = Q.cluster_quality(df.filter("prediction IS NOT NULL"))
+    base = MQ.cluster_quality(df.filter("prediction IS NOT NULL"))
     assert m["davies_bouldin"] == base["davies_bouldin"]
 
 
@@ -423,7 +421,7 @@ def test_cluster_quality_starts_at_most_two_jobs(spark, clustered):
     """cluster_quality is one collect of the (features, prediction,
     count) table: the aggregate's shuffle stage and its result."""
     df, _, _ = clustered
-    assert _jobs_started_by(spark, lambda: Q.cluster_quality(df)) <= 2
+    assert _jobs_started_by(spark, lambda: MQ.cluster_quality(df)) <= 2
 
 
 def test_cluster_quality_above_the_threshold_is_a_sample_estimate(
@@ -436,7 +434,7 @@ def test_cluster_quality_above_the_threshold_is_a_sample_estimate(
 
     df, X, labels = clustered
     monkeypatch.setattr(FE, "PATTERN_THRESHOLD", 40)
-    m = Q.cluster_quality(df)
+    m = MQ.cluster_quality(df)
     assert m["n_clusters"] == 3
     assert sum(m["cluster_proportions"].values()) == pytest.approx(1.0)
     for key, exact in [

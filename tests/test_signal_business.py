@@ -505,12 +505,14 @@ def test_consistency_checkers(spark, labeled):
 
 
 def test_get_all_metrics_composition(spark, labeled, deliver):
+    from qudo_etl_pipeline_spark.ml import features as FE
+
     feats = labeled.withColumn(
         "features",
         F.array(F.col("q1_tgt").cast("double"), F.col("q2_tgt").cast("double")),
     )
     m = B.get_all_metrics(
-        feats,
+        FE.pattern_table(feats, ["features", "mc_social", "prediction"]),
         deliver=deliver,
         tgt_idx=[0, 1],
     )

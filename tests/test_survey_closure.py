@@ -5,9 +5,11 @@ points (``pipeline``, ``workqueue``, ``sources.io``, ``session``) through
 package-internal imports, function-level (lazy) imports included, plus
 the ``__init__`` of every package on the way, which importing a
 submodule runs. No catalog, streaming or skew-salting module may be in
-it: they do not run on the survey path. No closure module imports
-MLlib's classifiers or evaluators either: the survey's classifier and
-cluster metrics run on the driver. Its size is a design metric:
+it: they do not run on the survey path. No closure module imports any
+MLlib module either: every family fits on the driver over its scheme
+table, and the survey's classifier and cluster metrics run there too
+(the catalog's MLlib fits are ``catalog.ml_q``'s). Its size is a design
+metric:
 the closure's line count stays under a budget, so growth is a visible
 edit of ``CLOSURE_LINES_MAX``.
 """
@@ -22,11 +24,11 @@ ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = ("pipeline", "workqueue", "sources.io", "session")
 FORBIDDEN_PREFIXES = (f"{PKG}.catalog", f"{PKG}.streaming")
 FORBIDDEN = {f"{PKG}.plans.skew", f"{PKG}.operators.checks"}
-# MLlib modules no survey step uses: the survey's classifier and its
-# cluster metrics run on the driver over pattern tables
-FORBIDDEN_PYSPARK = ("pyspark.ml.classification", "pyspark.ml.evaluation")
+# no survey step uses MLlib: the fits, the classifier and the cluster
+# metrics run on the driver over pattern tables
+FORBIDDEN_PYSPARK = ("pyspark.ml",)
 # lines of every closure module, summed; lower it when the closure shrinks
-CLOSURE_LINES_MAX = 4411
+CLOSURE_LINES_MAX = 4342
 
 
 def _path(mod: str) -> Path | None:
@@ -88,7 +90,7 @@ def test_survey_closure_stays_within_its_line_budget():
     assert lines <= CLOSURE_LINES_MAX, lines
 
 
-def test_survey_closure_imports_no_mllib_classifier_or_evaluator():
+def test_survey_closure_imports_no_mllib():
     leaked = sorted(
         (m, name)
         for m in survey_closure()
