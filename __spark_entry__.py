@@ -22,64 +22,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Three-tier deterministic order (then name within each tier), so any
-    order-sensitive sampling of this surface repairs and drains the
-    canonical driver record fastest; under uniform sampling the order
-    is irrelevant:
-
-    1. needs-recheck: queries whose LATEST CORRECTNESS_r*.json record
-       present in the working tree is an error or a mismatch (e.g. the
-       r9 ``embedding_quantize`` hasher error) — their canonical record
-       is red, so re-sampling them first turns it green the round after
-       a fix lands;
-    2. never-driver-checked: absent from every present record
-       (DRIVER_GAP.md tail);
-    3. green somewhere: verified at least once, nothing to repair.
-
-    Records are ordered by the NUMERIC round parsed from the filename
-    (r2 < r10 < r100), so later rounds always win regardless of
-    zero-padding.
-    """
-    import glob
-    import json
-    import os
-    import re
-
+    """One entry per implemented operator from SURVEY.md §2, in name
+    order."""
     from qudo_etl_pipeline_spark.catalog import registry
 
-    def round_num(path: str) -> int:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    latest: dict[str, dict] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(
-        glob.glob(os.path.join(here, "CORRECTNESS_r*.json")), key=round_num
-    ):
-        try:
-            for name, rec in json.loads(open(path).read()).items():
-                latest[name] = rec  # later rounds overwrite earlier
-        except Exception:
-            continue
-
-    def tier(name: str) -> int:
-        rec = latest.get(name)
-        if rec is None:
-            return 1  # never checked
-        err = rec.get("err")
-        bad_err = err is not None and err != "no_oracle"
-        mismatch = any(
-            rec.get(k) is False
-            for k in ("rows_match", "schema_match", "hash_match")
-        )
-        rows_only_broken = err == "no_oracle" and rec.get("spark_rows") is None
-        return 0 if (bad_err or mismatch or rows_only_broken) else 2
-
     specs = registry()
-    ordered = sorted(specs, key=lambda n: (tier(n), n))
-    return {n: specs[n].spark for n in ordered}
+    return {n: specs[n].spark for n in sorted(specs)}
 
 
 def oracle_sql() -> dict[str, str]:

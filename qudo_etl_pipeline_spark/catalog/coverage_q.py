@@ -389,7 +389,7 @@ def rules_based_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mc_ platform column",
 )
 def social_presence_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.business import social_presence
+    from qudo_etl_pipeline_spark.catalog.ml_q import social_presence
 
     lab = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("prediction"),
@@ -448,8 +448,11 @@ def social_presence_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from planted frames)",
 )
 def message_reach_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.business import message_reach, social_presence
-    from qudo_etl_pipeline_spark.catalog.ml_q import chi_square_signal
+    from qudo_etl_pipeline_spark.catalog.ml_q import (
+        chi_square_signal,
+        social_presence,
+    )
+    from qudo_etl_pipeline_spark.ml.business import message_reach
 
     lab = load_table(spark, sf_dir, "customer").select(
         (F.col("c_nationkey") % 3).cast("int").alias("prediction"),
@@ -500,7 +503,7 @@ def message_reach_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Magnitude: cluster share x significant-tgt-variable ratio",
 )
 def magnitude_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml.business import magnitude
+    from qudo_etl_pipeline_spark.catalog.ml_q import magnitude
 
     o = load_table(spark, sf_dir, "orders")
     labeled = o.select(F.col("o_orderstatus").alias("prediction"))

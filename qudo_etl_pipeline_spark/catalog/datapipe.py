@@ -1210,7 +1210,7 @@ def embedding_centroid_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- corpus hygiene & packing (beyond-reference, BASELINE.json) -----------
+# --- corpus hygiene & packing (beyond-reference) -------------------------
 
 # DuckDB mirror of text._2GRAMS (word bigrams; 1-word doc degenerates to
 # its single word via NULL-skipping concat_ws on both engines)

@@ -14,12 +14,15 @@ from __future__ import annotations
 import math
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.catalog import load_table, none_last_key, register
 from qudo_etl_pipeline_spark.functions.rounding import ref_round_sql
+from qudo_etl_pipeline_spark.ml import business as B
 from qudo_etl_pipeline_spark.ml import features as FE
+from qudo_etl_pipeline_spark.ml import kmodes as KM
+from qudo_etl_pipeline_spark.ml import lca as LCA
 from qudo_etl_pipeline_spark.ml import quality as Q
 from qudo_etl_pipeline_spark.ml import signal as S
 from qudo_etl_pipeline_spark.ml.clustering import (
@@ -33,6 +36,142 @@ from qudo_etl_pipeline_spark.ml.clustering import (
     remove_unbalanced,
 )
 from qudo_etl_pipeline_spark.ml.quality import FEATURES, PREDICTION
+
+# --- Frame versions of the survey's table fits and metrics -------------
+# The survey fits and measures the rows of its scheme table
+# (ml.features, ml.kmodes, ml.lca, ml.business); these read a frame's
+# own table first, for the queries below and the tests.
+
+
+def pattern_table(df: DataFrame, cols: list[str]) -> list[Row]:
+    """The (pattern, count ``_w``) table of ``cols``, native types kept:
+    what the catalog's cluster metrics of a labelled frame read. At most
+    ``PATTERN_THRESHOLD`` rows reach the driver: the probe's ``limit``
+    bounds what it collects, and a table that overflows it is a
+    ``features._priority_sample``."""
+    table = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("_w"))
+    rows = table.limit(FE.PATTERN_THRESHOLD + 1).collect()
+    if len(rows) <= FE.PATTERN_THRESHOLD:
+        return rows
+    return [Row(**d) for d in FE._priority_sample(table, cols, "_w")[0]]
+
+
+def kmodes_fit(
+    df: DataFrame,
+    cat_cols: list[str],
+    k: int,
+    num_cols: list[str] | None = None,
+    gamma: float | None = None,
+    max_iter: int = 20,
+    id_col: str = "row_id",
+) -> dict:
+    """``kmodes.kmodes_table`` over ``df``'s scheme table (Cao's ties go to
+    the least ``id_col``), plus ``labels``: ``df`` with `prediction`."""
+    num_cols = list(num_cols or [])
+    table = FE.scheme_table(df, [*cat_cols, *num_cols], id_col=id_col)
+    fit = KM.kmodes_table(table.rows, cat_cols, k, num_cols, gamma, max_iter)
+    fit["labels"] = fit["label"](df)
+    return fit
+
+
+def _on_frame(df: DataFrame, cols: list[str], num_cols: list[str], **grid) -> dict:
+    """``lca.lca_table`` over ``df``'s scheme table, plus ``labels``."""
+    table = FE.scheme_table(df, [*cols, *num_cols])
+    fit = LCA.lca_table(table.rows, cols, num_cols=num_cols, **grid)
+    fit["labels"] = fit["label"](df)
+    return fit
+
+
+def lca_fit(
+    df: DataFrame,
+    cols: list[str],
+    k: int,
+    seed: int = 42,
+    max_iter: int = 60,
+    tol: float = 1e-4,
+    smoothing: float = 1e-3,
+    num_cols: list[str] | None = None,
+) -> dict:
+    """One EM run. Returns dict(labels, pi, theta, loglik, bic, aic,
+    n_params, n_iter, mu, var, k, seed).
+
+    With ``num_cols`` this is the reference's MIXED-type branch
+    (depmixS4 ``mix``, reference lca.R:54-101, dispatched when the
+    feature set has numeric columns — clustering.py:862-867): an
+    independent mixture whose per-class factors are multinomials for
+    ``cols`` and gaussians (per-class mean/variance) for ``num_cols``.
+    The gaussian sufficient statistics (sum r*x, sum r*x^2 per class)
+    ride the SAME weighted arrays as the class masses, so the mixed
+    model adds no Spark work.
+    """
+    return _on_frame(
+        df, cols, list(num_cols or []), ks=[k], seeds=[seed],
+        max_iter=max_iter, tol=tol, smoothing=smoothing,
+    )
+
+
+def lca_select(
+    df: DataFrame,
+    cols: list[str],
+    ks: list[int] | None = None,
+    n_rep: int = 3,
+    seed: int = 42,
+    max_iter: int = 60,
+    num_cols: list[str] | None = None,
+) -> dict:
+    """poLCA-style selection (lca.R:13-52): refit over k x restarts
+    (seeds ``seed .. seed + n_rep - 1``), keep the minimum-BIC model.
+    n_rep is a scaled-down nrep=100.
+
+    With ``num_cols`` this is the mixed-type dispatch: the reference's
+    depmixS4 branch scans k in 2..8 and keeps the min-BIC mixture
+    (lca.R:90-99); pass ``ks=list(range(2, 9))`` for exact parity.
+
+    The whole grid reads one scheme table: the selection costs its
+    shuffle plus the winning model's lazy labelling pass, regardless of
+    |ks| x n_rep."""
+    return _on_frame(
+        df, cols, list(num_cols or []), ks=ks or list(range(3, 9)),
+        seeds=[seed + rep for rep in range(n_rep)], max_iter=max_iter,
+    )
+
+
+def social_presence(
+    labeled: DataFrame,
+    sm_platform: str,
+    pred: str = "prediction",
+    marker: str = "mc_",
+) -> dict | float:
+    """M30 (metrics.py:364-404): per-cluster share answering exactly
+    `sm_platform` on the social column, rounded 3. The social column is
+    the first `marker` column, in frame order, whose values mention the
+    platform (metrics.py:374-390); NaN if there is none.
+
+    One collect of the (prediction, candidates, count) pattern table;
+    the column is chosen from its rows."""
+    cands = [c for c in labeled.columns if marker in c]
+    if not cands:
+        return float("nan")
+    table = pattern_table(labeled, [pred, *cands])
+    return B._presence(table, cands, sm_platform, pred, {})
+
+
+def magnitude(
+    deliver: B.Deliver,
+    labeled: DataFrame,
+    tgt_cols: list[str],
+    pred: str = "prediction",
+    seg_col: str = "targeting_seg",
+) -> dict | float:
+    """M31 (metrics.py:636-687): magnitude = cluster share (round 2) x
+    (significant `_tgt` rows per segment / #tgt variables), round 3;
+    plus 'all_clusters' total; NaN if total is 0 or > 1. The cluster
+    sizes are one collect of the (prediction, count) table."""
+    if not tgt_cols:
+        return float("nan")
+    sizes = B._sizes(pattern_table(labeled, [pred]), pred)
+    return B._magnitude(B._rows(deliver), sizes, len(tgt_cols), seg_col)
+
 
 # --- Spark quality metrics and feature encoders ------------------------
 # The survey computes its cluster metrics on the driver from a pattern
@@ -737,7 +876,7 @@ def signal_loss(
     ``target_col``, count) table feeds ``signal.pattern_signal``."""
     if not tgt_cols:
         return {}
-    table = FE.pattern_table(
+    table = pattern_table(
         assemble_array(df, tgt_cols), ["features", target_col]
     )
     return S.pattern_signal(
@@ -953,7 +1092,7 @@ def cluster_quality(
     continuous feature makes about one pattern per row, and
     ``pattern_table`` keeps at most ``PATTERN_THRESHOLD`` of them (a
     priority sample above it)."""
-    table = FE.pattern_table(df, [features, pred])
+    table = pattern_table(df, [features, pred])
     return Q.pattern_quality(table, features, pred, n_seed)
 
 
@@ -1857,8 +1996,6 @@ def _update_modes(
     description="One KModes assign+update step against fixed literal modes",
 )
 def kmodes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import kmodes as KM
-
     pts = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("row_id"),
         F.col("c_mktsegment").alias("a0"),
@@ -1917,8 +2054,6 @@ def kmodes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sq_euclid + gamma*hamming distance against fixed prototypes",
 )
 def kprototypes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import kmodes as KM
-
     pts = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("row_id"),
         F.col("c_mktsegment").alias("a0"),
@@ -1946,15 +2081,13 @@ def kprototypes_step_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SQL-expressible)",
 )
 def kmodes_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import kmodes as KM
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("row_id"),
         F.col("lang").alias("a0"),
         F.col("source").alias("a1"),
         (F.col("n_chars") > 200).cast("string").alias("a2"),
     )
-    fit = KM.kmodes_fit(docs, ["a0", "a1", "a2"], k=3)
+    fit = kmodes_fit(docs, ["a0", "a1", "a2"], k=3)
     return (
         fit["labels"]
         .groupBy(F.col("prediction").alias("cluster"))
@@ -1971,15 +2104,13 @@ def kmodes_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "metadata (rows-only: iterative EM)",
 )
 def lca_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import lca as LCA
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("row_id"),
         F.col("lang").alias("a0"),
         F.col("source").alias("a1"),
         (F.col("n_chars") > 200).cast("string").alias("a2"),
     )
-    fit = LCA.lca_fit(docs, ["a0", "a1", "a2"], k=3, seed=42, max_iter=30)
+    fit = lca_fit(docs, ["a0", "a1", "a2"], k=3, seed=42, max_iter=30)
     return (
         fit["labels"]
         .groupBy(F.col("prediction").alias("cluster"))
@@ -1997,7 +2128,6 @@ def lca_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "flag (rows-only: iterative kmeans training)",
 )
 def elbow_curve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     feats = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("row_id"),
         F.col("embedding").cast("array<double>").alias("features"),
@@ -2083,8 +2213,6 @@ def label_consistency_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "iterative EM)",
 )
 def lca_mixed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import lca as LCA
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("row_id"),
         F.col("lang").alias("a0"),
@@ -2092,7 +2220,7 @@ def lca_mixed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("double").alias("x0"),
         F.length("text").cast("double").alias("x1"),
     )
-    fit = LCA.lca_fit(
+    fit = lca_fit(
         docs, ["a0", "a1"], k=3, seed=42, max_iter=30, num_cols=["x0", "x1"]
     )
     return (
@@ -2124,8 +2252,6 @@ def lca_mixed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with any other segment",
 )
 def uniqueness_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import business as B
-
     li = load_table(spark, sf_dir, "lineitem")
     deliver = li.select(
         F.col("l_returnflag").alias("targeting_seg"),
@@ -2223,8 +2349,6 @@ def classification_metrics_planted(spark: SparkSession, sf_dir: str) -> DataFram
     description="Communicability: distinct regex-matching codes per segment",
 )
 def communicability_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qudo_etl_pipeline_spark.ml import business as B
-
     deliver = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("targeting_seg"),
         F.col("c_name").alias("q_code"),
@@ -2442,7 +2566,7 @@ def hierarchical_segmentation(
     default optimal-k + KMeans per group — the reference dispatches any
     family into the hierarchical wrapper (e.g. LCA via
     ``lca_with_timer(hierarchical=...)``, clustering.py:841-845); pass
-    e.g. a closure over ``ml.lca.lca_fit`` for that behavior.
+    e.g. a closure over :func:`lca_fit` for that behavior.
     """
     hier_ks = hier_ks or [2, 3]
     # every group runs |ks| optimal-k fits + 1 final fit, each an

@@ -1,10 +1,10 @@
 """NULL-salted catalog queries: the driver-visible NULL-parity gate.
 
 Round 11 proved every operator NULL-robust against a salted parquet
-fixture (`tools/null_salt.py` + `SELFCHECK_NULLS.md`), but the driver's
+fixture (`tools/null_salt.py`), but the driver's
 own correctness gate reads the PRISTINE sf tables — which the generator
 emits NULL-free — so a NULL-semantics regression could never trip a
-CORRECTNESS_r*.json row. This family closes that: one catalog query per
+correctness record. This family closes that: one catalog query per
 documented NULL-divergence class, each salting its input INLINE with a
 deterministic seeded probe both engines compute identically::
 
@@ -16,7 +16,7 @@ natural row key exactly like tools/null_salt.py). Any divergence is a
 real cross-engine NULL-semantics mismatch, now caught by the canonical
 driver gate instead of only the out-of-band salted sweep.
 
-The six classes (SELFCHECK_NULLS.md "What the sweep found, by class"):
+The six classes the salted sweep found:
 
 1. null ordering            -> :func:`salted_rank_orders`
 2. null-unsafe join-backs   -> :func:`salted_group_join_back`

@@ -26,8 +26,9 @@ The metrics of labelled rows read one pattern table: the distinct
 (columns, prediction) combinations and their row counts, sized by the
 answer options rather than the respondents, so they are computed on the
 driver from its rows. :func:`get_all_metrics` takes those rows (the
-survey's labelled scheme-table patterns); :func:`social_presence` and
-:func:`magnitude` take a labelled frame and collect its table once.
+survey's labelled scheme-table patterns); ``catalog.ml_q``'s
+``social_presence`` and ``magnitude`` take a labelled frame and collect
+its table once.
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ import re
 from collections import Counter
 
 from pyspark.sql import DataFrame, Row
-
-from qudo_etl_pipeline_spark.ml import features as FE
 
 Deliver = DataFrame | list[Row]
 
@@ -108,9 +107,12 @@ def _presence(
     pred: str,
     code_maps: dict[str, dict[str, int]],
 ) -> dict | float:
-    """:func:`social_presence` over a pattern table of ``pred`` and the
-    candidate columns. A candidate in ``code_maps`` holds label codes,
-    which are decoded back to the answers first."""
+    """M30 (metrics.py:364-404) social presence over a pattern table of
+    ``pred`` and the candidate columns: per-cluster share answering
+    exactly `sm_platform` on the first candidate, in column order, whose
+    values mention the platform (metrics.py:374-390), rounded 3; NaN if
+    there is none. A candidate in ``code_maps`` holds label codes, which
+    are decoded back to the answers first."""
     want = sm_platform.lower()
     for c in cands:
         vals = [(r[pred], r["_w"], r[c]) for r in table]
@@ -135,30 +137,13 @@ def _presence(
     return float("nan")
 
 
-def social_presence(
-    labeled: DataFrame,
-    sm_platform: str,
-    pred: str = "prediction",
-    marker: str = "mc_",
-) -> dict | float:
-    """M30 (metrics.py:364-404): per-cluster share answering exactly
-    `sm_platform` on the social column, rounded 3. The social column is
-    the first `marker` column, in frame order, whose values mention the
-    platform (metrics.py:374-390); NaN if there is none.
-
-    One collect of the (prediction, candidates, count) pattern table;
-    the column is chosen from its rows."""
-    cands = [c for c in labeled.columns if marker in c]
-    if not cands:
-        return float("nan")
-    table = FE.pattern_table(labeled, [pred, *cands])
-    return _presence(table, cands, sm_platform, pred, {})
-
-
 def _magnitude(
     deliver: list[Row], sizes: dict, num_tgt: int, seg_col: str
 ) -> dict | float:
-    """:func:`magnitude` from the deliver rows and the rows per label."""
+    """M31 (metrics.py:636-687) from the deliver rows and the rows per
+    label: cluster share (round 2) x (significant `_tgt` rows per
+    segment / ``num_tgt``), round 3; plus 'all_clusters' total; NaN if
+    the total is 0 or > 1."""
     total = sum(sizes.values())
     pct = {seg: round(n / total, 2) for seg, n in sizes.items()}
     sig_counts = Counter(
@@ -175,23 +160,6 @@ def _magnitude(
         return float("nan")
     out["all_clusters"] = s
     return out
-
-
-def magnitude(
-    deliver: Deliver,
-    labeled: DataFrame,
-    tgt_cols: list[str],
-    pred: str = "prediction",
-    seg_col: str = "targeting_seg",
-) -> dict | float:
-    """M31 (metrics.py:636-687): magnitude = cluster share (round 2) x
-    (significant `_tgt` rows per segment / #tgt variables), round 3;
-    plus 'all_clusters' total; NaN if total is 0 or > 1. The cluster
-    sizes are one collect of the (prediction, count) table."""
-    if not tgt_cols:
-        return float("nan")
-    sizes = _sizes(FE.pattern_table(labeled, [pred]), pred)
-    return _magnitude(_rows(deliver), sizes, len(tgt_cols), seg_col)
 
 
 def message_reach(social: dict, signal: dict) -> dict | float:
@@ -280,7 +248,7 @@ def get_all_metrics(
     driver: quality, social presence, magnitude's cluster sizes and the
     signal loss, whose `_tgt` columns are the ``features`` positions
     ``tgt_idx``. ``table`` is that table's rows: the survey's are summed
-    from its scheme table, and ``features.pattern_table`` collects them
+    from its scheme table, and ``catalog.ml_q.pattern_table`` collects them
     from a frame. The social presence needs the original answers, which
     label codes never match ('facebook', metrics.py:840 full_data): an
     `mc_` column in ``code_maps`` holds codes and is decoded with them."""

@@ -35,7 +35,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -134,19 +134,6 @@ def _priority_sample(
             d[n_col] = tau
         out.append(d)
     return out, len(rows) > threshold
-
-
-def pattern_table(df: DataFrame, cols: list[str]) -> list[Row]:
-    """The (pattern, count ``_w``) table of ``cols``, native types kept:
-    what the catalog's cluster metrics of a labelled frame read. At most
-    ``PATTERN_THRESHOLD`` rows reach the driver: the probe's ``limit``
-    bounds what it collects, and a table that overflows it is a
-    :func:`_priority_sample`."""
-    table = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("_w"))
-    rows = table.limit(PATTERN_THRESHOLD + 1).collect()
-    if len(rows) <= PATTERN_THRESHOLD:
-        return rows
-    return [Row(**d) for d in _priority_sample(table, cols, "_w")[0]]
 
 
 @dataclass

@@ -3,15 +3,16 @@
 Spark has no categorical clustering; the reference uses the `kmodes`
 library (reference: src/kraken/app/clustering.py:348-363,480-539 —
 KModes(init='Cao'), KPrototypes(init='Cao', n_init=1)). One entry point,
-``kmodes_fit``, fits both: KPrototypes is the ``num_cols`` case.
+``kmodes_table``, fits both: KPrototypes is the ``num_cols`` case.
 
 One fit device, the one ``ml.lca`` shares: the whole Cao init + Lloyd
 loop is a function of the (answer pattern, count, min id) table, read
 off the rows of a ``features.scheme_table`` — the exact table up to its
 threshold, a priority sample with Horvitz-Thompson weights above it.
 ``kmodes_table`` fits those rows in numpy, zero Spark jobs, and returns
-the fitted row expression ``label``; ``kmodes_fit`` is one scheme-table
-read of a frame, that fit, and ``label`` over every row (lazy).
+the fitted row expression ``label``; ``catalog.ml_q.kmodes_fit`` is one
+scheme-table read of a frame, that fit, and ``label`` over every row
+(lazy).
 
 - **Cao init** (deterministic, no seed): density(x) = mean over
   attributes of freq(x_attr)/n; first mode = argmax density; mode j =
@@ -315,21 +316,3 @@ def kmodes_table(
         "k": k,
         "gamma": gamma,
     }
-
-
-def kmodes_fit(
-    df: DataFrame,
-    cat_cols: list[str],
-    k: int,
-    num_cols: list[str] | None = None,
-    gamma: float | None = None,
-    max_iter: int = 20,
-    id_col: str = "row_id",
-) -> dict:
-    """:func:`kmodes_table` over ``df``'s scheme table (Cao's ties go to
-    the least ``id_col``), plus ``labels``: ``df`` with `prediction`."""
-    num_cols = list(num_cols or [])
-    table = FE.scheme_table(df, [*cat_cols, *num_cols], id_col=id_col)
-    fit = kmodes_table(table.rows, cat_cols, k, num_cols, gamma, max_iter)
-    fit["labels"] = fit["label"](df)
-    return fit

@@ -18,8 +18,9 @@ Horvitz-Thompson weights above it. The rows are grouped to their
 (answer pattern, count) table once, categorical answers as strings and
 rows with a NULL numeric dropped (poLCA/depmixS4 na.rm). Every (k, seed)
 runs the same EM, and the min-BIC model comes back with its row
-expression ``label``. ``lca_select`` and ``lca_fit`` (its one-model
-case) are one scheme-table read of a frame, that fit and its labels:
+expression ``label``. ``catalog.ml_q.lca_select`` and ``lca_fit`` (its
+one-model case) are one scheme-table read of a frame, that fit and its
+labels:
 
 - **Pattern EM**: the row likelihood depends on the row only through
   its pattern, so every iteration's sufficient statistics are exact
@@ -399,65 +400,3 @@ def _labeller(cols: list[str], num_cols: list[str], fit: dict, floor: float):
         )
 
     return label
-
-
-def _on_frame(df: DataFrame, cols: list[str], num_cols: list[str], **grid) -> dict:
-    """:func:`lca_table` over ``df``'s scheme table, plus ``labels``."""
-    table = FE.scheme_table(df, [*cols, *num_cols])
-    fit = lca_table(table.rows, cols, num_cols=num_cols, **grid)
-    fit["labels"] = fit["label"](df)
-    return fit
-
-
-def lca_fit(
-    df: DataFrame,
-    cols: list[str],
-    k: int,
-    seed: int = 42,
-    max_iter: int = 60,
-    tol: float = 1e-4,
-    smoothing: float = 1e-3,
-    num_cols: list[str] | None = None,
-) -> dict:
-    """One EM run. Returns dict(labels, pi, theta, loglik, bic, aic,
-    n_params, n_iter, mu, var, k, seed).
-
-    With ``num_cols`` this is the reference's MIXED-type branch
-    (depmixS4 ``mix``, reference lca.R:54-101, dispatched when the
-    feature set has numeric columns — clustering.py:862-867): an
-    independent mixture whose per-class factors are multinomials for
-    ``cols`` and gaussians (per-class mean/variance) for ``num_cols``.
-    The gaussian sufficient statistics (sum r*x, sum r*x^2 per class)
-    ride the SAME weighted arrays as the class masses, so the mixed
-    model adds no Spark work.
-    """
-    return _on_frame(
-        df, cols, list(num_cols or []), ks=[k], seeds=[seed],
-        max_iter=max_iter, tol=tol, smoothing=smoothing,
-    )
-
-
-def lca_select(
-    df: DataFrame,
-    cols: list[str],
-    ks: list[int] | None = None,
-    n_rep: int = 3,
-    seed: int = 42,
-    max_iter: int = 60,
-    num_cols: list[str] | None = None,
-) -> dict:
-    """poLCA-style selection (lca.R:13-52): refit over k x restarts
-    (seeds ``seed .. seed + n_rep - 1``), keep the minimum-BIC model.
-    n_rep is a scaled-down nrep=100.
-
-    With ``num_cols`` this is the mixed-type dispatch: the reference's
-    depmixS4 branch scans k in 2..8 and keeps the min-BIC mixture
-    (lca.R:90-99); pass ``ks=list(range(2, 9))`` for exact parity.
-
-    The whole grid reads one scheme table: the selection costs its
-    shuffle plus the winning model's lazy labelling pass, regardless of
-    |ks| x n_rep."""
-    return _on_frame(
-        df, cols, list(num_cols or []), ks=ks or list(range(3, 9)),
-        seeds=[seed + rep for rep in range(n_rep)], max_iter=max_iter,
-    )

@@ -94,7 +94,7 @@ def pattern_quality(
 ) -> dict:
     """get_cluster_metrics (metrics.py:42-124) over a pattern table: each
     row holds a feature vector, its label and the number of rows ``_w``
-    it stands for (a ``features.pattern_table``, or in the survey the
+    it stands for (a ``catalog.ml_q.pattern_table``, or in the survey the
     family's labelled scheme-table patterns). Returns silhouette,
     davies_bouldin, calinski_harabasz and the proportions, with the
     reference's fallbacks: 0 / 999 / 0 below two clusters.

@@ -7,7 +7,7 @@ a 33% holdout and per segment on each segment's full rows.
 
 The classifier is the pattern-majority one, on the driver over the
 family's (pattern, label, weight) table (its labelled scheme-table
-patterns in the survey, a ``features.pattern_table`` of a frame), so
+patterns in the survey, a ``catalog.ml_q.pattern_table`` of a frame), so
 it starts no Spark job: each `_tgt` answer pattern predicts its
 train-majority cluster, which is what a fully grown tree's leaf predicts
 when every held-out pattern is seen in training (few `_tgt` questions).

@@ -1,6 +1,6 @@
 """End-to-end corpus curation: the training-data prep chain as ONE plan.
 
-Beyond-reference operator (BASELINE.json north star): the standard
+Beyond-reference operator: the standard
 pretraining-corpus pipeline — quality gate, language gate, exact dedup,
 near-dup drop — composed from the engine's existing JVM-side operators
 into a per-document verdict table. This is the shape a 100 TB corpus

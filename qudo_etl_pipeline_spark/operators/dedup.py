@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale text corpora.
 
-Beyond-reference operators (BASELINE.json north star): exact-hash dedup,
+Beyond-reference operators: exact-hash dedup,
 MinHash signatures + LSH banding, SimHash, and n-gram Jaccard. All the
 per-document work is expressed with JVM-side higher-order array functions
 (split/transform/array_min) so signature computation is a narrow map with

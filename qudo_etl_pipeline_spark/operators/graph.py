@@ -1,6 +1,6 @@
 """Link-graph centrality (PageRank) as a corpus quality prior.
 
-Beyond-reference operator (BASELINE.json north star): host/page-level
+Beyond-reference operator: host/page-level
 PageRank is the standard web-corpus quality prior (Common Crawl ranks
 hosts this way; Brin & Page 1998). Implemented as classic power
 iteration over an edge DataFrame — the Pregel pattern: join ranks to

@@ -1,6 +1,6 @@
 """Data-selection by importance resampling (DSIR) for pretraining corpora.
 
-Beyond-reference operator (BASELINE.json north star): the DSIR method of
+Beyond-reference operator: the DSIR method of
 Xie et al., "Data Selection for Language Models via Importance
 Resampling" (NeurIPS 2023). A target distribution (the high-quality
 domain you want more of) and the raw corpus are both modeled as

@@ -1,6 +1,6 @@
 """Sequence packing: place documents into fixed-length training rows.
 
-Beyond-reference operators (BASELINE.json north star): the last step of
+Beyond-reference operators: the last step of
 every pretraining data pipeline — documents become training sequences of
 exactly ``seq_len`` tokens. Two standard layouts:
 

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns.
 
-Beyond-reference operators (BASELINE.json north star): brute-force cosine
+Beyond-reference operators: brute-force cosine
 top-k as the exact baseline, and an LSH-bucketed variant as the scale
 path. Dot products use zip_with + aggregate (JVM-side, codegen) over
 array<double>; no Python in the hot loop.

@@ -1,6 +1,6 @@
 """Exact substring-span deduplication (corpus-level duplicated n-grams).
 
-Beyond-reference operator (BASELINE.json north star): the ExactSubstr
+Beyond-reference operator: the ExactSubstr
 method of Lee et al., "Deduplicating Training Data Makes Language Models
 Better" (ACL 2022) — find every token span that occurs two or more times
 ANYWHERE in the corpus (other documents or the same one) and measure, per

@@ -1,6 +1,6 @@
 """Text-analysis operators for training-data pipelines.
 
-Beyond-reference operators (BASELINE.json north star): token statistics,
+Beyond-reference operators: token statistics,
 quality scoring, n-gram language identification, and rolling-hash document
 fingerprinting. Everything is built from JVM-side string/array expressions
 (split, filter, transform, aggregate) — no Python UDFs in the hot path —

@@ -208,7 +208,7 @@ def _family_lca(
     # fixture (ks=2..5, 6-8 data seeds, noise 0.15-0.4): the selected k
     # is already stable at n_rep=1 and stays stable through n_rep=10 —
     # the pattern-EM's deterministic responsibility init removes most
-    # restart sensitivity. n_rep=3 (lca_select's own default: seeds
+    # restart sensitivity. n_rep=3 (``lca_select``'s own default: seeds
     # 42..44) is kept as robustness margin: the whole k x restart grid
     # fits driver-side over the scheme table's patterns, so extra
     # restarts cost no Spark work (measured: n_rep=10 within noise of

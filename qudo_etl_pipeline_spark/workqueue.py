@@ -51,8 +51,11 @@ def mark_processed(
             if tag not in s["processed_by"]:
                 s["processed_by"].append(tag)
     tmp = f"{queue_path}.{os.getpid()}.tmp"
+    # a temp file that cannot be created raises its own error, with
+    # nothing to remove
+    fh = open(tmp, "w")
     try:
-        with open(tmp, "w") as fh:
+        with fh:
             json.dump(surveys, fh, indent=2)
     except BaseException:
         os.remove(tmp)

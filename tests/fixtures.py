@@ -12,3 +12,6 @@ from qudo_etl_pipeline_spark.fixtures import (  # noqa: F401
     make_questions,
     make_responses,
 )
+
+# the sf0.01 tables
+SF_DIR = "/root/testdata/sf0.01"

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from qudo_etl_pipeline_spark.catalog.ml_q import kmeans_fit
 from qudo_etl_pipeline_spark.operators import similarity as SIM
+from tests.fixtures import SF_DIR  # the sf0.01 tables
 
-SF_DIR = "/root/testdata/sf0.01"
 K = 5
 
 

@@ -1,14 +1,11 @@
 """Driver-contract surface pins for ``__spark_entry__``: the three
 functions' shapes, oracle-key subset property, and the deterministic
-never-driver-checked-first ordering of ``queries()`` (the lever that
-drains DRIVER_GAP.md fastest under any order-sensitive sampling).
-No Spark session needed — these are pure-shape checks.
+name order of ``queries()``. No Spark session needed — these are
+pure-shape checks.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -38,39 +35,7 @@ def test_queries_cover_registry_and_oracles_are_a_subset():
                for sql in o.values())
 
 
-def test_queries_order_leads_with_recheck_then_never_checked():
-    """Three tiers, each internally name-sorted: (0) latest driver
-    record is an error/mismatch -> re-sample first so a landed fix
-    turns the canonical record green next round; (1) never driver-
-    checked (DRIVER_GAP.md tail); (2) green somewhere."""
+def test_queries_are_in_name_order():
     e = _entry_module()
     names = list(e.queries())
-    latest: dict[str, dict] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        for name, rec in json.loads(open(path).read()).items():
-            latest[name] = rec
-
-    def tier(n: str) -> int:
-        rec = latest.get(n)
-        if rec is None:
-            return 1
-        err = rec.get("err")
-        bad = (err is not None and err != "no_oracle") or any(
-            rec.get(k) is False
-            for k in ("rows_match", "schema_match", "hash_match")
-        ) or (err == "no_oracle" and rec.get("spark_rows") is None)
-        return 0 if bad else 2
-
-    tiers = [tier(n) for n in names]
-    assert tiers == sorted(tiers)
-    # within each tier, names sorted
-    for t in (0, 1, 2):
-        block = [n for n, tt in zip(names, tiers) if tt == t]
-        assert block == sorted(block)
-    # the r9 hasher-error query must sit in the leading tier-0 block
-    # until its driver record goes green (NOT necessarily index 0 —
-    # another red record may legitimately sort before it by name)
-    if tier("embedding_quantize") == 0:
-        assert tiers[names.index("embedding_quantize")] == 0
-        n_tier0 = sum(1 for t in tiers if t == 0)
-        assert names.index("embedding_quantize") < n_tier0
+    assert names == sorted(names)

@@ -20,7 +20,7 @@ from pathlib import Path
 import pytest
 
 from qudo_etl_pipeline_spark.catalog import registry
-from tests.test_ann_recall import SF_DIR  # the sf0.01 tables
+from tests.fixtures import SF_DIR  # the sf0.01 tables
 
 ROOT = Path(__file__).resolve().parent.parent
 PINNED = [

@@ -11,10 +11,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from qudo_etl_pipeline_spark.catalog import ml_q as MQ
 from qudo_etl_pipeline_spark.catalog.ml_q import adjusted_rand_index
 from qudo_etl_pipeline_spark.ml import features as FE
-from qudo_etl_pipeline_spark.ml import kmodes as KM
-from qudo_etl_pipeline_spark.ml import lca as LCA
 from tests.test_pipeline import _jobs_started_by
 
 
@@ -53,7 +52,7 @@ def cat_df(spark):
 
 
 def test_kmodes_recovers_planted_classes(spark, cat_df):
-    fit = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
+    fit = MQ.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
     ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["cost"] > 0
@@ -63,8 +62,8 @@ def test_kmodes_recovers_planted_classes(spark, cat_df):
 
 
 def test_kmodes_deterministic(spark, cat_df):
-    a = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
-    b = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
+    a = MQ.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
+    b = MQ.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)
     assert a["modes"] == b["modes"]
     assert a["cost"] == b["cost"]
     joined = (
@@ -85,7 +84,7 @@ def test_kprototypes_mixed_distance(spark, cat_df):
         F.col("truth").cast("double") * 10.0
         + (F.rand(5) - 0.5),
     )
-    fit = KM.kmodes_fit(
+    fit = MQ.kmodes_fit(
         with_num, ["q0", "q1", "q2", "q3"], k=3, num_cols=["x"]
     )
     ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
@@ -97,14 +96,14 @@ def test_kprototypes_mixed_distance(spark, cat_df):
 
 
 def test_kmodes_modes_deterministic_and_distinct(spark, cat_df):
-    m1 = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
-    m2 = KM.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
+    m1 = MQ.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
+    m2 = MQ.kmodes_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3)["modes"]
     assert m1 == m2
     assert len({tuple(sorted(m.items())) for m in m1}) == 3
 
 
 def test_lca_recovers_planted_classes(spark, cat_df):
-    fit = LCA.lca_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3, seed=42)
+    fit = MQ.lca_fit(cat_df, ["q0", "q1", "q2", "q3"], k=3, seed=42)
     ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["n_params"] == (3 - 1) + 3 * sum(
@@ -116,7 +115,7 @@ def test_lca_recovers_planted_classes(spark, cat_df):
 
 
 def test_lca_select_prefers_true_k(spark, cat_df):
-    best = LCA.lca_select(
+    best = MQ.lca_select(
         cat_df, ["q0", "q1", "q2", "q3"], ks=[2, 3, 4], n_rep=2, seed=42
     )
     assert best["k"] == 3
@@ -131,7 +130,7 @@ def test_lca_mixed_recovers_planted_classes(spark, cat_df):
     ).withColumn(
         "y", F.col("truth").cast("double") * -3.0 + (F.rand(8) - 0.5)
     )
-    fit = LCA.lca_fit(
+    fit = MQ.lca_fit(
         with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x", "y"]
     )
     ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
@@ -149,7 +148,7 @@ def test_lca_mixed_pure_gaussian(spark, cat_df):
     with_num = cat_df.withColumn(
         "x", F.col("truth").cast("double") * 10.0 + (F.rand(9) - 0.5)
     )
-    fit = LCA.lca_fit(with_num, [], k=3, seed=1, num_cols=["x"])
+    fit = MQ.lca_fit(with_num, [], k=3, seed=1, num_cols=["x"])
     ari = adjusted_rand_index(fit["labels"], "truth", "prediction")
     assert ari > 0.9
     assert fit["n_params"] == 2 + 3 * 2
@@ -161,11 +160,11 @@ def test_lca_select_deterministic_at_pipeline_default(spark, cat_df):
     Backed by the measured stability study (pipeline._family_lca):
     BIC selection on the planted fixture is stable from n_rep=1
     through n_rep=10 across data seeds and noise levels."""
-    a = LCA.lca_select(
+    a = MQ.lca_select(
         cat_df, ["q0", "q1", "q2", "q3"], ks=[2, 3, 4], n_rep=3,
         seed=42, max_iter=30,
     )
-    b = LCA.lca_select(
+    b = MQ.lca_select(
         cat_df, ["q0", "q1", "q2", "q3"], ks=[2, 3, 4], n_rep=3,
         seed=42, max_iter=30,
     )
@@ -185,8 +184,8 @@ def test_lca_fit_is_the_one_model_selection(spark, cat_df):
     """lca_fit(k, seed) and lca_select(ks=[k], n_rep=1, seed) are the same
     path: identical parameters, log-likelihood, BIC and labels."""
     cols = ["q0", "q1", "q2", "q3"]
-    fit = LCA.lca_fit(cat_df, cols, k=3, seed=42)
-    sel = LCA.lca_select(cat_df, cols, ks=[3], n_rep=1, seed=42)
+    fit = MQ.lca_fit(cat_df, cols, k=3, seed=42)
+    sel = MQ.lca_select(cat_df, cols, ks=[3], n_rep=1, seed=42)
     assert (sel["k"], sel["seed"]) == (fit["k"], fit["seed"]) == (3, 42)
     assert sel["pi"] == fit["pi"]
     assert sel["theta"] == fit["theta"]
@@ -226,7 +225,7 @@ def test_pattern_table_is_a_weighted_sample_above_the_threshold(
         for r in big_df.groupBy(*COLS).count().collect()
     }
     assert len(exact) > SAMPLE
-    pat = FE.pattern_table(big_df, COLS)
+    pat = MQ.pattern_table(big_df, COLS)
     assert len(pat) == SAMPLE
     assert all(r["_w"] >= exact[tuple(r[c] for c in COLS)] for r in pat)
     # Horvitz-Thompson weights estimate the row count
@@ -245,22 +244,22 @@ def test_sampled_fits_recover_planted_classes(
     def ari(fit):
         return adjusted_rand_index(fit["labels"], "truth", "prediction")
 
-    exact = ari(KM.kmodes_fit(big_df, COLS, k=3))
+    exact = ari(MQ.kmodes_fit(big_df, COLS, k=3))
     monkeypatch.setattr(FE, "PATTERN_THRESHOLD", SAMPLE)
-    assert ari(KM.kmodes_fit(big_df, COLS, k=3)) >= exact - 0.05
-    lca = LCA.lca_select(big_df, COLS, ks=[2, 3, 4], n_rep=3, seed=42)
+    assert ari(MQ.kmodes_fit(big_df, COLS, k=3)) >= exact - 0.05
+    lca = MQ.lca_select(big_df, COLS, ks=[2, 3, 4], n_rep=3, seed=42)
     assert lca["k"] == 3
     assert ari(lca) > 0.9
 
 
 def test_sampled_fits_are_deterministic(spark, big_df, sampled):
-    a, b = (KM.kmodes_fit(big_df, COLS, k=3) for _ in range(2))
+    a, b = (MQ.kmodes_fit(big_df, COLS, k=3) for _ in range(2))
     assert (a["modes"], a["cost"], a["n_iter"]) == (
         b["modes"], b["cost"], b["n_iter"]
     )
     assert _labels(a) == _labels(b)
     a, b = (
-        LCA.lca_select(big_df, COLS, ks=[2, 3], n_rep=2, seed=42)
+        MQ.lca_select(big_df, COLS, ks=[2, 3], n_rep=2, seed=42)
         for _ in range(2)
     )
     assert (a["k"], a["seed"], a["bic"], a["pi"], a["theta"]) == (
@@ -274,12 +273,12 @@ def test_sampled_mixed_fits_recover_planted_means(spark, big_df, sampled):
     and fits on the sample; the planted gaussian means come back."""
     with_num = _with_x(big_df)
     assert with_num.count() > SAMPLE
-    km = KM.kmodes_fit(with_num, COLS, k=3, num_cols=["x"])
+    km = MQ.kmodes_fit(with_num, COLS, k=3, num_cols=["x"])
     assert sorted(m["x"] for m in km["modes"]) == pytest.approx(
         [0.0, 10.0, 20.0], abs=1.0
     )
     assert adjusted_rand_index(km["labels"], "truth", "prediction") > 0.9
-    lca = LCA.lca_fit(with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x"])
+    lca = MQ.lca_fit(with_num, ["q0", "q1"], k=3, seed=42, num_cols=["x"])
     assert sorted(m["x"] for m in lca["mu"]) == pytest.approx(
         [0.0, 10.0, 20.0], abs=1.5
     )
@@ -294,7 +293,7 @@ def test_sampled_fit_jobs_do_not_grow_with_iterations(
     def jobs(fit):
         return [_jobs_started_by(spark, lambda: fit(m)) for m in (1, 30)]
 
-    km = jobs(lambda m: KM.kmodes_fit(big_df, COLS, k=3, max_iter=m))
-    lca = jobs(lambda m: LCA.lca_fit(big_df, COLS, k=3, max_iter=m))
+    km = jobs(lambda m: MQ.kmodes_fit(big_df, COLS, k=3, max_iter=m))
+    lca = jobs(lambda m: MQ.lca_fit(big_df, COLS, k=3, max_iter=m))
     assert km[0] == km[1] > 0
     assert lca[0] == lca[1] > 0

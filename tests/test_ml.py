@@ -298,8 +298,6 @@ def test_hierarchical_with_custom_fitter(spark):
     """The fitter hook lets any family run per group (the reference
     dispatches LCA into the hierarchical wrapper): labels from the
     custom fitter must offset into globally unique ids per group."""
-    from qudo_etl_pipeline_spark.ml import lca as LCA
-
     rows = []
     rid = 0
     for grp in ("a", "b"):
@@ -311,7 +309,7 @@ def test_hierarchical_with_custom_fitter(spark):
     df = spark.createDataFrame(rows, "row_id long, grp string, q0 string")
 
     def lca_fitter(sub):
-        fit = LCA.lca_fit(sub, ["q0"], k=2, seed=42, max_iter=20)
+        fit = MQ.lca_fit(sub, ["q0"], k=2, seed=42, max_iter=20)
         return fit["labels"], fit["k"]
 
     out = hierarchical_segmentation(df, "grp", fitter=lca_fitter)

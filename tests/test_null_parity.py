@@ -1,16 +1,17 @@
 """Continuous NULL-parity gate: one representative query per r11
 NULL-semantics class, engine-vs-oracle on a NULL-salted sf0.001.
 
-Round 11 swept the full catalog against a NULL-salted sf0.01 copy
-(SELFCHECK_NULLS.md) and fixed 71 divergences across six classes; this
-test keeps the contract enforced per-commit at fixture cost (~seconds,
-not the 13-minute full sweep) by re-deriving a salted sf0.001 with the
-same seeded tool and hash-comparing one query per class:
+Round 11 swept the full catalog against a NULL-salted sf0.01 copy and
+fixed 71 divergences across six classes; this test keeps the contract
+enforced per-commit at fixture cost (~seconds, not the 13-minute full
+sweep) by re-deriving a salted sf0.001 with the same seeded tool and
+hash-comparing one query per class:
 
 - null ordering pins          -> rank_suppliers_by_balance
 - window/time-definition drop -> events_hourly, user_sessions
 - engine builtin divergence   -> string_scalar_ops (split_part '' vs NULL)
-- prefix-device NULL groups   -> weighted_median_prices
+- prefix-device NULL groups   -> weighted_median_prices,
+                                 population_modes_planted
 - as-of join NULL keys/times  -> asof_purchase_attribution
 - profiler null_keys metrics  -> join_profile_orders_lineitem
 - encode/sketch NULL-key drop -> label_encode_codes, bloom_filter_custkeys
@@ -38,6 +39,7 @@ QUERIES = [
     "user_sessions",
     "string_scalar_ops",
     "weighted_median_prices",
+    "population_modes_planted",
     "asof_purchase_attribution",
     "join_profile_orders_lineitem",
     "label_encode_codes",

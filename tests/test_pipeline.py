@@ -3,7 +3,9 @@ on the deterministic survey fixtures, plus the work-queue protocol."""
 
 from __future__ import annotations
 
+import errno
 import json
+import os
 
 import numpy as np
 import pytest
@@ -199,6 +201,28 @@ def test_mark_processed_survives_a_torn_write(tmp_path, monkeypatch):
         WQ.mark_processed(str(qp), "s1")
     monkeypatch.undo()
     assert WQ.next_survey(WQ.collected_surveys(str(qp)))["survey_name"] == "s1"
+    assert [p.name for p in tmp_path.iterdir()] == ["queue.json"]
+
+
+def test_mark_processed_raises_the_error_that_stopped_it(tmp_path, monkeypatch):
+    """A temp file that cannot be created (ENOSPC, EACCES) raises its own
+    error, not the cleanup's FileNotFoundError, and leaves the queue
+    document unchanged, with no temp file."""
+    qp = tmp_path / "queue.json"
+    doc = json.dumps([{"survey_name": "s1", "processed_by": []}])
+    qp.write_text(doc)
+
+    def no_space(path, mode="r", *args, **kwargs):
+        if "w" in mode:
+            raise OSError(errno.ENOSPC, os.strerror(errno.ENOSPC), path)
+        return open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(WQ, "open", no_space, raising=False)
+    with pytest.raises(OSError) as err:
+        WQ.mark_processed(str(qp), "s1")
+    monkeypatch.undo()
+    assert err.value.errno == errno.ENOSPC
+    assert qp.read_text() == doc
     assert [p.name for p in tmp_path.iterdir()] == ["queue.json"]
 
 

@@ -68,11 +68,11 @@ def test_communicability(spark, deliver):
 
 
 def test_social_presence(spark, labeled):
-    sp = B.social_presence(labeled, "Facebook")
+    sp = MQ.social_presence(labeled, "Facebook")
     assert 0.5 < sp[0] <= 1.0
     assert sp[1] == 0.0
     assert math.isnan(
-        B.social_presence(labeled.drop("mc_social"), "Facebook")
+        MQ.social_presence(labeled.drop("mc_social"), "Facebook")
     )
 
 
@@ -90,7 +90,7 @@ def test_social_presence_uses_the_candidate_that_mentions_the_platform(spark):
         ["Facebook", "Twitter", "facebook groups", "Facebook"],
     )
     # only mc_b mentions the platform: exact "Facebook" answers per cluster
-    assert B.social_presence(df, "Facebook") == {0: 0.5, 1: 0.5}
+    assert MQ.social_presence(df, "Facebook") == {0: 0.5, 1: 0.5}
 
 
 def test_social_presence_first_candidate_in_column_order_wins(spark):
@@ -99,20 +99,20 @@ def test_social_presence_first_candidate_in_column_order_wins(spark):
         ["Facebook", "Facebook", "Twitter", "Facebook"],
         ["Facebook", "Twitter", "Twitter", "Twitter"],
     )
-    assert B.social_presence(df, "Facebook") == {0: 1.0, 1: 0.5}
+    assert MQ.social_presence(df, "Facebook") == {0: 1.0, 1: 0.5}
     swapped = df.select("prediction", "mc_b", "mc_a")
-    assert B.social_presence(swapped, "Facebook") == {0: 0.5, 1: 0.0}
+    assert MQ.social_presence(swapped, "Facebook") == {0: 0.5, 1: 0.0}
 
 
 def test_social_presence_of_an_empty_frame_is_nan(spark):
     df = _two_candidates(
         spark, ["Facebook"] * 4, ["Facebook"] * 4
     ).limit(0)
-    assert math.isnan(B.social_presence(df, "Facebook"))
+    assert math.isnan(MQ.social_presence(df, "Facebook"))
 
 
 def test_magnitude(spark, deliver, labeled):
-    m = B.magnitude(deliver, labeled, ["q1_tgt", "q2_tgt"])
+    m = MQ.magnitude(deliver, labeled, ["q1_tgt", "q2_tgt"])
     # seg 0: 2 sig tgt rows / 2 tgt vars = 1.0 ratio * 0.5 share = 0.5
     # seg 1: 1 sig tgt row  / 2 tgt vars = 0.5 ratio * 0.5 share = 0.25
     assert m["0" if "0" in m else 0] == pytest.approx(0.5)
@@ -505,14 +505,12 @@ def test_consistency_checkers(spark, labeled):
 
 
 def test_get_all_metrics_composition(spark, labeled, deliver):
-    from qudo_etl_pipeline_spark.ml import features as FE
-
     feats = labeled.withColumn(
         "features",
         F.array(F.col("q1_tgt").cast("double"), F.col("q2_tgt").cast("double")),
     )
     m = B.get_all_metrics(
-        FE.pattern_table(feats, ["features", "mc_social", "prediction"]),
+        MQ.pattern_table(feats, ["features", "mc_social", "prediction"]),
         deliver=deliver,
         tgt_idx=[0, 1],
     )

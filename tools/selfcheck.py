@@ -57,57 +57,6 @@ def canon(df, float_round=None):
     return sorted(rows)
 
 
-def driver_gap() -> int:
-    """Report catalog queries never verified by the DRIVER's own gate
-    (absent from every CORRECTNESS_r*.json): the driver samples ~50
-    queries per round, so its canonical record lags the full catalog
-    even though the selfcheck replica runs everything. The report lets
-    a reviewer (or a configurable driver sample) prioritize the
-    never-driver-checked tail. Written to DRIVER_GAP.md and stdout."""
-    import glob
-    import json
-
-    from qudo_etl_pipeline_spark.catalog import registry
-
-    seen: dict[str, list[str]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = os.path.basename(path)[len("CORRECTNESS_"):-len(".json")]
-        for name in json.loads(open(path).read()):
-            seen.setdefault(name, []).append(rnd)
-
-    specs = registry()
-    gap = sorted(n for n in specs if n not in seen)
-    covered = sorted(n for n in specs if n in seen)
-    stale = sorted(n for n in seen if n not in specs)
-
-    lines = [
-        "# Driver-gate coverage gap",
-        "",
-        f"Catalog queries: {len(specs)}. Driver-verified at least once "
-        f"(any CORRECTNESS_r*.json): {len(covered)}. Never "
-        f"driver-verified: {len(gap)} (all of these pass the full-catalog "
-        "selfcheck replica — see `tools/selfcheck.py` — but lack a canonical "
-        "driver record).",
-        "",
-        "## Never driver-checked",
-        "",
-    ]
-    lines += [
-        f"- `{n}`" + (" (no oracle: rows-only)" if specs[n].oracle is None
-                      else "")
-        for n in gap
-    ]
-    if stale:
-        lines += ["", "## In driver records but no longer in the catalog",
-                  ""] + [f"- `{n}`" for n in stale]
-    lines.append("")
-    report = "\n".join(lines)
-    with open("/root/repo/DRIVER_GAP.md", "w") as fh:
-        fh.write(report)
-    print(report)
-    return 0
-
-
 def result_hash(sdf) -> str:
     """Stable digest of a canonical (column-sorted, row-sorted,
     full-float-repr) pandas result — engine- and order-independent."""
@@ -122,8 +71,6 @@ def result_hash(sdf) -> str:
 
 
 def main() -> int:
-    if "--driver-gap" in sys.argv:
-        return driver_gap()
     argv = list(sys.argv[1:])
     hashes_out = None
     if "--hashes-out" in argv:
@@ -165,7 +112,7 @@ def main() -> int:
         t0 = time.time()
         try:
             # each query's ranged-frame caches are released once its
-            # result is fully materialized — the 213-query sweep never
+            # result is fully materialized — the catalog-wide sweep never
             # accumulates CacheManager entries
             from qudo_etl_pipeline_spark.operators.prefix import (
                 prefix_cache_scope,
